@@ -27,10 +27,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cloud_dedup_spark.operators.similarity import cosine_udf, rescore_pairs
+from cloud_dedup_spark.operators.similarity import (
+    _capped_keys,
+    _key_sharing_pairs,
+    _rank_topk,
+    _require_integral_ids,
+    _score_blocked,
+)
 
 
 def fit_centroids(
@@ -216,6 +222,7 @@ def ivf_near_pairs(
     are dropped from candidate generation (the same bounded-recall/bounded-
     fan-out contract as cosine_near_pairs_lsh's bucket_cap).
     """
+    _require_integral_ids(emb, id_col)
     if nprobe is not None and nprobe < 1:
         # round-5 ADVICE: nprobe=0 built a multi-cell index (the truthiness
         # guard) while the probe branch ran with an EMPTY probe map —
@@ -227,19 +234,7 @@ def ivf_near_pairs(
     assign = cell_assign_udf(
         centroids, n_assign=1 if nprobe is not None else n_assign
     )
-    # materialized once — feeds the cell-size branch and both self-join
-    # sides; uncut, each subtree re-runs the (rows × n_cells) centroid GEMM
-    keyed = emb.select(
-        F.col(id_col).alias("vid"),
-        F.explode(assign(F.col(vec_col))).alias("cell"),
-    ).localCheckpoint()
-    if cell_cap is not None:
-        sizes = keyed.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-        keyed = keyed.join(
-            sizes.filter(F.col("n") <= cell_cap).select("cell"),
-            "cell",
-            "left_semi",
-        )
+    keyed = _capped_keys(emb, assign(F.col(vec_col)), "cell", cell_cap, id_col)
     if nprobe is not None:
         # centroid-adjacency probe map: rows are unit vectors, so the cosine
         # matrix is one tiny (n_cells × n_cells) GEMM on the driver
@@ -271,20 +266,8 @@ def ivf_near_pairs(
             .distinct()
         )
     else:
-        cand = (
-            keyed.alias("x")
-            .join(keyed.alias("y"), "cell")
-            .filter(F.col("x.vid") < F.col("y.vid"))
-            .select(F.col("x.vid").alias("id_a"), F.col("y.vid").alias("id_b"))
-            .distinct()
-        )
-    # blocked rescore (round-6): candidates cross the Arrow boundary as id
-    # pairs grouped per block pair instead of carrying both full vectors on
-    # every candidate row — identical scores (same einsum arithmetic, same
-    # JVM-side rounding), pinned in tests/test_similarity.py.
-    return rescore_pairs(
-        emb, cand, threshold, id_col=id_col, vec_col=vec_col
-    )
+        cand = _key_sharing_pairs(keyed, "cell")
+    return _score_blocked(emb, cand, threshold, id_col, vec_col)
 
 
 def ivf_topk(
@@ -321,16 +304,4 @@ def ivf_topk(
         F.col(vec_col).alias("q_vec"),
         F.explode(query_cells(F.col(vec_col))).alias("cell"),
     )
-    scored = (
-        q.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_udf(F.col("q_vec"), F.col("c_vec")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _rank_topk(q.join(c, "cell"), k)

@@ -1,13 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exactness baseline, plus a hyperplane-LSH
-bucketed variant as the scale path — the ANN analog of the dedup pipeline's
-MinHash/LSH staging (cheap blocking first, exact scoring after; reference
-staging principle X3, src/cloud_duplicate_analyzer.py:245-258).
+Brute-force cosine top-k as the exactness baseline, plus hyperplane-LSH and
+IVF (operators/ivf.py) blocked variants as the scale paths — the ANN analog
+of the dedup pipeline's MinHash/LSH staging (cheap blocking first, exact
+scoring after; reference staging principle X3,
+src/cloud_duplicate_analyzer.py:245-258).
 
-The cosine arithmetic is spelled out with zip_with/aggregate (not a UDF and
-not a black-box builtin) so the DuckDB oracle can reproduce the identical
-formula and summation order (__spark_entry__.py).
+All cosine arithmetic goes through one numpy row kernel, ``_cosine_rows``
+(float64 row dot, norm product, zero-norm → -1.0), reached through
+three shared pieces:
+  * ``cosine_udf`` — the Arrow-vectorized per-row scorer;
+  * ``_rank_topk`` — the top-k tail of every ``*_topk`` operator;
+  * ``_score_blocked`` — the blocked pair scorer behind every near-pair
+    operator, exact (all pairs) or over a candidate frame (LSH/IVF).
+Scores are rounded to 4dp JVM-side; the DuckDB oracles of ``ann_topk`` and
+``emb_near_pairs`` (__spark_entry__.py) recompute them with
+``list_cosine_similarity`` and agree at that precision.
 
 Scale notes: brute force is O(Q·N) — fine when Q (query set) is small and
 broadcast; the LSH variant prunes N to a bucket. For 100 TB-scale ANN the
@@ -23,55 +31,60 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
+def _cosine_rows(pa: np.ndarray, pb: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two (rows, dim) float64 matrices.
 
-
-def cosine_col(a, b) -> F.Column:
-    """Cosine similarity of two array<float/double> columns, as double.
-
-    Expression form (interpreted lambda per element) — right for small pair
-    counts; use ``cosine_udf`` for large self-joins (Arrow-vectorized,
-    ~50× faster per pair).
-
-    Zero-norm vectors score -1.0 (similar to nothing), matching
-    ``cosine_udf``: the unguarded division returned NULL here but NaN in the
-    UDF — and Spark treats NaN as GREATER than every number, so a zero
-    vector passed every ``score >= threshold`` filter and ranked FIRST in
-    top-k, while the NULL path ranked it last (round-4 review)."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    denom = F.sqrt(_dot(ad, ad)) * F.sqrt(_dot(bd, bd))
-    return F.when(denom == 0.0, F.lit(-1.0)).otherwise(_dot(ad, bd) / denom)
+    Zero-norm rows score -1.0 (similar to nothing), never NaN: Spark's total
+    ordering puts NaN above every number, so an unguarded 0/0 made a zero
+    vector pass every ``>= threshold`` filter and outrank every real
+    neighbour (round-4 review)."""
+    dots = np.einsum("ij,ij->i", pa, pb)
+    norms = np.linalg.norm(pa, axis=1) * np.linalg.norm(pb, axis=1)
+    zero = norms == 0.0
+    return np.where(zero, -1.0, dots / np.where(zero, 1.0, norms))
 
 
 def cosine_udf(a, b) -> F.Column:
     """Arrow-vectorized cosine: whole batch as two (rows, dim) matrices.
 
-    numpy's pairwise summation differs from the sequential fold only at
+    numpy's pairwise summation differs from a sequential fold only at
     ~1e-16 relative error — far inside the 4dp rounding used by callers.
     (Constructed lazily: pandas_udf registration needs an active session.)
     """
 
     @F.pandas_udf("double")
     def _cos(xa: pd.Series, xb: pd.Series) -> pd.Series:
-        ma = np.vstack(xa.to_numpy()).astype(np.float64)
-        mb = np.vstack(xb.to_numpy()).astype(np.float64)
-        dots = np.einsum("ij,ij->i", ma, mb)
-        norms = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
-        # zero-norm → -1.0, never NaN: Spark's total ordering puts NaN above
-        # every number, so an unguarded 0/0 made the zero vector pass every
-        # >= threshold filter and outrank every real neighbour
-        zero = norms == 0.0
-        return pd.Series(np.where(zero, -1.0, dots / np.where(zero, 1.0, norms)))
+        return pd.Series(
+            _cosine_rows(
+                np.vstack(xa.to_numpy()).astype(np.float64),
+                np.vstack(xb.to_numpy()).astype(np.float64),
+            )
+        )
 
     return _cos(a, b)
+
+
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-k tail of every ``*_topk`` operator.
+
+    ``pairs`` holds (query_id, q_vec, neighbor_id, c_vec) rows; self-matches
+    are dropped, every pair is scored at 4dp, and each query keeps its ``k``
+    best, ties broken by neighbour id for determinism (reference X9).
+    Output: query_id, neighbor_id, rank, score."""
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+        "score", F.round(cosine_udf(F.col("q_vec"), F.col("c_vec")), 4)
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "score")
+    )
 
 
 def brute_force_topk(
@@ -84,14 +97,7 @@ def brute_force_topk(
     """Exact cosine top-k neighbours for each query vector.
 
     ``queries`` is expected to be small → broadcast; the corpus side streams.
-    Ties broken by neighbour id for determinism (reference X9: deterministic
-    ordering before any output).  Output: query_id, neighbor_id, rank, score.
-
-    Scoring goes through ``cosine_udf`` (Arrow-vectorized): the expression
-    form re-evaluated three interpreted aggregate lambdas per pair — on the
-    Q×N crossJoin that was the whole stage cost (round-6 measurement:
-    ann_topk 3.2 s → sub-second with identical 4dp scores; rounding stays
-    JVM-side either way).
+    Output: query_id, neighbor_id, rank, score (``_rank_topk``).
     """
     q = F.broadcast(
         queries.select(
@@ -99,144 +105,44 @@ def brute_force_topk(
         )
     )
     c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_udf(F.col("q_vec"), F.col("c_vec")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _rank_topk(q.crossJoin(c), k)
 
 
-def cosine_near_pairs(
+def _require_integral_ids(emb: DataFrame, id_col: str) -> None:
+    """The near-pair scorer emits ``long`` ids; anything else would only
+    fail inside a Python worker at action time.  Reads the schema — no job."""
+    if not isinstance(emb.schema[id_col].dataType, IntegralType):
+        raise ValueError(
+            f"near-pair id column {id_col!r} must be an integer type, got "
+            f"{emb.schema[id_col].dataType.simpleString()}"
+        )
+
+
+def _score_blocked(
     emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_size: int = 256,
-) -> DataFrame:
-    """All pairs (a < b) with cosine ≥ threshold — embedding near-dup channel.
-
-    Blocked execution (round-6; guide §4 "shuffle keys and metadata, not
-    payloads" applied to the Arrow boundary): the old crossJoin shipped BOTH
-    full vectors of every one of the N²/2 pairs through Arrow — ~100× the
-    corpus bytes.  Here vectors are packed into ~``block_size``-row hash
-    blocks; the G(G+1)/2 block pairs join (G ≈ N/block_size rows — a trivial
-    nested-loop join of packed rows), and ONE Arrow batch per block pair
-    scores every cross pair with the IDENTICAL per-pair arithmetic as
-    ``cosine_udf`` (same float64 einsum row-dot, same norm product, same
-    zero-norm → -1.0 guard), so each vector crosses the boundary G times
-    instead of N times.  Only pairs within one conservative rounding step of
-    the threshold leave Python; the AUTHORITATIVE round(4dp)-then-filter
-    stays JVM-side exactly as before, so results are identical to the
-    crossJoin form (equality pinned in tests/test_similarity.py).
-    """
-    import math
-
-    n = emb.select(id_col).count()
-    n_blocks = max(1, math.ceil(n / block_size))
-    packed = (
-        emb.select(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("gid"),
-            F.struct(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ).alias("item"),
-        )
-        .groupBy("gid")
-        .agg(F.collect_list("item").alias("items"))
-    )
-    # conservative Python-side prefilter: round-half-up at 4dp keeps a pair
-    # iff raw >= threshold - 5e-5 (threshold is a 4dp value); the extra 1e-9
-    # covers double representation of the boundary.  No pair the JVM filter
-    # would keep can be dropped here.
-    margin = threshold - 5e-5 - 1e-9
-
-    @F.pandas_udf("array<struct<id_a:long,id_b:long,score:double>>")
-    def _block_scores(
-        items_a: pd.Series, items_b: pd.Series, same: pd.Series
-    ) -> pd.Series:
-        out = []
-        for ia, ib, s in zip(items_a, items_b, same):
-            ids_a = np.array([r["id"] for r in ia], dtype=np.int64)
-            ma = np.vstack([r["vec"] for r in ia]).astype(np.float64)
-            if s:
-                ids_b, mb = ids_a, ma
-                iu, ju = np.triu_indices(len(ids_a), k=1)
-            else:
-                ids_b = np.array([r["id"] for r in ib], dtype=np.int64)
-                mb = np.vstack([r["vec"] for r in ib]).astype(np.float64)
-                iu = np.repeat(np.arange(len(ids_a)), len(ids_b))
-                ju = np.tile(np.arange(len(ids_b)), len(ids_a))
-            if len(iu) == 0:
-                out.append([])
-                continue
-            pa, pb = ma[iu], mb[ju]
-            dots = np.einsum("ij,ij->i", pa, pb)
-            norms = np.linalg.norm(pa, axis=1) * np.linalg.norm(pb, axis=1)
-            zero = norms == 0.0
-            score = np.where(zero, -1.0, dots / np.where(zero, 1.0, norms))
-            keep = score >= margin
-            id_lo = np.minimum(ids_a[iu], ids_b[ju])[keep]
-            id_hi = np.maximum(ids_a[iu], ids_b[ju])[keep]
-            sc = score[keep]
-            out.append(
-                [
-                    {"id_a": int(x), "id_b": int(y), "score": float(v)}
-                    for x, y, v in zip(id_lo, id_hi, sc)
-                ]
-            )
-        return pd.Series(out)
-
-    x, y = packed.alias("x"), packed.alias("y")
-    joined = x.join(y, F.col("x.gid") <= F.col("y.gid"))
-    return (
-        joined.select(
-            F.explode(
-                _block_scores(
-                    F.col("x.items"),
-                    F.col("y.items"),
-                    F.col("x.gid") == F.col("y.gid"),
-                )
-            ).alias("p")
-        )
-        .select(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            F.round(F.col("p.score"), 4).alias("score"),
-        )
-        .filter(F.col("score") >= threshold)
-    )
-
-
-def rescore_pairs(
-    emb: DataFrame,
-    cand: DataFrame,
+    cand: DataFrame | None,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    id_col: str,
+    vec_col: str,
     block_size: int = 256,
 ) -> DataFrame:
-    """Exact 4dp cosine rescoring of an ``(id_a, id_b)`` candidate frame.
+    """Exact 4dp cosine near pairs (id_a < id_b, score), blocked.
 
-    The shared tail of the LSH/IVF near-pair operators (round-6).  The old
-    tail joined both full vectors onto EVERY candidate row and shipped them
-    through Arrow — at low thresholds the candidate set approaches N²/2 and
-    the rescore pays the same boundary flood ``cosine_near_pairs`` used to.
-    Here candidates cross the boundary as 16-byte id pairs grouped by
-    (block_a, block_b), vectors once per touched block pair, and the scores
-    use the IDENTICAL per-pair float64 einsum arithmetic as ``cosine_udf``
-    (same zero-norm → -1.0 guard); the authoritative round(4dp)+filter stays
-    JVM-side, so outputs equal the old join-per-pair form exactly (pinned in
-    tests/test_similarity.py).  Orientation of (id_a, id_b) is preserved.
+    Vectors are packed into ~``block_size``-row hash blocks, so each vector
+    crosses the Arrow boundary once per touched block pair instead of once
+    per pair (guide §4 "shuffle keys and metadata, not payloads"):
+      * ``cand is None`` — every pair: blocks self-join on ``gid <= gid``
+        and one Arrow row per block pair scores all its cross pairs (the
+        upper triangle on the diagonal);
+      * otherwise ``cand`` is an ``(id_a, id_b)`` candidate frame whose ids
+        come from ``emb`` (every caller derives it that way); its pairs
+        cross as 16-byte id pairs grouped per ``(ga, gb)`` block pair.
+    Pairs of two equal ids (a duplicated id in ``emb``) are dropped, so
+    ``id_a < id_b`` holds strictly.  Only pairs within one conservative
+    rounding step of the threshold leave Python; the authoritative
+    round(4dp)-then-filter stays JVM-side, so results equal the unblocked
+    ``cosine_udf`` crossJoin exactly (pinned in tests/test_similarity.py).
     """
-    import math
-
     n = emb.select(id_col).count()
     n_blocks = max(1, math.ceil(n / block_size))
 
@@ -253,58 +159,85 @@ def rescore_pairs(
         .groupBy("gid")
         .agg(F.collect_list("item").alias("items"))
     )
-    grouped = (
-        cand.select(
-            "id_a", "id_b", _gid("id_a").alias("ga"), _gid("id_b").alias("gb")
+    if cand is None:
+        x, y = packed.alias("x"), packed.alias("y")
+        blocks = x.join(y, F.col("x.gid") <= F.col("y.gid")).select(
+            F.col("x.items").alias("items_a"),
+            F.col("y.items").alias("items_b"),
+            (F.col("x.gid") == F.col("y.gid")).alias("same"),
+            # NULL pairs: the UDF scores every pair of the block pair
+            F.lit(None).cast("array<struct<id_a:long,id_b:long>>").alias("pairs"),
         )
-        .groupBy("ga", "gb")
-        .agg(F.collect_list(F.struct("id_a", "id_b")).alias("pairs"))
-    )
+    else:
+        blocks = (
+            cand.select(
+                "id_a", "id_b", _gid("id_a").alias("ga"), _gid("id_b").alias("gb")
+            )
+            .groupBy("ga", "gb")
+            .agg(F.collect_list(F.struct("id_a", "id_b")).alias("pairs"))
+            .join(
+                packed.select(F.col("gid").alias("ga"), F.col("items").alias("items_a")),
+                "ga",
+            )
+            .join(
+                packed.select(F.col("gid").alias("gb"), F.col("items").alias("items_b")),
+                "gb",
+            )
+            .select(
+                "items_a", "items_b", (F.col("ga") == F.col("gb")).alias("same"), "pairs"
+            )
+        )
+    # conservative Python-side prefilter: round-half-up at 4dp keeps a pair
+    # iff raw >= threshold - 5e-5 (threshold is a 4dp value); the extra 1e-9
+    # covers double representation of the boundary.  No pair the JVM filter
+    # would keep can be dropped here.
     margin = threshold - 5e-5 - 1e-9
 
     @F.pandas_udf("array<struct<id_a:long,id_b:long,score:double>>")
-    def _score(
-        pairs_s: pd.Series, items_a_s: pd.Series, items_b_s: pd.Series
+    def _pair_scores(
+        items_a: pd.Series, items_b: pd.Series, same: pd.Series, pairs: pd.Series
     ) -> pd.Series:
         out = []
-        for prs, ia, ib in zip(pairs_s, items_a_s, items_b_s):
-            pos_a = {r["id"]: i for i, r in enumerate(ia)}
+        for ia, ib, s, prs in zip(items_a, items_b, same, pairs):
+            ids_a = np.array([r["id"] for r in ia], dtype=np.int64)
             ma = np.vstack([r["vec"] for r in ia]).astype(np.float64)
-            pos_b = {r["id"]: i for i, r in enumerate(ib)}
-            mb = np.vstack([r["vec"] for r in ib]).astype(np.float64)
-            idx_a = np.fromiter(
-                (pos_a[p["id_a"]] for p in prs), dtype=np.int64, count=len(prs)
-            )
-            idx_b = np.fromiter(
-                (pos_b[p["id_b"]] for p in prs), dtype=np.int64, count=len(prs)
-            )
-            pa, pb = ma[idx_a], mb[idx_b]
-            dots = np.einsum("ij,ij->i", pa, pb)
-            norms = np.linalg.norm(pa, axis=1) * np.linalg.norm(pb, axis=1)
-            zero = norms == 0.0
-            score = np.where(zero, -1.0, dots / np.where(zero, 1.0, norms))
-            keep = score >= margin
+            if s:
+                ids_b, mb = ids_a, ma
+            else:
+                ids_b = np.array([r["id"] for r in ib], dtype=np.int64)
+                mb = np.vstack([r["vec"] for r in ib]).astype(np.float64)
+            if prs is not None:
+                pos_a = {r["id"]: i for i, r in enumerate(ia)}
+                pos_b = {r["id"]: i for i, r in enumerate(ib)}
+                iu = np.fromiter(
+                    (pos_a[p["id_a"]] for p in prs), dtype=np.int64, count=len(prs)
+                )
+                ju = np.fromiter(
+                    (pos_b[p["id_b"]] for p in prs), dtype=np.int64, count=len(prs)
+                )
+            elif s:
+                iu, ju = np.triu_indices(len(ids_a), k=1)
+            else:
+                iu = np.repeat(np.arange(len(ids_a)), len(ids_b))
+                ju = np.tile(np.arange(len(ids_b)), len(ids_a))
+            score = _cosine_rows(ma[iu], mb[ju])
+            id_lo = np.minimum(ids_a[iu], ids_b[ju])
+            id_hi = np.maximum(ids_a[iu], ids_b[ju])
+            keep = (score >= margin) & (id_lo != id_hi)
             out.append(
                 [
-                    {"id_a": int(p["id_a"]), "id_b": int(p["id_b"]), "score": float(v)}
-                    for p, v in zip(
-                        (p for p, k in zip(prs, keep) if k), score[keep]
-                    )
+                    {"id_a": int(x), "id_b": int(y), "score": float(v)}
+                    for x, y, v in zip(id_lo[keep], id_hi[keep], score[keep])
                 ]
             )
         return pd.Series(out)
 
-    joined = grouped.join(
-        packed.select(F.col("gid").alias("ga"), F.col("items").alias("items_a")),
-        "ga",
-    ).join(
-        packed.select(F.col("gid").alias("gb"), F.col("items").alias("items_b")),
-        "gb",
-    )
     return (
-        joined.select(
+        blocks.select(
             F.explode(
-                _score(F.col("pairs"), F.col("items_a"), F.col("items_b"))
+                _pair_scores(
+                    F.col("items_a"), F.col("items_b"), F.col("same"), F.col("pairs")
+                )
             ).alias("p")
         )
         .select(
@@ -314,6 +247,23 @@ def rescore_pairs(
         )
         .filter(F.col("score") >= threshold)
     )
+
+
+def cosine_near_pairs(
+    emb: DataFrame,
+    threshold: float = 0.95,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    block_size: int = 256,
+) -> DataFrame:
+    """All pairs (a < b) with cosine ≥ threshold — embedding near-dup channel.
+
+    The exact twin of the LSH/IVF scale paths: ``_score_blocked`` over every
+    block pair.  Each vector crosses the Python boundary ~N/block_size times
+    instead of N times, with results identical to the pair-row crossJoin.
+    """
+    _require_integral_ids(emb, id_col)
+    return _score_blocked(emb, None, threshold, id_col, vec_col, block_size)
 
 
 def hyperplane_signature_udf(dim: int | None = None, n_planes: int = 16, seed: int = 42):
@@ -409,6 +359,40 @@ def hyperplane_band_keys_udf(
     return band_keys
 
 
+def _capped_keys(
+    emb: DataFrame, keys: F.Column, key: str, cap: int | None, id_col: str
+) -> DataFrame:
+    """(vid, key) rows, one per blocking key of each vector, materialized.
+
+    The cut matters: the keyed frame feeds the key-size branch and BOTH
+    sides of the self-join, and uncut each subtree re-runs the full-corpus
+    key UDF (2-3× the projection work per call — round-4 review).  Narrow
+    rows: cheap to store.  ``cap``: optional skew guard — keys held by more
+    than cap vectors are dropped from candidate generation, trading bounded
+    recall loss for a hard O(cap²) bound per key, the same contract as
+    candidates.py's hot-bucket handling."""
+    keyed = emb.select(
+        F.col(id_col).alias("vid"), F.explode(keys).alias(key)
+    ).localCheckpoint()
+    if cap is None:
+        return keyed
+    sizes = keyed.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
+    return keyed.join(
+        sizes.filter(F.col("n") <= cap).select(key), key, "left_semi"
+    )
+
+
+def _key_sharing_pairs(keyed: DataFrame, key: str) -> DataFrame:
+    """Distinct (id_a < id_b) candidate pairs of vectors sharing a key."""
+    return (
+        keyed.alias("x")
+        .join(keyed.alias("y"), key)
+        .filter(F.col("x.vid") < F.col("y.vid"))
+        .select(F.col("x.vid").alias("id_a"), F.col("y.vid").alias("id_b"))
+        .distinct()
+    )
+
+
 def cosine_near_pairs_lsh(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -425,48 +409,22 @@ def cosine_near_pairs_lsh(
     The scale twin of ``cosine_near_pairs`` (which stays as the small-N
     oracle): candidates come from an equi-join on band keys (shuffle join,
     NO cartesian in the plan), then every candidate is exactly re-scored and
-    thresholded, so precision is 1.0 by construction and recall follows the
-    banded-LSH model in ``lsh_band_params`` (pinned ≥ 0.95 vs the exact twin
-    in tests/test_similarity.py).
+    thresholded by ``_score_blocked``, so precision is 1.0 by construction
+    and recall follows the banded-LSH model in ``lsh_band_params`` (pinned
+    ≥ 0.95 vs the exact twin in tests/test_similarity.py).
 
     ``bucket_cap``: optional skew guard — band buckets holding more than cap
-    vectors are dropped from candidate generation (boilerplate-direction
-    buckets at scale), trading bounded recall loss for a hard O(cap²) bound
-    per bucket, the same contract as candidates.py's hot-bucket handling.
+    vectors are dropped from candidate generation (``_capped_keys``).
     """
+    _require_integral_ids(emb, id_col)
     if rows_per_band is None and n_bands is None:
         rows_per_band, n_bands = lsh_band_params(threshold, target_recall)
     elif rows_per_band is None or n_bands is None:
         raise ValueError("pass both rows_per_band and n_bands, or neither")
     keys = hyperplane_band_keys_udf(n_bands, rows_per_band, seed)
-    # materialize the keyed frame once: it feeds the bucket-size branch and
-    # BOTH sides of the self-join, and without the cut each subtree re-runs
-    # the full-corpus hyperplane GEMM UDF (2-3× the projection work per
-    # invocation — round-4 review).  Narrow rows (id, key): cheap to store.
-    keyed = emb.select(
-        F.col(id_col).alias("vid"),
-        F.explode(keys(F.col(vec_col))).alias("band_key"),
-    ).localCheckpoint()
-    if bucket_cap is not None:
-        sizes = keyed.groupBy("band_key").agg(F.count(F.lit(1)).alias("n"))
-        keyed = keyed.join(
-            sizes.filter(F.col("n") <= bucket_cap).select("band_key"),
-            "band_key",
-            "left_semi",
-        )
-    cand = (
-        keyed.alias("x")
-        .join(keyed.alias("y"), "band_key")
-        .filter(F.col("x.vid") < F.col("y.vid"))
-        .select(F.col("x.vid").alias("id_a"), F.col("y.vid").alias("id_b"))
-        .distinct()
-    )
-    # blocked rescore (round-6): at low thresholds banded LSH prunes weakly
-    # (docstring regime note), so the candidate set approaches N²/2 and the
-    # old per-pair vector join re-created the Arrow flood the exact twin
-    # had — rescore_pairs ships id pairs, not vector pairs.
-    return rescore_pairs(
-        emb, cand, threshold, id_col=id_col, vec_col=vec_col
+    keyed = _capped_keys(emb, keys(F.col(vec_col)), "band_key", bucket_cap, id_col)
+    return _score_blocked(
+        emb, _key_sharing_pairs(keyed, "band_key"), threshold, id_col, vec_col
     )
 
 
@@ -516,16 +474,4 @@ def lsh_bucketed_topk(
         )
     else:
         q_b = q_base
-    scored = (
-        q_b.join(emb_b, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("score", F.round(cosine_col(F.col("q_vec"), F.col("c_vec")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _rank_topk(q_b.join(emb_b, "bucket"), k)

@@ -273,39 +273,23 @@ def run_pipeline(
     # this narrow table instead of re-exploding the union's signature rows
     # per delta (round-4; operators/substring.candidate_anchors).  Written
     # unfiltered — the cfg-dependent cuts apply at read time.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_SEQ_STAGES") == "1":
-        # sequential escape hatch (A/B knob; also the right mode on a
-        # saturated cluster where back-fill has nothing to fill)
-        anchors = stage("anchors", lambda: candidate_anchors(sigs))
-        verified = stage(
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_anchors = pool.submit(
+            stage, "anchors", lambda: candidate_anchors(sigs)
+        )
+        f_verified = pool.submit(
+            stage,
             "candidate_edges",
             lambda: verify_pairs(
                 lsh_candidate_pairs(sigs, cfg, bands=bands), sigs, cfg
             ),
         )
-        sub_edges = stage(
-            "substring_edges", lambda: substring_edges(norm, sigs, cfg)
+        f_sub = pool.submit(
+            stage, "substring_edges", lambda: substring_edges(norm, sigs, cfg)
         )
-    else:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_anchors = pool.submit(
-                stage, "anchors", lambda: candidate_anchors(sigs)
-            )
-            f_verified = pool.submit(
-                stage,
-                "candidate_edges",
-                lambda: verify_pairs(
-                    lsh_candidate_pairs(sigs, cfg, bands=bands), sigs, cfg
-                ),
-            )
-            f_sub = pool.submit(
-                stage, "substring_edges", lambda: substring_edges(norm, sigs, cfg)
-            )
-            anchors = f_anchors.result()
-            verified = f_verified.result()
-            sub_edges = f_sub.result()
+        anchors = f_anchors.result()
+        verified = f_verified.result()
+        sub_edges = f_sub.result()
 
     edges = stage(
         "edges",

@@ -11,6 +11,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MEM_UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+
+
+def _mem_bytes(spec: str) -> int | None:
+    """Bytes of a JVM memory size such as ``2011m`` or ``48g``; None if the
+    string is not one."""
+    s = spec.strip().lower()
+    if s[-1:] in _MEM_UNITS and s[:-1].isdigit():
+        return int(s[:-1]) * _MEM_UNITS[s[-1]]
+    return int(s) if s.isdigit() else None
+
+
+def _phys_bytes() -> int:
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+
 
 def build_session(
     app_name: str = "cloud-dedup-spark",
@@ -108,10 +123,20 @@ def build_session(
         # MERGED with any caller-supplied extraJavaOptions — same config key,
         # last write wins, so a caller passing -XX flags silently discarded
         # the heap pre-commit (round-4 review).
+        heap = os.environ["SPARK_DRIVER_MEMORY"]
+        opts = f"-Xms{heap}"
+        # -Xms only reserves; G1 touches regions as its adaptive young gen
+        # grows, which depends on pause times, so a 2 GB heap's resident
+        # size varied by up to 290 MB from run to run on a shared host.
+        # Touching the whole heap at start-up makes it one fixed size.  Only
+        # for heaps that fit easily: a 48g bench heap on a small host would
+        # otherwise be resident (and OOM-killed) before the first job.
+        heap_b = _mem_bytes(heap)
+        if heap_b is not None and heap_b * 4 <= _phys_bytes():
+            opts += " -XX:+AlwaysPreTouch"
         caller_opts = extra_conf.pop("spark.driver.extraJavaOptions", "")
         builder = builder.config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ['SPARK_DRIVER_MEMORY']} {caller_opts}".strip(),
+            "spark.driver.extraJavaOptions", f"{opts} {caller_opts}".strip()
         )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)

@@ -54,6 +54,29 @@ def test_near_pairs_threshold(spark, emb):
     got = {(r["id_a"], r["id_b"]) for r in cosine_near_pairs(emb, 0.9).collect()}
     assert (0, 1) in got
     assert (0, 3) not in got and (0, 2) not in got
+    # a duplicated id lands twice in one block; its two rows must not come
+    # out as an (id, id) self-pair — id_a < id_b holds strictly
+    dup = emb.union(
+        spark.createDataFrame([(1, [0.9, 0.1, 0.0])],
+                              "vec_id long, embedding array<float>")
+    )
+    got_dup = {(r["id_a"], r["id_b"])
+               for r in cosine_near_pairs(dup, 0.9).collect()}
+    assert got_dup == got
+    assert all(a < b for a, b in got_dup)
+
+
+def test_near_pairs_reject_non_integer_ids(spark):
+    """The scorer emits long ids: a string id column fails when the
+    operator is called, not inside a Python worker at action time."""
+    from cloud_dedup_spark.operators.ivf import ivf_near_pairs
+
+    emb = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [0.9, 0.1])], "vec_id string, embedding array<float>"
+    )
+    for op in (cosine_near_pairs, cosine_near_pairs_lsh, ivf_near_pairs):
+        with pytest.raises(ValueError, match="integer"):
+            op(emb, 0.9)
 
 
 def test_lsh_topk_subset_of_bruteforce(spark, emb):
@@ -314,12 +337,11 @@ def test_ivf_near_pairs_multiprobe(spark, emb_real):
 
 
 def test_zero_norm_vectors_never_outrank_or_match(spark):
-    """Round-4 review: 0/0 cosine was NaN in the UDF path (NaN > everything
-    in Spark's total ordering → rank-1 false neighbour, passes every
-    threshold) and NULL in the expression path (ranked last) — the two
-    scorers disagreed on the identical degenerate input.  Both now score
-    zero-norm vectors -1.0: similar to nothing, ranked behind every real
-    neighbour, and consistent across brute/LSH/IVF."""
+    """Round-4 review: an unguarded 0/0 cosine is NaN (NaN > everything in
+    Spark's total ordering → rank-1 false neighbour, passes every
+    threshold).  The one cosine kernel scores zero-norm vectors -1.0:
+    similar to nothing, ranked behind every real neighbour, and consistent
+    across brute/LSH/IVF."""
     from cloud_dedup_spark.operators.ivf import ivf_near_pairs
 
     rows = [
@@ -330,16 +352,16 @@ def test_zero_norm_vectors_never_outrank_or_match(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = emb.filter("vec_id = 0")
-    # expression path: zero vector ranks LAST with score -1.0, not NULL
+    # brute force: zero vector ranks LAST with score -1.0, never NaN
     got = brute_force_topk(emb, q, k=3).collect()
     assert [r["neighbor_id"] for r in got] == [1, 3, 2]
     assert got[-1]["score"] == -1.0
-    # UDF path (ivf_topk probing every cell = exhaustive): same ordering,
-    # no NaN rank-1 zero vector
+    # ivf_topk probing every cell (exhaustive): same ordering, no NaN
+    # rank-1 zero vector
     got_ivf = ivf_topk(emb, q, k=3, n_cells=2, nprobe=2).collect()
     assert [r["neighbor_id"] for r in got_ivf] == [1, 3, 2]
     assert got_ivf[0]["neighbor_id"] == 1 and got_ivf[-1]["score"] == -1.0
-    # near-pairs (UDF path): the zero vector matches NOTHING at any real
+    # near pairs: the zero vector matches NOTHING at any real
     # threshold — it must not appear as a false near-dup of every vector
     pairs = {
         (r["id_a"], r["id_b"])

@@ -141,9 +141,10 @@ def q_substring_doc_pairs(spark, sf_dir):
     recall-lossless on this input — the pytest suite covers the
     capped/dropped-needle cases DuckDB cannot express."""
     from cloud_dedup_spark.config import DedupConfig
-    from cloud_dedup_spark.functions.normalize import with_identity
-    from cloud_dedup_spark.operators.signatures import compute_shingle_signatures
-    from cloud_dedup_spark.operators.substring import substring_edges
+    from cloud_dedup_spark.operators.substring import (
+        lean_shingle_frames,
+        substring_edges,
+    )
 
     docs = _t(spark, sf_dir, "documents")
     a = docs.filter(F.col("doc_id") % 101 == 0).select(
@@ -161,20 +162,7 @@ def q_substring_doc_pairs(spark, sf_dir):
     )
     all_docs = docs.unionByName(hay)
     cfg = DedupConfig()
-    # round-6: lean + materialized inputs.  The channel reads only
-    # (file_id, path, content_norm) and the shingle columns; shingle-only
-    # signatures (identical values — operators/signatures.py) skip the
-    # MinHash/band/SimHash work, and the localCheckpoints stop the channel's
-    # multiple scans from re-running the normalize regex + signature UDF
-    # over the corpus per scan (the rebuild dominated the 7.6 s bench cost).
-    ident = (
-        with_identity(documents_as_files(all_docs))
-        .select("file_id", "path", "content_norm")
-        .localCheckpoint()
-    )
-    sigs = compute_shingle_signatures(ident, cfg).select(
-        "file_id", "n_tokens", "n_shingles", "shingles"
-    ).localCheckpoint()
+    ident, sigs = lean_shingle_frames(documents_as_files(all_docs), cfg)
     edges = substring_edges(ident, sigs, cfg)
     ids = ident.select(
         "file_id", F.expr("cast(substring(path, 5) as bigint)").alias("doc")

@@ -30,10 +30,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cloud_dedup_spark.config import DedupConfig
-from cloud_dedup_spark.functions.normalize import with_identity
 from cloud_dedup_spark.operators.documents import documents_as_files
-from cloud_dedup_spark.operators.signatures import compute_shingle_signatures
-from cloud_dedup_spark.operators.substring import substring_edges
+from cloud_dedup_spark.operators.substring import (
+    lean_shingle_frames,
+    substring_edges,
+)
 
 _BENCH_REPO = "\x00benchmark"  # NUL prefix: no real source name can collide
 
@@ -85,23 +86,9 @@ def contaminated_docs(
         F.lit("txt").alias("lang"),
         F.col("snippet").alias("content"),
     )
-    # round-6: the channel consumes only (file_id, repo, path, content_norm)
-    # and the shingle columns, so (a) the identity frame is projected lean —
-    # content/sha never materialize — and (b) signatures come from the
-    # shingle-only UDF (identical values, no MinHash/band/SimHash work).
-    # Both frames are localCheckpointed: substring_edges scans its signature
-    # input up to four times (needle base, inverted index ×2, hay_sh) and
-    # the reps frame twice, and each unmaterialized scan re-ran the
-    # normalize regex + signature UDF over the full corpus — the rebuild was
-    # ~all of the 9.7 s bench cost (VERDICT r05 "What's wrong #3").
-    ident = (
-        with_identity(documents_as_files(docs).unionByName(bench_files))
-        .select("file_id", "repo", "path", "content_norm")
-        .localCheckpoint()
+    ident, sigs = lean_shingle_frames(
+        documents_as_files(docs).unionByName(bench_files), cfg
     )
-    sigs = compute_shingle_signatures(ident, cfg).select(
-        "file_id", "n_tokens", "n_shingles", "shingles"
-    ).localCheckpoint()
     is_bench = F.col("repo") == _BENCH_REPO
     # needle side only: the haystack side stays the FULL signature table (a
     # haystack_ids frame here would be corpus-sized, and substring_edges

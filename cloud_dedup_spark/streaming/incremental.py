@@ -1,68 +1,89 @@
 """Incremental ingest: Structured Streaming front-end for the batch pipeline.
 
-The reference is strictly batch (one analyze() pass, SURVEY.md §2.9 — no
-streaming anywhere), and the scaled engine keeps batch semantics: the
-north_rule's resumability comes from checkpointed stage tables, not streaming
-state.  What a corpus lake *does* need is incremental ingest — new files
-appearing in the source location should update the exact-duplicate index
-without recomputing the world.  That is a natural fit for
+The reference is strictly batch (one analyze() pass, SURVEY.md §2.9), and the
+engine keeps batch semantics: resumability comes from checkpointed stage
+tables, not streaming state.  Incremental ingest — new files in the source
+location update the dedup state without recomputing the world — fits
 ``readStream`` + ``foreachBatch``: each micro-batch runs the same
-deterministic batch operators over the delta and MERGEs into the stage
-tables (append-only parquet here; Iceberg MERGE INTO on a cluster).
+deterministic batch operators (reused verbatim: an ingestion mode, not a
+second engine) over the delta and merges into the stage tables (append-only
+parquet here; Iceberg MERGE INTO on a cluster).
 
-Full near-dup incrementality is ``incremental_dedup_update``: only the delta
-pays the Python signature cost; prior stage tables (identity, signatures,
-edges) are *scanned*, never recomputed.  New candidate pairs come from three
-delta-anchored channels — exact (delta sha ⋈ union sha groups), LSH (delta
-bands ⋈ union bands), substring (delta needles ⋈ union index AND union
-needles ⋈ delta index — a new haystack can contain an old needle) — and
-clusters are re-resolved INCREMENTALLY: connected components runs only over
-the components the new edges (or new quarantines) touch, seeded from the
-persisted prior labels; untouched components keep their labels verbatim.
-The result is provably identical to a full recompute over the union: every
-cross-(prior, delta) and delta-delta edge channel is covered, prior-prior
-edges persist, and labels are min-file_id either way (pinned by
-tests/test_incremental.py::test_incremental_equals_full_recompute).
+``incremental_dedup_update`` folds a delta in: only the delta pays the Python
+signature cost; prior stage tables are *scanned*, never recomputed.  New
+candidate pairs come from three delta-anchored channels — exact (delta sha ⋈
+union sha groups), LSH (delta bands ⋈ union bands), substring (delta needles
+⋈ union index AND union needles ⋈ delta index — a new haystack can contain an
+old needle) — and connected components runs only over the components the new
+edges (or new quarantines) touch; untouched components keep their labels
+verbatim.  The result equals a full recompute over the union (pinned by
+tests/test_incremental.py::test_incremental_equals_full_recompute).  The fold
+runs as named phases, in this order, each taking its inputs as arguments and
+returning what later phases read:
 
-Per-fold cost discipline (round-4; the round-3 verdict's one scale gap):
-every per-fold SHUFFLE is O(delta + touched) — corpus-sized state is only
-ever SCANNED, column-pruned, through broadcast semi-joins keyed on
-delta-derived id/sha/band-key sets (all delta-bounded, all tiny), never
-joined shuffle-to-shuffle.  The collision check inspects only identity rows
-sharing a delta file_id (sound because the persisted ``quarantine`` table
-records every previously detected collision); the reverse substring channel
-joins the persisted ``anchors`` table against the delta's doc frequencies
-instead of re-exploding union signatures; quarantine repair runs only on
-folds that NEWLY quarantine something.  The edges / cluster_labels rewrites
-stream through a tmp-dir swap (plans/maintenance.swap_overwrite) — O(corpus)
-sequential IO, no shuffle, no in-memory materialization; on Iceberg the same
-writes become MERGE/snapshot commits.  Pinned by
-tests/test_incremental.py::test_fold_shuffle_stays_flat_as_corpus_grows
-(shuffle-read bytes ~constant under a 10× larger prior corpus) and
-::test_incremental_cc_runs_on_touched_components_only.
+1. ``_open_prior``: entry repairs, the layout check, every stage-table read;
+2. ``_guard``: the idempotency and config guards (stop if nothing is new);
+3. ``_quarantine``: the delta-anchored 64-bit file_id collision check;
+4. ``_exact_channel``: star edges within the sha groups the fold touches;
+5. ``_delta_signatures``: signatures of brand-new content only (plus
+   ``_inherit_reps`` when a collision is new);
+6. ``_near_channels``: LSH and both substring directions, concurrently;
+7. ``_components``: connected components over the touched components only;
+8. ``_persist``: the concurrent write barrier, then quarantine, then identity
+   (the commit point) last.
 
-Round-5 hardening: the fold's LSH channel caps hot band buckets with the
-batch path's salt discipline (a delta member of an over-cap bucket pairs
-only with its deterministic ~cap-sized salt group per band — O(delta × cap)
-verify pairs instead of O(delta × bucket); pinned by
-::test_fold_lsh_hot_bucket_is_capped), and the fixed per-fold job floor is
-cut by merging driver actions (one multi-agg computes batch fingerprint +
-idempotency count + recovery key) and by lazy ``localCheckpoint(eager=False)``
-wherever a driver action follows anyway — materialization and lineage cut in
-one job instead of two.
-
-Batch operators are reused verbatim throughout: streaming/incremental is an
-ingestion mode, not a second engine.
+Every per-fold SHUFFLE is O(delta + touched): corpus-sized state is only
+SCANNED, column-pruned, through broadcast semi-joins keyed on delta-bounded
+id/sha/band-key sets, and the edges / cluster_labels rewrites stream through
+a tmp-dir swap (plans/maintenance.swap_overwrite).  Pinned by
+::test_fold_shuffle_stays_flat_as_corpus_grows,
+::test_incremental_cc_runs_on_touched_components_only and
+::test_fold_lsh_hot_bucket_is_capped.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.functions.normalize import with_identity
+from cloud_dedup_spark.operators.candidates import explode_bands
+from cloud_dedup_spark.operators.cluster import connected_components
+from cloud_dedup_spark.operators.signatures import SIG_TABLE_COLUMNS, compute_signatures
+from cloud_dedup_spark.operators.substring import (
+    candidate_anchors, shingle_inverted_index, substring_edge_list, substring_edges,
+)
+from cloud_dedup_spark.operators.verify import accepted_edges, verify_pairs
+from cloud_dedup_spark.plans.maintenance import (
+    APPEND_TABLES, repair_swap, swap_overwrite,
+)
+from cloud_dedup_spark.plans.pipeline import (
+    CheckpointStore, config_fingerprint, quarantine_id_collisions,
+)
 from cloud_dedup_spark.sources.files_source import FILES_SCHEMA
+
+# the stage tables a fold reads; run_pipeline(checkpoint_dir=...) writes all
+# of them (shingle_index is not among them: the first fold builds it)
+_STAGE_TABLES = (
+    "identity", "quarantine", "signatures", "norm", "bands", "anchors",
+    "edges", "cluster_labels",
+)
+# append tables of the persist barrier and their insert-if-absent keys.
+# sigs/norm/bands/anchors hold clean exact-representatives only, where file_id
+# is unique (a colliding delta file never reaches them — quarantined first),
+# so file_id alone is the right key.  anchors is the one append table with
+# MULTIPLE rows per src (K min shingles), so the guard keys on the full
+# (src, sh) row identity — a src-only key would treat a partially-committed
+# crash append as "src exists" and silently drop the needle's remaining
+# anchors forever (round-4 review)
+_APPEND_KEYS = {
+    "signatures": ["file_id"], "norm": ["file_id"], "bands": ["file_id"],
+    "anchors": ["src", "sh"],
+}
 
 
 def stream_files(spark: SparkSession, location: str) -> DataFrame:
@@ -75,11 +96,8 @@ def stream_files(spark: SparkSession, location: str) -> DataFrame:
 
 
 def incremental_dedup_update(
-    spark: SparkSession,
-    new_files: DataFrame,
-    checkpoint_dir: str,
-    cfg: DedupConfig | None = None,
-    table_format: str = "parquet",
+    spark: SparkSession, new_files: DataFrame, checkpoint_dir: str,
+    cfg: DedupConfig | None = None, table_format: str = "parquet",
 ) -> dict:
     """Fold a batch of new files into existing dedup state (delta-anchored).
 
@@ -110,73 +128,99 @@ def incremental_dedup_update(
 
 
 def _incremental_dedup_update(
-    spark: SparkSession,
-    new_files: DataFrame,
-    checkpoint_dir: str,
-    cfg: DedupConfig | None = None,
-    table_format: str = "parquet",
+    spark: SparkSession, new_files: DataFrame, checkpoint_dir: str,
+    cfg: DedupConfig | None = None, table_format: str = "parquet",
 ) -> dict:
-    """Fold a batch of new files into existing dedup state (delta-anchored).
+    """Run the fold's phases (module docstring) in order.
 
-    Requires a prior ``run_pipeline(..., checkpoint_dir=...)`` run (stage
-    tables: identity, quarantine, signatures, norm, bands, anchors, edges,
-    cluster_labels; checkpoints written before round 4 are migrated in
-    place).  Only the delta runs the Python signature stage; prior tables
-    are scanned — and every per-fold shuffle is O(delta + touched), see the
-    module docstring.  Appends delta rows to the append tables, swap-rewrites
-    edges/cluster_labels, and returns {assignments, edges, delta_signatures,
-    cc_stats, n_delta}.
+    Requires a prior ``run_pipeline(..., checkpoint_dir=...)`` run; a
+    checkpoint without its stage tables raises ``ValueError``.  Returns
+    {assignments, edges, delta_signatures, cc_stats, n_delta, n_lsh_pairs}.
     """
-    from pyspark.sql import Window
-
-    from cloud_dedup_spark.functions.normalize import with_identity
-    from cloud_dedup_spark.operators.candidates import explode_bands
-    from cloud_dedup_spark.operators.cluster import connected_components
-    from cloud_dedup_spark.operators.signatures import (
-        SIG_TABLE_COLUMNS,
-        compute_signatures,
-    )
-    from cloud_dedup_spark.operators.substring import (
-        candidate_anchors,
-        shingle_inverted_index,
-        substring_edge_list,
-        substring_edges,
-    )
-    from cloud_dedup_spark.operators.verify import accepted_edges, verify_pairs
-    from cloud_dedup_spark.plans.maintenance import (
-        _fs,
-        repair_swap,
-        swap_overwrite,
-    )
-    from cloud_dedup_spark.plans.pipeline import (
-        CheckpointStore,
-        quarantine_id_collisions,
-    )
-
     cfg = cfg or DedupConfig()
     loc = checkpoint_dir.rstrip("/")
-    load = lambda name: spark.read.format(table_format).load(f"{loc}/{name}")  # noqa: E731
+    prior = _open_prior(spark, loc, table_format)
+    guard = _guard(spark, new_files, prior, loc, table_format, cfg)
+    if guard is None:
+        return {
+            "assignments": prior["cluster_labels"], "edges": prior["edges"],
+            "delta_signatures": prior["signatures"].limit(0),
+            "cc_stats": {"n_edges": 0, "n_vertices": 0, "n_touched_clusters": 0},
+            "n_delta": 0, "n_lsh_pairs": 0,
+        }
+    q = _quarantine(prior, guard.delta_identity)
+    exact_new, prior_touched, touched = _exact_channel(prior, q)
+    delta_sigs, delta_norm = _delta_signatures(prior, q, prior_touched, touched, cfg)
+    near_new, sub_new, n_lsh_pairs, delta_rows = _near_channels(
+        spark, loc, table_format, cfg, prior, guard.batch_key, delta_sigs, delta_norm
+    )
+    assignments, edges_out, cc_stats = _components(
+        prior, q, exact_new, near_new, sub_new
+    )
+    out = {
+        "edges": edges_out, "cluster_labels": assignments,
+        "signatures": delta_sigs, "norm": delta_norm, **delta_rows,
+    }
+    _persist(spark, loc, table_format, out, prior, guard, q)
+    return {
+        "assignments": _load(spark, loc, table_format, "cluster_labels"),
+        "edges": _load(spark, loc, table_format, "edges"),
+        "delta_signatures": delta_sigs,
+        "cc_stats": cc_stats,
+        "n_delta": guard.n_delta,
+        # the LSH channel's verify-input volume — observable so the
+        # hot-bucket cap is testable (O(cap), never O(bucket))
+        "n_lsh_pairs": n_lsh_pairs,
+    }
 
-    # entry repair for every swap-rewritten table — a previous fold, the
-    # one-time index migration, or a compaction run may have died between
-    # its two renames; must run BEFORE any read below (without the .compact
-    # repairs, a compaction crash on e.g. identity would fail every fold
-    # until compact_stage_tables itself is rerun)
-    from cloud_dedup_spark.plans.maintenance import APPEND_TABLES
 
+def _load(spark: SparkSession, loc: str, table_format: str, name: str) -> DataFrame:
+    return spark.read.format(table_format).load(f"{loc}/{name}")
+
+
+def _open_prior(spark: SparkSession, loc: str, table_format: str) -> dict:
+    """Table name → DataFrame for every stage table, each opened once after
+    the entry repairs and the layout check (shingle_index: None until the
+    first fold builds it)."""
+    # entry repair for every swap-rewritten table — a previous fold or a
+    # compaction run may have died between its two renames; must run BEFORE
+    # any read below (without the .compact repairs, a compaction crash on
+    # e.g. identity would fail every fold until compact_stage_tables itself
+    # is rerun)
     repair_swap(spark, f"{loc}/edges")
     repair_swap(spark, f"{loc}/cluster_labels")
-    repair_swap(spark, f"{loc}/shingle_index", suffix=".migrate")
     for t in APPEND_TABLES:
         repair_swap(spark, f"{loc}/{t}", suffix=".compact")
+    store = CheckpointStore(spark, loc, table_format)
+    missing = [f"table {t!r}" for t in _STAGE_TABLES if not store.exists(t)]
+    index = None
+    if store.exists("shingle_index"):
+        index = _load(spark, loc, table_format, "shingle_index")
+        if "ingest_batch" not in index.columns:
+            missing.append("column 'ingest_batch' of table 'shingle_index'")
+    if missing:
+        raise ValueError(
+            f"checkpoint dir {loc} lacks {', '.join(missing)}: an older "
+            f"run_pipeline wrote it, or it is damaged. Re-run run_pipeline("
+            f"..., checkpoint_dir=...) into a fresh dir and fold deltas into that"
+        )
+    prior = {t: _load(spark, loc, table_format, t) for t in _STAGE_TABLES}
+    prior["shingle_index"] = index
+    return prior
 
-    prior_identity = load("identity")  # metadata-only (pipeline contract)
-    prior_sigs = load("signatures")
-    prior_norm = load("norm")
-    prior_bands = load("bands")
-    prior_edges = load("edges")
-    prior_labels = load("cluster_labels")
 
+class _Guard(NamedTuple):
+    delta_identity: DataFrame  # delta rows not ingested yet
+    n_delta: int
+    batch_key: str  # the raw batch's shingle_index partition
+    recovery_key: str | None  # set only on the recovery path (_write_index)
+
+
+def _guard(
+    spark: SparkSession, new_files: DataFrame, prior: dict, loc: str,
+    table_format: str, cfg: DedupConfig,
+) -> _Guard | None:
+    """The idempotency and config guards; None when nothing is new."""
     par = spark.sparkContext.defaultParallelism
     delta_identity_raw = with_identity(new_files)
     if delta_identity_raw.rdd.getNumPartitions() < par:
@@ -189,7 +233,7 @@ def _incremental_dedup_update(
     # re-delivered file (same repo/path/commit) matches both hashes and is
     # dropped; a brand-new file whose 64-bit file_id merely collides with a
     # prior file's (different natural key → different file_id2) survives the
-    # guard and is routed into quarantine below, exactly as the batch path
+    # guard and is routed into quarantine, exactly as the batch path
     # quarantines it — anti-joining on file_id alone silently swallowed that
     # event class.  The guard probes a SLICE of prior identity (broadcast
     # semi on the delta's file_ids — delta-bounded), not the raw table: the
@@ -200,7 +244,7 @@ def _incremental_dedup_update(
     # duplicate a delta row through the left join.
     raw_fids = delta_identity_raw.select("file_id").distinct()
     idem_slice = (
-        prior_identity.select("file_id", "file_id2")
+        prior["identity"].select("file_id", "file_id2")
         .join(F.broadcast(raw_fids), "file_id", "left_semi")
         .distinct()
         .withColumn("_seen", F.lit(1))
@@ -224,10 +268,7 @@ def _incremental_dedup_update(
             "bit_xor(CASE WHEN _seen IS NULL THEN xxhash64(file_id, file_id2) END)"
         ).alias("h_delta"),
     ).first()
-    n_raw = stats["n_raw"]
-    batch_key = f"b_{n_raw}_{(stats['h_raw'] or 0) & 0xFFFFFFFFFFFFFFFF:x}"
-    delta_identity = delta_joined.filter(F.col("_seen").isNull()).drop("_seen")
-    n_delta = stats["n_delta"]
+    n_raw, n_delta = stats["n_raw"], stats["n_delta"]
     if n_delta == 0:
         # Fully-replayed (or fully previously-ingested) delivery: identity
         # is the commit point and it is written LAST, so zero surviving rows
@@ -235,48 +276,44 @@ def _incremental_dedup_update(
         # fold — in particular the index write is SKIPPED entirely, so
         # overlapping batch-mode deliveries never pay a recovery-path scan
         # (round-3 ADVICE).
-        return {
-            "assignments": load("cluster_labels"),
-            "edges": load("edges"),
-            "delta_signatures": prior_sigs.limit(0),
-            "cc_stats": {"n_edges": 0, "n_vertices": 0, "n_touched_clusters": 0},
-            "n_delta": 0,
-            "n_lsh_pairs": 0,
-        }
-    # False only when a crashed attempt committed part of this batch's
-    # identity append — the recovery-only path for the index write below
-    clean_first_attempt = n_delta == n_raw
-
-    store = CheckpointStore(spark, loc, table_format)
+        return None
     # same resume guard as the batch pipeline: folding a delta with a
     # DIFFERENT config into existing stage tables would mix signature
     # families silently (pre-guard checkpoints have no marker and adopt the
     # current config's)
-    from cloud_dedup_spark.plans.pipeline import config_fingerprint
+    CheckpointStore(spark, loc, table_format).guard_config(config_fingerprint(cfg))
+    batch_key = f"b_{n_raw}_{(stats['h_raw'] or 0) & 0xFFFFFFFFFFFFFFFF:x}"
+    # n_delta < n_raw only when a crashed attempt committed part of this
+    # batch's identity append — the recovery-only path for the index write;
+    # the surviving-delta fingerprint names its partition at no extra job
+    recovery_key = None
+    if n_delta < n_raw:
+        h_delta = (stats["h_delta"] or 0) & 0xFFFFFFFFFFFFFFFF
+        recovery_key = f"{batch_key}_p{n_delta}_{h_delta:x}"
+    delta_identity = delta_joined.filter(F.col("_seen").isNull()).drop("_seen")
+    return _Guard(delta_identity, n_delta, batch_key, recovery_key)
 
-    store.guard_config(config_fingerprint(cfg))
-    # one-time migrations for checkpoints written before these stage tables
-    # existed — the only folds that pay an O(corpus) derivation
-    if not store.exists("quarantine"):
-        _, q_migrate = quarantine_id_collisions(prior_identity)
-        q_migrate.write.mode("overwrite").format(table_format).save(
-            f"{loc}/quarantine"
-        )
-    if not store.exists("anchors"):
-        candidate_anchors(prior_sigs).write.mode("overwrite").format(
-            table_format
-        ).save(f"{loc}/anchors")
-    prior_quarantine = load("quarantine")
-    prior_anchors = load("anchors")
 
+class _Quarantine(NamedTuple):
+    delta_fids: DataFrame  # distinct file_ids of the surviving delta
+    delta_clean: DataFrame  # surviving delta rows minus quarantined ids
+    new_rows: DataFrame  # identity rows this fold newly quarantines
+    new_ids: DataFrame
+    has_new: bool
+    all_rows: DataFrame  # prior ∪ new quarantine rows
+    ids: DataFrame  # every quarantined file_id
+
+
+def _quarantine(prior: dict, delta_identity: DataFrame) -> _Quarantine:
+    """The delta-anchored 64-bit file_id collision check."""
     # quarantine FIRST, as the batch path does (pipeline.py): collisions are
     # detected delta-anchored — a NEW collision must involve at least one
     # delta file_id, so only identity rows sharing a delta file_id are
     # inspected (the persisted quarantine table records every collision
     # among prior rows, detected by the fold or batch run that ingested
     # them; by induction the union of the two is complete).  Every edge
-    # channel below runs on the clean subset only.
-    meta_cols = [c for c in prior_identity.columns]
+    # channel runs on the clean subset only.
+    meta_cols = prior["identity"].columns
     # lazy checkpoints (eager=False) throughout the fold where a driver
     # action follows anyway: the first action materializes AND truncates
     # lineage in ONE job instead of two — the fold's ~40-job floor was
@@ -287,16 +324,16 @@ def _incremental_dedup_update(
     delta_fids = (
         delta_identity.select("file_id").distinct().localCheckpoint(eager=False)
     )
-    prior_slice = prior_identity.join(
+    prior_slice = prior["identity"].join(
         F.broadcast(delta_fids), "file_id", "left_semi"
     )
     slice_union = prior_slice.select(*meta_cols).unionByName(
         delta_identity.select(*meta_cols)
     )
     _, slice_q = quarantine_id_collisions(slice_union)
+    prior_quarantine = prior["quarantine"]
     new_q_rows = slice_q.join(
-        prior_quarantine.select("file_id", "file_id2"),
-        ["file_id", "file_id2"],
+        prior_quarantine.select("file_id", "file_id2"), ["file_id", "file_id2"],
         "left_anti",
     ).localCheckpoint(eager=False)
     # count (not limit(1)): new_q_rows is collision-pair-sized (tiny) and the
@@ -312,37 +349,41 @@ def _incremental_dedup_update(
     delta_clean = delta_identity.join(
         F.broadcast(quarantined_ids), "file_id", "left_anti"
     )
+    return _Quarantine(
+        delta_fids, delta_clean, new_q_rows, new_q_ids, has_new_quarantine,
+        quarantined_rows_all, quarantined_ids,
+    )
 
-    # --- exact channel: star edges within sha groups touched by the delta
-    # OR by a NEWLY quarantined prior member.  The second clause is the
-    # repair path: when a collision quarantines a prior group's rep, that
-    # group's surviving members lost their star edges with the rep — a full
-    # recompute re-stars them around the new min-id clean member, so the
-    # fold must too.  Gating on NEW quarantines only (the persisted table
-    # makes "new" knowable) keeps repair off the steady-state path: an
-    # already-repaired group has a clean carrier and needs no work
-    # (round-3 ADVICE, medium).
+
+def _exact_channel(prior: dict, q: _Quarantine) -> tuple[DataFrame, ...]:
+    """(exact_new, prior_touched, touched): star edges, touched prior rows."""
+    # star edges within sha groups touched by the delta OR by a NEWLY
+    # quarantined prior member.  The second clause is the repair path: when
+    # a collision quarantines a prior group's rep, that group's surviving
+    # members lost their star edges with the rep — a full recompute
+    # re-stars them around the new min-id clean member, so the fold must
+    # too.  Gating on NEW quarantines only (the persisted table makes "new"
+    # knowable) keeps repair off the steady-state path: an already-repaired
+    # group has a clean carrier and needs no work (round-3 ADVICE, medium).
     id_cols = ["content_sha256", "file_id"]
-    delta_shas = delta_clean.select("content_sha256").distinct()
-    if has_new_quarantine:
+    touched_shas = q.delta_clean.select("content_sha256").distinct()
+    if q.has_new:
         prior_q_shas = (
-            prior_identity.join(F.broadcast(new_q_ids), "file_id", "left_semi")
+            prior["identity"].join(F.broadcast(q.new_ids), "file_id", "left_semi")
             .select("content_sha256")
             .distinct()
         )
-        touched_shas = delta_shas.unionByName(prior_q_shas).distinct()
-    else:
-        touched_shas = delta_shas
+        touched_shas = touched_shas.unionByName(prior_q_shas).distinct()
     touched_shas = touched_shas.localCheckpoint(eager=False)
     # prior CLEAN rows in touched sha groups: one column-pruned scan of the
     # identity table, filtered through broadcasts — no corpus shuffle
     prior_touched = (
-        prior_identity.join(F.broadcast(quarantined_ids), "file_id", "left_anti")
+        prior["identity"].join(F.broadcast(q.ids), "file_id", "left_anti")
         .join(F.broadcast(touched_shas), "content_sha256", "left_semi")
         .select(*id_cols)
         .localCheckpoint(eager=False)
     )
-    touched = prior_touched.unionByName(delta_clean.select(*id_cols))
+    touched = prior_touched.unionByName(q.delta_clean.select(*id_cols))
     w = Window.partitionBy("content_sha256")
     exact_new = (
         touched.withColumn("rep", F.min("file_id").over(w))
@@ -354,132 +395,145 @@ def _incremental_dedup_update(
             F.lit(1.0).alias("score"),
         )
     )
+    return exact_new, prior_touched, touched
 
-    # --- similarity channels: only brand-new content computes signatures ---
+
+def _delta_signatures(
+    prior: dict, q: _Quarantine, prior_touched: DataFrame, touched: DataFrame,
+    cfg: DedupConfig,
+) -> tuple[DataFrame, DataFrame]:
+    """(delta_sigs, delta_norm), materialized, of brand-new content only."""
     # a delta sha is prior-known iff some prior clean row carries it; those
     # rows are exactly prior_touched (delta shas ⊆ touched shas), so the
     # check is a broadcast anti-join against a touched-sized set — the old
     # corpus-wide prior-sha anti-join was the fold's biggest O(corpus)
     # shuffle (round-3 verdict item 1b)
     prior_touched_shas = prior_touched.select("content_sha256").distinct()
-    new_content = delta_clean.join(
+    new_content = q.delta_clean.join(
         F.broadcast(prior_touched_shas), "content_sha256", "left_anti"
     )
+    first_by_sha = Window.partitionBy("content_sha256").orderBy("file_id")
     delta_reps = (
-        new_content.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("content_sha256").orderBy("file_id")
-            ),
-        )
+        new_content.withColumn("_rn", F.row_number().over(first_by_sha))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    delta_sigs_base = compute_signatures(delta_reps, cfg).select(
-        *SIG_TABLE_COLUMNS
+    delta_sigs = compute_signatures(delta_reps, cfg).select(*SIG_TABLE_COLUMNS)
+    delta_norm = delta_reps.select("file_id", "content_norm")
+    if q.has_new:
+        inherited_sigs, inherited_norm = _inherit_reps(
+            prior, prior_touched, touched, delta_reps
+        )
+        delta_sigs = delta_sigs.unionByName(inherited_sigs)
+        delta_norm = delta_norm.unionByName(inherited_norm)
+    return delta_sigs.localCheckpoint(), delta_norm.localCheckpoint()
+
+
+def _inherit_reps(
+    prior: dict, prior_touched: DataFrame, touched: DataFrame, delta_reps: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Rep inheritance (quarantine repair): (inherited sigs, inherited norm)."""
+    # a collision can quarantine the one member that carried a sha group's
+    # signature and norm rows (the exact-rep).  Prior content is not in
+    # state (never checkpointed), but no recompute is needed: same sha ⇒
+    # byte-identical content, so the group's new min-id clean rep inherits
+    # RELABELED copies of a donor's rows, then flows through every delta
+    # channel (LSH bands, substring needles+index, persisted appends)
+    # exactly like brand-new content.
+    #
+    # Donor validity: a sig row's file_id can be AMBIGUOUS — both members of
+    # a collision pair share it, and only one of them wrote the row.  A donor
+    # is used only when every prior identity row with that file_id has one
+    # sha (then the row provably carries that sha's content); ambiguous
+    # carriers are skipped — bounded recall loss in an astronomically rare
+    # corner, never wrong signatures.  Exactly ONE donor is picked per sha
+    # (successive repairs can leave several carriers).  Repair triggers only
+    # for groups with NO clean sig-carrier left — if any clean member still
+    # carries signatures, the group's similarity channels are intact and
+    # inheritance would only grow the tables.  Idempotent: a repaired rep is
+    # itself a clean carrier on the next fold.
+    #
+    # Every step is scan-shaped: prior tables are read column-pruned and
+    # filtered through broadcasts keyed on touched-sized sets (and the whole
+    # block runs only on folds that newly quarantine something).
+    prior_identity, prior_sigs = prior["identity"], prior["signatures"]
+    new_reps = touched.groupBy("content_sha256").agg(F.min("file_id").alias("file_id"))
+    touched_prior_ids = prior_touched.select("file_id").distinct()
+    carrier_ids = prior_sigs.select("file_id").join(
+        F.broadcast(touched_prior_ids), "file_id", "left_semi"
     )
-    delta_norm_base = delta_reps.select("file_id", "content_norm")
-    if has_new_quarantine:
-        # --- rep inheritance (quarantine repair, similarity side): a
-        # collision can quarantine the one member that carried a sha group's
-        # signature and norm rows (the exact-rep).  Prior content is not in
-        # state (never checkpointed), but no recompute is needed: same sha ⇒
-        # byte-identical content, so the group's new min-id clean rep
-        # inherits RELABELED copies of a donor's rows, then flows through
-        # every delta channel below (LSH bands, substring needles+index,
-        # persisted appends) exactly like brand-new content.
-        #
-        # Donor validity: a sig row's file_id can be AMBIGUOUS — both
-        # members of a collision pair share it, and only one of them wrote
-        # the row.  A donor is used only when every prior identity row with
-        # that file_id has one sha (then the row provably carries that
-        # sha's content); ambiguous carriers are skipped — bounded recall
-        # loss in an astronomically rare corner, never wrong signatures.
-        # Exactly ONE donor is picked per sha (successive repairs can leave
-        # several carriers).  Repair triggers only for groups with NO clean
-        # sig-carrier left — if any clean member still carries signatures,
-        # the group's similarity channels are intact and inheritance would
-        # only grow the tables.  Idempotent: a repaired rep is itself a
-        # clean carrier on the next fold.
-        #
-        # Every step is scan-shaped: prior tables are read column-pruned and
-        # filtered through broadcasts keyed on touched-sized sets (and the
-        # whole block runs only on folds that newly quarantine something).
-        new_reps = touched.groupBy("content_sha256").agg(
-            F.min("file_id").alias("file_id")
+    clean_carrier_shas = (
+        prior_touched.join(F.broadcast(carrier_ids), "file_id", "left_semi")
+        .select("content_sha256")
+        .distinct()
+    )
+    reps_missing = new_reps.join(
+        F.broadcast(clean_carrier_shas), "content_sha256", "left_anti"
+    ).join(
+        F.broadcast(delta_reps.select("file_id")), "file_id", "left_anti"
+    ).localCheckpoint(eager=False)
+    # donor candidates: prior ids carrying a repair-needed sha.  The
+    # ambiguity check needs ALL identity rows of a candidate id (an id with
+    # rows under two shas is ambiguous even if only one sha needs repair),
+    # hence the second semi-filtered identity scan.
+    miss_shas = reps_missing.select("content_sha256")
+    donor_cand_ids = (
+        prior_identity.join(F.broadcast(miss_shas), "content_sha256", "left_semi")
+        .select("file_id")
+        .distinct()
+    )
+    donor_rows = prior_identity.join(
+        F.broadcast(donor_cand_ids), "file_id", "left_semi"
+    )
+    unambiguous = (
+        donor_rows.groupBy("file_id")
+        .agg(
+            F.countDistinct("content_sha256").alias("_n"),
+            F.min("content_sha256").alias("content_sha256"),
         )
-        touched_prior_ids = prior_touched.select("file_id").distinct()
-        carrier_ids = prior_sigs.select("file_id").join(
-            F.broadcast(touched_prior_ids), "file_id", "left_semi"
-        )
-        clean_carrier_shas = (
-            prior_touched.join(F.broadcast(carrier_ids), "file_id", "left_semi")
-            .select("content_sha256")
-            .distinct()
-        )
-        reps_missing = new_reps.join(
-            F.broadcast(clean_carrier_shas), "content_sha256", "left_anti"
-        ).join(
-            F.broadcast(delta_reps.select("file_id")), "file_id", "left_anti"
-        ).localCheckpoint(eager=False)
-        # donor candidates: prior ids carrying a repair-needed sha.  The
-        # ambiguity check needs ALL identity rows of a candidate id (an id
-        # with rows under two shas is ambiguous even if only one sha needs
-        # repair), hence the second semi-filtered identity scan.
-        miss_shas = reps_missing.select("content_sha256")
-        donor_cand_ids = (
-            prior_identity.join(
-                F.broadcast(miss_shas), "content_sha256", "left_semi"
-            )
-            .select("file_id")
-            .distinct()
-        )
-        donor_rows = prior_identity.join(
-            F.broadcast(donor_cand_ids), "file_id", "left_semi"
-        )
-        unambiguous = (
-            donor_rows.groupBy("file_id")
-            .agg(
-                F.countDistinct("content_sha256").alias("_n"),
-                F.min("content_sha256").alias("content_sha256"),
-            )
-            .filter(F.col("_n") == 1)
-            .select("content_sha256", F.col("file_id").alias("donor_id"))
-        )
-        donor_carriers = prior_sigs.select(
-            F.col("file_id").alias("donor_id")
-        ).join(
-            F.broadcast(unambiguous.select("donor_id")), "donor_id", "left_semi"
-        )
-        donor_pick = (
-            unambiguous.join(F.broadcast(donor_carriers), "donor_id", "left_semi")
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("content_sha256").orderBy("donor_id")
-                ),
-            )
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        repair_map = reps_missing.select("content_sha256", "file_id").join(
-            donor_pick, "content_sha256"
-        )
-        sig_payload = [c for c in SIG_TABLE_COLUMNS if c != "file_id"]
-        inherited_sigs = prior_sigs.withColumnRenamed("file_id", "donor_id").join(
-            F.broadcast(repair_map), "donor_id"
-        ).select("file_id", *sig_payload)
-        inherited_norm = prior_norm.withColumnRenamed("file_id", "donor_id").join(
-            F.broadcast(repair_map), "donor_id"
-        ).select("file_id", "content_norm")
-        delta_sigs_base = delta_sigs_base.unionByName(inherited_sigs)
-        delta_norm_base = delta_norm_base.unionByName(inherited_norm)
+        .filter(F.col("_n") == 1)
+        .select("content_sha256", F.col("file_id").alias("donor_id"))
+    )
+    donor_carriers = prior_sigs.select(F.col("file_id").alias("donor_id")).join(
+        F.broadcast(unambiguous.select("donor_id")), "donor_id", "left_semi"
+    )
+    first_by_sha = Window.partitionBy("content_sha256").orderBy("donor_id")
+    donor_pick = (
+        unambiguous.join(F.broadcast(donor_carriers), "donor_id", "left_semi")
+        .withColumn("_rn", F.row_number().over(first_by_sha))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    repair_map = reps_missing.select("content_sha256", "file_id").join(
+        donor_pick, "content_sha256"
+    )
+    sig_payload = [c for c in SIG_TABLE_COLUMNS if c != "file_id"]
+    inherited_sigs = prior_sigs.withColumnRenamed("file_id", "donor_id").join(
+        F.broadcast(repair_map), "donor_id"
+    ).select("file_id", *sig_payload)
+    inherited_norm = prior["norm"].withColumnRenamed("file_id", "donor_id").join(
+        F.broadcast(repair_map), "donor_id"
+    ).select("file_id", "content_norm")
+    return inherited_sigs, inherited_norm
 
-    delta_sigs = delta_sigs_base.localCheckpoint()
-    delta_norm = delta_norm_base.localCheckpoint()
-    union_sigs = prior_sigs.unionByName(delta_sigs)
-    union_norm = prior_norm.unionByName(delta_norm)
 
+def _own_partition(batch_key: str) -> Column:
+    """shingle_index partitions of this batch's earlier attempts: the exact
+    key or `<key>_p…` recovery partitions only — a bare startswith could
+    (astronomically rarely) match a DIFFERENT batch whose key string extends
+    this one, wrongly hiding its index rows from this fold."""
+    own = F.col("ingest_batch")
+    return (own == batch_key) | own.startswith(f"{batch_key}_p")
+
+
+def _near_channels(
+    spark: SparkSession, loc: str, table_format: str, cfg: DedupConfig,
+    prior: dict, batch_key: str, delta_sigs: DataFrame, delta_norm: DataFrame,
+) -> tuple[DataFrame, DataFrame, int, dict]:
+    """(near_new, sub_new, n_lsh_pairs, the delta's rows per index table):
+    LSH and both substring directions as three concurrent driver threads."""
+    union_sigs = prior["signatures"].unionByName(delta_sigs)
+    union_norm = prior["norm"].unionByName(delta_norm)
     # LSH: delta bands against the union — covers delta↔delta and delta↔prior.
     # Only prior bands sharing a delta band_key can pair with the delta, so
     # the bands table is scanned through a broadcast semi-filter on the
@@ -498,99 +552,6 @@ def _incremental_dedup_update(
     # delta_bands, union frames, the persisted index) are created before
     # the threads start; delta_index is EAGER so the two substring threads
     # never race to materialize the same lazy checkpoint.
-    def _lsh_channel():
-        delta_band_keys = delta_bands.select("band_key").distinct()
-        prior_band_hits = prior_bands.join(
-            F.broadcast(delta_band_keys), "band_key", "left_semi"
-        )
-        cand_bands = prior_band_hits.unionByName(delta_bands)
-        # --- hot-bucket cap (round-4 verdict item 1): the raw band_key equi-join
-        # emits bucket-size pairs per (delta member, band) — O(delta × bucket)
-        # verify work when a delta file carries a boilerplate band key whose
-        # bucket holds 10^4-10^6 near-identical (NOT byte-identical, so exact
-        # pre-collapse can't remove them) members.  Reuse the batch path's
-        # discipline (operators/candidates.py): bucket sizes per touched key
-        # (map-side combined — the shuffle output is one row per touched key,
-        # delta-bounded), keys ≤ cap keep the raw join, keys > cap route the
-        # delta member into its deterministic salt group only (the batch path's
-        # own salt assignment: pmod(xxhash64(band_key, file_id), ceil(n/cap))),
-        # giving O(delta × cap) pairs per band regardless of bucket size.
-        # Label-equality caveat (round-5 ADVICE): the batch path caps the
-        # same buckets and the delta member gets cap chances per band at a
-        # verified edge into the bucket's true family via its ~cap-sized
-        # salt group — but the delta pairs only WITHIN its same-salt group,
-        # without the batch path's cross-salt rep star+chain.  Equality
-        # with a full recompute therefore relies on the bucket's true
-        # family already being connected in prior_edges (the steady-state
-        # case: prior members were star+chained by whichever batch run /
-        # fold ingested them).  A delta delivering a large NEW near-dup
-        # family entirely inside one hot bucket can split that family
-        # across salt groups — bounded recall loss under the documented
-        # hot-bucket contract, never wrong edges.  Pinned by
-        # tests/test_incremental.py::test_fold_lsh_hot_bucket_is_capped.
-        cap = cfg.band_bucket_cap
-        hot_sizes = (
-            cand_bands.groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("bucket_n"))
-            .filter(F.col("bucket_n") > cap)
-            .localCheckpoint()  # eager: tiny (heavy-hitter keys), consumed 3×
-        )
-        cool_pairs = (
-            # anti-joining only the DELTA side suffices: the equi-join can then
-            # never match a hot key on the cand side
-            delta_bands.join(
-                F.broadcast(hot_sizes.select("band_key")), "band_key", "left_anti"
-            )
-            .join(cand_bands.withColumnRenamed("file_id", "other_id"), "band_key")
-            .filter(F.col("file_id") != F.col("other_id"))
-            .select(
-                F.least("file_id", "other_id").alias("src"),
-                F.greatest("file_id", "other_id").alias("dst"),
-            )
-        )
-        salt = F.pmod(
-            F.xxhash64("band_key", "file_id"),
-            F.ceil(F.col("bucket_n") / cap).cast("long"),
-        )
-        delta_hot = (
-            delta_bands.join(F.broadcast(hot_sizes), "band_key")
-            .withColumn("salt", salt)
-            .select("band_key", "salt", "file_id")
-        )
-        cand_hot = (
-            cand_bands.join(F.broadcast(hot_sizes), "band_key")
-            .withColumn("salt", salt)
-            .select("band_key", "salt", F.col("file_id").alias("other_id"))
-        )
-        hot_pairs = (
-            # broadcast the delta side: the bucket-sized cand side stays a pure
-            # scan (prior_bands through two broadcast filters), never shuffled
-            F.broadcast(delta_hot)
-            .join(cand_hot, ["band_key", "salt"])
-            .filter(F.col("file_id") != F.col("other_id"))
-            .select(
-                F.least("file_id", "other_id").alias("src"),
-                F.greatest("file_id", "other_id").alias("dst"),
-            )
-        )
-        lsh_pairs = cool_pairs.unionByName(hot_pairs).distinct()
-        # small_pairs: the pair set is delta-anchored — plan-time broadcasts keep
-        # the corpus-wide sigs table scan-only (AQE alone still materializes the
-        # corpus-sized exchange before deciding to broadcast).  GATED on the
-        # measured pair count (now cap-bounded per (member, band), but the gate
-        # stays: many delta members × many bands can still add up) —
-        # force-broadcasting past it would OOM the driver exactly when volume
-        # strikes (round-4 review).  Past the gate, verify falls back to its
-        # shuffled AQE plan — the batch path's graceful degradation.
-        lsh_pairs = lsh_pairs.localCheckpoint(eager=False)
-        n_lsh_pairs = lsh_pairs.count()
-        near_new = accepted_edges(
-            verify_pairs(
-                lsh_pairs, union_sigs, cfg,
-                small_pairs=n_lsh_pairs <= 500_000,
-            )
-        ).select("src", "dst", "edge_kind", "score")
-        return near_new, n_lsh_pairs
 
     # substring: both delta-anchored directions (new needle in old haystack,
     # old needle in new haystack; delta↔delta covered by the first).
@@ -600,34 +561,15 @@ def _incremental_dedup_update(
     # scanned by the delta-needles call — so no update ever re-explodes the
     # union's signature rows (ROADMAP 5; the delta-haystacks call explodes
     # just the delta, which is already delta-sized).
-    index_path = f"{loc}/shingle_index"
-    if not store.exists("shingle_index"):
+    index = prior["shingle_index"]
+    if index is None:
         # first incremental run: base partition from the prior signatures
-        shingle_inverted_index(prior_sigs).withColumn(
+        shingle_inverted_index(prior["signatures"]).withColumn(
             "ingest_batch", F.lit("base")
         ).write.mode("overwrite").partitionBy("ingest_batch").format(
             table_format
-        ).save(index_path)
-    elif "ingest_batch" not in spark.read.format(table_format).load(
-        index_path
-    ).columns:
-        # one-time migration of a checkpoint written before the index was
-        # batch-partitioned: rewrite it as the base partition via the
-        # crash-safe swap (entry repair at the top of the fold covers a kill
-        # between the renames; the old delete-then-rename left a window
-        # where the index vanished and the next fold silently re-exploded
-        # the whole corpus — round-3 ADVICE)
-        swap_overwrite(
-            spark,
-            spark.read.format(table_format).load(index_path).withColumn(
-                "ingest_batch", F.lit("base")
-            ),
-            index_path,
-            table_format=table_format,
-            suffix=".migrate",
-            partition_by="ingest_batch",
-        )
-
+        ).save(f"{loc}/shingle_index")
+        index = _load(spark, loc, table_format, "shingle_index")
     # The index is the LARGEST stage table (one row per corpus token), so
     # its append idempotency must not cost a per-delta scan of the table
     # (an insert-if-absent distinct over `dst` is O(corpus tokens) per
@@ -636,7 +578,7 @@ def _incremental_dedup_update(
     # replays recompute it identically): a replayed micro-batch
     # dynamic-overwrites exactly that partition — idempotent at O(delta).
     # The recovery path for a batch whose identity append was PARTIAL is
-    # below at the persist step.
+    # in _write_index.
     # eager (round-6): BOTH substring threads below consume this frame; a
     # lazy checkpoint would let them race to materialize the same blocks
     delta_index = shingle_inverted_index(delta_sigs).localCheckpoint()
@@ -644,18 +586,11 @@ def _incremental_dedup_update(
     # THIS batch's earlier attempts — the raw batch_key partition and any
     # `<batch_key>_p*` recovery partitions (crash window: index written,
     # identity not — in that window the crashed attempt already committed
-    # this batch's edges, which the fold reads via prior_edges, so excluding
-    # its index partitions here loses nothing), plus the in-memory delta rows
-    # exact key or `<key>_p…` recovery partitions only — a bare startswith
-    # could (astronomically rarely) match a DIFFERENT batch whose key string
-    # extends this one, wrongly hiding its index rows from this fold
-    own_partition = (F.col("ingest_batch") == batch_key) | F.col(
-        "ingest_batch"
-    ).startswith(f"{batch_key}_p")
+    # this batch's edges, which the fold reads via the prior edges, so
+    # excluding its index partitions here loses nothing), plus the
+    # in-memory delta rows
     union_index = (
-        spark.read.format(table_format)
-        .load(index_path)
-        .filter(~own_partition)
+        index.filter(~_own_partition(batch_key))
         .select("dst", "hay_tokens", "sh")
         .unionByName(delta_index)
     )
@@ -666,38 +601,134 @@ def _incremental_dedup_update(
     # table joins against the delta's doc frequencies — scan-only; the old
     # path re-exploded every union signature row and ran a corpus-wide
     # anchor-value distinct per fold (round-3 verdict item 1)
-    union_anchors = prior_anchors.unionByName(delta_anchors)
+    union_anchors = prior["anchors"].unionByName(delta_anchors)
 
-    def _sub_forward():
-        return substring_edges(
-            union_norm, union_sigs, cfg, needle_ids=delta_ids,
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_near = pool.submit(_lsh_edges, cfg, prior["bands"], delta_bands, union_sigs)
+        f_fwd = pool.submit(
+            substring_edges, union_norm, union_sigs, cfg, needle_ids=delta_ids,
             inverted=union_index,
         )
-
-    def _sub_reverse():
         # inverted=delta_index (not haystack_ids=delta_ids): the delta's
         # inverted index IS the haystack explode the operator would
         # otherwise rebuild by scanning + semi-filtering corpus-sized
         # union_sigs — already materialized above, so reusing it saves
         # one full-signatures scan and a duplicate delta explode per fold
-        return substring_edges(
-            union_norm, union_sigs, cfg, inverted=delta_index,
+        f_rev = pool.submit(
+            substring_edges, union_norm, union_sigs, cfg, inverted=delta_index,
             cand_anchors=union_anchors, df_index=union_index,
         )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_near = pool.submit(_lsh_channel)
-        f_fwd = pool.submit(_sub_forward)
-        f_rev = pool.submit(_sub_reverse)
         near_new, n_lsh_pairs = f_near.result()
         sub_new = substring_edge_list(
             f_fwd.result().unionByName(f_rev.result()).distinct()
         )
+    delta_rows = {
+        "bands": delta_bands, "shingle_index": delta_index, "anchors": delta_anchors
+    }
+    return near_new, sub_new, n_lsh_pairs, delta_rows
 
+
+def _lsh_edges(
+    cfg: DedupConfig, prior_bands: DataFrame, delta_bands: DataFrame,
+    union_sigs: DataFrame,
+) -> tuple[DataFrame, int]:
+    """The LSH channel's thread: (verified near edges, candidate pair count)."""
+    delta_band_keys = F.broadcast(delta_bands.select("band_key").distinct())
+    prior_band_hits = prior_bands.join(delta_band_keys, "band_key", "left_semi")
+    cand_bands = prior_band_hits.unionByName(delta_bands)
+    # --- hot-bucket cap (round-4 verdict item 1): the raw band_key equi-join
+    # emits bucket-size pairs per (delta member, band) — O(delta × bucket)
+    # verify work when a delta file carries a boilerplate band key whose
+    # bucket holds 10^4-10^6 near-identical (NOT byte-identical, so exact
+    # pre-collapse can't remove them) members.  Reuse the batch path's
+    # discipline (operators/candidates.py): bucket sizes per touched key
+    # (map-side combined — the shuffle output is one row per touched key,
+    # delta-bounded), keys ≤ cap keep the raw join, keys > cap route the
+    # delta member into its deterministic salt group only (the batch path's
+    # own salt assignment: pmod(xxhash64(band_key, file_id), ceil(n/cap))),
+    # giving O(delta × cap) pairs per band regardless of bucket size.
+    # Label-equality caveat (round-5 ADVICE): the batch path caps the
+    # same buckets and the delta member gets cap chances per band at a
+    # verified edge into the bucket's true family via its ~cap-sized
+    # salt group — but the delta pairs only WITHIN its same-salt group,
+    # without the batch path's cross-salt rep star+chain.  Equality
+    # with a full recompute therefore relies on the bucket's true
+    # family already being connected in the prior edges (the steady-state
+    # case: prior members were star+chained by whichever batch run /
+    # fold ingested them).  A delta delivering a large NEW near-dup
+    # family entirely inside one hot bucket can split that family
+    # across salt groups — bounded recall loss under the documented
+    # hot-bucket contract, never wrong edges.  Pinned by
+    # tests/test_incremental.py::test_fold_lsh_hot_bucket_is_capped.
+    cap = cfg.band_bucket_cap
+    hot_sizes = (
+        cand_bands.groupBy("band_key")
+        .agg(F.count(F.lit(1)).alias("bucket_n"))
+        .filter(F.col("bucket_n") > cap)
+        .localCheckpoint()  # eager: tiny (heavy-hitter keys), consumed 3×
+    )
+    cool_pairs = (
+        # anti-joining only the DELTA side suffices: the equi-join can then
+        # never match a hot key on the cand side
+        delta_bands.join(
+            F.broadcast(hot_sizes.select("band_key")), "band_key", "left_anti"
+        )
+        .join(cand_bands.withColumnRenamed("file_id", "other_id"), "band_key")
+        .filter(F.col("file_id") != F.col("other_id"))
+        .select(
+            F.least("file_id", "other_id").alias("src"),
+            F.greatest("file_id", "other_id").alias("dst"),
+        )
+    )
+    salt = F.pmod(
+        F.xxhash64("band_key", "file_id"),
+        F.ceil(F.col("bucket_n") / cap).cast("long"),
+    )
+    delta_hot = (
+        delta_bands.join(F.broadcast(hot_sizes), "band_key")
+        .withColumn("salt", salt)
+        .select("band_key", "salt", "file_id")
+    )
+    cand_hot = (
+        cand_bands.join(F.broadcast(hot_sizes), "band_key")
+        .withColumn("salt", salt)
+        .select("band_key", "salt", F.col("file_id").alias("other_id"))
+    )
+    hot_pairs = (
+        # broadcast the delta side: the bucket-sized cand side stays a pure
+        # scan (prior bands through two broadcast filters), never shuffled
+        F.broadcast(delta_hot)
+        .join(cand_hot, ["band_key", "salt"])
+        .filter(F.col("file_id") != F.col("other_id"))
+        .select(
+            F.least("file_id", "other_id").alias("src"),
+            F.greatest("file_id", "other_id").alias("dst"),
+        )
+    )
+    lsh_pairs = cool_pairs.unionByName(hot_pairs).distinct()
+    # small_pairs: the pair set is delta-anchored — plan-time broadcasts keep
+    # the corpus-wide sigs table scan-only (AQE alone still materializes the
+    # corpus-sized exchange before deciding to broadcast).  GATED on the
+    # measured pair count (now cap-bounded per (member, band), but the gate
+    # stays: many delta members × many bands can still add up) —
+    # force-broadcasting past it would OOM the driver exactly when volume
+    # strikes (round-4 review).  Past the gate, verify falls back to its
+    # shuffled AQE plan — the batch path's graceful degradation.
+    lsh_pairs = lsh_pairs.localCheckpoint(eager=False)
+    n_lsh_pairs = lsh_pairs.count()
+    near_new = accepted_edges(
+        verify_pairs(lsh_pairs, union_sigs, cfg, small_pairs=n_lsh_pairs <= 500_000)
+    ).select("src", "dst", "edge_kind", "score")
+    return near_new, n_lsh_pairs
+
+
+def _components(
+    prior: dict, q: _Quarantine, exact_new: DataFrame, near_new: DataFrame,
+    sub_new: DataFrame,
+) -> tuple[DataFrame, DataFrame, dict]:
+    """(assignments, edges_out, cc_stats): CC over touched components only."""
     # edges never touch a quarantined id (batch builds all channels from the
-    # clean identity, so a full recompute has no such edge; prior_edges can
+    # clean identity, so a full recompute has no such edge; prior edges can
     # carry one when THIS delta newly quarantines a prior file — left
     # unfiltered it could even bridge two clean files through the quarantined
     # node in connected components)
@@ -705,14 +736,10 @@ def _incremental_dedup_update(
         exact_new.unionByName(near_new)
         .unionByName(sub_new)
         .join(
-            F.broadcast(quarantined_ids.withColumnRenamed("file_id", "src")),
-            "src",
-            "left_anti",
+            F.broadcast(q.ids.withColumnRenamed("file_id", "src")), "src", "left_anti"
         )
         .join(
-            F.broadcast(quarantined_ids.withColumnRenamed("file_id", "dst")),
-            "dst",
-            "left_anti",
+            F.broadcast(q.ids.withColumnRenamed("file_id", "dst")), "dst", "left_anti"
         )
         .select("src", "dst", "edge_kind", "score")
         .dropDuplicates(["src", "dst"])
@@ -721,13 +748,13 @@ def _incremental_dedup_update(
     # prior edges incident to a NEWLY quarantined id leave the graph (left
     # in, they could bridge two clean files through the quarantined node);
     # previously-quarantined ids never had edges, by induction
-    prior_edges_clean = prior_edges
-    if has_new_quarantine:
-        prior_edges_clean = prior_edges.join(
-            F.broadcast(new_q_ids.withColumnRenamed("file_id", "src")),
+    prior_edges_clean = prior["edges"]
+    if q.has_new:
+        prior_edges_clean = prior_edges_clean.join(
+            F.broadcast(q.new_ids.withColumnRenamed("file_id", "src")),
             "src", "left_anti",
         ).join(
-            F.broadcast(new_q_ids.withColumnRenamed("file_id", "dst")),
+            F.broadcast(q.new_ids.withColumnRenamed("file_id", "dst")),
             "dst", "left_anti",
         )
 
@@ -742,10 +769,10 @@ def _incremental_dedup_update(
     seed_ids = (
         new_edges.select(F.col("src").alias("file_id"))
         .unionByName(new_edges.select(F.col("dst").alias("file_id")))
-        .unionByName(new_q_ids)
+        .unionByName(q.new_ids)
         .distinct()
     )
-    prior_clean_labels = prior_labels.filter(~F.col("quarantined"))
+    prior_clean_labels = prior["cluster_labels"].filter(~F.col("quarantined"))
     touched_cluster_ids = (
         prior_clean_labels.join(F.broadcast(seed_ids), "file_id", "left_semi")
         .select("cluster_id")
@@ -758,12 +785,10 @@ def _incremental_dedup_update(
     # contain the delta's rows (labels commit before identity), and keeping
     # both copies would duplicate them.
     prior_kept = prior_clean_labels.join(
-        F.broadcast(new_q_ids), "file_id", "left_anti"
-    ).join(F.broadcast(delta_fids), "file_id", "left_anti")
+        F.broadcast(q.new_ids), "file_id", "left_anti"
+    ).join(F.broadcast(q.delta_fids), "file_id", "left_anti")
     touched_prior_members = (
-        prior_kept.join(
-            F.broadcast(touched_cluster_ids), "cluster_id", "left_semi"
-        )
+        prior_kept.join(F.broadcast(touched_cluster_ids), "cluster_id", "left_semi")
         .select("file_id", "repo", "path")
         .localCheckpoint(eager=False)
     )
@@ -771,7 +796,7 @@ def _incremental_dedup_update(
         F.broadcast(touched_cluster_ids), "cluster_id", "left_anti"
     )
     cc_members = touched_prior_members.select("file_id").unionByName(
-        delta_clean.select("file_id")
+        q.delta_clean.select("file_id")
     ).localCheckpoint(eager=False)
     n_cc_members = cc_members.count()
     # selecting the touched components' prior edges: filtering on src alone
@@ -798,33 +823,26 @@ def _incremental_dedup_update(
     # materialized (touched_cluster_ids rides the member-split broadcasts),
     # so each is a cheap cached-read job.
     cc_stats = {
-        "n_edges": cc_edges.count(),
-        "n_vertices": n_cc_members,
+        "n_edges": cc_edges.count(), "n_vertices": n_cc_members,
         "n_touched_clusters": touched_cluster_ids.count(),
     }
+    label_cols = ["file_id", "repo", "path", "cluster_id", "quarantined"]
     recomputed = (
         touched_prior_members.unionByName(
-            delta_clean.select("file_id", "repo", "path")
+            q.delta_clean.select("file_id", "repo", "path")
         )
         .join(sub_labels, "file_id", "left")
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col("file_id")))
         .withColumn("quarantined", F.lit(False))
-        .select("file_id", "repo", "path", "cluster_id", "quarantined")
+        .select(*label_cols)
     )
-    assignments = (
-        untouched_prior.select(
-            "file_id", "repo", "path", "cluster_id", "quarantined"
-        )
-        .unionByName(recomputed)
-        .unionByName(
-            quarantined_rows_all.select(
-                "file_id", "repo", "path",
-                F.col("file_id2").alias("cluster_id"),
-                F.lit(True).alias("quarantined"),
-            )
-        )
+    quarantined = q.all_rows.select(
+        "file_id", "repo", "path", F.col("file_id2").alias("cluster_id"),
+        F.lit(True).alias("quarantined"),
     )
-
+    assignments = untouched_prior.select(*label_cols).unionByName(
+        recomputed
+    ).unionByName(quarantined)
     # new edges may re-derive edges that already exist (the exact channel
     # re-stars every touched sha group) — dedup against the affected slice
     # only: any prior edge sharing an endpoint with a new edge lives in a
@@ -834,8 +852,24 @@ def _incremental_dedup_update(
         affected_prior_edges.select("src", "dst"), ["src", "dst"], "left_anti"
     )
     edges_out = prior_edges_clean.unionByName(new_edges_final)
+    return assignments, edges_out, cc_stats
 
-    # persist — crash-safe under foreachBatch replay at ANY point:
+
+def _persist(
+    spark: SparkSession, loc: str, table_format: str, out: dict, prior: dict,
+    guard: _Guard, q: _Quarantine,
+) -> None:
+    """Write the fold: the concurrent barrier over the seven tables in ``out``
+    (table name → the frame that lands there), then quarantine, then identity.
+
+    Barrier invariant: no frame a concurrent task reads — its ``out`` frame or
+    its table's pre-fold snapshot in ``prior`` — may list a file under another
+    task's target path, because a sibling's swap renames that directory away
+    (and a sibling's append adds files to it) mid-scan.  So every input that
+    is not the task's own table is a materialized checkpoint (pinned by
+    tests/test_incremental.py::test_persist_tasks_read_no_sibling_target).
+    """
+    # crash-safe under foreachBatch replay at ANY point:
     #   1. the derived-table swaps (edges, cluster_labels), the index
     #      partition write, and the four append tables are mutually
     #      independent writes to SEVEN distinct paths, so they run as
@@ -850,7 +884,7 @@ def _incremental_dedup_update(
     #      tests/test_incremental.py::test_partial_write_replay_reconverges.
     #      The swaps STREAM through the prior table (no corpus-sized
     #      localCheckpoint); a crash between a swap's two renames is healed
-    #      by the entry repair at the top of the fold;
+    #      by the entry repair in _open_prior;
     #   2. every append is insert-if-absent (broadcast anti-join against the
     #      pre-fold snapshot of the table, semi-filtered to the delta's own
     #      keys — O(delta) shuffle), so a replay after a partial append
@@ -861,18 +895,49 @@ def _incremental_dedup_update(
     #      must be durably appended before the ids are marked quarantined
     #      (a crash in between re-runs repair on replay; the append guards
     #      drop the duplicates);
-    #   4. identity goes LAST: it is the table the top-of-fold idempotency
-    #      guard keys on, i.e. the commit point.  A crash anywhere before it
-    #      leaves the delta "not yet ingested" — the replay redoes the fold
-    #      and reconverges; a crash after it means every other write already
+    #   4. identity goes LAST: it is the table the idempotency guard keys
+    #      on, i.e. the commit point.  A crash anywhere before it leaves the
+    #      delta "not yet ingested" — the replay redoes the fold and
+    #      reconverges; a crash after it means every other write already
     #      committed.  Pinned by
     #      tests/test_incremental.py::test_partial_write_replay_reconverges.
+    tasks = [
+        (swap_overwrite, spark, out["edges"], f"{loc}/edges", table_format),
+        (swap_overwrite, spark, out["cluster_labels"], f"{loc}/cluster_labels",
+         table_format),
+        (_write_index, loc, table_format, out["shingle_index"],
+         prior["shingle_index"], guard),
+    ] + [
+        (_append_absent, out[t], f"{loc}/{t}", keys, prior[t], table_format)
+        for t, keys in _APPEND_KEYS.items()
+    ]
+    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
+        for fut in [pool.submit(*t) for t in tasks]:
+            fut.result()
+    if q.has_new:
+        _append_absent(
+            q.new_rows, f"{loc}/quarantine", ["file_id", "file_id2"],
+            prior["quarantine"], table_format,
+        )
+    # identity holds EVERY row incl. quarantined collision pairs, so the
+    # delta was guarded on the 128-bit composite in _guard — appending it
+    # directly is already idempotent (the old second guard re-read the table
+    # it had just read; round-3 ADVICE)
+    guard.delta_identity.select(*prior["identity"].columns).write.mode(
+        "append"
+    ).format(table_format).save(f"{loc}/identity")
 
-    # index rows land in this batch's own partition (see batch_key above);
+
+def _write_index(
+    loc: str, table_format: str, delta_index: DataFrame,
+    prior_index: DataFrame | None, guard: _Guard,
+) -> None:
+    """The delta's shingle_index rows, into this batch's own partition."""
     # dynamic overwrite touches only partitions present in the data, so a
     # crashed half-write is replaced wholesale on the next replay.  The
     # plain partition path is only valid when this fold's delta covers the
-    # WHOLE raw batch; otherwise (partial delta) two cases differ:
+    # WHOLE raw batch; otherwise (partial delta: guard.recovery_key is set)
+    # two cases differ:
     #   * an earlier attempt of THIS batch left a partition (crash mid-way
     #     through the identity append): overwriting with the shrunken delta
     #     would drop the committed rows' index entries, and appending
@@ -885,111 +950,43 @@ def _incremental_dedup_update(
     #     they get their own deterministic partition — same O(delta)
     #     overwrite idempotency as the clean path (round-3 ADVICE: this
     #     caller class used to pay the recovery scan on every call).
-    def _write_index() -> None:
-        if clean_first_attempt:
-            (
-                delta_index.withColumn("ingest_batch", F.lit(batch_key))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch")
-                .format(table_format)
-                .save(index_path)
-            )
-            return
-        # the surviving-delta fingerprint was computed in the top-of-fold
-        # multi-agg (h_delta) — no extra job on the recovery path
-        sub_key = (
-            f"{batch_key}_p{n_delta}_"
-            f"{(stats['h_delta'] or 0) & 0xFFFFFFFFFFFFFFFF:x}"
-        )
-        fs, idx_hpath, _ = _fs(spark, index_path)
-        own_parts = [
-            s.getPath().getName()
-            for s in fs.listStatus(idx_hpath)
-            if s.getPath().getName() == f"ingest_batch={batch_key}"
-            or s.getPath().getName().startswith(f"ingest_batch={batch_key}_p")
-        ]
-        to_write = delta_index
-        if own_parts:
+    index_path = f"{loc}/shingle_index"
+    to_write, key = delta_index, guard.batch_key
+    if guard.recovery_key is not None:
+        key = guard.recovery_key
+        # own partitions predate this fold (a fold that builds the index
+        # starts from an empty directory), so the snapshot _open_prior took
+        # lists their files — no job, no second listing
+        own = f"/ingest_batch={guard.batch_key}"
+        if prior_index is not None and any(
+            f"{own}/" in f or f"{own}_p" in f for f in prior_index.inputFiles()
+        ):
             own_dst = (
-                spark.read.format(table_format)
-                .load(index_path)
-                .filter(own_partition)
+                prior_index.filter(_own_partition(guard.batch_key))
                 .select("dst")
                 .distinct()
             )
             to_write = delta_index.join(F.broadcast(own_dst), "dst", "left_anti")
-        (
-            to_write.withColumn("ingest_batch", F.lit(sub_key))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .format(table_format)
-            .save(index_path)
-        )
+    to_write.withColumn("ingest_batch", F.lit(key)).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("ingest_batch").format(table_format).save(index_path)
 
-    def _append_absent(
-        df: DataFrame, name: str, keys: list[str], prior_frame: DataFrame
-    ) -> None:
-        # insert-if-absent at O(delta): semi-filter the pre-fold snapshot of
-        # the table down to the delta's own keys (broadcast — delta-bounded),
-        # then anti-join.  Nothing writes to these tables between the
-        # snapshot read and this append within one fold, so the snapshot IS
-        # the live table; the old form re-read the table and ran a
-        # corpus-wide distinct per fold (round-3 ADVICE).
-        key_df = df.select(*keys).distinct()
-        existing = prior_frame.select(*keys).join(
-            F.broadcast(key_df), keys, "left_semi"
-        )
-        df.join(F.broadcast(existing), keys, "left_anti").write.mode(
-            "append"
-        ).format(table_format).save(f"{loc}/{name}")
 
-    # sigs/norm/bands/anchors hold clean exact-representatives only, where
-    # file_id is unique (a colliding delta file never reaches them —
-    # quarantined above), so file_id alone is the right key; identity holds
-    # EVERY row incl. quarantined collision pairs, so the delta was guarded
-    # on the 128-bit composite at the top of the fold — appending it
-    # directly is already idempotent (the old second guard re-read the
-    # table it had just read; round-3 ADVICE).
-    # anchors is the one append table with MULTIPLE rows per src (K min
-    # shingles), so the guard keys on the full (src, sh) row identity — a
-    # src-only key would treat a partially-committed crash append as "src
-    # exists" and silently drop the needle's remaining anchors forever
-    # (round-4 review)
-    persist_tasks = [
-        lambda: swap_overwrite(spark, edges_out, f"{loc}/edges", table_format),
-        lambda: swap_overwrite(
-            spark, assignments, f"{loc}/cluster_labels", table_format
-        ),
-        _write_index,
-        lambda: _append_absent(delta_sigs, "signatures", ["file_id"], prior_sigs),
-        lambda: _append_absent(delta_norm, "norm", ["file_id"], prior_norm),
-        lambda: _append_absent(delta_bands, "bands", ["file_id"], prior_bands),
-        lambda: _append_absent(
-            delta_anchors, "anchors", ["src", "sh"], prior_anchors
-        ),
-    ]
-    with ThreadPoolExecutor(max_workers=len(persist_tasks)) as pool:
-        for fut in [pool.submit(t) for t in persist_tasks]:
-            fut.result()
-    if has_new_quarantine:
-        _append_absent(
-            new_q_rows, "quarantine", ["file_id", "file_id2"], prior_quarantine
-        )
-    delta_identity.select(*meta_cols).write.mode("append").format(
+def _append_absent(
+    df: DataFrame, path: str, keys: list[str], prior_frame: DataFrame,
+    table_format: str,
+) -> None:
+    # insert-if-absent at O(delta): semi-filter the pre-fold snapshot of the
+    # table down to the delta's own keys (broadcast — delta-bounded), then
+    # anti-join.  Nothing writes to these tables between the snapshot read
+    # and this append within one fold, so the snapshot IS the live table;
+    # the old form re-read the table and ran a corpus-wide distinct per fold
+    # (round-3 ADVICE).
+    key_df = df.select(*keys).distinct()
+    existing = prior_frame.select(*keys).join(F.broadcast(key_df), keys, "left_semi")
+    df.join(F.broadcast(existing), keys, "left_anti").write.mode("append").format(
         table_format
-    ).save(f"{loc}/identity")
-    return {
-        "assignments": load("cluster_labels"),
-        "edges": load("edges"),
-        "delta_signatures": delta_sigs,
-        "cc_stats": cc_stats,
-        "n_delta": n_delta,
-        # the LSH channel's verify-input volume — observable so the
-        # hot-bucket cap is testable (O(cap), never O(bucket))
-        "n_lsh_pairs": n_lsh_pairs,
-    }
+    ).save(path)
 
 
 def incremental_dedup_stream(

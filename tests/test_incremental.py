@@ -21,6 +21,16 @@ def _clusters(assignments) -> set[frozenset]:
     return {frozenset(v) for v in got.values() if len(v) >= 2}
 
 
+def _small_checkpoint(spark, tmp_path, n_base=60, seed=31):
+    rows, _ = generate_corpus(n_base, seed=seed)
+    base = spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"])
+         for r in rows], SCHEMA)
+    ckpt = str(tmp_path / "ckpt")
+    run_pipeline(spark, base, checkpoint_dir=ckpt)
+    return rows, ckpt
+
+
 @pytest.fixture(scope="module")
 def state(spark, tmp_path_factory):
     rows, _ = generate_corpus(BASE_N, seed=11)
@@ -159,6 +169,55 @@ def test_partial_write_replay_reconverges(spark, tmp_path):
         .count()
         == 0
     )
+    assert _clusters(spark.read.parquet(f"{ckpt_b}/cluster_labels")) == \
+        _clusters(spark.read.parquet(f"{ckpt_a}/cluster_labels"))
+
+
+def test_partial_identity_replay_keeps_index_rows_unique(spark, tmp_path):
+    """The index write's recovery path: a crashed attempt committed the
+    batch's index partition and PART of its identity append.  The replay
+    sees a shrunken delta, finds this batch's own partition in the index
+    snapshot, and must not write the surviving rows' index entries a second
+    time — the index stays one row per (dst, shingle), and the state equals
+    a clean single run."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    rows, ckpt_a = _small_checkpoint(spark, tmp_path, n_base=120, seed=23)
+    ckpt_b = str(tmp_path / "b")
+    shutil.copytree(ckpt_a, ckpt_b)
+
+    pair = _Gen(71).body(55)
+    delta = spark.createDataFrame(
+        [
+            ("repo_x", "q/exact_of_old.py", "y1", "py", rows[0]["content"]),
+            ("repo_x", "q/pair1.py", "y2", "py", pair),
+            ("repo_y", "q/pair2.py", "y3", "py", pair),
+        ],
+        SCHEMA,
+    )
+    incremental_dedup_update(spark, delta, ckpt_a)  # the clean run
+
+    # B crashed inside the identity append: every other table committed,
+    # identity holds one of the three delta rows
+    for t in ("edges", "cluster_labels", "signatures", "norm", "bands",
+              "anchors", "shingle_index"):
+        shutil.rmtree(f"{ckpt_b}/{t}", ignore_errors=True)
+        shutil.copytree(f"{ckpt_a}/{t}", f"{ckpt_b}/{t}")
+    spark.read.parquet(f"{ckpt_a}/identity").filter(
+        F.col("path") == "q/exact_of_old.py"
+    ).write.mode("append").parquet(f"{ckpt_b}/identity")
+
+    inc = incremental_dedup_update(spark, delta, ckpt_b)  # the replay
+    assert inc["n_delta"] == 2  # the recovery path ran
+
+    for t in ("identity", "signatures", "shingle_index"):
+        na = spark.read.parquet(f"{ckpt_a}/{t}").count()
+        nb = spark.read.parquet(f"{ckpt_b}/{t}").count()
+        assert nb == na, f"{t}: replay changed row count {na} -> {nb}"
+    idx_b = spark.read.parquet(f"{ckpt_b}/shingle_index")
+    assert idx_b.count() == idx_b.select("dst", "sh").distinct().count()
     assert _clusters(spark.read.parquet(f"{ckpt_b}/cluster_labels")) == \
         _clusters(spark.read.parquet(f"{ckpt_a}/cluster_labels"))
 
@@ -373,3 +432,73 @@ def test_incremental_cc_runs_on_touched_components_only(spark, tmp_path):
     for key, lbl in prior_by_file.items():
         if lbl != touched_label:
             assert after_by_file[key] == lbl, key
+
+
+def test_fold_rejects_checkpoint_missing_a_stage_table(spark, tmp_path):
+    """A checkpoint without a stage table the fold reads (here ``anchors``,
+    as written by an older run_pipeline) fails loudly, naming the table,
+    instead of being silently re-derived from the corpus."""
+    import shutil
+
+    _, ckpt = _small_checkpoint(spark, tmp_path)
+    shutil.rmtree(f"{ckpt}/anchors")
+    delta = spark.createDataFrame(
+        [("repo_n", "n/new.py", "n1", "py", _Gen(3).body(40))], SCHEMA)
+    with pytest.raises(ValueError, match="table 'anchors'"):
+        incremental_dedup_update(spark, delta, ckpt)
+
+
+def test_persist_tasks_read_no_sibling_target(spark, tmp_path, monkeypatch):
+    """The persist barrier's invariant: every frame a concurrent persist task
+    reads (the frame it writes and its table's pre-fold snapshot) lists no
+    file under ANOTHER task's target path — a sibling's swap renames that
+    directory away mid-scan.  ``inputFiles()`` lists a frame's scanned files
+    without running a job.  Two folds: the first builds the shingle index,
+    the second reads its snapshot."""
+    import os
+    from urllib.parse import urlparse
+
+    from cloud_dedup_spark.streaming import incremental
+
+    targets = {"edges", "cluster_labels", "shingle_index", "signatures",
+               "norm", "bands", "anchors"}
+    real_persist = incremental._persist
+    seen: dict = {}
+
+    def checked_persist(spark_, loc, table_format, out, prior, guard, q):
+        assert set(out) == targets
+        for t in targets:
+            frames = [out[t]] + ([prior[t]] if prior[t] is not None else [])
+            files = [
+                os.path.realpath(urlparse(f).path)
+                for df in frames for f in df.inputFiles()
+            ]
+            seen[t] = files
+            for other in targets - {t}:
+                root = os.path.realpath(f"{loc}/{other}") + os.sep
+                bad = [f for f in files if f.startswith(root)]
+                assert not bad, f"{t} persist task reads {other}: {bad[:2]}"
+        return real_persist(spark_, loc, table_format, out, prior, guard, q)
+
+    monkeypatch.setattr(incremental, "_persist", checked_persist)
+    rows, ckpt = _small_checkpoint(spark, tmp_path)
+    gen = _Gen(17)
+    for i, old in enumerate((rows[0]["content"], rows[1]["content"])):
+        delta = spark.createDataFrame(
+            [
+                ("repo_p", f"p{i}/exact_of_old.py", f"p{i}a", "py", old),
+                ("repo_p", f"p{i}/near_of_old.py", f"p{i}b", "py",
+                 _near_edit(old, gen.rng)),
+                ("repo_p", f"p{i}/fresh.py", f"p{i}c", "py", gen.body(50)),
+            ],
+            SCHEMA,
+        )
+        seen.clear()
+        incremental_dedup_update(spark, delta, ckpt)
+        assert set(seen) == targets  # the wrapped barrier ran
+        # the check sees real scans: each swap streams its own table
+        root = os.path.realpath(f"{ckpt}/edges") + os.sep
+        assert any(f.startswith(root) for f in seen["edges"])
+    # second fold: the index snapshot is read (recovery-path source)
+    root = os.path.realpath(f"{ckpt}/shingle_index") + os.sep
+    assert any(f.startswith(root) for f in seen["shingle_index"])

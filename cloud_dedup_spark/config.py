@@ -11,12 +11,8 @@ config (SURVEY.md §7.4 item 3: recall parity requires pinned seeds).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-# Mersenne prime 2^61 - 1: modulus for the universal hash family used by
-# MinHash.  Products a*x stay inside uint128-free numpy by splitting, see
-# operators/signatures.py.
-MERSENNE_P = (1 << 61) - 1
 MAX_U64 = (1 << 64) - 1
 
 
@@ -31,18 +27,12 @@ class DedupConfig:
 
     # --- normalization / shingling ---
     shingle_size: int = 5           # tokens per shingle (w-shingling over code tokens)
-    # --- MinHash ---
-    num_hashes: int = 128
+    # --- MinHash (one-permutation hashing: bins are the hash's low bits) ---
+    num_hashes: int = 128           # a power of two
     num_bands: int = 32             # num_bands * rows_per_band == num_hashes
     rows_per_band: int = 4
     minhash_seed: int = 42
-    minhash_mode: str = "oph"       # 'oph': one-permutation hashing with
-                                    # rotation densification, O(m) per doc;
-                                    # 'universal': k independent (a·x+b) mod p
-                                    # hashes, O(k·m) — the reference estimator
-                                    # the OPH tests compare against
-    # --- SimHash ---
-    simhash_bits: int = 64
+    # --- SimHash (64-bit) ---
     hamming_threshold: int = 3      # near-dup if popcount(xor) <= this
     # --- verification ---
     jaccard_threshold: float = 0.8  # exact-Jaccard acceptance for near-dups
@@ -62,6 +52,8 @@ class DedupConfig:
     shuffle_partitions: int | None = None  # None → leave session setting alone
 
     def __post_init__(self) -> None:
+        if self.num_hashes < 1 or self.num_hashes & (self.num_hashes - 1):
+            raise ValueError(f"num_hashes({self.num_hashes}) must be a power of two")
         if self.num_bands * self.rows_per_band != self.num_hashes:
             raise ValueError(
                 f"num_bands({self.num_bands}) * rows_per_band({self.rows_per_band})"

@@ -238,10 +238,3 @@ def render_html(report: dict) -> str:
         + "".join(sections)
         + "</body></html>"
     )
-
-
-def write_html_report(report: dict, path: str) -> str:
-    out = render_html(report)
-    with open(path, "w") as f:
-        f.write(out)
-    return out

@@ -4,33 +4,35 @@ Reference analog: the per-file MD5 fingerprint (src/cloud_duplicate_analyzer.py:
 is the reference's only content signature; the graft generalizes it to
 similarity-preserving signatures (north_rule).  Per BASELINE.json
 ``input_hint`` the UDF surface is **vectorized pandas/Arrow only — no per-row
-Python UDFs**: this module is the pipeline's single Python stage, a
-scalar-iterator ``pandas_udf`` over Arrow batches of normalized content, with
-all inner math in numpy.
+Python UDFs**: this module is the pipeline's single Python stage, ONE
+scalar-iterator pandas UDF kernel over Arrow batches of normalized content,
+with all inner math in numpy.
 
 Design for scale:
   * ONE pass computes tokens → shingles → MinHash → band hashes → SimHash;
-    content crosses the JVM↔Arrow boundary exactly once.
+    content crosses the JVM↔Arrow boundary exactly once.  The same kernel
+    has a shingle-only mode (``compute_signatures(..., shingles_only=True)``)
+    for callers that read only the shingle columns: an opaque UDF defeats
+    column pruning, so without it they would pay the MinHash/band/SimHash
+    work anyway.  Both modes share the token/shingle arithmetic, so the
+    shingle values are bit-identical.
   * Arrow batch size is capped session-wide (2048 rows) so the per-batch
     signature matrices stay bounded (SURVEY.md §7.4 item 4).
   * Shingle sets are stored folded to 32 bits (array<int>) — halves the
     checkpoint footprint; exact-Jaccard verification on hashed shingles is
     exact w.r.t. the hashed sets and within ~1e-7 of token-true Jaccard for
     realistic set sizes.
-  * MinHash (universal mode) uses h_i(x) = ((a_i·x + b_i) wrap 2^64) mod p
-    with p = 2^61 − 1 and a_i, b_i drawn uniform in [1, p): the products
-    DELIBERATELY wrap mod 2^64 before the mod-p reduction — the wraparound
-    is a mixing step, and the family is pinned empirically min-wise
-    unbiased (see ``_hash_params``; a 'small-a no-wrap' variant measurably
-    over-estimated Jaccard and was rejected).  Fully vectorized, no Python
-    bigints.
+  * MinHash is one-permutation hashing with rotation densification
+    (``_oph_minhash``), O(m) per doc.  The MinHash vector itself never
+    leaves the UDF: only its band hashes do.  The universal (a·x + b) mod p
+    family survives in tests/test_signatures.py as the reference estimator
+    that OPH's Jaccard estimates are checked against.
   * Band hashes are emitted here (not at candidate time) so the LSH stage is
     a pure JVM explode+groupBy with zero additional Python.
 
 Determinism: token hashes are blake2b (content-derived, process-independent);
-the (a_i, b_i) families derive from ``cfg.minhash_seed`` — pinned so recall
-comparisons are reproducible across runs and cluster sizes (SURVEY.md §7.4
-item 3).
+the OPH seed is ``cfg.minhash_seed`` — pinned so recall comparisons are
+reproducible across runs and cluster sizes (SURVEY.md §7.4 item 3).
 
 Rejected experiment (round 3, measured): moving the tokenizer + token hash
 JVM-side (regexp_extract_all + transform/xxhash64, UDF consuming the int64
@@ -54,7 +56,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cloud_dedup_spark.config import MAX_U64, MERSENNE_P, DedupConfig
+from cloud_dedup_spark.config import MAX_U64, DedupConfig
 
 _TOKEN_RE = re.compile(r"[a-z_][a-z0-9_]*|[0-9]+|[^\sa-z0-9_]")
 
@@ -64,37 +66,11 @@ _SHINGLE_MULT = np.uint64(0x9E3779B97F4A7C15)
 
 _U64_MAX = np.uint64(0xFFFFFFFFFFFFFFFF)
 
-_SIG_SCHEMA = T.StructType(
-    [
-        T.StructField("n_tokens", T.IntegerType()),
-        T.StructField("n_shingles", T.IntegerType()),
-        T.StructField("shingles", T.ArrayType(T.IntegerType())),
-        T.StructField("minhash", T.ArrayType(T.LongType())),
-        T.StructField("band_hashes", T.ArrayType(T.LongType())),
-        T.StructField("simhash", T.LongType()),
-    ]
-)
-
 
 def _token_hash64(token: str) -> int:
     return int.from_bytes(
         hashlib.blake2b(token.encode("utf-8"), digest_size=8).digest(), "big"
     )
-
-
-def _hash_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
-    """Universal-family params a, b uniform in [1, p) / [0, p).
-
-    The products a·x wrap mod 2^64 before the mod-p reduction; that wraparound
-    is itself a mixing step and the resulting family is empirically min-wise
-    unbiased (verified in tests/test_signatures.py::test_minhash_estimates_jaccard;
-    a 'small-a no-wrap' variant measurably over-estimates Jaccard and was
-    rejected).
-    """
-    rng = np.random.RandomState(cfg.minhash_seed)
-    a = rng.randint(1, MERSENNE_P, size=cfg.num_hashes, dtype=np.uint64)
-    b = rng.randint(0, MERSENNE_P, size=cfg.num_hashes, dtype=np.uint64)
-    return a, b
 
 
 def _token_hash_array(tokens: list[str], cache: dict[str, int]) -> np.ndarray:
@@ -150,27 +126,6 @@ def _shingle_hashes_from(th: np.ndarray, k: int) -> np.ndarray:
 def _shingle_hashes(tokens: list[str], k: int, cache: dict[str, int]) -> np.ndarray:
     """Token-list convenience wrapper (tests use this form directly)."""
     return _shingle_hashes_from(_token_hash_array(tokens, cache), k)
-
-
-def _minhash(shingles: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """sig[i] = min over x of ((a_i·x + b_i) mod 2^64) mod p — (n_hashes,) int64.
-
-    Chunked over the shingle axis: the full (num_hashes × n_shingles)
-    product matrix is ~1 KB/shingle at 128 hashes — a single 2M-shingle file
-    (one 10 MB generated source) would allocate gigabytes inside the UDF
-    (round-4 review).  min is associative, so the running minimum over
-    64k-shingle chunks is bit-identical to the one-shot matrix."""
-    p = np.uint64(MERSENNE_P)
-    step = 65536
-    if len(shingles) <= step:
-        vals = (a[:, None] * shingles[None, :] + b[:, None]) % p
-        return vals.min(axis=1).astype(np.int64)
-    out = np.full(len(a), p - np.uint64(1), dtype=np.uint64)
-    for i in range(0, len(shingles), step):
-        chunk = shingles[i : i + step]
-        vals = (a[:, None] * chunk[None, :] + b[:, None]) % p
-        np.minimum(out, vals.min(axis=1), out=out)
-    return out.astype(np.int64)
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -255,24 +210,30 @@ def _simhash(tokens: list[str], cache: dict[str, int]) -> int:
     return _simhash_from_hashes(_token_hash_array(tokens, cache))
 
 
-def make_signature_udf(cfg: DedupConfig):
+# Output fields of the signature kernel, in order.  The shingle-only mode
+# emits the first three.
+_SIG_FIELDS = (
+    T.StructField("n_tokens", T.IntegerType()),
+    T.StructField("n_shingles", T.IntegerType()),
+    T.StructField("shingles", T.ArrayType(T.IntegerType())),
+    T.StructField("band_hashes", T.ArrayType(T.LongType())),
+    T.StructField("simhash", T.LongType()),
+)
+
+
+def _signature_udf(cfg: DedupConfig, shingles_only: bool):
     """Scalar-iterator pandas UDF: content_norm → signature struct."""
-    a_params, b_params = _hash_params(cfg)
     k = cfg.shingle_size
     nb, r = cfg.num_bands, cfg.rows_per_band
-    use_oph = cfg.minhash_mode == "oph"
     n_hashes, seed = cfg.num_hashes, cfg.minhash_seed
-    if use_oph and (n_hashes & (n_hashes - 1)):
-        raise ValueError("minhash_mode='oph' requires power-of-two num_hashes")
+    fields = _SIG_FIELDS[:3] if shingles_only else _SIG_FIELDS
+    no_bands = np.empty(0, dtype=np.int64)
 
-    @F.pandas_udf(_SIG_SCHEMA)
+    @F.pandas_udf(T.StructType(list(fields)))
     def signature_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         token_cache: dict[str, int] = {}
         for series in batches:
-            out = {
-                "n_tokens": [], "n_shingles": [], "shingles": [],
-                "minhash": [], "band_hashes": [], "simhash": [],
-            }
+            out = {f.name: [] for f in fields}
             for text in series:
                 tokens = _TOKEN_RE.findall(text) if text else []
                 th = _token_hash_array(tokens, token_cache)
@@ -281,16 +242,12 @@ def make_signature_udf(cfg: DedupConfig):
                 out["n_shingles"].append(len(sh))
                 # int32 reinterpretation for compact ArrayType(IntegerType)
                 out["shingles"].append(sh.astype(np.uint32).astype(np.int32))
-                if len(sh):
-                    if use_oph:
-                        sig = _oph_minhash(sh, n_hashes, seed)
-                    else:
-                        sig = _minhash(sh, a_params, b_params)
-                    out["minhash"].append(sig)
-                    out["band_hashes"].append(_band_hashes(sig, nb, r))
-                else:
-                    out["minhash"].append(np.empty(0, dtype=np.int64))
-                    out["band_hashes"].append(np.empty(0, dtype=np.int64))
+                if shingles_only:
+                    continue
+                out["band_hashes"].append(
+                    _band_hashes(_oph_minhash(sh, n_hashes, seed), nb, r)
+                    if len(sh) else no_bands
+                )
                 out["simhash"].append(_simhash_from_hashes(th))
             if len(token_cache) > 1_000_000:  # bound executor-side cache
                 token_cache.clear()
@@ -299,93 +256,27 @@ def make_signature_udf(cfg: DedupConfig):
     return signature_udf
 
 
-_SHINGLE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_tokens", T.IntegerType()),
-        T.StructField("n_shingles", T.IntegerType()),
-        T.StructField("shingles", T.ArrayType(T.IntegerType())),
-    ]
-)
-
-
-def make_shingle_udf(cfg: DedupConfig):
-    """Scalar-iterator pandas UDF: content_norm → shingle-only struct.
-
-    The EXACT token/shingle arithmetic of ``make_signature_udf`` (same
-    ``_TOKEN_RE`` → ``_token_hash_array`` → ``_shingle_hashes_from`` chain,
-    so every emitted value is bit-identical to the full UDF's), minus the
-    MinHash/band/SimHash work.  Exists because an opaque UDF defeats column
-    pruning (guide §4): a caller that only reads shingles — the substring
-    containment channel — still paid the OPH sort + band hash + SimHash per
-    document through the full UDF (round-6 measurement: the per-invocation
-    signature build dominated contaminated_docs/substring_doc_pairs)."""
-    k = cfg.shingle_size
-
-    @F.pandas_udf(_SHINGLE_SCHEMA)
-    def shingle_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        token_cache: dict[str, int] = {}
-        for series in batches:
-            out = {"n_tokens": [], "n_shingles": [], "shingles": []}
-            for text in series:
-                tokens = _TOKEN_RE.findall(text) if text else []
-                th = _token_hash_array(tokens, token_cache)
-                sh = _shingle_hashes_from(th, k)
-                out["n_tokens"].append(len(th))
-                out["n_shingles"].append(len(sh))
-                out["shingles"].append(sh.astype(np.uint32).astype(np.int32))
-            if len(token_cache) > 1_000_000:  # bound executor-side cache
-                token_cache.clear()
-            yield pd.DataFrame(out)
-
-    return shingle_udf
-
-
-def compute_shingle_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Shingle-only signature frame — the subset the substring channel reads.
-
-    Same passthrough contract as :func:`compute_signatures`; output columns
-    are passthrough + n_tokens, n_shingles, shingles, with values identical
-    to the full builder (pinned in tests/test_signatures.py)."""
-    udf = make_shingle_udf(cfg)
-    sig = files.withColumn("sig", udf(F.col("content_norm")))
-    passthrough = [c for c in files.columns if c not in ("content", "content_norm")]
-    return sig.select(
-        *passthrough,
-        F.col("sig.n_tokens").alias("n_tokens"),
-        F.col("sig.n_shingles").alias("n_shingles"),
-        F.col("sig.shingles").alias("shingles"),
-    )
-
-
 # Checkpoint schema of the pipeline's signatures stage table (pipeline.py and
 # streaming/incremental.py must agree — incremental appends delta rows to the
-# batch table).  minhash is deliberately NOT persisted: band_hashes are
-# derived in-UDF and are the only LSH-side consumer; dropping the 64-long
-# array cuts ~0.5 KB/row from every downstream deserialization.
-SIG_TABLE_COLUMNS = (
-    "file_id", "n_tokens", "n_shingles", "shingles", "band_hashes", "simhash",
-)
+# batch table).  It is ``file_id`` plus the kernel's full output.
+SIG_TABLE_COLUMNS = ("file_id",) + tuple(f.name for f in _SIG_FIELDS)
 
 
-def compute_signatures(files: DataFrame, cfg: DedupConfig) -> DataFrame:
+def compute_signatures(
+    files: DataFrame, cfg: DedupConfig, shingles_only: bool = False
+) -> DataFrame:
     """Signatures table: one row per input file (SURVEY.md §3 checkpoint #1).
 
     Input: any frame with ``content_norm`` (plus ``file_id``).  All input
     columns except the content ones pass through, so the pipeline can feed a
     lean (file_id, content_norm) projection while tests can feed the full
     identity frame and keep repo/path for assertions.
-    Output: passthrough columns + n_tokens, n_shingles, shingles, minhash,
-    band_hashes, simhash.
+    Output: passthrough columns + n_tokens, n_shingles, shingles,
+    band_hashes, simhash.  ``shingles_only=True`` stops after shingles —
+    the subset the substring channel reads — and skips the MinHash, band
+    and SimHash work.
     """
-    udf = make_signature_udf(cfg)
+    udf = _signature_udf(cfg, shingles_only)
     sig = files.withColumn("sig", udf(F.col("content_norm")))
     passthrough = [c for c in files.columns if c not in ("content", "content_norm")]
-    return sig.select(
-        *passthrough,
-        F.col("sig.n_tokens").alias("n_tokens"),
-        F.col("sig.n_shingles").alias("n_shingles"),
-        F.col("sig.shingles").alias("shingles"),
-        F.col("sig.minhash").alias("minhash"),
-        F.col("sig.band_hashes").alias("band_hashes"),
-        F.col("sig.simhash").alias("simhash"),
-    )
+    return sig.select(*passthrough, "sig.*")

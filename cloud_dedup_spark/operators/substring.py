@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.functions.normalize import with_identity
-from cloud_dedup_spark.operators.signatures import compute_shingle_signatures
+from cloud_dedup_spark.operators.signatures import compute_signatures
 
 
 # Candidate anchors per needle: the K min-valued shingles.  Shingle hashes
@@ -107,8 +107,8 @@ def lean_shingle_frames(
     The channel reads file_id, content_norm and the shingle columns, and
     callers map ids back through (repo, path), so the identity frame is
     projected lean — content/sha never materialize — and the signatures
-    come from the shingle-only UDF (identical values, no MinHash/band/
-    SimHash work).  Both frames are localCheckpointed: ``substring_edges``
+    come from the kernel's shingle-only mode (identical values, no
+    MinHash/band/SimHash work).  Both frames are localCheckpointed: ``substring_edges``
     scans its signature input up to four times (needle base, inverted
     index ×2, hay_sh) and ``reps`` twice, and each unmaterialized scan
     re-ran the normalize regex + signature UDF over the whole input — the
@@ -119,7 +119,7 @@ def lean_shingle_frames(
         .select("file_id", "repo", "path", "content_norm")
         .localCheckpoint()
     )
-    sigs = compute_shingle_signatures(ident, cfg).select(
+    sigs = compute_signatures(ident, cfg, shingles_only=True).select(
         "file_id", "n_tokens", "n_shingles", "shingles"
     ).localCheckpoint()
     return ident, sigs

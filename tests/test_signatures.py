@@ -14,16 +14,37 @@ import pytest
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.functions.normalize import with_identity
 from cloud_dedup_spark.operators.signatures import (
-    _hash_params,
-    _minhash,
     _oph_minhash,
     _shingle_hashes,
     _simhash,
     _TOKEN_RE,
+    SIG_TABLE_COLUMNS,
     compute_signatures,
 )
 
 CFG = DedupConfig()
+
+# Reference estimator: classic MinHash over a universal hash family,
+# h_i(x) = ((a_i·x + b_i) wrap 2^64) mod p with p = 2^61 − 1.  The products
+# deliberately wrap mod 2^64 before the mod-p reduction: the wraparound is a
+# mixing step, and the family is empirically min-wise unbiased (a 'small-a
+# no-wrap' variant measurably over-estimated Jaccard).  The library uses
+# one-permutation hashing; these tests check it against this family.
+MERSENNE_P = (1 << 61) - 1
+
+
+def _hash_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
+    """Universal-family params a, b uniform in [1, p) / [0, p)."""
+    rng = np.random.RandomState(cfg.minhash_seed)
+    a = rng.randint(1, MERSENNE_P, size=cfg.num_hashes, dtype=np.uint64)
+    b = rng.randint(0, MERSENNE_P, size=cfg.num_hashes, dtype=np.uint64)
+    return a, b
+
+
+def _minhash(shingles: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """sig[i] = min over x of ((a_i·x + b_i) mod 2^64) mod p — (n_hashes,) int64."""
+    vals = (a[:, None] * shingles[None, :] + b[:, None]) % np.uint64(MERSENNE_P)
+    return vals.min(axis=1).astype(np.int64)
 
 
 def _sig_of(text: str, mode: str = "universal") -> np.ndarray:
@@ -33,6 +54,13 @@ def _sig_of(text: str, mode: str = "universal") -> np.ndarray:
         return _oph_minhash(sh, CFG.num_hashes, CFG.minhash_seed)
     a, b = _hash_params(CFG)
     return _minhash(sh, a, b)
+
+
+def test_config_rejects_non_power_of_two_num_hashes():
+    """OPH bins by the hash's low bits, so num_hashes must be a power of
+    two; a bad value fails when the config is built, not inside the UDF."""
+    with pytest.raises(ValueError, match="power of two"):
+        DedupConfig(num_hashes=96, num_bands=24, rows_per_band=4)
 
 
 def test_minhash_deterministic():
@@ -51,7 +79,8 @@ def test_minhash_identical_vs_disjoint():
 
 @pytest.mark.parametrize("mode", ["universal", "oph"])
 def test_minhash_estimates_jaccard(mode):
-    """MinHash agreement fraction ≈ true Jaccard — both estimator modes."""
+    """MinHash agreement fraction ≈ true Jaccard — the library's OPH and the
+    universal reference family."""
     words = [f"w{i}" for i in range(300)]
     a_txt = " ".join(words)
     b_txt = " ".join(words[:240] + [f"x{i}" for i in range(60)])
@@ -73,11 +102,12 @@ def test_oph_deterministic_and_distinct():
 
 def test_oph_densification_fills_all_bins():
     """Short docs leave most of the 128 bins empty; densification must fill
-    every bin deterministically (identical short docs → identical sigs)."""
+    every bin deterministically (identical short docs → identical sigs).
+    An empty bin holds the uint64 max sentinel, which reads -1 as int64."""
     sh = _shingle_hashes(["a", "b", "c", "d", "e", "f"], CFG.shingle_size, {})
     sig = _oph_minhash(sh, CFG.num_hashes, CFG.minhash_seed)
     assert len(sig) == CFG.num_hashes
-    assert (sig != np.iinfo(np.int64).max).all()
+    assert (sig.view(np.uint64) != np.iinfo(np.uint64).max).all()
     sig2 = _oph_minhash(sh.copy(), CFG.num_hashes, CFG.minhash_seed)
     assert np.array_equal(sig, sig2)
 
@@ -119,12 +149,28 @@ def sigs(spark, corpus):
     return out
 
 
+SIG_FIELDS = ["n_tokens", "n_shingles", "shingles", "band_hashes", "simhash"]
+
+
+def test_signature_output_contract(spark, sigs, corpus):
+    """Passthrough columns, then the kernel's fields — no MinHash vector;
+    the shingle-only mode stops after the first three fields."""
+    files, _ = corpus
+    ident = with_identity(files)
+    passthrough = [c for c in ident.columns if c not in ("content", "content_norm")]
+    assert sigs.columns == passthrough + SIG_FIELDS
+    assert list(SIG_TABLE_COLUMNS) == ["file_id"] + SIG_FIELDS
+    lean = compute_signatures(ident, CFG, shingles_only=True)
+    assert lean.columns == passthrough + SIG_FIELDS[:3]
+
+
 def test_signature_stage_schema_and_counts(sigs, corpus):
     files, truth = corpus
     assert sigs.count() == files.count()
     row = sigs.filter(F.col("n_shingles") > 0).first()
-    assert len(row["minhash"]) == CFG.num_hashes
     assert len(row["band_hashes"]) == CFG.num_bands
+    assert len(set(row["band_hashes"])) > 1
+    assert row["simhash"] != 0
     # empty files: no shingles, no bands
     empty = sigs.filter(F.col("n_tokens") == 0)
     assert empty.count() == len(truth.empty_group)
@@ -139,22 +185,18 @@ def test_exact_dup_files_get_identical_signatures(sigs, corpus):
     b = sigs.filter(
         (F.col("repo") == other_repo) & (F.col("path") == other_path)
     ).first()
-    assert a["minhash"] == b["minhash"]
+    assert a["n_shingles"] > 0
     assert a["simhash"] == b["simhash"]
     assert a["band_hashes"] == b["band_hashes"]
 
 
 def test_shingle_only_signatures_match_full(spark, sigs, corpus):
-    """The shingle-only UDF (round-6: the substring channel's lean input —
-    skips MinHash/band/SimHash work an opaque UDF would otherwise always
-    pay) must emit exactly the full builder's n_tokens/n_shingles/shingles
-    for every file."""
-    from cloud_dedup_spark.operators.signatures import (
-        compute_shingle_signatures,
-    )
-
+    """The shingle-only mode (the substring channel's lean input — skips
+    MinHash/band/SimHash work an opaque UDF would otherwise always pay)
+    must emit exactly the full mode's n_tokens/n_shingles/shingles for
+    every file."""
     files, _ = corpus
-    lean = compute_shingle_signatures(with_identity(files), CFG)
+    lean = compute_signatures(with_identity(files), CFG, shingles_only=True)
     cols = ["repo", "path", "n_tokens", "n_shingles", "shingles"]
     full_rows = {
         (r["repo"], r["path"]): (r["n_tokens"], r["n_shingles"], r["shingles"])
@@ -166,23 +208,3 @@ def test_shingle_only_signatures_match_full(spark, sigs, corpus):
     }
     assert lean_rows == full_rows
 
-
-def test_minhash_chunking_is_bit_identical():
-    """The chunked universal-minhash path (shingle-axis chunks, round-4
-    review: the one-shot matrix was ~1KB/shingle) must equal the direct
-    formula exactly."""
-    from cloud_dedup_spark.config import MERSENNE_P
-    from cloud_dedup_spark.operators.signatures import _hash_params, _minhash
-
-    a, b = _hash_params(CFG)
-    rng = np.random.RandomState(3)
-    big = rng.randint(0, 2**32, size=70_000).astype(np.uint64)  # > chunk step
-    direct = ((a[:, None] * big[None, :] + b[:, None]) % np.uint64(MERSENNE_P)).min(
-        axis=1
-    ).astype(np.int64)
-    assert (direct == _minhash(big, a, b)).all()
-    small = big[:100]
-    direct_s = ((a[:, None] * small[None, :] + b[:, None]) % np.uint64(MERSENNE_P)).min(
-        axis=1
-    ).astype(np.int64)
-    assert (direct_s == _minhash(small, a, b)).all()

@@ -45,6 +45,8 @@ from cloud_dedup_spark.operators.signatures import (
 from cloud_dedup_spark.operators.substring import substring_edge_list, substring_edges
 from cloud_dedup_spark.operators.verify import accepted_edges, verify_pairs
 
+_JOB_DESCRIPTION = "spark.job.description"
+
 
 def config_fingerprint(cfg: DedupConfig) -> str:
     """Canonical JSON of the config — the checkpoint-store resume guard key
@@ -121,15 +123,26 @@ class CheckpointStore:
         Reading back makes every downstream plan start from a scan instead of
         the full upstream lineage — the same lineage-cutting role as the
         reference re-deriving later stages from its in-memory lists.
+
+        A parquet table written here is read back with the written frame's
+        schema, so the read starts no schema-inference job (one per stage
+        otherwise).  Spark makes a file source's schema nullable, so the
+        result equals the inferred schema.  A table that already exists
+        (resume) is read with inference, since no frame was built for it;
+        Iceberg tables always carry their own schema and reject a given one.
         """
         if self.location is None:
             # no checkpointing requested: cut lineage in-memory instead
             return build().localCheckpoint()
+        reader = self.spark.read.format(self.table_format)
         if not self.exists(name):
-            build().write.mode("overwrite").format(self.table_format).save(
+            df = build()
+            df.write.mode("overwrite").format(self.table_format).save(
                 self._path(name)
             )
-        return self.spark.read.format(self.table_format).load(self._path(name))
+            if self.table_format == "parquet":
+                reader = reader.schema(df.schema)
+        return reader.load(self._path(name))
 
 
 def run_pipeline(
@@ -166,16 +179,26 @@ def run_pipeline(
     if files.rdd.getNumPartitions() < min(par, 64):
         files = files.repartition(par * 2)
 
+    sc = spark.sparkContext
+
     def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
-        t0 = time.time()
-        df = store.materialize(name, build)
-        # collect_partition_stats implies the per-stage stats job even when
-        # row counting is off — the two flags are independent (round-4
-        # review: partition stats silently vanished under track_rows=False)
-        probe = df if (track_rows or collect_partition_stats) else None
-        metrics.record(name, time.time() - t0, probe,
-                       with_partitions=collect_partition_stats)
-        return df
+        # every job of the stage carries "stage:<name>" in the UI and the
+        # REST API.  Local properties are per thread (a pool thread does not
+        # inherit the caller's), so this runs on whichever thread runs the
+        # stage, and puts back that thread's own value when the stage ends.
+        prev = sc.getLocalProperty(_JOB_DESCRIPTION)
+        sc.setLocalProperty(_JOB_DESCRIPTION, f"stage:{name}")
+        try:
+            t0 = time.time()
+            df = store.materialize(name, build)
+            # collect_partition_stats implies the per-stage stats job even
+            # when row counting is off: the two flags are independent
+            probe = df if (track_rows or collect_partition_stats) else None
+            metrics.record(name, time.time() - t0, probe,
+                           with_partitions=collect_partition_stats)
+            return df
+        finally:
+            sc.setLocalProperty(_JOB_DESCRIPTION, prev)
 
     # Stage tables are deliberately NARROW.  Materialized stage outputs
     # (localCheckpoint RDDs / parquet row groups) are re-deserialized in full

@@ -12,6 +12,8 @@ a few hundred rows, never the raw data).
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -99,35 +101,48 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
     edges: DataFrame = result["edges"]
     metrics: RunMetrics = result["metrics"]
 
-    per_repo = {
-        r["repo"]: r["n"] for r in
-        identity.groupBy("repo").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    cluster_hist = {
-        int(r["n_files"]): r["n"] for r in
-        clusters.groupBy("n_files").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    edge_kinds = {
-        r["edge_kind"]: r["n"] for r in
-        edges.groupBy("edge_kind").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    pairwise = {
-        f"{r['repo_a']}+{r['repo_b']}": r["n_clusters"]
-        for r in pairwise_repo_counts(clusters).collect()
-    }
-    uniques = {
-        r["repo"]: r["n_unique_files"]
-        for r in unique_file_counts(assignments).collect()
-    }
     # multi-consumer frames materialized once: fc feeds the histogram, the
     # subtree rollup AND the fc_rows collect; cls feeds the tree rows and
     # the group-detail join — unmaterialized, each collect re-ran the double
     # explode / classification joins (round-4 review)
     fc = folder_comparisons(identity.select("repo", "path")).localCheckpoint()
-    rel_hist = {
-        r["relationship"]: r["n_folders"]
-        for r in relationship_histogram(fc).collect()
+
+    # every scalar section in one collect over a tagged union of
+    # (tag, key, n) rows, in place of one action per section; each section
+    # frame is its key columns followed by its count
+    def count_by(df: DataFrame, *keys: str) -> DataFrame:
+        return df.groupBy(*keys).agg(F.count(F.lit(1)))
+
+    sections = {
+        "per_repo": count_by(identity, "repo"),
+        "cluster_hist": count_by(clusters, "n_files"),
+        "edge_kinds": count_by(edges, "edge_kind"),
+        "pairwise": pairwise_repo_counts(clusters),
+        "uniques": unique_file_counts(assignments),
+        "rel_hist": relationship_histogram(fc),
     }
+    if "quarantined" in assignments.columns:
+        sections["quarantined"] = count_by(assignments, "quarantined")
+    tagged = reduce(DataFrame.unionByName, [
+        df.select(
+            F.lit(tag).alias("tag"),
+            F.array(*[F.col(c).cast("string") for c in df.columns[:-1]])
+            .alias("key"),
+            F.col(df.columns[-1]).cast("long").alias("n"),
+        )
+        for tag, df in sections.items()
+    ])
+    scalars: dict[str, dict] = {tag: {} for tag in sections}
+    for r in tagged.collect():
+        scalars[r["tag"]][tuple(r["key"])] = r["n"]
+
+    def keyed(tag: str, decode: Callable = lambda k: k) -> dict:
+        return {decode(*key): n for key, n in scalars[tag].items()}
+
+    per_repo = keyed("per_repo")
+    cluster_hist = keyed("cluster_hist", int)
+    pairwise = keyed("pairwise", lambda a, b: f"{a}+{b}")
+    n_quarantined = scalars.get("quarantined", {}).get(("true",), 0)
     roots = [r["folder"] for r in
              safe_dedup_roots(subtree_rollup(fc)).orderBy("folder").collect()]
 
@@ -219,22 +234,16 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
         for r in fc.orderBy("folder").limit(MAX_TREE_FOLDERS).collect()
     ]
 
-    n_quarantined = (
-        int(assignments.filter(F.col("quarantined")).count())
-        if "quarantined" in assignments.columns
-        else 0
-    )
-
     return {
-        "total_files": int(identity.count()),
+        "total_files": sum(per_repo.values()),
         "n_quarantined_id_collisions": n_quarantined,
         "per_repo_files": per_repo,
-        "n_clusters": int(clusters.count()),
+        "n_clusters": sum(cluster_hist.values()),
         "cluster_size_histogram": cluster_hist,
-        "edge_kinds": edge_kinds,
+        "edge_kinds": keyed("edge_kinds"),
         "pairwise_duplicate_clusters": pairwise,
-        "unique_files_per_repo": uniques,
-        "folder_relationship_histogram": rel_hist,
+        "unique_files_per_repo": keyed("uniques"),
+        "folder_relationship_histogram": keyed("rel_hist"),
         "safe_dedup_roots": roots,
         "duplicate_group_details": group_details,
         "folder_comparisons": fc_rows,

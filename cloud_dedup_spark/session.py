@@ -113,6 +113,20 @@ def build_session(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # lower() on the JVM's case tables (UTF8String.toLowerCase), not
+        # ICU's.  With ICU on, the first lower() of a process loads
+        # CollationAwareUTF8String, whose static initializer calls ICU
+        # toTitleCase on all 1,114,112 code points: 2-3 s, paid by the
+        # first normalize_content of every batch run (on a 4-vCPU host, a
+        # four-row lower() after one warm-up job took 2.05 s with ICU and
+        # 0.34 s without).
+        # Both settings agree on Greek final sigma, İ, ß/ẞ, ǅ, the Kelvin
+        # sign and invalid UTF-8, and both follow the JVM default locale.
+        # They differ on case pairs newer than the JDK's Unicode version
+        # (JDK 17: Unicode 13): U+2C2F, U+A7C0, U+A7CB, U+A7D0, U+10570,
+        # U+1C89 and U+A7DC stay uppercase here, while ICU 77 lowercases
+        # them (pinned by tests/test_session.py).
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     extra_conf = dict(extra_conf or {})
     if "SPARK_DRIVER_MEMORY" in os.environ:

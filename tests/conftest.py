@@ -42,3 +42,60 @@ def cluster_pairs(clusters):
             for j in range(i + 1, len(ms)):
                 out.add(frozenset((ms[i], ms[j])))
     return out
+
+
+def direct_report_scalars(res: dict) -> dict:
+    """Every scalar section of ``build_report``, each from its own aggregate
+    over the same pipeline result — the reference the report is checked
+    against."""
+    from pyspark.sql import functions as F
+
+    from cloud_dedup_spark.operators.rollup import (
+        folder_comparisons,
+        pairwise_repo_counts,
+        relationship_histogram,
+        unique_file_counts,
+    )
+
+    identity, clusters = res["identity"], res["clusters"]
+    edges, assignments = res["edges"], res["assignments"]
+
+    def counts(df, key):
+        return {r[key]: r["count"] for r in df.groupBy(key).count().collect()}
+
+    fc = folder_comparisons(identity.select("repo", "path"))
+    return {
+        "total_files": identity.count(),
+        "n_quarantined_id_collisions": assignments.filter(
+            F.col("quarantined")).count(),
+        "per_repo_files": counts(identity, "repo"),
+        "n_clusters": clusters.count(),
+        "cluster_size_histogram": counts(clusters, "n_files"),
+        "edge_kinds": counts(edges, "edge_kind"),
+        "pairwise_duplicate_clusters": {
+            f"{r['repo_a']}+{r['repo_b']}": r["n_clusters"]
+            for r in pairwise_repo_counts(clusters).collect()
+        },
+        "unique_files_per_repo": {
+            r["repo"]: r["n_unique_files"]
+            for r in unique_file_counts(assignments).collect()
+        },
+        "folder_relationship_histogram": {
+            r["relationship"]: r["n_folders"]
+            for r in relationship_histogram(fc).collect()
+        },
+    }
+
+
+def typed(value):
+    """A scalar section with the type of every key and value made part of
+    it, so ``{2: 1}`` and ``{2.0: 1}`` or ``{"2": 1}`` compare unequal."""
+    if isinstance(value, dict):
+        return {(type(k).__name__, k): typed(v) for k, v in value.items()}
+    return (type(value).__name__, value)
+
+
+def assert_report_scalars(res: dict, rep: dict) -> None:
+    want = direct_report_scalars(res)
+    for name, expected in want.items():
+        assert typed(rep[name]) == typed(expected), name

@@ -112,38 +112,62 @@ def test_summary_keeps_quarantined_label_collision_separate(spark):
     assert uniq == {"rc": 1, "rd": 1}
 
 
+_SCHEMA = "repo string, path string, commit string, lang string, content string"
+_OTHER = "def g(y):\n    return y + 1\n" * 12
+
+
+def _planted_collision(spark, monkeypatch):
+    """(base, delta) whose one delta file collides on file_id with a base
+    file.  Planted by narrowing file_id to hash(path) only (a real xxhash64
+    collision cannot be constructed cheaply); file_id2 keeps the full key so
+    detection works."""
+    import cloud_dedup_spark.functions.normalize as nz
+
+    monkeypatch.setattr(nz, "file_id_col", lambda: F.xxhash64("path"))
+    body = "def f(x):\n    return x * 2\n" * 12
+    base = spark.createDataFrame(
+        [
+            ("repo_a", "src/collide.py", "c1", "py", body),
+            ("repo_a", "src/keep1.py", "c1", "py", _OTHER),
+            ("repo_b", "src/keep2.py", "c1", "py", _OTHER),  # exact pair with keep1
+        ],
+        _SCHEMA,
+    )
+    delta = spark.createDataFrame(
+        # same path, different repo → same (narrowed) file_id, new file_id2
+        [("repo_b", "src/collide.py", "c9", "py", "print('new')\n" * 10)],
+        _SCHEMA,
+    )
+    return base, delta
+
+
+def test_report_counts_quarantined_collisions(spark, monkeypatch):
+    """Every scalar section of the report agrees with its own aggregate on a
+    corpus whose quarantine is not empty."""
+    from cloud_dedup_spark import run_pipeline
+    from cloud_dedup_spark.report import build_report
+    from tests.conftest import assert_report_scalars
+
+    base, delta = _planted_collision(spark, monkeypatch)
+    res = run_pipeline(spark, base.unionByName(delta))
+    rep = build_report(res)
+    assert rep["n_quarantined_id_collisions"] == 2
+    assert rep["total_files"] == 4
+    assert_report_scalars(res, rep)
+
+
 def test_incremental_quarantines_colliding_delta(spark, tmp_path, monkeypatch):
     """ADVICE round-2 (medium): a NEW file whose 64-bit file_id collides with
     a prior file's (different natural key → different file_id2) must survive
     the idempotency guard, be routed into quarantine together with the prior
-    file, and leave incremental == full recompute intact.  Collision planted
-    by narrowing file_id to hash(path) only (a real xxhash64 collision cannot
-    be constructed cheaply); file_id2 keeps the full key so detection works."""
-    import cloud_dedup_spark.functions.normalize as nz
+    file, and leave incremental == full recompute intact."""
     from cloud_dedup_spark import run_pipeline
     from cloud_dedup_spark.streaming.incremental import incremental_dedup_update
 
-    monkeypatch.setattr(nz, "file_id_col", lambda: F.xxhash64("path"))
-
-    schema = "repo string, path string, commit string, lang string, content string"
-    body = "def f(x):\n    return x * 2\n" * 12
-    other = "def g(y):\n    return y + 1\n" * 12
-    base = spark.createDataFrame(
-        [
-            ("repo_a", "src/collide.py", "c1", "py", body),
-            ("repo_a", "src/keep1.py", "c1", "py", other),
-            ("repo_b", "src/keep2.py", "c1", "py", other),  # exact pair with keep1
-        ],
-        schema,
-    )
+    base, delta = _planted_collision(spark, monkeypatch)
     ckpt = str(tmp_path / "ckpt")
     run_pipeline(spark, base, checkpoint_dir=ckpt)
 
-    delta = spark.createDataFrame(
-        # same path, different repo → same (narrowed) file_id, new file_id2
-        [("repo_b", "src/collide.py", "c9", "py", "print('new')\n" * 10)],
-        schema,
-    )
     inc = incremental_dedup_update(spark, delta, ckpt)
     asg = inc["assignments"]
     q = {(r["repo"], r["path"]) for r in asg.filter("quarantined").collect()}
@@ -169,7 +193,7 @@ def test_incremental_quarantines_colliding_delta(spark, tmp_path, monkeypatch):
     # idempotency still holds: re-delivering an already-ingested file (same
     # 128-bit composite) appends nothing
     redeliver = spark.createDataFrame(
-        [("repo_a", "src/keep1.py", "c1", "py", other)], schema
+        [("repo_a", "src/keep1.py", "c1", "py", _OTHER)], _SCHEMA
     )
     incremental_dedup_update(spark, redeliver, ckpt)
     assert spark.read.parquet(f"{ckpt}/identity").count() == 4
@@ -189,7 +213,6 @@ def test_incremental_quarantined_rep_group_repaired(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(nz, "file_id_col", lambda: F.xxhash64("path"))
 
-    schema = "repo string, path string, commit string, lang string, content string"
     gen = _Gen(41)
     body = gen.body(60)
     paths = ["src/g1.py", "src/g2.py", "src/g3.py"]
@@ -202,7 +225,7 @@ def test_incremental_quarantined_rep_group_repaired(spark, tmp_path, monkeypatch
     near_q = _near_edit(body, gen.rng)  # near-dup neighbor of the group
     base_rows = [("repo_a", p, "c1", "py", body) for p in paths]
     base_rows.append(("repo_b", "src/nearq.py", "c1", "py", near_q))
-    base = spark.createDataFrame(base_rows, schema)
+    base = spark.createDataFrame(base_rows, _SCHEMA)
     ckpt = str(tmp_path / "ckpt")
     run_pipeline(spark, base, checkpoint_dir=ckpt)
 
@@ -210,7 +233,7 @@ def test_incremental_quarantined_rep_group_repaired(spark, tmp_path, monkeypatch
     # unrelated content — quarantines the prior rep and itself
     delta = spark.createDataFrame(
         [("repo_z", rep_path, "c9", "py", "completely unrelated body\n" * 8)],
-        schema,
+        _SCHEMA,
     )
     inc = incremental_dedup_update(spark, delta, ckpt)
     full = run_pipeline(spark, base.unionByName(delta))["assignments"]

@@ -14,7 +14,7 @@ import pytest
 
 from cloud_dedup_spark import run_pipeline
 from cloud_dedup_spark.plans.pipeline import invariant_violations
-from tests.conftest import cluster_pairs
+from tests.conftest import assert_report_scalars, cluster_pairs
 
 
 @pytest.fixture(scope="module")
@@ -96,6 +96,7 @@ def test_report_summary_fields(result, corpus):
     first = rep["duplicate_group_details"][0]
     assert first["n_files"] >= 2 and len(first["members"]) == first["n_files"]
     assert rep["folder_comparisons"] and rep["folder_files"]
+    assert_report_scalars(res, rep)
 
 
 def test_metrics_lineage_recorded(result):
@@ -143,3 +144,82 @@ def test_checkpoint_refuses_config_mix(spark, corpus, tmp_path_factory):
             spark, files, cfg=DedupConfig(jaccard_threshold=0.9),
             checkpoint_dir=ckpt,
         )
+
+
+# checkpoint directory → run_pipeline result key, for every stage table
+_STAGE_TABLES = {
+    "identity": "identity", "quarantine": "quarantine", "exact": "exact",
+    "norm": "norm", "signatures": "signatures", "bands": "bands",
+    "anchors": "anchors", "candidate_edges": "candidate_edges",
+    "substring_edges": "substring_edges", "edges": "edges",
+    "cluster_labels": "assignments", "clusters": "clusters",
+}
+
+
+def test_stage_readback_schema_matches_inferred(spark, tmp_path):
+    """A stage table read back with the written frame's schema has the
+    schema Spark infers from the files, on a fresh run and a resumed one."""
+    import os
+
+    from cloud_dedup_spark.corpus import corpus_df
+
+    files, _ = corpus_df(spark, 40, 7)
+    ckpt = str(tmp_path / "ckpt")
+    for _ in range(2):  # fresh, then resumed from every stage table
+        res = run_pipeline(spark, files, checkpoint_dir=ckpt, track_rows=False)
+        assert {d for d in os.listdir(ckpt) if not d.startswith(("_", "."))} == set(
+            _STAGE_TABLES
+        )
+        for name, key in _STAGE_TABLES.items():
+            inferred = spark.read.parquet(f"{ckpt}/{name}").schema
+            assert res[key].schema == inferred, name
+
+
+def test_single_file_corpus(spark, tmp_path):
+    """One file: empty edge tables, no cluster, one assignment — through a
+    fresh run, a resumed run and the report."""
+    from cloud_dedup_spark.report import build_report
+
+    files = spark.createDataFrame(
+        [("repo_a", "src/only.py", "c1", "py", "def f(x):\n    return x\n")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    ckpt = str(tmp_path / "ckpt")
+    for _ in range(2):
+        res = run_pipeline(spark, files, checkpoint_dir=ckpt)
+        assert res["edges"].count() == 0
+        assert res["clusters"].count() == 0
+        assert res["assignments"].count() == 1
+    rep = build_report(res)
+    assert rep["total_files"] == 1 and rep["n_clusters"] == 0
+    assert rep["edge_kinds"] == {} and rep["cluster_size_histogram"] == {}
+    assert rep["per_repo_files"] == {"repo_a": 1}
+
+
+def test_stage_jobs_carry_stage_description(spark, corpus, monkeypatch):
+    """Each stage's jobs run under the description ``stage:<name>``, on the
+    main thread and in the overlapped pool threads alike, and the caller's
+    own description is back in place when run_pipeline returns."""
+    import cloud_dedup_spark.plans.pipeline as pl
+
+    sc = spark.sparkContext
+    seen = {}
+
+    def recording(name, fn):
+        def wrapped(*args, **kwargs):
+            seen[name] = sc.getLocalProperty("spark.job.description")
+            return fn(*args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(pl, "verify_pairs", recording("verify", pl.verify_pairs))
+    monkeypatch.setattr(
+        pl, "cluster_summary", recording("summary", pl.cluster_summary)
+    )
+    files, _ = corpus
+    sc.setJobDescription("caller label")
+    try:
+        run_pipeline(spark, files.limit(30), track_rows=False)
+        assert sc.getLocalProperty("spark.job.description") == "caller label"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen == {"verify": "stage:candidate_edges", "summary": "stage:clusters"}

@@ -48,8 +48,6 @@ class DedupConfig:
                                     # template-dominated; skip them here (the
                                     # LSH channel owns their duplicates) to
                                     # bound anchor-join fan-out
-    # --- partitioning ---
-    shuffle_partitions: int | None = None  # None → leave session setting alone
 
     def __post_init__(self) -> None:
         if self.num_hashes < 1 or self.num_hashes & (self.num_hashes - 1):

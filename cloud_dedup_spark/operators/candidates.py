@@ -25,7 +25,8 @@ Scale design (this is shuffle boundary #1, SURVEY.md §3):
       members sort adjacent and a true pair in the same salt group gets a
       direct chain edge with high probability (see the in-function comment
       for the honest math; a random order gave such a pair only ~4/cap per
-      band).
+      band).  The incremental fold shares the sizing and the salt, and pairs
+      a delta member within its own salt group only.
     Bucket-LEVEL connectivity always survives (star+chain); unrelated files
     sharing only boilerplate produce edges that verification rejects — which
     is exactly the desired outcome.  A small true family buried in a hot
@@ -37,7 +38,7 @@ Scale design (this is shuffle boundary #1, SURVEY.md §3):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cloud_dedup_spark.config import DedupConfig
@@ -83,6 +84,20 @@ def explode_bands(sigs: DataFrame) -> DataFrame:
     )
 
 
+def hot_bucket_sizes(bands: DataFrame, cap: int) -> DataFrame:
+    """(band_key, bucket_n) of each band bucket above ``cap`` rows."""
+    sizes = bands.groupBy("band_key").agg(F.count(F.lit(1)).alias("bucket_n"))
+    return sizes.filter(F.col("bucket_n") > cap)
+
+
+def hot_bucket_salt(cap: int) -> Column:
+    """A hot-bucket row's salt group, of about ``cap`` rows; each band salts
+    a bucket independently.  The fold salts with it too, so a delta file
+    lands in the salt group a full recompute puts it in."""
+    n_salts = F.ceil(F.col("bucket_n") / cap).cast("long")
+    return F.pmod(F.xxhash64("band_key", "file_id"), n_salts)
+
+
 def _pairs_from_buckets(buckets: DataFrame, expr: str) -> DataFrame:
     return (
         buckets.filter(F.size("ids") >= 2)
@@ -109,9 +124,8 @@ def lsh_candidate_pairs(
         bands = explode_bands(sigs)
     cap = cfg.band_bucket_cap
 
-    sizes = bands.groupBy("band_key").agg(F.count(F.lit(1)).alias("bucket_n"))
     # hot-key list is tiny (heavy-hitter distribution) → broadcast it
-    hot = F.broadcast(sizes.filter(F.col("bucket_n") > cap).select("band_key", "bucket_n"))
+    hot = F.broadcast(hot_bucket_sizes(bands, cap))
 
     tagged = bands.join(hot, "band_key", "left")
 
@@ -168,10 +182,7 @@ def lsh_candidate_pairs(
         tagged.filter(F.col("bucket_n").isNotNull())
         .join(sigs.select("file_id", "simhash"), "file_id", "left")
         .withColumn("h", F.xxhash64("band_key", "file_id"))
-        .withColumn(
-            "salt",
-            F.pmod(F.col("h"), F.ceil(F.col("bucket_n") / cap).cast("long")),
-        )
+        .withColumn("salt", hot_bucket_salt(cap))
         .withColumn("ord", rotated_simhash)
     )
     # materialized once: this aggregation (shuffle + per-group sort of every

@@ -90,12 +90,12 @@ def contaminated_docs(
         documents_as_files(docs).unionByName(bench_files), cfg
     )
     is_bench = F.col("repo") == _BENCH_REPO
-    # needle side only: the haystack side stays the FULL signature table (a
-    # haystack_ids frame here would be corpus-sized, and substring_edges
-    # broadcast-semi-filters through it — the wrong side to broadcast).  The
-    # bench snippets also land in the haystack index, which is harmless: a
-    # snippet cannot contain itself (token-strict inequality) and
-    # bench-in-bench pairs are dropped by the corpus-only mapping join below.
+    # needle side only: the haystack side stays the FULL signature table
+    # (restricting it to the corpus documents would take a corpus-sized id
+    # set, the wrong side to broadcast).  The bench snippets also land in
+    # the haystack index, which is harmless: a snippet cannot contain itself
+    # (token-strict inequality) and bench-in-bench pairs are dropped by the
+    # corpus-only mapping join below.
     edges = substring_edges(
         ident, sigs, cfg, needle_ids=ident.filter(is_bench).select("file_id")
     )

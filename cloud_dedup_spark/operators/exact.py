@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _group_key() -> F.Column:
+def group_key() -> F.Column:
     """Grouping key: the sha, or a per-row surrogate when it is NULL.
 
     sha2(NULL content) is NULL, and both window partitions and groupBy treat
@@ -38,7 +38,7 @@ def _group_key() -> F.Column:
     into ONE bogus 'byte-identical' family (round-4 review).  The surrogate
     makes each such row its own singleton group (it proceeds to nothing:
     singletons emit no edges).  A hex sha can never collide with the
-    NUL-prefixed surrogate."""
+    NUL-prefixed surrogate.  The incremental fold keys its delta reps on it."""
     return F.coalesce(
         F.col("content_sha256"),
         F.concat(F.lit("\x00null:"), F.col("file_id").cast("string")),
@@ -58,7 +58,7 @@ def exact_duplicate_clusters(files: DataFrame) -> DataFrame:
     near-dup stages.
     """
     pruned = files.select("content_sha256", "file_id", "repo", "path").withColumn(
-        "_k", _group_key()
+        "_k", group_key()
     )
     stats = pruned.groupBy("_k").agg(
         F.min("file_id").alias("exact_group_id"),
@@ -89,7 +89,7 @@ def exact_duplicate_groups(files: DataFrame, member_cap: int = 1000) -> DataFram
     an unbounded single-buffer array — the same fan-in shape every other
     rollup here caps (round-4 review).
     """
-    key = _group_key()
+    key = group_key()
     stats = files.withColumn("_k", key).groupBy("_k").agg(
         F.count(F.lit(1)).alias("n_files"),
         F.countDistinct("repo").alias("n_repos"),

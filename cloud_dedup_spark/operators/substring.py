@@ -130,7 +130,6 @@ def substring_edges(
     sigs: DataFrame,
     cfg: DedupConfig,
     needle_ids: DataFrame | None = None,
-    haystack_ids: DataFrame | None = None,
     inverted: DataFrame | None = None,
     cand_anchors: DataFrame | None = None,
     df_index: DataFrame | None = None,
@@ -141,13 +140,13 @@ def substring_edges(
 
     ``reps``: identity frame of exact representatives (file_id, content_norm).
     ``sigs``: signature table (file_id, shingles, n_shingles, n_tokens).
-    ``needle_ids`` / ``haystack_ids``: optional (file_id) frames restricting
-    the respective side — the incremental path runs two delta-anchored calls
-    (delta needles ⋈ all haystacks, all needles ⋈ delta haystacks) instead of
-    recomputing the full cross of an unchanged corpus.
+    ``needle_ids``: optional (file_id) frame restricting the needle side.
+    The incremental path runs two delta-anchored calls instead of
+    recomputing the full cross of an unchanged corpus: delta needles ⋈ all
+    haystacks, and all needles ⋈ the delta's haystacks (``inverted`` = the
+    delta's index, with ``cand_anchors``).
     ``inverted``: optional prebuilt ``shingle_inverted_index`` frame (e.g. the
-    incremental path's persisted index table); must cover exactly the
-    haystack rows of ``sigs``.  ``haystack_ids`` still applies to it.
+    incremental path's persisted index table); its rows are the haystacks.
     ``cand_anchors``: optional prebuilt :func:`candidate_anchors` frame (the
     persisted ``anchors`` stage table) replacing the needle-side explode.
     CONTRACT: only pass it together with a SMALL (delta-sized) haystack side.
@@ -172,11 +171,7 @@ def substring_edges(
     # explicit broadcasts so the plan is scan-only regardless of optimizer
     # size estimates (a mis-estimated sort-merge join here would shuffle the
     # corpus per micro-batch; pinned by the fold's shuffle-growth test)
-    delta_mode = (
-        needle_ids is not None
-        or haystack_ids is not None
-        or cand_anchors is not None
-    )
+    delta_mode = needle_ids is not None or cand_anchors is not None
     base = sigs.select("file_id", "shingles", "n_shingles", "n_tokens").filter(
         F.col("n_shingles") > 0
     )
@@ -187,22 +182,9 @@ def substring_edges(
         )
 
     if inverted is None:
-        hay_base = base
-        if haystack_ids is not None:
-            hay_base = base.join(
-                F.broadcast(haystack_ids.select("file_id")), "file_id", "left_semi"
-            )
         # one owner of the index shape — the persisted incremental table and
         # this inline batch build must never drift (round-4 review)
-        inverted = shingle_inverted_index(hay_base)
-    elif haystack_ids is not None:
-        inverted = inverted.join(
-            F.broadcast(
-                haystack_ids.select(F.col("file_id").alias("dst"))
-            ),
-            "dst",
-            "left_semi",
-        )
+        inverted = shingle_inverted_index(base)
 
     # Candidate anchors: each needle's K min-valued shingles (see
     # candidate_anchors; keeping K small makes every frame below

@@ -28,6 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.functions.normalize import normalize_content, with_identity
@@ -74,6 +75,13 @@ class CheckpointStore:
     def _path(self, name: str) -> str:
         assert self.location is not None
         return f"{self.location}/{name}"
+
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """The stored table ``name`` (with ``schema``, no inference job)."""
+        reader = self.spark.read.format(self.table_format)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.load(self._path(name))
 
     def exists(self, name: str) -> bool:
         if self.location is None:
@@ -134,15 +142,14 @@ class CheckpointStore:
         if self.location is None:
             # no checkpointing requested: cut lineage in-memory instead
             return build().localCheckpoint()
-        reader = self.spark.read.format(self.table_format)
         if not self.exists(name):
             df = build()
             df.write.mode("overwrite").format(self.table_format).save(
                 self._path(name)
             )
             if self.table_format == "parquet":
-                reader = reader.schema(df.schema)
-        return reader.load(self._path(name))
+                return self.read(name, df.schema)
+        return self.read(name)
 
 
 def run_pipeline(
@@ -165,19 +172,7 @@ def run_pipeline(
     store.guard_config(config_fingerprint(cfg))
     metrics = RunMetrics()
 
-    # Parallelism guard: a narrow input (few parquet splits, small
-    # createDataFrame) would serialize the normalize + signature stages —
-    # measured as a hard scaling ceiling (the whole pipeline inherited 2
-    # partitions from a 250 MB corpus file).  One up-front round-robin
-    # shuffle is cheap next to the per-file CPU work it unlocks — but it
-    # moves the CONTENT column, so it must fire only for genuinely narrow
-    # inputs: the threshold is capped at 64 splits, not defaultParallelism
-    # (a multi-TB source in 4000 splits on an 8000-core cluster must NOT
-    # round-robin every content byte; 32 MB scan splits in session.py widen
-    # real reads long before this guard — round-4 review).
-    par = spark.sparkContext.defaultParallelism
-    if files.rdd.getNumPartitions() < min(par, 64):
-        files = files.repartition(par * 2)
+    files = widen_narrow_input(spark, files)
 
     sc = spark.sparkContext
 
@@ -326,22 +321,8 @@ def run_pipeline(
 
     assignments = stage(
         "cluster_labels",
-        lambda: cluster_assignments(clean_identity, edges)
-        .withColumn("quarantined", F.lit(False))
-        .unionByName(
-            quarantined.select(
-                "file_id", "repo", "path",
-                # label by the second hash: unique per quarantined file even
-                # though file_id itself is the collided value.  This label is
-                # advisory only — it lives in a hash space that is NOT
-                # structurally disjoint from graph cluster ids, so every
-                # downstream cluster_id grouping (cluster_summary, report
-                # drill-down, unique_file_counts) partitions on the
-                # ``quarantined`` flag first and never groups these rows with
-                # graph-labeled ones.
-                F.col("file_id2").alias("cluster_id"),
-                F.lit(True).alias("quarantined"),
-            )
+        lambda: with_quarantine_labels(
+            cluster_assignments(clean_identity, edges), quarantined
         ),
     )
 
@@ -366,6 +347,43 @@ def run_pipeline(
         "clusters": clusters,
         "metrics": metrics,
     }
+
+
+def widen_narrow_input(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df``, round-robin widened to 2 × defaultParallelism when narrow."""
+    # a narrow input (few parquet splits, small createDataFrame) would
+    # serialize the normalize + signature stages — measured as a hard scaling
+    # ceiling (the whole pipeline inherited 2 partitions from a 250 MB corpus
+    # file).  One up-front round-robin shuffle is cheap next to the per-file
+    # CPU work it unlocks — but it moves the CONTENT column, so it must fire
+    # only for genuinely narrow inputs: the threshold is capped at 64 splits,
+    # not defaultParallelism (a multi-TB source in 4000 splits on an
+    # 8000-core cluster must NOT round-robin every content byte; 32 MB scan
+    # splits in session.py widen real reads long before this guard — round-4
+    # review)
+    par = spark.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < min(par, 64):
+        return df.repartition(par * 2)
+    return df
+
+
+def with_quarantine_labels(clean: DataFrame, quarantined: DataFrame) -> DataFrame:
+    """cluster_labels rows: ``clean`` (file_id, repo, path, cluster_id) with
+    ``quarantined`` False, plus the quarantined identity rows with True."""
+    # a quarantined row is labeled by its second hash: unique per quarantined
+    # file even though file_id itself is the collided value.  This label is
+    # advisory only — it lives in a hash space that is NOT structurally
+    # disjoint from graph cluster ids, so every downstream cluster_id
+    # grouping (cluster_summary, report drill-down, unique_file_counts)
+    # partitions on the ``quarantined`` flag first and never groups these
+    # rows with graph-labeled ones.
+    return clean.withColumn("quarantined", F.lit(False)).unionByName(
+        quarantined.select(
+            "file_id", "repo", "path",
+            F.col("file_id2").alias("cluster_id"),
+            F.lit(True).alias("quarantined"),
+        )
+    )
 
 
 def quarantine_id_collisions(

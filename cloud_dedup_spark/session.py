@@ -11,6 +11,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# scan splits and parquet row groups, in bytes (see build_session); a caller
+# sets either key through extra_conf
+_SPLIT_BYTES = 32 * 1024 * 1024
+
 _MEM_UNITS = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
 
 
@@ -70,10 +74,7 @@ def build_session(
         # normalize, signature UDF): smaller scan splits keep all cores busy
         # on modest inputs; at PB scale the input has thousands of splits
         # regardless and this only bounds per-task memory
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_SPLIT_BYTES", str(32 * 1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(_SPLIT_BYTES))
         # parquet row groups must start inside a scan split or the split
         # reads nothing: a table written as N big single-row-group files
         # caps every downstream scan at N tasks regardless of core count.
@@ -84,10 +85,7 @@ def build_session(
         # 500k@16 / 500k@4 (16 MB everywhere over-fragmented the 32-core
         # case, BENCH/ANALYSIS.md).  Files smaller than this are unaffected
         # (one row group), so the setting only protects the big-file case.
-        .config(
-            "spark.hadoop.parquet.block.size",
-            os.environ.get("SPARK_GRAFT_ROWGROUP_BYTES", str(32 * 1024 * 1024)),
-        )
+        .config("spark.hadoop.parquet.block.size", str(_SPLIT_BYTES))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: driver heap IS the cluster's memory; 8g chokes (spill-
         # bound, parallelism-insensitive) beyond ~50k wide content rows

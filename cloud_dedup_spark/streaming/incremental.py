@@ -19,7 +19,11 @@ edges (or new quarantines) touch; untouched components keep their labels
 verbatim.  The result equals a full recompute over the union (pinned by
 tests/test_incremental.py::test_incremental_equals_full_recompute).  The fold
 runs as named phases, in this order, each taking its inputs as arguments and
-returning what later phases read:
+returning what later phases read, all through one ``CheckpointStore``.  The
+phases call the batch path's own stage rules, never copies: the exact
+families (operators/exact.py), the hot-bucket sizing and salt
+(operators/candidates.py), the narrow-input guard and the quarantine labels
+(plans/pipeline.py).
 
 1. ``_open_prior``: entry repairs, the layout check, every stage-table read;
 2. ``_guard``: the idempotency and config guards (stop if nothing is new);
@@ -51,8 +55,13 @@ from pyspark.sql import functions as F
 
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.functions.normalize import with_identity
-from cloud_dedup_spark.operators.candidates import explode_bands
+from cloud_dedup_spark.operators.candidates import (
+    explode_bands, hot_bucket_salt, hot_bucket_sizes,
+)
 from cloud_dedup_spark.operators.cluster import connected_components
+from cloud_dedup_spark.operators.exact import (
+    exact_duplicate_clusters, exact_pair_edges, group_key,
+)
 from cloud_dedup_spark.operators.signatures import SIG_TABLE_COLUMNS, compute_signatures
 from cloud_dedup_spark.operators.substring import (
     candidate_anchors, shingle_inverted_index, substring_edge_list, substring_edges,
@@ -63,6 +72,7 @@ from cloud_dedup_spark.plans.maintenance import (
 )
 from cloud_dedup_spark.plans.pipeline import (
     CheckpointStore, config_fingerprint, quarantine_id_collisions,
+    widen_narrow_input, with_quarantine_labels,
 )
 from cloud_dedup_spark.sources.files_source import FILES_SCHEMA
 
@@ -138,9 +148,9 @@ def _incremental_dedup_update(
     {assignments, edges, delta_signatures, cc_stats, n_delta, n_lsh_pairs}.
     """
     cfg = cfg or DedupConfig()
-    loc = checkpoint_dir.rstrip("/")
-    prior = _open_prior(spark, loc, table_format)
-    guard = _guard(spark, new_files, prior, loc, table_format, cfg)
+    store = CheckpointStore(spark, checkpoint_dir, table_format)
+    prior = _open_prior(store)
+    guard = _guard(store, new_files, prior, cfg)
     if guard is None:
         return {
             "assignments": prior["cluster_labels"], "edges": prior["edges"],
@@ -152,7 +162,7 @@ def _incremental_dedup_update(
     exact_new, prior_touched, touched = _exact_channel(prior, q)
     delta_sigs, delta_norm = _delta_signatures(prior, q, prior_touched, touched, cfg)
     near_new, sub_new, n_lsh_pairs, delta_rows = _near_channels(
-        spark, loc, table_format, cfg, prior, guard.batch_key, delta_sigs, delta_norm
+        store, cfg, prior, guard.batch_key, delta_sigs, delta_norm
     )
     assignments, edges_out, cc_stats = _components(
         prior, q, exact_new, near_new, sub_new
@@ -161,10 +171,10 @@ def _incremental_dedup_update(
         "edges": edges_out, "cluster_labels": assignments,
         "signatures": delta_sigs, "norm": delta_norm, **delta_rows,
     }
-    _persist(spark, loc, table_format, out, prior, guard, q)
+    _persist(store, out, prior, guard, q)
     return {
-        "assignments": _load(spark, loc, table_format, "cluster_labels"),
-        "edges": _load(spark, loc, table_format, "edges"),
+        "assignments": store.read("cluster_labels"),
+        "edges": store.read("edges"),
         "delta_signatures": delta_sigs,
         "cc_stats": cc_stats,
         "n_delta": guard.n_delta,
@@ -174,11 +184,7 @@ def _incremental_dedup_update(
     }
 
 
-def _load(spark: SparkSession, loc: str, table_format: str, name: str) -> DataFrame:
-    return spark.read.format(table_format).load(f"{loc}/{name}")
-
-
-def _open_prior(spark: SparkSession, loc: str, table_format: str) -> dict:
+def _open_prior(store: CheckpointStore) -> dict:
     """Table name → DataFrame for every stage table, each opened once after
     the entry repairs and the layout check (shingle_index: None until the
     first fold builds it)."""
@@ -187,15 +193,15 @@ def _open_prior(spark: SparkSession, loc: str, table_format: str) -> dict:
     # any read below (without the .compact repairs, a compaction crash on
     # e.g. identity would fail every fold until compact_stage_tables itself
     # is rerun)
+    spark, loc = store.spark, store.location
     repair_swap(spark, f"{loc}/edges")
     repair_swap(spark, f"{loc}/cluster_labels")
     for t in APPEND_TABLES:
         repair_swap(spark, f"{loc}/{t}", suffix=".compact")
-    store = CheckpointStore(spark, loc, table_format)
     missing = [f"table {t!r}" for t in _STAGE_TABLES if not store.exists(t)]
     index = None
     if store.exists("shingle_index"):
-        index = _load(spark, loc, table_format, "shingle_index")
+        index = store.read("shingle_index")
         if "ingest_batch" not in index.columns:
             missing.append("column 'ingest_batch' of table 'shingle_index'")
     if missing:
@@ -204,7 +210,7 @@ def _open_prior(spark: SparkSession, loc: str, table_format: str) -> dict:
             f"run_pipeline wrote it, or it is damaged. Re-run run_pipeline("
             f"..., checkpoint_dir=...) into a fresh dir and fold deltas into that"
         )
-    prior = {t: _load(spark, loc, table_format, t) for t in _STAGE_TABLES}
+    prior = {t: store.read(t) for t in _STAGE_TABLES}
     prior["shingle_index"] = index
     return prior
 
@@ -217,14 +223,10 @@ class _Guard(NamedTuple):
 
 
 def _guard(
-    spark: SparkSession, new_files: DataFrame, prior: dict, loc: str,
-    table_format: str, cfg: DedupConfig,
+    store: CheckpointStore, new_files: DataFrame, prior: dict, cfg: DedupConfig,
 ) -> _Guard | None:
     """The idempotency and config guards; None when nothing is new."""
-    par = spark.sparkContext.defaultParallelism
-    delta_identity_raw = with_identity(new_files)
-    if delta_identity_raw.rdd.getNumPartitions() < par:
-        delta_identity_raw = delta_identity_raw.repartition(par * 2)
+    delta_identity_raw = widen_narrow_input(store.spark, with_identity(new_files))
     # materialize the RAW identified batch once (eager: the sha256+normalize
     # lineage over full content is the expensive thing a recompute must
     # never re-run — round-3 ADVICE); everything below consumes this cut
@@ -281,7 +283,7 @@ def _guard(
     # DIFFERENT config into existing stage tables would mix signature
     # families silently (pre-guard checkpoints have no marker and adopt the
     # current config's)
-    CheckpointStore(spark, loc, table_format).guard_config(config_fingerprint(cfg))
+    store.guard_config(config_fingerprint(cfg))
     batch_key = f"b_{n_raw}_{(stats['h_raw'] or 0) & 0xFFFFFFFFFFFFFFFF:x}"
     # n_delta < n_raw only when a crashed attempt committed part of this
     # batch's identity append — the recovery-only path for the index write;
@@ -356,7 +358,9 @@ def _quarantine(prior: dict, delta_identity: DataFrame) -> _Quarantine:
 
 
 def _exact_channel(prior: dict, q: _Quarantine) -> tuple[DataFrame, ...]:
-    """(exact_new, prior_touched, touched): star edges, touched prior rows."""
+    """(exact_new, prior_touched, touched): star edges, touched prior rows.
+    The edges are the batch exact stage's over the touched rows (one family
+    key: a NULL-content file stays a singleton)."""
     # star edges within sha groups touched by the delta OR by a NEWLY
     # quarantined prior member.  The second clause is the repair path: when
     # a collision quarantines a prior group's rep, that group's surviving
@@ -365,7 +369,7 @@ def _exact_channel(prior: dict, q: _Quarantine) -> tuple[DataFrame, ...]:
     # too.  Gating on NEW quarantines only (the persisted table makes "new"
     # knowable) keeps repair off the steady-state path: an already-repaired
     # group has a clean carrier and needs no work (round-3 ADVICE, medium).
-    id_cols = ["content_sha256", "file_id"]
+    id_cols = ["content_sha256", "file_id", "repo", "path"]
     touched_shas = q.delta_clean.select("content_sha256").distinct()
     if q.has_new:
         prior_q_shas = (
@@ -384,17 +388,7 @@ def _exact_channel(prior: dict, q: _Quarantine) -> tuple[DataFrame, ...]:
         .localCheckpoint(eager=False)
     )
     touched = prior_touched.unionByName(q.delta_clean.select(*id_cols))
-    w = Window.partitionBy("content_sha256")
-    exact_new = (
-        touched.withColumn("rep", F.min("file_id").over(w))
-        .filter(F.col("file_id") != F.col("rep"))
-        .select(
-            F.least("rep", "file_id").alias("src"),
-            F.greatest("rep", "file_id").alias("dst"),
-            F.lit("exact").alias("edge_kind"),
-            F.lit(1.0).alias("score"),
-        )
-    )
+    exact_new = exact_pair_edges(exact_duplicate_clusters(touched))
     return exact_new, prior_touched, touched
 
 
@@ -412,9 +406,10 @@ def _delta_signatures(
     new_content = q.delta_clean.join(
         F.broadcast(prior_touched_shas), "content_sha256", "left_anti"
     )
-    first_by_sha = Window.partitionBy("content_sha256").orderBy("file_id")
+    # one rep per exact family, keyed as the batch exact stage keys it
+    first_in_family = Window.partitionBy(group_key()).orderBy("file_id")
     delta_reps = (
-        new_content.withColumn("_rn", F.row_number().over(first_by_sha))
+        new_content.withColumn("_rn", F.row_number().over(first_in_family))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -527,8 +522,8 @@ def _own_partition(batch_key: str) -> Column:
 
 
 def _near_channels(
-    spark: SparkSession, loc: str, table_format: str, cfg: DedupConfig,
-    prior: dict, batch_key: str, delta_sigs: DataFrame, delta_norm: DataFrame,
+    store: CheckpointStore, cfg: DedupConfig, prior: dict, batch_key: str,
+    delta_sigs: DataFrame, delta_norm: DataFrame,
 ) -> tuple[DataFrame, DataFrame, int, dict]:
     """(near_new, sub_new, n_lsh_pairs, the delta's rows per index table):
     LSH and both substring directions as three concurrent driver threads."""
@@ -567,9 +562,9 @@ def _near_channels(
         shingle_inverted_index(prior["signatures"]).withColumn(
             "ingest_batch", F.lit("base")
         ).write.mode("overwrite").partitionBy("ingest_batch").format(
-            table_format
-        ).save(f"{loc}/shingle_index")
-        index = _load(spark, loc, table_format, "shingle_index")
+            store.table_format
+        ).save(f"{store.location}/shingle_index")
+        index = store.read("shingle_index")
     # The index is the LARGEST stage table (one row per corpus token), so
     # its append idempotency must not cost a per-delta scan of the table
     # (an insert-if-absent distinct over `dst` is O(corpus tokens) per
@@ -609,11 +604,9 @@ def _near_channels(
             substring_edges, union_norm, union_sigs, cfg, needle_ids=delta_ids,
             inverted=union_index,
         )
-        # inverted=delta_index (not haystack_ids=delta_ids): the delta's
-        # inverted index IS the haystack explode the operator would
-        # otherwise rebuild by scanning + semi-filtering corpus-sized
-        # union_sigs — already materialized above, so reusing it saves
-        # one full-signatures scan and a duplicate delta explode per fold
+        # the haystack side is the delta's inverted index, already
+        # materialized above: the operator probes it directly instead of
+        # re-exploding the delta's rows out of corpus-sized union_sigs
         f_rev = pool.submit(
             substring_edges, union_norm, union_sigs, cfg, inverted=delta_index,
             cand_anchors=union_anchors, df_index=union_index,
@@ -644,9 +637,9 @@ def _lsh_edges(
     # discipline (operators/candidates.py): bucket sizes per touched key
     # (map-side combined — the shuffle output is one row per touched key,
     # delta-bounded), keys ≤ cap keep the raw join, keys > cap route the
-    # delta member into its deterministic salt group only (the batch path's
-    # own salt assignment: pmod(xxhash64(band_key, file_id), ceil(n/cap))),
-    # giving O(delta × cap) pairs per band regardless of bucket size.
+    # delta member into its deterministic salt group only (hot_bucket_salt,
+    # the batch path's own definition), giving O(delta × cap) pairs per
+    # band regardless of bucket size.
     # Label-equality caveat (round-5 ADVICE): the batch path caps the
     # same buckets and the delta member gets cap chances per band at a
     # verified edge into the bucket's true family via its ~cap-sized
@@ -661,12 +654,8 @@ def _lsh_edges(
     # hot-bucket contract, never wrong edges.  Pinned by
     # tests/test_incremental.py::test_fold_lsh_hot_bucket_is_capped.
     cap = cfg.band_bucket_cap
-    hot_sizes = (
-        cand_bands.groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") > cap)
-        .localCheckpoint()  # eager: tiny (heavy-hitter keys), consumed 3×
-    )
+    # eager: tiny (heavy-hitter keys), consumed 3×
+    hot_sizes = hot_bucket_sizes(cand_bands, cap).localCheckpoint()
     cool_pairs = (
         # anti-joining only the DELTA side suffices: the equi-join can then
         # never match a hot key on the cand side
@@ -680,10 +669,7 @@ def _lsh_edges(
             F.greatest("file_id", "other_id").alias("dst"),
         )
     )
-    salt = F.pmod(
-        F.xxhash64("band_key", "file_id"),
-        F.ceil(F.col("bucket_n") / cap).cast("long"),
-    )
+    salt = hot_bucket_salt(cap)
     delta_hot = (
         delta_bands.join(F.broadcast(hot_sizes), "band_key")
         .withColumn("salt", salt)
@@ -826,23 +812,18 @@ def _components(
         "n_edges": cc_edges.count(), "n_vertices": n_cc_members,
         "n_touched_clusters": touched_cluster_ids.count(),
     }
-    label_cols = ["file_id", "repo", "path", "cluster_id", "quarantined"]
+    label_cols = ["file_id", "repo", "path", "cluster_id"]
     recomputed = (
         touched_prior_members.unionByName(
             q.delta_clean.select("file_id", "repo", "path")
         )
         .join(sub_labels, "file_id", "left")
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col("file_id")))
-        .withColumn("quarantined", F.lit(False))
         .select(*label_cols)
     )
-    quarantined = q.all_rows.select(
-        "file_id", "repo", "path", F.col("file_id2").alias("cluster_id"),
-        F.lit(True).alias("quarantined"),
+    assignments = with_quarantine_labels(
+        untouched_prior.select(*label_cols).unionByName(recomputed), q.all_rows
     )
-    assignments = untouched_prior.select(*label_cols).unionByName(
-        recomputed
-    ).unionByName(quarantined)
     # new edges may re-derive edges that already exist (the exact channel
     # re-stars every touched sha group) — dedup against the affected slice
     # only: any prior edge sharing an endpoint with a new edge lives in a
@@ -856,8 +837,7 @@ def _components(
 
 
 def _persist(
-    spark: SparkSession, loc: str, table_format: str, out: dict, prior: dict,
-    guard: _Guard, q: _Quarantine,
+    store: CheckpointStore, out: dict, prior: dict, guard: _Guard, q: _Quarantine,
 ) -> None:
     """Write the fold: the concurrent barrier over the seven tables in ``out``
     (table name → the frame that lands there), then quarantine, then identity.
@@ -901,14 +881,13 @@ def _persist(
     #      reconverges; a crash after it means every other write already
     #      committed.  Pinned by
     #      tests/test_incremental.py::test_partial_write_replay_reconverges.
+    spark, loc, fmt = store.spark, store.location, store.table_format
     tasks = [
-        (swap_overwrite, spark, out["edges"], f"{loc}/edges", table_format),
-        (swap_overwrite, spark, out["cluster_labels"], f"{loc}/cluster_labels",
-         table_format),
-        (_write_index, loc, table_format, out["shingle_index"],
-         prior["shingle_index"], guard),
+        (swap_overwrite, spark, out["edges"], f"{loc}/edges", fmt),
+        (swap_overwrite, spark, out["cluster_labels"], f"{loc}/cluster_labels", fmt),
+        (_write_index, store, out["shingle_index"], prior["shingle_index"], guard),
     ] + [
-        (_append_absent, out[t], f"{loc}/{t}", keys, prior[t], table_format)
+        (_append_absent, store, t, out[t], keys, prior[t])
         for t, keys in _APPEND_KEYS.items()
     ]
     with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
@@ -916,8 +895,8 @@ def _persist(
             fut.result()
     if q.has_new:
         _append_absent(
-            q.new_rows, f"{loc}/quarantine", ["file_id", "file_id2"],
-            prior["quarantine"], table_format,
+            store, "quarantine", q.new_rows, ["file_id", "file_id2"],
+            prior["quarantine"],
         )
     # identity holds EVERY row incl. quarantined collision pairs, so the
     # delta was guarded on the 128-bit composite in _guard — appending it
@@ -925,12 +904,12 @@ def _persist(
     # it had just read; round-3 ADVICE)
     guard.delta_identity.select(*prior["identity"].columns).write.mode(
         "append"
-    ).format(table_format).save(f"{loc}/identity")
+    ).format(fmt).save(f"{loc}/identity")
 
 
 def _write_index(
-    loc: str, table_format: str, delta_index: DataFrame,
-    prior_index: DataFrame | None, guard: _Guard,
+    store: CheckpointStore, delta_index: DataFrame, prior_index: DataFrame | None,
+    guard: _Guard,
 ) -> None:
     """The delta's shingle_index rows, into this batch's own partition."""
     # dynamic overwrite touches only partitions present in the data, so a
@@ -950,7 +929,7 @@ def _write_index(
     #     they get their own deterministic partition — same O(delta)
     #     overwrite idempotency as the clean path (round-3 ADVICE: this
     #     caller class used to pay the recovery scan on every call).
-    index_path = f"{loc}/shingle_index"
+    index_path = f"{store.location}/shingle_index"
     to_write, key = delta_index, guard.batch_key
     if guard.recovery_key is not None:
         key = guard.recovery_key
@@ -969,24 +948,26 @@ def _write_index(
             to_write = delta_index.join(F.broadcast(own_dst), "dst", "left_anti")
     to_write.withColumn("ingest_batch", F.lit(key)).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
-    ).partitionBy("ingest_batch").format(table_format).save(index_path)
+    ).partitionBy("ingest_batch").format(store.table_format).save(index_path)
 
 
 def _append_absent(
-    df: DataFrame, path: str, keys: list[str], prior_frame: DataFrame,
-    table_format: str,
+    store: CheckpointStore, name: str, df: DataFrame, keys: list[str],
+    prior_frame: DataFrame,
 ) -> None:
     # insert-if-absent at O(delta): semi-filter the pre-fold snapshot of the
     # table down to the delta's own keys (broadcast — delta-bounded), then
     # anti-join.  Nothing writes to these tables between the snapshot read
     # and this append within one fold, so the snapshot IS the live table;
     # the old form re-read the table and ran a corpus-wide distinct per fold
-    # (round-3 ADVICE).
+    # (round-3 ADVICE).  The anti-join puts the keys first; the select
+    # keeps the table's own column order in every file it holds.
     key_df = df.select(*keys).distinct()
     existing = prior_frame.select(*keys).join(F.broadcast(key_df), keys, "left_semi")
-    df.join(F.broadcast(existing), keys, "left_anti").write.mode("append").format(
-        table_format
-    ).save(path)
+    fresh = df.join(F.broadcast(existing), keys, "left_anti").select(*df.columns)
+    fresh.write.mode("append").format(store.table_format).save(
+        f"{store.location}/{name}"
+    )
 
 
 def incremental_dedup_stream(

@@ -448,6 +448,30 @@ def test_fold_rejects_checkpoint_missing_a_stage_table(spark, tmp_path):
         incremental_dedup_update(spark, delta, ckpt)
 
 
+def test_fold_keeps_null_content_files_apart(spark, tmp_path):
+    """NULL content has a NULL sha; the fold keys exact families as the batch
+    exact stage does (operators/exact.group_key), so two NULL-content delta
+    files stay singletons instead of one welded 'byte-identical' family, and
+    each one is its own signature rep — the fold equals a full recompute."""
+    rows, ckpt = _small_checkpoint(spark, tmp_path)
+    base = spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"])
+         for r in rows], SCHEMA)
+    delta = spark.createDataFrame(
+        [
+            ("repo_c", "n/a.py", "n1", "py", None),
+            ("repo_a", "n/b.py", "n2", "py", None),
+            ("repo_b", "n/c.py", "n3", "py", _Gen(3).body(40)),
+        ],
+        SCHEMA,
+    )
+    inc = incremental_dedup_update(spark, delta, ckpt)
+    full = run_pipeline(spark, base.unionByName(delta))
+    assert _clusters(inc["assignments"]) == _clusters(full["assignments"])
+    n_sigs = spark.read.parquet(f"{ckpt}/signatures").count()
+    assert n_sigs == full["signatures"].count()
+
+
 def test_persist_tasks_read_no_sibling_target(spark, tmp_path, monkeypatch):
     """The persist barrier's invariant: every frame a concurrent persist task
     reads (the frame it writes and its table's pre-fold snapshot) lists no
@@ -465,7 +489,8 @@ def test_persist_tasks_read_no_sibling_target(spark, tmp_path, monkeypatch):
     real_persist = incremental._persist
     seen: dict = {}
 
-    def checked_persist(spark_, loc, table_format, out, prior, guard, q):
+    def checked_persist(store, out, prior, guard, q):
+        loc = store.location
         assert set(out) == targets
         for t in targets:
             frames = [out[t]] + ([prior[t]] if prior[t] is not None else [])
@@ -478,7 +503,7 @@ def test_persist_tasks_read_no_sibling_target(spark, tmp_path, monkeypatch):
                 root = os.path.realpath(f"{loc}/{other}") + os.sep
                 bad = [f for f in files if f.startswith(root)]
                 assert not bad, f"{t} persist task reads {other}: {bad[:2]}"
-        return real_persist(spark_, loc, table_format, out, prior, guard, q)
+        return real_persist(store, out, prior, guard, q)
 
     monkeypatch.setattr(incremental, "_persist", checked_persist)
     rows, ckpt = _small_checkpoint(spark, tmp_path)

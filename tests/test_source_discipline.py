@@ -54,3 +54,35 @@ def test_no_rdd_map_in_dataflow():
         for m in bad.finditer(src)
     ]
     assert not hits, f"RDD row-level operations found: {hits}"
+
+
+# an environment read with a literal key: os.environ.get("K"), os.environ["K"],
+# "K" in os.environ, os.getenv("K")
+_ENV_READ = re.compile(
+    r'os\.environ\.get\(\s*"(\w+)"'
+    r'|os\.environ\[\s*"(\w+)"\s*\]'
+    r'|"(\w+)"\s+in\s+os\.environ'
+    r'|os\.getenv\(\s*"(\w+)"'
+)
+
+
+def test_library_env_reads_are_deployment_settings():
+    """The library reads only the deployment settings that the bench and
+    perfbench entry points export (cores, driver heap, scratch dirs); every
+    tuning value is a constant or a config field, never an environment
+    knob hidden inside library code."""
+    allowed = {
+        "SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEMORY", "SPARK_LOCAL_DIRS",
+        "SPARK_GRAFT_TMPFS",
+    }
+    bad = []
+    for path, src in _sources().items():
+        keyed = list(_ENV_READ.finditer(src))
+        bad += [
+            f"{path}: {m.group(0)}"
+            for m in keyed
+            if next(g for g in m.groups() if g) not in allowed
+        ]
+        if len(re.findall(r"os\.environ\b|\bgetenv\(", src)) != len(keyed):
+            bad.append(f"{path}: an environment read without a literal key")
+    assert not bad, f"library environment reads outside the allowed set: {bad}"

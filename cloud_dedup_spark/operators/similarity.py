@@ -134,9 +134,10 @@ def _score_blocked(
       * ``cand is None`` — every pair: blocks self-join on ``gid <= gid``
         and one Arrow row per block pair scores all its cross pairs (the
         upper triangle on the diagonal);
-      * otherwise ``cand`` is an ``(id_a, id_b)`` candidate frame whose ids
-        come from ``emb`` (every caller derives it that way); its pairs
-        cross as 16-byte id pairs grouped per ``(ga, gb)`` block pair.
+      * otherwise ``cand`` is an ``(id_a, id_b)`` candidate frame; its pairs
+        cross as 16-byte id pairs grouped per ``(ga, gb)`` block pair, and
+        a pair with an id that has no row in ``emb`` is dropped (inner-join
+        semantics).
     Pairs of two equal ids (a duplicated id in ``emb``) are dropped, so
     ``id_a < id_b`` holds strictly.  Only pairs within one conservative
     rounding step of the threshold leave Python; the authoritative
@@ -207,14 +208,18 @@ def _score_blocked(
                 ids_b = np.array([r["id"] for r in ib], dtype=np.int64)
                 mb = np.vstack([r["vec"] for r in ib]).astype(np.float64)
             if prs is not None:
+                # a pair with an id that has no row in ``emb`` has nothing
+                # to score and is skipped, as an inner join would drop it
                 pos_a = {r["id"]: i for i, r in enumerate(ia)}
                 pos_b = {r["id"]: i for i, r in enumerate(ib)}
-                iu = np.fromiter(
-                    (pos_a[p["id_a"]] for p in prs), dtype=np.int64, count=len(prs)
-                )
-                ju = np.fromiter(
-                    (pos_b[p["id_b"]] for p in prs), dtype=np.int64, count=len(prs)
-                )
+                iu, ju = [], []
+                for p in prs:
+                    i, j = pos_a.get(p["id_a"]), pos_b.get(p["id_b"])
+                    if i is not None and j is not None:
+                        iu.append(i)
+                        ju.append(j)
+                iu = np.array(iu, dtype=np.int64)
+                ju = np.array(ju, dtype=np.int64)
             elif s:
                 iu, ju = np.triu_indices(len(ids_a), k=1)
             else:

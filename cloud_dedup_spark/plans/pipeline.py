@@ -23,14 +23,18 @@ boundary is spill-safe and restartable.
 
 from __future__ import annotations
 
+import json
 import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from cloud_dedup_spark.config import DedupConfig
+from cloud_dedup_spark.fsutil import (
+    hadoop_path_exists, hadoop_success_exists, read_text, write_text,
+)
 from cloud_dedup_spark.functions.normalize import normalize_content, with_identity
 from cloud_dedup_spark.metrics import RunMetrics
 from cloud_dedup_spark.operators.candidates import explode_bands, lsh_candidate_pairs
@@ -54,13 +58,39 @@ def config_fingerprint(cfg: DedupConfig) -> str:
     (human-readable on purpose: the marker file doubles as a record of what
     the stage tables were built with)."""
     import dataclasses
-    import json
 
     return json.dumps(dataclasses.asdict(cfg), sort_keys=True, default=str)
 
 
+def _as_read(dt: DataType) -> DataType:
+    """``dt`` as a file source reads it back: Spark makes every field,
+    array element and map value nullable (checked against inference by
+    tests/test_pipeline_e2e.py::test_stage_readback_schema_matches_inferred)."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_read(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_read(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_read(dt.keyType), _as_read(dt.valueType), True)
+    return dt
+
+
 class CheckpointStore:
-    """Stage-table store: write-once, read-back, skip-if-present."""
+    """Stage-table store: write-once, read-back, skip-if-present.
+
+    A parquet table's schema is recorded in ``<location>/_schemas/<name>.json``
+    before the table's first write, so ``read`` starts no schema-inference
+    job (a one-task job each, and a fold opens nine tables).  Writing the
+    record before the data means that whenever ``exists(name)`` holds, so
+    does the record, on a fresh run and a resume alike.  One file per table:
+    concurrent stage threads never write the same file.  Only a table with
+    no record is read with inference: Iceberg tables, which carry their own
+    schema and reject a given one, and checkpoints written before schemas
+    were recorded.
+    """
 
     def __init__(
         self,
@@ -76,21 +106,26 @@ class CheckpointStore:
         assert self.location is not None
         return f"{self.location}/{name}"
 
-    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
-        """The stored table ``name`` (with ``schema``, no inference job)."""
+    def _schema_path(self, name: str) -> str:
+        return f"{self._path('_schemas')}/{name}.json"
+
+    def record_schema(self, name: str, schema: StructType) -> None:
+        """Record the schema of table ``name``; call before its first write."""
+        if self.table_format == "parquet":
+            write_text(self.spark, self._schema_path(name), _as_read(schema).json())
+
+    def read(self, name: str) -> DataFrame:
+        """The stored table ``name``, with its recorded schema if any."""
         reader = self.spark.read.format(self.table_format)
-        if schema is not None:
-            reader = reader.schema(schema)
+        if self.table_format == "parquet":
+            recorded = read_text(self.spark, self._schema_path(name))
+            if recorded is not None:
+                reader = reader.schema(StructType.fromJson(json.loads(recorded)))
         return reader.load(self._path(name))
 
     def exists(self, name: str) -> bool:
         if self.location is None:
             return False
-        from cloud_dedup_spark.fsutil import (
-            hadoop_path_exists,
-            hadoop_success_exists,
-        )
-
         if self.table_format == "iceberg":
             # path-based Iceberg tables (HadoopTables) commit via the
             # metadata directory and write no _SUCCESS — probing the marker
@@ -111,8 +146,6 @@ class CheckpointStore:
         fail-safe."""
         if self.location is None:
             return
-        from cloud_dedup_spark.fsutil import read_text, write_text
-
         marker = f"{self.location}/_dedup_config.json"
         existing = read_text(self.spark, marker)
         if existing is None:
@@ -131,24 +164,16 @@ class CheckpointStore:
         Reading back makes every downstream plan start from a scan instead of
         the full upstream lineage — the same lineage-cutting role as the
         reference re-deriving later stages from its in-memory lists.
-
-        A parquet table written here is read back with the written frame's
-        schema, so the read starts no schema-inference job (one per stage
-        otherwise).  Spark makes a file source's schema nullable, so the
-        result equals the inferred schema.  A table that already exists
-        (resume) is read with inference, since no frame was built for it;
-        Iceberg tables always carry their own schema and reject a given one.
         """
         if self.location is None:
             # no checkpointing requested: cut lineage in-memory instead
             return build().localCheckpoint()
         if not self.exists(name):
             df = build()
+            self.record_schema(name, df.schema)
             df.write.mode("overwrite").format(self.table_format).save(
                 self._path(name)
             )
-            if self.table_format == "parquet":
-                return self.read(name, df.schema)
         return self.read(name)
 
 

@@ -317,12 +317,14 @@ def _quarantine(prior: dict, delta_identity: DataFrame) -> _Quarantine:
     # channel runs on the clean subset only.
     meta_cols = prior["identity"].columns
     # lazy checkpoints (eager=False) throughout the fold where a driver
-    # action follows anyway: the first action materializes AND truncates
-    # lineage in ONE job instead of two — the fold's ~40-job floor was
-    # mostly eager-checkpoint jobs followed by count jobs (round-4 verdict
-    # item 3).  Frames with EXPENSIVE lineage (raw identity, signatures)
-    # stay eager so no subtree can ever compute them twice within the
-    # materializing job.
+    # action follows anyway: the frame's final stage runs inside the next
+    # action instead of in a collect job of its own.  That is all it saves:
+    # under AQE the call still runs every shuffle and broadcast stage of the
+    # frame's plan, at once and on the calling thread (a groupBy +
+    # broadcast-join frame ran 2 jobs at the call and 2 more at its count;
+    # with AQE off, 1 at the call).  Frames with EXPENSIVE lineage (raw
+    # identity, signatures) stay eager so no subtree can ever compute them
+    # twice within the materializing job.
     delta_fids = (
         delta_identity.select("file_id").distinct().localCheckpoint(eager=False)
     )
@@ -559,9 +561,13 @@ def _near_channels(
     index = prior["shingle_index"]
     if index is None:
         # first incremental run: base partition from the prior signatures
-        shingle_inverted_index(prior["signatures"]).withColumn(
+        # (partitionBy keeps ingest_batch last, where withColumn puts it in
+        # the recorded schema)
+        base = shingle_inverted_index(prior["signatures"]).withColumn(
             "ingest_batch", F.lit("base")
-        ).write.mode("overwrite").partitionBy("ingest_batch").format(
+        )
+        store.record_schema("shingle_index", base.schema)
+        base.write.mode("overwrite").partitionBy("ingest_batch").format(
             store.table_format
         ).save(f"{store.location}/shingle_index")
         index = store.read("shingle_index")
@@ -801,15 +807,16 @@ def _components(
         .unionByName(new_edges.select("src", "dst"))
         .localCheckpoint(eager=False)
     )
-    sub_labels = connected_components(cc_edges, vertices=cc_members)
-    # stats counts AFTER the CC fixed point (round-6): neither count gates
-    # anything — n_cc_members above is the only functional count — and
-    # running them first serialized two extra driver actions in front of
-    # CC's own materializing job.  Here they scan blocks CC already
-    # materialized (touched_cluster_ids rides the member-split broadcasts),
-    # so each is a cheap cached-read job.
+    # the edge count is both a stat and CC's plan choice: a touched graph
+    # of a few hundred edges is labelled on the driver in one collect
+    # (operators/cluster.py).  No vertices: the left join below gives each
+    # member that is no edge's endpoint its own id.  touched_cluster_ids'
+    # count gates nothing; its frame was already run by the member-split
+    # broadcasts above
+    n_cc_edges = cc_edges.count()
+    sub_labels = connected_components(cc_edges, n_edges=n_cc_edges)
     cc_stats = {
-        "n_edges": cc_edges.count(), "n_vertices": n_cc_members,
+        "n_edges": n_cc_edges, "n_vertices": n_cc_members,
         "n_touched_clusters": touched_cluster_ids.count(),
     }
     label_cols = ["file_id", "repo", "path", "cluster_id"]

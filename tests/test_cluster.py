@@ -1,11 +1,15 @@
-"""Connected components (hash-to-min): explicit graphs with known components.
+"""Connected components (driver union-find and hash-to-min): explicit graphs
+with known components.
 
 Analog of the reference's group-building assertions
 (tests/test_cloud_duplicate_analyzer.py:171-243 assert exact group routing)."""
 
 from __future__ import annotations
 
+import random
+
 import pyspark.sql.functions as F
+import pytest
 
 from cloud_dedup_spark.operators.cluster import (
     cluster_assignments,
@@ -63,3 +67,92 @@ def test_cluster_summary_fields(spark):
     assert row["n_files"] == 3 and row["n_repos"] == 2
     assert row["representative"]["file_id"] == 1
     assert len(row["members"]) == 3
+
+
+def _reference_labels(edges, vertices):
+    """Plain-Python union-find: every vertex and endpoint → its component's
+    min id (linking always keeps the smaller root, so roots are minima)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for v in vertices:
+        find(v)
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _random_graph(seed):
+    """(edges, vertices): a path and a star over shuffled signed 64-bit ids,
+    random sparse edges, duplicate edges, self-loops, and vertices that are
+    no edge's endpoint.  The path is 40 long: the distributed loop's plan
+    statistics grow with its round count, and a 150-node path exhausted a
+    2 GB driver heap."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(-(2**61), 2**61), 300)
+    path, star, rest = ids[:40], ids[40:80], ids[80:]
+    edges = [(path[i], path[i + 1]) for i in range(len(path) - 1)]
+    edges += [(star[0], leaf) for leaf in star[1:]]
+    edges += [tuple(rng.sample(rest[:150], 2)) for _ in range(60)]
+    edges += rng.sample(edges, 20)  # duplicates
+    edges += [(v, v) for v in rng.sample(rest[:150], 5)]  # self-loops
+    rng.shuffle(edges)
+    edges = [(b, a) if rng.random() < 0.5 else (a, b) for a, b in edges]
+    vertices = rest[150:] + rng.sample(path, 10)  # isolated + endpoints
+    return edges, vertices
+
+
+@pytest.mark.parametrize("branch", ["driver", "distributed"])
+@pytest.mark.parametrize("shape", ["mixed", "empty"])
+def test_cc_branches_match_reference(spark, monkeypatch, branch, shape):
+    """Both plans of connected_components give the reference's labels: the
+    driver union-find below the gate, hash-to-min above it (forced here by
+    a gate below any edge count; the other branch's kernel is made to fail
+    so the test knows which one ran)."""
+    import cloud_dedup_spark.operators.cluster as cl
+
+    def must_not_run(*args, **kwargs):
+        raise AssertionError(f"{branch} branch ran the other kernel")
+
+    if branch == "driver":
+        monkeypatch.setattr(cl, "_hash_to_min", must_not_run)
+    else:
+        monkeypatch.setattr(cl, "DRIVER_CC_MAX_EDGES", -1)
+        monkeypatch.setattr(cl, "_min_labels", must_not_run)
+    edges, vertices = _random_graph(17)
+    if shape == "empty":
+        edges = []
+    e_df = spark.createDataFrame(edges, "src long, dst long")
+    v_df = spark.createDataFrame([(v,) for v in vertices], "file_id long")
+    rows = cl.connected_components(e_df, vertices=v_df).collect()
+    got = {r["file_id"]: r["cluster_id"] for r in rows}
+    assert len(rows) == len(got)  # one row per vertex
+    assert got == _reference_labels(edges, vertices)
+
+
+def test_cc_with_given_edge_count(spark):
+    """A caller that passes its own edge count gets the same labels, and an
+    empty graph then starts no job before the caller's own action."""
+    import cloud_dedup_spark.operators.cluster as cl
+
+    edges, _ = _random_graph(23)
+    e_df = spark.createDataFrame(edges, "src long, dst long")
+    rows = cl.connected_components(e_df, n_edges=len(edges)).collect()
+    assert {r["file_id"]: r["cluster_id"] for r in rows} == _reference_labels(
+        edges, []
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-empty", "cc-empty")
+    try:
+        cl.connected_components(
+            spark.createDataFrame([], "src long, dst long"), n_edges=0
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("cc-empty") == []

@@ -448,6 +448,56 @@ def test_fold_rejects_checkpoint_missing_a_stage_table(spark, tmp_path):
         incremental_dedup_update(spark, delta, ckpt)
 
 
+def _group_jobs(spark, group, fn):
+    """(fn(), the ids of the Spark jobs fn started on this thread)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_fold_open_starts_no_job(spark, tmp_path):
+    """run_pipeline records every stage table's schema, so the fold opens
+    its prior state with no schema-inference job."""
+    from cloud_dedup_spark.plans.pipeline import CheckpointStore
+    from cloud_dedup_spark.streaming.incremental import _open_prior
+
+    _, ckpt = _small_checkpoint(spark, tmp_path)
+    prior, jobs = _group_jobs(
+        spark, "open-prior", lambda: _open_prior(CheckpointStore(spark, ckpt))
+    )
+    assert jobs == []
+    assert prior["shingle_index"] is None
+
+
+def test_fold_without_schema_records_infers(spark, tmp_path):
+    """A checkpoint written before schemas were recorded (no ``_schemas``
+    dir) opens with inference jobs and still folds."""
+    import shutil
+
+    from cloud_dedup_spark.plans.pipeline import CheckpointStore
+    from cloud_dedup_spark.streaming.incremental import _open_prior
+
+    rows, ckpt = _small_checkpoint(spark, tmp_path)
+    shutil.rmtree(f"{ckpt}/_schemas")
+    _, jobs = _group_jobs(
+        spark, "open-unrecorded", lambda: _open_prior(CheckpointStore(spark, ckpt))
+    )
+    assert jobs
+    delta = spark.createDataFrame(
+        [("repo_n", "n/copy.py", "n1", "py", rows[0]["content"])], SCHEMA)
+    inc = incremental_dedup_update(spark, delta, ckpt)
+    labels = {
+        (r["repo"], r["path"]): r["cluster_id"]
+        for r in inc["assignments"].collect()
+    }
+    assert len(labels) == len(rows) + 1
+    assert labels[("repo_n", "n/copy.py")] == labels[(rows[0]["repo"], rows[0]["path"])]
+
+
 def test_fold_keeps_null_content_files_apart(spark, tmp_path):
     """NULL content has a NULL sha; the fold keys exact families as the batch
     exact stage does (operators/exact.group_key), so two NULL-content delta

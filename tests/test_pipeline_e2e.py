@@ -157,11 +157,22 @@ _STAGE_TABLES = {
 
 
 def test_stage_readback_schema_matches_inferred(spark, tmp_path):
-    """A stage table read back with the written frame's schema has the
-    schema Spark infers from the files, on a fresh run and a resumed one."""
+    """Every recorded stage-table schema, and every read-back frame's, is the
+    schema Spark infers from the files: on a fresh run, a resumed one, and
+    after a fold (which records shingle_index, with ingest_batch, and swaps
+    edges and cluster_labels)."""
+    import json
     import os
 
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
     from cloud_dedup_spark.corpus import corpus_df
+    from cloud_dedup_spark.streaming.incremental import incremental_dedup_update
+
+    def recorded(name):
+        with open(f"{ckpt}/_schemas/{name}.json") as fh:
+            return StructType.fromJson(json.load(fh))
 
     files, _ = corpus_df(spark, 40, 7)
     ckpt = str(tmp_path / "ckpt")
@@ -173,6 +184,14 @@ def test_stage_readback_schema_matches_inferred(spark, tmp_path):
         for name, key in _STAGE_TABLES.items():
             inferred = spark.read.parquet(f"{ckpt}/{name}").schema
             assert res[key].schema == inferred, name
+            assert recorded(name) == inferred, name
+    delta, _ = corpus_df(spark, 10, 8)
+    delta = delta.withColumn("path", F.concat(F.lit("delta/"), "path"))
+    incremental_dedup_update(spark, delta, ckpt)
+    for name in [*_STAGE_TABLES, "shingle_index"]:
+        inferred = spark.read.parquet(f"{ckpt}/{name}").schema
+        assert recorded(name) == inferred, name
+    assert "ingest_batch" in recorded("shingle_index").names
 
 
 def test_single_file_corpus(spark, tmp_path):

@@ -66,6 +66,19 @@ def test_near_pairs_threshold(spark, emb):
     assert all(a < b for a, b in got_dup)
 
 
+def test_blocked_scorer_drops_candidates_missing_from_emb(spark, emb):
+    """A candidate pair with an id that has no ``emb`` row is dropped, as an
+    inner join would drop it, instead of failing the Python worker.  Five
+    rows make one block, so the missing ids land in a block that exists."""
+    from cloud_dedup_spark.operators.similarity import _score_blocked
+
+    cand = spark.createDataFrame(
+        [(0, 1), (0, 99), (98, 1), (4, 98)], "id_a long, id_b long"
+    )
+    got = _score_blocked(emb, cand, 0.5, "vec_id", "embedding").collect()
+    assert {(r["id_a"], r["id_b"]) for r in got} == {(0, 1)}
+
+
 def test_near_pairs_reject_non_integer_ids(spark):
     """The scorer emits long ids: a string id column fails when the
     operator is called, not inside a Python worker at action time."""

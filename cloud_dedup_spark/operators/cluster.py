@@ -21,16 +21,25 @@ path).
 Above the gate the loop is driver-side hash-to-min, since Catalyst has no
 fixed-point operator:
   label(v) ← min(label(v), min over neighbours u of label(u))
-iterated until no label changes.  Converges in O(diameter) rounds — dup
-clusters are near-cliques plus short substring chains, so diameter is small
-(single digits) even at 10^12-file scale.
+then one pointer jump, label(v) ← label(label(v)), iterated until no label
+changes.  The round count follows the diameter and the id order along it: a
+pure-Python model of the rule (counting the round that finds no change)
+needed 6, 8 and 10 rounds on paths of 40, 150 and 1000 nodes with sorted
+ids, but 13-34, 43-74 and 303-334 over five random id orders each.
+Dup clusters are near-cliques plus short substring chains, so most
+components take few rounds; a long chain takes many, and past
+``MAX_CC_ROUNDS`` the loop raises rather than return unconverged labels.
 
-Scale notes per iteration: one shuffle (groupBy id after the edge-label
-join).  Lineage is cut every round with ``localCheckpoint`` — without it the
-plan doubles each iteration and the job dies on plan-compile time long before
-data size matters (SURVEY.md §7.4 item 2).  On a durable cluster run, swap
-localCheckpoint for a checkpoint/Iceberg stage-table write (plans/pipeline.py
-does this when given a checkpoint location).
+Scale notes per round: the edge-label join and the groupBy by id shuffle.
+Each round's labels are persisted, counted and then cut from their lineage
+with ``localCheckpoint``.  The cut keeps the plan one round deep: uncut, the
+plan doubles each round and the job dies on plan-compile time long before
+data size matters (SURVEY.md §7.4 item 2).  The count loads the cache before
+the cut, so the checkpoint carries the cache's real size: a checkpoint of the
+unloaded plan carries the join size estimate, a product of its inputs' that
+compounds round over round until the driver heap runs out.  On a durable
+cluster run, swap localCheckpoint for a checkpoint/Iceberg stage-table write
+(plans/pipeline.py does this when given a checkpoint location).
 """
 
 from __future__ import annotations
@@ -40,37 +49,28 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cloud_dedup_spark.operators.exact import MAX_MEMBERS_PER_GROUP
+
 # edge lists up to this size are labelled on the driver: 16 B per edge, 32 MB
 # of Arrow at the gate.  On a 4-vCPU host a 2M-edge path took 8 s to collect
 # and label (2.0 s of it the union-find) at 464 MB peak Python driver RSS.
 # The same order as the fold's member-broadcast gate
 DRIVER_CC_MAX_EDGES = 2_000_000
+# round bound of the distributed loop: a 150-node path with random ids took
+# 53 rounds (16 s on a 4-vCPU host); a 1000-node one needs about 300 and
+# raises
+MAX_CC_ROUNDS = 200
 
 
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    max_iterations: int = 50,
-    check_every: int = 2,
-    n_edges: int | None = None,
-) -> DataFrame:
-    """Label every vertex with the min file_id of its component.
+def connected_components(edges: DataFrame, n_edges: int | None = None) -> DataFrame:
+    """Label every edge endpoint with the min file_id of its component.
 
-    ``edges``: (src, dst) long pairs.  ``vertices``: optional (file_id) frame;
-    vertices absent from any edge keep themselves as their label (singleton
-    clusters).  Returns (file_id, cluster_id).  The edge count picks the
+    ``edges``: (src, dst) long pairs.  Returns (file_id, cluster_id), one row
+    per endpoint; a caller with isolated vertices joins the labels onto its
+    own vertex list (``cluster_assignments``).  The edge count picks the
     plan: up to ``DRIVER_CC_MAX_EDGES`` edges are labelled on the driver,
-    more run the distributed loop, which ``max_iterations`` and
-    ``check_every`` bound.  ``n_edges``: the row count of ``edges`` when the
-    caller already has it (an empty graph then starts no job).
-
-    Edge endpoints are always unioned into the vertex set: a ``vertices``
-    frame missing a bridge endpoint silently split its component (the inner
-    join dropped the bridge's edges) — the touched-component caller upholds
-    "members cover every endpoint" only by construction across many joins,
-    and one future edit there must not corrupt labels (round-4 review).
-    Extra endpoint labels are harmless to callers that join labels back onto
-    their own member list.
+    more run the distributed loop.  ``n_edges``: the row count of ``edges``
+    when the caller already has it (an empty graph then starts no job).
     """
     if n_edges is None:
         # one job for the count and the collect: at most one edge past the
@@ -80,7 +80,7 @@ def connected_components(
     elif 0 < n_edges <= DRIVER_CC_MAX_EDGES:
         pairs = edges.select("src", "dst").toPandas()
     if n_edges > DRIVER_CC_MAX_EDGES:
-        return _hash_to_min(edges, vertices, max_iterations, check_every)
+        return _hash_to_min(edges)
     ids = roots = np.empty(0, dtype=np.int64)
     if n_edges:
         ids, roots = _min_labels(
@@ -89,14 +89,10 @@ def connected_components(
     # gate-bounded and already held on the driver, so the hint is safe: the
     # caller's join (every file, in cluster_assignments) broadcasts the
     # labels instead of shuffling both sides
-    labels = F.broadcast(edges.sparkSession.createDataFrame(
+    return F.broadcast(edges.sparkSession.createDataFrame(
         pd.DataFrame({"file_id": ids, "cluster_id": roots}),
         "file_id long, cluster_id long",
     ))
-    if vertices is None:
-        return labels
-    loners = vertices.select("file_id").distinct().join(labels, "file_id", "left_anti")
-    return labels.unionByName(loners.withColumn("cluster_id", F.col("file_id")))
 
 
 def _min_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -131,35 +127,27 @@ def _min_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarra
         root = up
 
 
-def _hash_to_min(
-    edges: DataFrame,
-    vertices: DataFrame | None,
-    max_iterations: int,
-    check_every: int,
-) -> DataFrame:
-    """The distributed loop of ``connected_components`` (module docstring)."""
+def _hash_to_min(edges: DataFrame) -> DataFrame:
+    """The distributed loop of ``connected_components`` (module docstring).
+
+    The returned labels are the last round's cache and stay persisted for
+    the caller's reads."""
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    endpoints = sym.select(F.col("src").alias("file_id"))
-    if vertices is None:
-        verts = endpoints.distinct()
-    else:
-        verts = vertices.select("file_id").unionByName(endpoints).distinct()
-
-    # lazy checkpoints: the per-round lineage cut is what matters (without it
-    # the plan doubles each iteration).  eager=False saves the checkpoint's
-    # own collect job, but not the round's shuffles: under AQE the call
-    # itself runs every shuffle and broadcast stage of its plan, on this
-    # thread (a groupBy + broadcast-join frame ran 2 jobs at the call and 2
-    # more at its count; with AQE off, 1 at the call).  Only the final
-    # stage waits for the convergence count every ``check_every`` rounds.
-    labels = verts.withColumn("cluster_id", F.col("file_id")).localCheckpoint(
-        eager=False
+    # lazy checkpoints: under AQE the call itself runs every shuffle and
+    # broadcast stage of its plan, on this thread (a groupBy + broadcast-join
+    # frame ran 2 jobs at the call and 2 more at its count; with AQE off, 1
+    # at the call); eager=False saves only the checkpoint's own collect job
+    labels = (
+        sym.select(F.col("src").alias("file_id"))
+        .distinct()
+        .withColumn("cluster_id", F.col("file_id"))
+        .localCheckpoint(eager=False)
     )
     sym = sym.localCheckpoint(eager=False)
-
-    for it in range(max_iterations):
+    cached = None
+    for _ in range(MAX_CC_ROUNDS):
         # hash-to-min step: min over own label and neighbours' labels
         nbr_min = (
             sym.join(labels, sym["dst"] == labels["file_id"])
@@ -173,9 +161,9 @@ def _hash_to_min(
             ).alias("cluster_id"),
             F.col("cluster_id").alias("_old"),
         )
-        # pointer-jumping step: label ← label(label), collapsing chains in
-        # O(log diameter) total iterations instead of O(diameter) — matters
-        # for the path-shaped components the salted-chain buckets produce
+        # pointer-jumping step: label ← label(label); it collapses a chain
+        # whose ids ascend along it in O(log length) rounds, but a chain of
+        # random ids still takes O(length) (module docstring)
         parents = stepped.select(
             F.col("file_id").alias("cluster_id"),
             F.col("cluster_id").alias("_grand"),
@@ -189,39 +177,37 @@ def _hash_to_min(
                 ).alias("cluster_id"),
                 "_old",
             )
-            .localCheckpoint(eager=False)
+            .persist()
         )
-        # the convergence count is a full extra job; with pointer jumping the
-        # loop converges in O(log diameter) rounds, so probing every
-        # ``check_every``-th round trades at most one surplus iteration for
-        # half the count jobs (part of the small-stage latency floor,
-        # BENCH/ANALYSIS.md)
-        labels = new_labels.drop("_old")
-        if (it + 1) % check_every == 0 or it == max_iterations - 1:
-            changed = new_labels.filter(
-                F.col("cluster_id") != F.col("_old")
-            ).count()
-            if changed == 0:
-                break
-    return labels
+        # one count per round loads the cache and checks convergence; the
+        # previous round's cache has fed this round's checkpoint by then
+        changed = new_labels.filter(F.col("cluster_id") != F.col("_old")).count()
+        if cached is not None:
+            cached.unpersist()
+        cached = new_labels
+        if changed == 0:
+            return new_labels.drop("_old")
+        labels = new_labels.drop("_old").localCheckpoint(eager=False)
+    cached.unpersist()
+    raise RuntimeError(
+        f"connected_components: labels still changing after {MAX_CC_ROUNDS} rounds"
+    )
 
 
-def cluster_assignments(
-    files: DataFrame, edges: DataFrame, max_iterations: int = 50
-) -> DataFrame:
+def cluster_assignments(files: DataFrame, edges: DataFrame) -> DataFrame:
     """Attach cluster ids to every file (singletons = own file_id).
 
     ``files`` needs (file_id, repo, path); ``edges`` is the union of exact /
     near / substring accepted edges.  Output: file_id, repo, path,
     cluster_id, with cluster_id = min file_id in the component.
     """
-    labels = connected_components(edges, vertices=None, max_iterations=max_iterations)
+    labels = connected_components(edges)
     return files.select("file_id", "repo", "path").join(
         labels, "file_id", "left"
     ).withColumn("cluster_id", F.coalesce("cluster_id", F.col("file_id")))
 
 
-def cluster_summary(assignments: DataFrame, member_cap: int = 1000) -> DataFrame:
+def cluster_summary(assignments: DataFrame) -> DataFrame:
     """Per-cluster aggregates — reference group fields analog
     (size, repo span, representative; src/cloud_duplicate_analyzer.py:412-428
     builds rel_path/matches/service_details per group).
@@ -233,7 +219,7 @@ def cluster_summary(assignments: DataFrame, member_cap: int = 1000) -> DataFrame
     Dropping them here makes that aliasing impossible — a quarantined file is
     by construction never a member of any duplicate cluster.
 
-    ``members`` holds at most ``member_cap`` members (first by (repo, path));
+    ``members`` holds at most ``MAX_MEMBERS_PER_GROUP`` members (first by (repo, path));
     counts and the ``repos`` set always cover the full cluster.  Uncapped,
     a mega-cluster (millions of identical lockfiles arriving through the
     exact star edges) materialized an unbounded single-buffer array — the
@@ -254,7 +240,8 @@ def cluster_summary(assignments: DataFrame, member_cap: int = 1000) -> DataFrame
             F.sort_array(
                 F.collect_list(
                     F.when(
-                        F.col("_rn") <= member_cap, F.struct("repo", "path")
+                        F.col("_rn") <= MAX_MEMBERS_PER_GROUP,
+                        F.struct("repo", "path"),
                     )
                 )
             ).alias("members"),

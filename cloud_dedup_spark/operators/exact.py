@@ -29,6 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# cap of every per-group member array: exact groups, clusters and the
+# report's group details
+MAX_MEMBERS_PER_GROUP = 1000
+
 
 def group_key() -> F.Column:
     """Grouping key: the sha, or a per-row surrogate when it is NULL.
@@ -74,7 +78,7 @@ def exact_duplicate_clusters(files: DataFrame) -> DataFrame:
     )
 
 
-def exact_duplicate_groups(files: DataFrame, member_cap: int = 1000) -> DataFrame:
+def exact_duplicate_groups(files: DataFrame) -> DataFrame:
     """Cluster-level view: one row per byte-identical group with ≥ 2 members.
 
     Reference analog: duplicate groups with ``content_match='identical'``
@@ -83,7 +87,7 @@ def exact_duplicate_groups(files: DataFrame, member_cap: int = 1000) -> DataFram
     as a column (`n_repos`) instead of a filter, so single-repo exact dups
     remain visible to the rollups.
 
-    ``members`` holds at most ``member_cap`` members (the first by
+    ``members`` holds at most ``MAX_MEMBERS_PER_GROUP`` members (the first by
     (repo, path) order); counts always cover the full group.  Uncapped,
     collect_list over a mega-group (millions of identical lockfiles) builds
     an unbounded single-buffer array — the same fan-in shape every other
@@ -100,7 +104,7 @@ def exact_duplicate_groups(files: DataFrame, member_cap: int = 1000) -> DataFram
     members = (
         files.withColumn("_k", key)
         .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= member_cap)
+        .filter(F.col("_rn") <= MAX_MEMBERS_PER_GROUP)
         .groupBy("_k")
         .agg(
             F.sort_array(F.collect_list(F.struct("repo", "path"))).alias("members")

@@ -11,8 +11,8 @@ next to ``similarity.brute_force_topk`` (the exactness oracle) and
 
 Scale design:
   * The quantizer is Spark ML KMeans (distributed fit, seeded → deterministic
-    for a fixed input); at 10^9+ rows fit on a sample — the coarse cells only
-    need to capture density, not every point.
+    for a fixed input); at 10^9+ rows fit on a sample (pass ``emb.sample(f)``)
+    — the coarse cells only need to capture density, not every point.
   * The centroid matrix is tiny ((n_cells, dim) — e.g. 4096×1024 floats =
     16 MB) and ships inside the Arrow UDF closure: cell assignment is a
     narrow, shuffle-free map pass over the corpus, O(n_cells·dim) per row.
@@ -31,32 +31,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cloud_dedup_spark.operators.similarity import (
-    _capped_keys,
+    _keyed,
     _key_sharing_pairs,
     _rank_topk,
     _require_integral_ids,
     _score_blocked,
 )
 
+# k-means seed of the search operators' own fit, and its iteration cap
+KMEANS_SEED = 42
+KMEANS_MAX_ITER = 20
+
 
 def fit_centroids(
-    emb: DataFrame,
-    n_cells: int,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    sample_fraction: float | None = None,
-    max_iter: int = 20,
+    emb: DataFrame, n_cells: int, seed: int = KMEANS_SEED, vec_col: str = "embedding"
 ) -> np.ndarray:
     """Fit the coarse quantizer; returns the (n_cells, dim) centroid matrix.
 
     Distributed Spark ML KMeans on unit-normalized vectors.  At 10^9+ rows
-    pass ``sample_fraction`` — coarse cells are a density sketch, a 1% sample
+    pass a sample as ``emb`` — coarse cells are a density sketch, a 1% sample
     fits them as well as the full table at 100× the cost.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    src = emb if sample_fraction is None else emb.sample(sample_fraction, seed=seed)
     # L2-normalize BEFORE the fit (JVM-side): cells must partition the unit
     # sphere — the space assign-time cosine lives in — not raw euclidean
     # space, or the cosine-neighbourhood validity argument only holds for
@@ -68,8 +66,8 @@ def fit_centroids(
     unit = F.transform(
         dbl, lambda x: x / F.when(norm == 0.0, F.lit(1.0)).otherwise(norm)
     )
-    vecs = src.select(array_to_vector(unit).alias("features"))
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(vecs)
+    vecs = emb.select(array_to_vector(unit).alias("features"))
+    model = KMeans(k=n_cells, seed=seed, maxIter=KMEANS_MAX_ITER).fit(vecs)
     centers = np.vstack([np.asarray(c) for c in model.clusterCenters()])
     norms = np.linalg.norm(centers, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
@@ -115,10 +113,8 @@ def fit_or_load_centroids(
     emb: DataFrame,
     n_cells: int,
     path: str,
-    seed: int = 42,
+    seed: int = KMEANS_SEED,
     vec_col: str = "embedding",
-    sample_fraction: float | None = None,
-    max_iter: int = 20,
 ) -> np.ndarray:
     """Load the quantizer if the stage table exists, else fit + persist it.
 
@@ -142,10 +138,7 @@ def fit_or_load_centroids(
         loaded = load_centroids(spark, path)
         if loaded.shape[0] == n_cells:
             return loaded
-    centroids = fit_centroids(
-        emb, n_cells, seed=seed, vec_col=vec_col,
-        sample_fraction=sample_fraction, max_iter=max_iter,
-    )
+    centroids = fit_centroids(emb, n_cells, seed=seed, vec_col=vec_col)
     save_centroids(spark, centroids, path)
     return centroids
 
@@ -183,10 +176,7 @@ def ivf_near_pairs(
     threshold: float = 0.95,
     n_cells: int = 16,
     n_assign: int = 2,
-    seed: int = 42,
     centroids: np.ndarray | None = None,
-    cell_cap: int | None = None,
-    nprobe: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -203,71 +193,15 @@ def ivf_near_pairs(
     vector enters its n_assign nearest cells, so a pair is a candidate iff
     the cells overlap, and n_assign == n_cells degenerates to the exact
     all-pairs result (pinned in tests/test_similarity.py).
-
-    ``nprobe`` (multi-probe, round-4 verdict item 6): when set, the corpus
-    index stays SINGLE-cell (one row per vector; ``n_assign`` is ignored)
-    and the recall lever moves to the probe side — each vector's candidate
-    search expands to its cell's ``nprobe`` nearest cells by centroid
-    cosine, a tiny (n_cells × nprobe) driver-computed map joined as a
-    broadcast.  A pair is a candidate iff EITHER member's probe set covers
-    the other's cell (both orientations are generated, so coverage is
-    symmetric even though centroid-kNN is not).  Same recall lever as
-    ``n_assign`` at roughly the same candidate volume, but the per-vector
-    index cost stays 1 row — the shape ``ivf_topk`` already uses for
-    queries, now available to pair mining; ``nprobe == n_cells``
-    degenerates to the exact all-pairs result (pinned in
-    tests/test_similarity.py).
-
-    ``cell_cap``: optional skew guard — cells holding more than cap vectors
-    are dropped from candidate generation (the same bounded-recall/bounded-
-    fan-out contract as cosine_near_pairs_lsh's bucket_cap).
     """
     _require_integral_ids(emb, id_col)
-    if nprobe is not None and nprobe < 1:
-        # round-5 ADVICE: nprobe=0 built a multi-cell index (the truthiness
-        # guard) while the probe branch ran with an EMPTY probe map —
-        # silently zero pairs.  Fail loudly; both guards below use the same
-        # `is not None` predicate.
-        raise ValueError(f"nprobe must be >= 1 when set, got {nprobe}")
     if centroids is None:
-        centroids = fit_centroids(emb, n_cells, seed=seed, vec_col=vec_col)
-    assign = cell_assign_udf(
-        centroids, n_assign=1 if nprobe is not None else n_assign
+        centroids = fit_centroids(emb, n_cells, vec_col=vec_col)
+    assign = cell_assign_udf(centroids, n_assign=n_assign)
+    keyed = _keyed(emb, assign(F.col(vec_col)), "cell", id_col)
+    return _score_blocked(
+        emb, _key_sharing_pairs(keyed, "cell"), threshold, id_col, vec_col
     )
-    keyed = _capped_keys(emb, assign(F.col(vec_col)), "cell", cell_cap, id_col)
-    if nprobe is not None:
-        # centroid-adjacency probe map: rows are unit vectors, so the cosine
-        # matrix is one tiny (n_cells × n_cells) GEMM on the driver
-        spark = emb.sparkSession
-        k = centroids.shape[0]
-        n_take = min(nprobe, k)
-        sims = centroids @ centroids.T
-        order = np.argsort(-sims, axis=1)[:, :n_take]
-        probe_rows = [
-            (int(c), int(p)) for c in range(k) for p in order[c]
-        ]
-        probes = F.broadcast(
-            spark.createDataFrame(probe_rows, "cell int, probe_cell int")
-        )
-        x = (
-            keyed.join(probes, "cell")
-            .select("vid", F.col("probe_cell").alias("jcell"))
-        )
-        y = keyed.select(
-            F.col("vid").alias("other_vid"), F.col("cell").alias("jcell")
-        )
-        cand = (
-            x.join(y, "jcell")
-            .filter(F.col("vid") != F.col("other_vid"))
-            .select(
-                F.least("vid", "other_vid").alias("id_a"),
-                F.greatest("vid", "other_vid").alias("id_b"),
-            )
-            .distinct()
-        )
-    else:
-        cand = _key_sharing_pairs(keyed, "cell")
-    return _score_blocked(emb, cand, threshold, id_col, vec_col)
 
 
 def ivf_topk(
@@ -276,7 +210,6 @@ def ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     nprobe: int = 4,
-    seed: int = 42,
     centroids: np.ndarray | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -290,7 +223,7 @@ def ivf_topk(
     reusing a checkpointed quantizer across incremental runs).
     """
     if centroids is None:
-        centroids = fit_centroids(emb, n_cells, seed=seed, vec_col=vec_col)
+        centroids = fit_centroids(emb, n_cells, vec_col=vec_col)
     corpus_cell = cell_assign_udf(centroids, n_assign=1)
     query_cells = cell_assign_udf(centroids, n_assign=nprobe)
 

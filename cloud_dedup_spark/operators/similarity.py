@@ -33,6 +33,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
+# hyperplane seed of every LSH operator: planes, and so buckets, are the same
+# across runs and cluster sizes
+PLANE_SEED = 42
+# rows per hash block of the blocked pair scorer (``_score_blocked``)
+BLOCK_SIZE = 256
+# the band count cap of ``lsh_band_params``
+MAX_BANDS = 48
+
 
 def _cosine_rows(pa: np.ndarray, pb: np.ndarray) -> np.ndarray:
     """Row-wise cosine of two (rows, dim) float64 matrices.
@@ -124,11 +132,10 @@ def _score_blocked(
     threshold: float,
     id_col: str,
     vec_col: str,
-    block_size: int = 256,
 ) -> DataFrame:
     """Exact 4dp cosine near pairs (id_a < id_b, score), blocked.
 
-    Vectors are packed into ~``block_size``-row hash blocks, so each vector
+    Vectors are packed into ~``BLOCK_SIZE``-row hash blocks, so each vector
     crosses the Arrow boundary once per touched block pair instead of once
     per pair (guide §4 "shuffle keys and metadata, not payloads"):
       * ``cand is None`` — every pair: blocks self-join on ``gid <= gid``
@@ -145,7 +152,7 @@ def _score_blocked(
     ``cosine_udf`` crossJoin exactly (pinned in tests/test_similarity.py).
     """
     n = emb.select(id_col).count()
-    n_blocks = max(1, math.ceil(n / block_size))
+    n_blocks = max(1, math.ceil(n / BLOCK_SIZE))
 
     def _gid(c):
         return F.pmod(F.xxhash64(F.col(c)), F.lit(n_blocks))
@@ -259,54 +266,51 @@ def cosine_near_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_size: int = 256,
 ) -> DataFrame:
     """All pairs (a < b) with cosine ≥ threshold — embedding near-dup channel.
 
     The exact twin of the LSH/IVF scale paths: ``_score_blocked`` over every
-    block pair.  Each vector crosses the Python boundary ~N/block_size times
+    block pair.  Each vector crosses the Python boundary ~N/BLOCK_SIZE times
     instead of N times, with results identical to the pair-row crossJoin.
     """
     _require_integral_ids(emb, id_col)
-    return _score_blocked(emb, None, threshold, id_col, vec_col, block_size)
+    return _score_blocked(emb, None, threshold, id_col, vec_col)
 
 
-def hyperplane_signature_udf(dim: int | None = None, n_planes: int = 16, seed: int = 42):
+def _planes(state: dict, dim: int, n: int) -> np.ndarray:
+    """The (dim, n) ``PLANE_SEED`` plane matrix, built on a UDF's first
+    batch: the vector width is a column type property, so no driver-side
+    ``.first()`` action is needed to size it."""
+    if "planes" not in state:
+        state["planes"] = np.random.RandomState(PLANE_SEED).standard_normal((dim, n))
+    return state["planes"]
+
+
+def hyperplane_signature_udf(n_planes: int = 16):
     """Vectorized random-hyperplane SimHash over embeddings → int bucket.
 
     Arrow-batched (input_hint: no per-row Python); the projection matrix is
-    seed-deterministic so buckets are stable across runs and cluster sizes.
-    When ``dim`` is None the plane matrix is built lazily from the first
-    Arrow batch's width inside the UDF (every batch has the same dim — it is
-    a column type property), so no driver-side ``.first()`` action is needed
-    to use this inside an operator.
-    """
-    state: dict = {"planes": None if dim is None else
-                   np.random.RandomState(seed).standard_normal((dim, n_planes))}
+    seed-deterministic (``_planes``)."""
+    state: dict = {}
 
     @F.pandas_udf("long")
     def signature(batch: pd.Series) -> pd.Series:
         mat = np.vstack(batch.to_numpy())  # (rows, dim)
-        if state["planes"] is None:
-            state["planes"] = np.random.RandomState(seed).standard_normal(
-                (mat.shape[1], n_planes)
-            )
-        bits = (mat @ state["planes"]) >= 0  # (rows, n_planes)
+        planes = _planes(state, mat.shape[1], n_planes)
+        bits = (mat @ planes) >= 0  # (rows, n_planes)
         weights = (1 << np.arange(n_planes, dtype=np.int64))
         return pd.Series(bits.astype(np.int64) @ weights)
 
     return signature
 
 
-def lsh_band_params(
-    threshold: float, target_recall: float = 0.98, max_bands: int = 48
-) -> tuple[int, int]:
+def lsh_band_params(threshold: float, target_recall: float = 0.98) -> tuple[int, int]:
     """Solve (rows_per_band r, n_bands b) for banded hyperplane LSH.
 
     Collision model (Charikar SimHash): a pair at cosine s agrees on one
     hyperplane bit with p = 1 − arccos(s)/π; a band of r planes collides with
     p^r; recall over b bands = 1 − (1 − p^r)^b.  We pick the LARGEST r whose
-    required b stays ≤ max_bands — larger r means exponentially more
+    required b stays ≤ MAX_BANDS — larger r means exponentially more
     selective bands (2^r buckets each), i.e. better pruning per unit recall.
 
     Honest regime note: pruning power is the gap between p^r for near pairs
@@ -318,7 +322,7 @@ def lsh_band_params(
     at scale.
     """
     p = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-    best = (2, max_bands)
+    best = (2, MAX_BANDS)
     for r in (2, 3, 4, 6, 8, 10, 12, 16):
         pr = p**r
         # pr == 0 (threshold -1) or pr underflowing so 1-pr rounds to 1.0
@@ -327,35 +331,27 @@ def lsh_band_params(
         if pr >= 1.0 or 1.0 - pr >= 1.0:
             continue
         b = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pr))
-        if b <= max_bands:
+        if b <= MAX_BANDS:
             best = (r, b)
     return best
 
 
-def hyperplane_band_keys_udf(
-    n_bands: int, rows_per_band: int, seed: int = 42, dim: int | None = None
-):
+def hyperplane_band_keys_udf(n_bands: int, rows_per_band: int):
     """Arrow-batched UDF: embedding → array of ``n_bands`` band keys.
 
     Band key = (band_idx << rows_per_band) | bucket_bits, so keys are unique
     across bands and a single explode + equi-join does the multi-band
-    blocking.  Plane matrix is seed-deterministic and lazily sized from the
-    first batch (same contract as hyperplane_signature_udf).
+    blocking.  Plane matrix as in ``hyperplane_signature_udf``.
     """
     total = n_bands * rows_per_band
-    state: dict = {"planes": None if dim is None else
-                   np.random.RandomState(seed).standard_normal((dim, total))}
+    state: dict = {}
     weights = 1 << np.arange(rows_per_band, dtype=np.int64)
     band_offsets = (np.arange(n_bands, dtype=np.int64) << rows_per_band)
 
     @F.pandas_udf("array<long>")
     def band_keys(batch: pd.Series) -> pd.Series:
         mat = np.vstack(batch.to_numpy())
-        if state["planes"] is None:
-            state["planes"] = np.random.RandomState(seed).standard_normal(
-                (mat.shape[1], total)
-            )
-        bits = ((mat @ state["planes"]) >= 0).astype(np.int64)
+        bits = ((mat @ _planes(state, mat.shape[1], total)) >= 0).astype(np.int64)
         # (rows, n_bands, rows_per_band) @ (rows_per_band,) → (rows, n_bands)
         keys = bits.reshape(len(mat), n_bands, rows_per_band) @ weights
         keys += band_offsets  # disjoint key spaces per band
@@ -364,27 +360,15 @@ def hyperplane_band_keys_udf(
     return band_keys
 
 
-def _capped_keys(
-    emb: DataFrame, keys: F.Column, key: str, cap: int | None, id_col: str
-) -> DataFrame:
+def _keyed(emb: DataFrame, keys: F.Column, key: str, id_col: str) -> DataFrame:
     """(vid, key) rows, one per blocking key of each vector, materialized.
 
-    The cut matters: the keyed frame feeds the key-size branch and BOTH
-    sides of the self-join, and uncut each subtree re-runs the full-corpus
-    key UDF (2-3× the projection work per call — round-4 review).  Narrow
-    rows: cheap to store.  ``cap``: optional skew guard — keys held by more
-    than cap vectors are dropped from candidate generation, trading bounded
-    recall loss for a hard O(cap²) bound per key, the same contract as
-    candidates.py's hot-bucket handling."""
-    keyed = emb.select(
+    The cut matters: the keyed frame feeds BOTH sides of the self-join, and
+    uncut each subtree re-runs the full-corpus key UDF (2-3× the projection
+    work per call — round-4 review).  Narrow rows: cheap to store."""
+    return emb.select(
         F.col(id_col).alias("vid"), F.explode(keys).alias(key)
     ).localCheckpoint()
-    if cap is None:
-        return keyed
-    sizes = keyed.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-    return keyed.join(
-        sizes.filter(F.col("n") <= cap).select(key), key, "left_semi"
-    )
 
 
 def _key_sharing_pairs(keyed: DataFrame, key: str) -> DataFrame:
@@ -402,10 +386,6 @@ def cosine_near_pairs_lsh(
     emb: DataFrame,
     threshold: float = 0.95,
     target_recall: float = 0.98,
-    n_bands: int | None = None,
-    rows_per_band: int | None = None,
-    bucket_cap: int | None = None,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -417,17 +397,11 @@ def cosine_near_pairs_lsh(
     thresholded by ``_score_blocked``, so precision is 1.0 by construction
     and recall follows the banded-LSH model in ``lsh_band_params`` (pinned
     ≥ 0.95 vs the exact twin in tests/test_similarity.py).
-
-    ``bucket_cap``: optional skew guard — band buckets holding more than cap
-    vectors are dropped from candidate generation (``_capped_keys``).
     """
     _require_integral_ids(emb, id_col)
-    if rows_per_band is None and n_bands is None:
-        rows_per_band, n_bands = lsh_band_params(threshold, target_recall)
-    elif rows_per_band is None or n_bands is None:
-        raise ValueError("pass both rows_per_band and n_bands, or neither")
-    keys = hyperplane_band_keys_udf(n_bands, rows_per_band, seed)
-    keyed = _capped_keys(emb, keys(F.col(vec_col)), "band_key", bucket_cap, id_col)
+    rows_per_band, n_bands = lsh_band_params(threshold, target_recall)
+    keys = hyperplane_band_keys_udf(n_bands, rows_per_band)
+    keyed = _keyed(emb, keys(F.col(vec_col)), "band_key", id_col)
     return _score_blocked(
         emb, _key_sharing_pairs(keyed, "band_key"), threshold, id_col, vec_col
     )
@@ -437,9 +411,7 @@ def lsh_bucketed_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    dim: int | None = None,
     n_planes: int = 12,
-    multi_probe: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -447,36 +419,16 @@ def lsh_bucketed_topk(
 
     Recall < 1 by construction (bucket pruning); the scale win is turning the
     crossJoin into an equi-join on ``bucket``.
-
-    ``multi_probe=True`` additionally probes every bucket at Hamming
-    distance 1 from the query's bucket (flip each plane bit) — the classic
-    multi-probe LSH recall lift (n_planes+1 probes per query) at zero extra
-    index cost: only the small query side fans out, the corpus stays
-    single-bucketed, and the probe expansion is a pure Column expression
-    (no extra Python).
     """
-    # dim=None → the UDF sizes its plane matrix from the first Arrow batch;
-    # no driver-side .first() action inside the operator (round-1 review).
-    sig = hyperplane_signature_udf(dim, n_planes)
+    sig = hyperplane_signature_udf(n_planes)
     emb_b = emb.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
         sig(F.col(vec_col)).alias("bucket"),
     )
-    q_base = queries.select(
+    q_b = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         sig(F.col(vec_col)).alias("bucket"),
     )
-    if multi_probe:
-        probes = F.expr(
-            "array_union(array(bucket), "
-            f"transform(sequence(0, {n_planes - 1}), "
-            "i -> bucket ^ shiftleft(cast(1 as bigint), i)))"
-        )
-        q_b = q_base.select(
-            "query_id", "q_vec", F.explode(probes).alias("bucket")
-        )
-    else:
-        q_b = q_base
     return _rank_topk(q_b.join(emb_b, "bucket"), k)

@@ -29,6 +29,10 @@ import math
 
 from pyspark.sql import SparkSession
 
+from cloud_dedup_spark.fsutil import (
+    hadoop_path, hadoop_path_exists, read_text, write_text,
+)
+
 # driver-side snapshot manifest written into the compacted copy: the exact
 # top-level children (data files, or partition dirs for partitioned tables)
 # the compaction read.  Anything found in `.old` after the swap that is NOT
@@ -37,11 +41,10 @@ from pyspark.sql import SparkSession
 _MANIFEST = "_compact_manifest.json"
 
 
-def _list_children(fs, jvm, path: str) -> list[str]:
+def _list_children(spark: SparkSession, path: str) -> list[str]:
     """Top-level data children of a table dir (files or partition dirs),
     skipping markers (_SUCCESS, the manifest) and hidden entries."""
-    P = jvm.org.apache.hadoop.fs.Path
-    hpath = P(path)
+    fs, hpath = hadoop_path(spark, path)
     if not fs.exists(hpath):
         return []
     out = []
@@ -53,27 +56,7 @@ def _list_children(fs, jvm, path: str) -> list[str]:
     return out
 
 
-def _write_manifest(fs, jvm, table_path: str, names: list[str]) -> None:
-    P = jvm.org.apache.hadoop.fs.Path
-    out = fs.create(P(f"{table_path}/{_MANIFEST}"), True)
-    out.write(bytearray(json.dumps(sorted(names)).encode("utf-8")))
-    out.close()
-
-
-def _read_manifest(fs, jvm, table_path: str) -> set[str] | None:
-    P = jvm.org.apache.hadoop.fs.Path
-    p = P(f"{table_path}/{_MANIFEST}")
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return set(json.loads(data.decode("utf-8")))
-
-
-def _restore_unlisted(fs, jvm, path: str, old: str) -> None:
+def _restore_unlisted(spark: SparkSession, path: str, old: str) -> None:
     """Move every `.old` child that is neither in the new table's manifest
     nor already present in the table back into the table, then drop `.old`.
 
@@ -82,11 +65,11 @@ def _restore_unlisted(fs, jvm, path: str, old: str) -> None:
     overwrite) that raced the swap — restoring errs toward keeping data and
     can never duplicate rows, because the compacted output was built from
     the manifest listing only."""
-    P = jvm.org.apache.hadoop.fs.Path
-    manifest = _read_manifest(fs, jvm, path)
-    if manifest is None:
-        manifest = set()
-    for name in _list_children(fs, jvm, old):
+    fs, _ = hadoop_path(spark, path)
+    P = spark._jvm.org.apache.hadoop.fs.Path
+    text = read_text(spark, f"{path}/{_MANIFEST}")
+    manifest = set() if text is None else set(json.loads(text))
+    for name in _list_children(spark, old):
         if name in manifest:
             continue
         dst = P(f"{path}/{name}")
@@ -106,12 +89,6 @@ APPEND_TABLES = (
 )
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
 # advisory writer lock for the .compact swap: while a compaction holds a
 # FRESH lock on a table, a concurrently-entering fold must not run entry
 # repair on it — racing repair against a live swap can rename `.old` back
@@ -127,29 +104,17 @@ def _lock_path(path: str, suffix: str) -> str:
     return f"{path}{suffix}.lock"
 
 
-def _lock_is_fresh(fs, jvm, path: str, suffix: str) -> bool:
-    P = jvm.org.apache.hadoop.fs.Path
-    lp = P(_lock_path(path, suffix))
+def _lock_is_fresh(spark: SparkSession, path: str, suffix: str) -> bool:
+    fs, lp = hadoop_path(spark, _lock_path(path, suffix))
     if not fs.exists(lp):
         return False
-    age = jvm.java.lang.System.currentTimeMillis() - fs.getFileStatus(
+    age = spark._jvm.java.lang.System.currentTimeMillis() - fs.getFileStatus(
         lp
     ).getModificationTime()
     if age > _LOCK_TTL_MS:
         fs.delete(lp, False)  # crash leftover
         return False
     return True
-
-
-def _take_lock(fs, jvm, path: str, suffix: str) -> None:
-    P = jvm.org.apache.hadoop.fs.Path
-    out = fs.create(P(_lock_path(path, suffix)), True)
-    out.write(bytearray(b"compact"))
-    out.close()
-
-
-def _drop_lock(fs, jvm, path: str, suffix: str) -> None:
-    fs.delete(jvm.org.apache.hadoop.fs.Path(_lock_path(path, suffix)), False)
 
 
 def repair_swap(spark: SparkSession, path: str, suffix: str = ".swap") -> None:
@@ -170,18 +135,18 @@ def repair_swap(spark: SparkSession, path: str, suffix: str = ".swap") -> None:
     stale ``.tmp`` is always safe to drop (the swap re-writes it from
     scratch).
     """
-    fs, hpath, jvm = _fs(spark, path)
-    if _lock_is_fresh(fs, jvm, path, suffix):
+    if _lock_is_fresh(spark, path, suffix):
         return
-    P = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = hadoop_path(spark, path)
+    P = spark._jvm.org.apache.hadoop.fs.Path
     old, tmp = f"{path}{suffix}.old", f"{path}{suffix}.tmp"
     old_p, tmp_p = P(old), P(tmp)
     if not fs.exists(hpath) and fs.exists(old_p):
         if not fs.rename(old_p, hpath):
             raise IOError(f"swap crash repair failed for {path}")
     elif fs.exists(hpath) and fs.exists(old_p):
-        if _read_manifest(fs, jvm, path) is not None:
-            _restore_unlisted(fs, jvm, path, old)
+        if hadoop_path_exists(spark, f"{path}/{_MANIFEST}"):
+            _restore_unlisted(spark, path, old)
         else:
             fs.delete(old_p, True)
     if fs.exists(hpath):
@@ -233,8 +198,8 @@ def swap_overwrite(
         w.save(path)
         return
     tmp, old = f"{path}{suffix}.tmp", f"{path}{suffix}.old"
-    fs, hpath, jvm = _fs(spark, path)
-    P = jvm.org.apache.hadoop.fs.Path
+    fs, hpath = hadoop_path(spark, path)
+    P = spark._jvm.org.apache.hadoop.fs.Path
     fs.delete(P(tmp), True)
     w = df.write.mode("overwrite").format(table_format)
     if partition_by:
@@ -244,7 +209,7 @@ def swap_overwrite(
         # manifest travels inside the new copy so a crash after the second
         # rename still knows what the rewrite read (repair_swap finishes the
         # restore from it)
-        _write_manifest(fs, jvm, tmp, snapshot)
+        write_text(spark, f"{tmp}/{_MANIFEST}", json.dumps(sorted(snapshot)))
     fs.delete(P(old), True)
     if fs.exists(hpath) and not fs.rename(hpath, P(old)):
         raise IOError(f"swap failed for {path} (main → .old)")
@@ -260,7 +225,7 @@ def swap_overwrite(
             )
         raise IOError(f"swap failed for {path} (.tmp → main)")
     if snapshot is not None and fs.exists(P(old)):
-        _restore_unlisted(fs, jvm, path, old)
+        _restore_unlisted(spark, path, old)
         fs.delete(P(f"{path}/{_MANIFEST}"), False)
     else:
         fs.delete(P(old), True)
@@ -268,7 +233,7 @@ def swap_overwrite(
 
 def _dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) of a table directory; (0, 0) if absent."""
-    fs, hpath, _ = _fs(spark, path)
+    fs, hpath = hadoop_path(spark, path)
     if not fs.exists(hpath):
         return 0, 0
     n, size = 0, 0
@@ -315,37 +280,36 @@ def compact_stage_tables(
         want = max(1, math.ceil(total / target_file_bytes))
         if n_files <= max(min_files, want):
             continue
-        # pin the read to an explicit snapshot listing: Spark lists the
-        # directory lazily at write time, so an unpinned self-read would
-        # absorb files appended DURING the compaction into the rewrite while
-        # the swap deletes their originals with `.old` — with the pin, a
-        # concurrent append is provably not in the output and the manifest
-        # restore (swap_overwrite) moves it into the new table afterwards
-        fs, _, jvm = _fs(spark, path)
         # writer lock held for the whole read+swap: a fold entering NOW must
         # not run its .compact entry repair against the live protocol (see
         # repair_swap); a fresh foreign lock means another compactor owns
         # this table — leave it alone this run
-        if _lock_is_fresh(fs, jvm, path, ".compact"):
+        if _lock_is_fresh(spark, path, ".compact"):
             continue
-        _take_lock(fs, jvm, path, ".compact")
+        lock = _lock_path(path, ".compact")
+        write_text(spark, lock, "compact")
         try:
-            report[name] = _compact_one(
-                spark, fs, jvm, loc, path, n_files, total, want,
-            )
+            report[name] = _compact_one(spark, loc, path, n_files, total, want)
         finally:
-            _drop_lock(fs, jvm, path, ".compact")
+            fs, lp = hadoop_path(spark, lock)
+            fs.delete(lp, False)
     return report
 
 
 def _compact_one(
-    spark, fs, jvm, loc: str, path: str, n_files: int, total: int, want: int
+    spark, loc: str, path: str, n_files: int, total: int, want: int
 ) -> dict:
     """Snapshot-pinned rewrite + manifest swap of one table (lock held by
     the caller)."""
     from pyspark.sql import functions as F
 
-    snapshot = _list_children(fs, jvm, path)
+    # pin the read to an explicit snapshot listing: Spark lists the
+    # directory lazily at write time, so an unpinned self-read would
+    # absorb files appended DURING the compaction into the rewrite while
+    # the swap deletes their originals with `.old` — with the pin, a
+    # concurrent append is provably not in the output and the manifest
+    # restore (swap_overwrite) moves it into the new table afterwards
+    snapshot = _list_children(spark, path)
     part_dirs = [c for c in snapshot if c.startswith("ingest_batch=")]
     if part_dirs:
         from urllib.parse import unquote
@@ -378,8 +342,7 @@ def _compact_one(
         # the committed identity table; those partitions are carried
         # through compaction byte-identical, under their own names.
         inflight: list[str] = []
-        id_fs, id_hpath, _ = _fs(spark, f"{loc}/identity")
-        if "dst" in df.columns and id_fs.exists(id_hpath):
+        if "dst" in df.columns and hadoop_path_exists(spark, f"{loc}/identity"):
             ids = (
                 spark.read.parquet(f"{loc}/identity")
                 .select(F.col("file_id").alias("dst"))

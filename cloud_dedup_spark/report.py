@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cloud_dedup_spark.metrics import RunMetrics
+from cloud_dedup_spark.operators.exact import MAX_MEMBERS_PER_GROUP
 from cloud_dedup_spark.operators.rollup import (
     folder_comparisons,
     pairwise_repo_counts,
@@ -33,9 +34,9 @@ from cloud_dedup_spark.operators.rollup import (
 # Driver-side collection caps: the reference holds every group in RAM
 # (src/cloud_duplicate_analyzer.py:273-713 — single process); the graft pages
 # only the TOP slices of the stage tables into the report so the collect
-# stays bounded at any corpus size.  Raise via build_report kwargs if needed.
+# stays bounded at any corpus size.  Member arrays share
+# MAX_MEMBERS_PER_GROUP with the exact-group and cluster stage tables.
 MAX_GROUP_DETAILS = 200
-MAX_MEMBERS_PER_GROUP = 1000
 MAX_TREE_FOLDERS = 500
 MAX_TREE_FILES = 5000
 

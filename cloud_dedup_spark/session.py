@@ -31,6 +31,13 @@ def _phys_bytes() -> int:
     return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
+def _default_heap(phys_bytes: int) -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: 16g, or half the
+    RAM on a smaller host, so the default never asks for more memory than
+    the machine has."""
+    return f"{min(16 * 2**10, phys_bytes // 2**21)}m"
+
+
 def build_session(
     app_name: str = "cloud-dedup-spark",
     master: str | None = None,
@@ -89,7 +96,10 @@ def build_session(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local mode: driver heap IS the cluster's memory; 8g chokes (spill-
         # bound, parallelism-insensitive) beyond ~50k wide content rows
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_heap(_phys_bytes())),
+        )
         # shuffle/spill scratch: tmpfs only behind its OWN explicit opt-in
         # flag (SPARK_GRAFT_TMPFS=1, exported by bench/profile entry points;
         # the sandbox's /tmp sits on a shared virtual disk whose latency

@@ -21,7 +21,9 @@ from cloud_dedup_spark.operators.cluster import (
 def _labels(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
     rows = connected_components(df).collect()
-    return {r["file_id"]: r["cluster_id"] for r in rows}
+    got = {r["file_id"]: r["cluster_id"] for r in rows}
+    assert len(rows) == len(got)  # one row per endpoint
+    return got
 
 
 def test_single_edge(spark):
@@ -69,9 +71,9 @@ def test_cluster_summary_fields(spark):
     assert len(row["members"]) == 3
 
 
-def _reference_labels(edges, vertices):
-    """Plain-Python union-find: every vertex and endpoint → its component's
-    min id (linking always keeps the smaller root, so roots are minima)."""
+def _reference_labels(edges):
+    """Plain-Python union-find: every endpoint → its component's min id
+    (linking always keeps the smaller root, so roots are minima)."""
     parent = {}
 
     def find(x):
@@ -80,20 +82,21 @@ def _reference_labels(edges, vertices):
             x = parent[x]
         return x
 
-    for v in vertices:
-        find(v)
     for a, b in edges:
         ra, rb = find(a), find(b)
         parent[max(ra, rb)] = min(ra, rb)
     return {v: find(v) for v in parent}
 
 
+def _random_path(rng, n):
+    """A path over n distinct signed 64-bit ids in random order."""
+    ids = rng.sample(range(-(2**61), 2**61), n)
+    return [(ids[i], ids[i + 1]) for i in range(n - 1)]
+
+
 def _random_graph(seed):
-    """(edges, vertices): a path and a star over shuffled signed 64-bit ids,
-    random sparse edges, duplicate edges, self-loops, and vertices that are
-    no edge's endpoint.  The path is 40 long: the distributed loop's plan
-    statistics grow with its round count, and a 150-node path exhausted a
-    2 GB driver heap."""
+    """A path and a star over shuffled signed 64-bit ids, random sparse
+    edges, duplicate edges and self-loops."""
     rng = random.Random(seed)
     ids = rng.sample(range(-(2**61), 2**61), 300)
     path, star, rest = ids[:40], ids[40:80], ids[80:]
@@ -103,9 +106,7 @@ def _random_graph(seed):
     edges += rng.sample(edges, 20)  # duplicates
     edges += [(v, v) for v in rng.sample(rest[:150], 5)]  # self-loops
     rng.shuffle(edges)
-    edges = [(b, a) if rng.random() < 0.5 else (a, b) for a, b in edges]
-    vertices = rest[150:] + rng.sample(path, 10)  # isolated + endpoints
-    return edges, vertices
+    return [(b, a) if rng.random() < 0.5 else (a, b) for a, b in edges]
 
 
 @pytest.mark.parametrize("branch", ["driver", "distributed"])
@@ -125,15 +126,34 @@ def test_cc_branches_match_reference(spark, monkeypatch, branch, shape):
     else:
         monkeypatch.setattr(cl, "DRIVER_CC_MAX_EDGES", -1)
         monkeypatch.setattr(cl, "_min_labels", must_not_run)
-    edges, vertices = _random_graph(17)
-    if shape == "empty":
-        edges = []
-    e_df = spark.createDataFrame(edges, "src long, dst long")
-    v_df = spark.createDataFrame([(v,) for v in vertices], "file_id long")
-    rows = cl.connected_components(e_df, vertices=v_df).collect()
-    got = {r["file_id"]: r["cluster_id"] for r in rows}
-    assert len(rows) == len(got)  # one row per vertex
-    assert got == _reference_labels(edges, vertices)
+    edges = _random_graph(17) if shape == "mixed" else []
+    assert _labels(spark, edges) == _reference_labels(edges)
+
+
+def test_distributed_cc_labels_a_long_random_path(spark, monkeypatch):
+    """A 150-node path with random ids through the distributed loop: about
+    50 rounds.  Each round's labels are counted into a cache before the
+    lineage cut, so the plan's size estimate does not compound (a
+    checkpoint of the unloaded plan ran out of driver heap on this path)."""
+    import cloud_dedup_spark.operators.cluster as cl
+
+    monkeypatch.setattr(cl, "DRIVER_CC_MAX_EDGES", -1)
+    edges = _random_path(random.Random(150), 150)
+    got = _labels(spark, edges)
+    assert got == _reference_labels(edges)
+    assert len(set(got.values())) == 1
+
+
+def test_distributed_cc_raises_at_round_bound(spark, monkeypatch):
+    """Labels still changing at the round bound raise instead of coming
+    back unconverged."""
+    import cloud_dedup_spark.operators.cluster as cl
+
+    monkeypatch.setattr(cl, "DRIVER_CC_MAX_EDGES", -1)
+    monkeypatch.setattr(cl, "MAX_CC_ROUNDS", 3)
+    edges = _random_path(random.Random(150), 150)
+    with pytest.raises(RuntimeError, match="after 3 rounds"):
+        cl.connected_components(spark.createDataFrame(edges, "src long, dst long"))
 
 
 def test_cc_with_given_edge_count(spark):
@@ -141,12 +161,10 @@ def test_cc_with_given_edge_count(spark):
     empty graph then starts no job before the caller's own action."""
     import cloud_dedup_spark.operators.cluster as cl
 
-    edges, _ = _random_graph(23)
+    edges = _random_graph(23)
     e_df = spark.createDataFrame(edges, "src long, dst long")
     rows = cl.connected_components(e_df, n_edges=len(edges)).collect()
-    assert {r["file_id"]: r["cluster_id"] for r in rows} == _reference_labels(
-        edges, []
-    )
+    assert {r["file_id"]: r["cluster_id"] for r in rows} == _reference_labels(edges)
     sc = spark.sparkContext
     sc.setJobGroup("cc-empty", "cc-empty")
     try:

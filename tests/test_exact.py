@@ -89,13 +89,16 @@ def test_null_sha_rows_are_singletons_not_a_welded_family(spark):
     assert {(e["src"], e["dst"]) for e in edges} == {(1, 2)}
 
 
-def test_groups_member_cap_bounds_the_array(spark):
+def test_groups_member_cap_bounds_the_array(spark, monkeypatch):
+    import cloud_dedup_spark.operators.exact as ex
+
+    monkeypatch.setattr(ex, "MAX_MEMBERS_PER_GROUP", 5)
     rows = [(i, "same", "r", f"p{i}", 10) for i in range(20)]
     files = spark.createDataFrame(
         rows,
         "file_id long, content_sha256 string, repo string, path string, n_bytes int",
     )
-    out = exact_duplicate_groups(files, member_cap=5).collect()
+    out = exact_duplicate_groups(files).collect()
     assert len(out) == 1
     assert out[0]["n_files"] == 20          # counts cover the full group
     assert len(out[0]["members"]) == 5      # array bounded by the cap

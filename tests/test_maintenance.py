@@ -3,16 +3,17 @@ tables are rewritten to few files with identical content, idempotently."""
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
 
+from cloud_dedup_spark.fsutil import hadoop_path, write_text
 from cloud_dedup_spark.plans.maintenance import (
     _MANIFEST,
     _dir_stats,
-    _fs,
     _list_children,
-    _write_manifest,
+    _lock_path,
     compact_stage_tables,
     repair_swap,
     swap_overwrite,
@@ -67,8 +68,7 @@ def test_swap_restores_concurrent_append(spark, tmp_path):
     loc = str(tmp_path / "state")
     path = f"{loc}/identity"
     _write_fragmented(spark, path, n_slices=6)
-    fs, _, jvm = _fs(spark, path)
-    snapshot = _list_children(fs, jvm, path)
+    snapshot = _list_children(spark, path)
     pinned = spark.read.parquet(*[f"{path}/{c}" for c in snapshot]).coalesce(2)
     # concurrent append: lands after the snapshot listing, so it is provably
     # not inside `pinned` (explicit file list) — the race the manifest closes
@@ -93,7 +93,6 @@ def test_repair_swap_finishes_interrupted_restore(spark, tmp_path):
     loc = str(tmp_path / "state")
     path = f"{loc}/identity"
     _write_fragmented(spark, path, n_slices=3)
-    fs, _, jvm = _fs(spark, path)
     old = f"{path}.compact.old"
     # `.old` holds two slices; pretend the compaction READ the first one
     # (listed in the manifest → dropped) but not the second (concurrent
@@ -102,14 +101,14 @@ def test_repair_swap_finishes_interrupted_restore(spark, tmp_path):
         F.col("id").alias("file_id"),
         F.sha2(F.col("id").cast("string"), 256).alias("content_sha256"),
     ).coalesce(1).write.mode("append").parquet(old)
-    listed_children = set(_list_children(fs, jvm, old))
+    listed_children = set(_list_children(spark, old))
     spark.range(550, 600).select(
         F.col("id").alias("file_id"),
         F.sha2(F.col("id").cast("string"), 256).alias("content_sha256"),
     ).coalesce(1).write.mode("append").parquet(old)
-    _write_manifest(
-        fs, jvm, path, _list_children(fs, jvm, path) + sorted(listed_children)
-    )
+    write_text(spark, f"{path}/{_MANIFEST}", json.dumps(
+        sorted(_list_children(spark, path) + sorted(listed_children))
+    ))
     repair_swap(spark, path, suffix=".compact")
     after = sorted(r["file_id"] for r in spark.read.parquet(path).collect())
     assert after == list(range(300)) + list(range(550, 600))
@@ -192,16 +191,17 @@ def test_repair_skips_under_fresh_lock_and_clears_stale(spark, tmp_path):
     """The advisory compaction lock: a fold's entry repair must NOT race a
     live compaction's swap (fresh lock → no-op), but a crash-leftover lock
     past the TTL is cleared and repair proceeds."""
-    from cloud_dedup_spark.plans.maintenance import _LOCK_TTL_MS, _take_lock
+    from cloud_dedup_spark.plans.maintenance import _LOCK_TTL_MS
 
     loc = str(tmp_path / "state")
     path = f"{loc}/identity"
     _write_fragmented(spark, path, n_slices=3)
-    fs, _, jvm = _fs(spark, path)
+    fs, hpath = hadoop_path(spark, path)
+    jvm = spark._jvm
     P = jvm.org.apache.hadoop.fs.Path
     # park the table in the mid-swap crash state: main gone, data in `.old`
-    assert fs.rename(P(path), P(f"{path}.compact.old"))
-    _take_lock(fs, jvm, path, ".compact")
+    assert fs.rename(hpath, P(f"{path}.compact.old"))
+    write_text(spark, _lock_path(path, ".compact"), "compact")
     repair_swap(spark, path, suffix=".compact")
     # fresh lock → repair refused to touch the live protocol
     assert not os.path.exists(path)
@@ -217,12 +217,9 @@ def test_repair_skips_under_fresh_lock_and_clears_stale(spark, tmp_path):
 
 
 def test_compaction_skips_foreign_locked_table(spark, tmp_path):
-    from cloud_dedup_spark.plans.maintenance import _take_lock
-
     loc = str(tmp_path / "state")
     path = f"{loc}/signatures"
     _write_fragmented(spark, path)
-    fs, _, jvm = _fs(spark, path)
-    _take_lock(fs, jvm, path, ".compact")
+    write_text(spark, _lock_path(path, ".compact"), "compact")
     # another compactor owns the table → left alone this run
     assert compact_stage_tables(spark, loc, min_files=4) == {}

@@ -1,7 +1,7 @@
 """Session construction: helpers that need no Spark, and the settings a
 session carries."""
 
-from cloud_dedup_spark.session import _mem_bytes
+from cloud_dedup_spark.session import _default_heap, _mem_bytes
 
 
 def test_mem_bytes_parses_jvm_sizes():
@@ -17,6 +17,15 @@ def test_mem_bytes_rejects_other_strings():
     # no pre-touch decision is made on a size that cannot be read
     for s in ("", "g", "2gb", "1.5g", "-2g", "two"):
         assert _mem_bytes(s) is None
+
+
+def test_default_heap_fits_the_host():
+    # 16g on a host with 32 GB or more, half the RAM below that
+    assert _default_heap(64 * 2**30) == "16384m"
+    assert _default_heap(32 * 2**30) == "16384m"
+    assert _default_heap(15 * 2**30) == "7680m"
+    assert _default_heap(4 * 2**30) == "2048m"
+    assert _mem_bytes(_default_heap(15 * 2**30)) == 15 * 2**29
 
 
 # non-ASCII cases where the JVM's and ICU's case tables could part ways

@@ -15,5 +15,5 @@ def money_sum(col: str = "value") -> F.Column:
     ``round(sum(CAST(v AS DECIMAL(18,4))), 2)::DOUBLE``.  One shared
     definition so a future precision change (e.g. widening for ANSI
     sum-overflow at larger scale) cannot silently diverge between the
-    sessionizers and the bucket rollup."""
+    sessionizer and the bucket rollup."""
     return F.round(F.sum(F.col(col).cast("decimal(18,4)")), 2).cast("double")

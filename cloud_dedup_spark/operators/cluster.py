@@ -18,27 +18,26 @@ A numpy port of hash-to-min would not: its round count grows with the
 diameter (on a 4-vCPU host: 2.1 s on 2M random edges, 357 s on a 200k-node
 path).
 
-Above the gate the loop is driver-side hash-to-min, since Catalyst has no
-fixed-point operator:
-  label(v) ← min(label(v), min over neighbours u of label(u))
-then one pointer jump, label(v) ← label(label(v)), iterated until no label
-changes.  The round count follows the diameter and the id order along it: a
-pure-Python model of the rule (counting the round that finds no change)
-needed 6, 8 and 10 rounds on paths of 40, 150 and 1000 nodes with sorted
-ids, but 13-34, 43-74 and 303-334 over five random id orders each.
-Dup clusters are near-cliques plus short substring chains, so most
-components take few rounds; a long chain takes many, and past
-``MAX_CC_ROUNDS`` the loop raises rather than return unconverged labels.
+Above the gate a driver-side loop runs, since Catalyst has no fixed-point
+operator: alternating large-star and small-star steps (Kiveris et al.,
+*Connected Components in MapReduce and Beyond*, SoCC 2014; GraphFrames runs
+the same).  Each step is one window over the edge list by vertex that links
+neighbours to a neighbourhood minimum, and neither adds an edge.  The loop
+stops once every component is a star around its minimum, and past
+``MAX_CC_ROUNDS`` it raises rather than return unconverged labels.  Rounds
+grow with log n whatever the id order: a pure-Python model of the loop
+needed 4-5, 6, 8-9 and 10-11 rounds on paths of 40, 150, 1000 and 10,000
+nodes over five random id orders each, and 6, 8, 10 and 14 with sorted ids.
 
-Scale notes per round: the edge-label join and the groupBy by id shuffle.
-Each round's labels are persisted, counted and then cut from their lineage
-with ``localCheckpoint``.  The cut keeps the plan one round deep: uncut, the
-plan doubles each round and the job dies on plan-compile time long before
-data size matters (SURVEY.md §7.4 item 2).  The count loads the cache before
-the cut, so the checkpoint carries the cache's real size: a checkpoint of the
-unloaded plan carries the join size estimate, a product of its inputs' that
-compounds round over round until the driver heap runs out.  On a durable
-cluster run, swap localCheckpoint for a checkpoint/Iceberg stage-table write
+Scale notes per round: the two windows, the distinct and the check's groupBy
+shuffle.  Each round's edges are persisted, counted and then cut from their
+lineage with ``localCheckpoint``.  The cut keeps the plan one round deep:
+uncut, the plan doubles each round and the job dies on plan-compile time long
+before data size matters (SURVEY.md §7.4 item 2).  The count loads the cache
+before the cut, so the checkpoint carries the cache's real size: a checkpoint
+of the unloaded plan carries the plan's size estimate, which compounds round
+over round until the driver heap runs out.  On a durable cluster run, swap
+localCheckpoint for a checkpoint/Iceberg stage-table write
 (plans/pipeline.py does this when given a checkpoint location).
 """
 
@@ -56,9 +55,8 @@ from cloud_dedup_spark.operators.exact import MAX_MEMBERS_PER_GROUP
 # and label (2.0 s of it the union-find) at 464 MB peak Python driver RSS.
 # The same order as the fold's member-broadcast gate
 DRIVER_CC_MAX_EDGES = 2_000_000
-# round bound of the distributed loop: a 150-node path with random ids took
-# 53 rounds (16 s on a 4-vCPU host); a 1000-node one needs about 300 and
-# raises
+# round bound of the distributed loop, far above the log n rounds it needs
+# (8 on a 1000-node path with random ids, 14 on a 10,000-node sorted one)
 MAX_CC_ROUNDS = 200
 
 
@@ -80,7 +78,7 @@ def connected_components(edges: DataFrame, n_edges: int | None = None) -> DataFr
     elif 0 < n_edges <= DRIVER_CC_MAX_EDGES:
         pairs = edges.select("src", "dst").toPandas()
     if n_edges > DRIVER_CC_MAX_EDGES:
-        return _hash_to_min(edges)
+        return _star_contraction(edges)
     ids = roots = np.empty(0, dtype=np.int64)
     if n_edges:
         ids, roots = _min_labels(
@@ -127,71 +125,71 @@ def _min_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarra
         root = up
 
 
-def _hash_to_min(edges: DataFrame) -> DataFrame:
+def _star_contraction(edges: DataFrame) -> DataFrame:
     """The distributed loop of ``connected_components`` (module docstring).
 
-    The returned labels are the last round's cache and stay persisted for
-    the caller's reads."""
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    # lazy checkpoints: under AQE the call itself runs every shuffle and
-    # broadcast stage of its plan, on this thread (a groupBy + broadcast-join
-    # frame ran 2 jobs at the call and 2 more at its count; with AQE off, 1
-    # at the call); eager=False saves only the checkpoint's own collect job
-    labels = (
-        sym.select(F.col("src").alias("file_id"))
+    The graph is held as distinct (v, p) edges with p < v and no self-loops.
+    The last round's edges stay persisted for the caller's reads."""
+    vertices = edges.select(F.explode(F.array("src", "dst")).alias("file_id")).distinct()
+    # lazy checkpoint: under AQE an eager one runs every shuffle stage of its
+    # plan at the call; eager=False saves only the checkpoint's own job
+    star = (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(F.greatest("src", "dst").alias("v"), F.least("src", "dst").alias("p"))
         .distinct()
-        .withColumn("cluster_id", F.col("file_id"))
         .localCheckpoint(eager=False)
     )
-    sym = sym.localCheckpoint(eager=False)
+    by_v = Window.partitionBy("v")
     cached = None
     for _ in range(MAX_CC_ROUNDS):
-        # hash-to-min step: min over own label and neighbours' labels
-        nbr_min = (
-            sym.join(labels, sym["dst"] == labels["file_id"])
-            .groupBy(sym["src"].alias("file_id"))
-            .agg(F.min("cluster_id").alias("nbr_label"))
+        # large-star: link each vertex's larger neighbours to the minimum of
+        # its closed neighbourhood
+        large = (
+            star.union(star.select("p", "v")).toDF("v", "p")
+            .withColumn("m", F.least("v", F.min("p").over(by_v)))
+            .filter(F.col("p") > F.col("v"))
+            .select(F.col("p").alias("v"), F.col("m").alias("p"))
         )
-        stepped = labels.join(nbr_min, "file_id", "left").select(
-            "file_id",
-            F.least(
-                F.col("cluster_id"), F.coalesce("nbr_label", F.col("cluster_id"))
-            ).alias("cluster_id"),
-            F.col("cluster_id").alias("_old"),
-        )
-        # pointer-jumping step: label ← label(label); it collapses a chain
-        # whose ids ascend along it in O(log length) rounds, but a chain of
-        # random ids still takes O(length) (module docstring)
-        parents = stepped.select(
-            F.col("file_id").alias("cluster_id"),
-            F.col("cluster_id").alias("_grand"),
-        )
-        new_labels = (
-            stepped.join(parents, "cluster_id", "left")
-            .select(
-                "file_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("_grand", F.col("cluster_id"))
-                ).alias("cluster_id"),
-                "_old",
-            )
+        # small-star: link each vertex and its smaller neighbours to the
+        # minimum of those.  Each step maps one edge to one edge
+        new_star = (
+            large.withColumn("m", F.min("p").over(by_v))
+            .select(F.when(F.col("p") == F.col("m"), F.col("v")).otherwise(F.col("p")), "m")
+            .toDF("v", "p")
+            .distinct()
             .persist()
         )
         # one count per round loads the cache and checks convergence; the
         # previous round's cache has fed this round's checkpoint by then
-        changed = new_labels.filter(F.col("cluster_id") != F.col("_old")).count()
+        unsettled, _ = _star_check(new_star)
         if cached is not None:
             cached.unpersist()
-        cached = new_labels
-        if changed == 0:
-            return new_labels.drop("_old")
-        labels = new_labels.drop("_old").localCheckpoint(eager=False)
+        cached = new_star
+        if unsettled == 0:
+            labels = new_star.toDF("file_id", "cluster_id")
+            return vertices.join(labels, "file_id", "left").select(
+                "file_id", F.coalesce("cluster_id", "file_id").alias("cluster_id")
+            )
+        star = new_star.localCheckpoint(eager=False)
     cached.unpersist()
     raise RuntimeError(
-        f"connected_components: labels still changing after {MAX_CC_ROUNDS} rounds"
+        f"connected_components: labels still unsettled after {MAX_CC_ROUNDS} rounds"
     )
+
+
+def _star_check(star: DataFrame) -> tuple[int, int]:
+    """(unsettled vertices, edges) of a (v, p) edge list, in one action.
+
+    A vertex is unsettled when it has two smaller neighbours, or a smaller
+    and a larger one.  With none, every component is a star around its
+    minimum, so each edge's ``p`` is its ``v``'s label."""
+    ends = star.select("v", F.lit(1), F.lit(0)).union(star.select("p", F.lit(0), F.lit(1)))
+    per_vertex = ends.toDF("x", "lo", "hi").groupBy("x").agg(
+        F.sum("lo").alias("lo"), F.max("hi").alias("hi")
+    )
+    unsettled = (F.col("lo") >= 2) | ((F.col("lo") == 1) & (F.col("hi") == 1))
+    row = per_vertex.agg(F.count(F.when(unsettled, 1)), F.sum("lo")).first()
+    return row[0], row[1] or 0
 
 
 def cluster_assignments(files: DataFrame, edges: DataFrame) -> DataFrame:

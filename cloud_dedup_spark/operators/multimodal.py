@@ -6,11 +6,9 @@ Arrow batch iteration via ``mapInPandas``, partition sizing, deterministic
 content ids — is real and tested.  Decoding sits behind ``Decoder``
 implementations: ``PnmWavDecoder`` REALLY decodes one codec per modality
 with zero dependencies (binary PGM/PPM images + block-mean resize; PCM WAV
-audio via stdlib ``wave`` + 16-band energy profile); ``FakeDecoder``
-produces deterministic features from raw bytes for plumbing tests; video
-(and the compressed formats — JPEG/PNG/MP3/MP4) still need PIL/ffmpeg on
-the cluster image and stay behind loud ``NotImplementedError``
-(``StubDecoder``).
+audio via stdlib ``wave`` + 16-band energy profile); video (and the
+compressed formats — JPEG/PNG/MP3/MP4) still need PIL/ffmpeg on the cluster
+image and stay behind a loud ``NotImplementedError``.
 
 Scale notes: media rows are wide (MBs); ``spark.sql.files.maxPartitionBytes``
 and the Arrow batch cap (session.py) keep per-task memory bounded.  Feature
@@ -23,7 +21,6 @@ pre-normalize the dedup key).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -62,27 +59,6 @@ class Decoder:
 
     def decode(self, kind: str, payload: bytes) -> np.ndarray:  # pragma: no cover
         raise NotImplementedError
-
-
-class StubDecoder(Decoder):
-    """Container has no media libs — make that loud, not silent."""
-
-    def decode(self, kind: str, payload: bytes) -> np.ndarray:
-        raise NotImplementedError(
-            "media decode requires PIL/ffmpeg/torchaudio; install on the "
-            "cluster image and plug a real Decoder"
-        )
-
-
-class FakeDecoder(Decoder):
-    """Deterministic bytes→features stand-in: exercises the full distributed
-    path (Arrow batches, schema, downstream similarity joins) without codecs."""
-
-    def decode(self, kind: str, payload: bytes) -> np.ndarray:
-        digest = hashlib.blake2b(payload, digest_size=self.dim * 4).digest()
-        raw = np.frombuffer(digest, dtype=np.uint32).astype(np.float64)
-        vec = raw / np.float64(0xFFFFFFFF)
-        return (vec / np.linalg.norm(vec)).astype(np.float32)
 
 
 def _decode_pnm(payload: bytes) -> np.ndarray:
@@ -259,24 +235,10 @@ def extract_features(media: DataFrame, decoder: Decoder) -> DataFrame:
     return pre.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def exact_media_duplicates(features: DataFrame) -> DataFrame:
-    """Byte-identical media groups — the exact channel works on any modality
-    because it never decodes (reference MD5 principle, :100-111)."""
-    return (
-        features.groupBy("content_sha256")
-        .agg(
-            F.count(F.lit(1)).alias("n_media"),
-            F.sort_array(F.collect_list("media_id")).alias("media_ids"),
-        )
-        .filter(F.col("n_media") >= 2)
-    )
-
-
 def feature_dup_groups(features: DataFrame) -> DataFrame:
-    """Duplicate groups by DECODED feature equality (vs the raw-byte groups of
-    :func:`exact_media_duplicates`): two payloads that decode to the same
-    feature are duplicates even if their bytes differ (re-encoded copies,
-    metadata-only edits).  Cosine-threshold NEAR-dup is the downstream
+    """Duplicate groups by DECODED feature equality: two payloads that decode
+    to the same feature are duplicates even if their bytes differ (re-encoded
+    copies, metadata-only edits).  Cosine-threshold NEAR-dup is the downstream
     operators/similarity.py / ivf.py job on the same column; this is the
     exact (cos == 1) channel.
 
@@ -332,18 +294,3 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
         F.lit(4).alias("meta_height"),
         F.lit(None).cast("int").alias("meta_duration_ms"),
     )
-
-
-def synthetic_media(spark, n: int = 64, seed: int = 42, dup_every: int = 8) -> DataFrame:
-    """Deterministic fake media table for tests: every ``dup_every``-th row
-    duplicates row 0's payload (planted exact-dup group)."""
-    rng = np.random.RandomState(seed)
-    base = rng.bytes(256)
-    rows = []
-    for i in range(n):
-        payload = base if i % dup_every == 0 else rng.bytes(256)
-        kind = ("image", "audio", "video")[i % 3]
-        rows.append(
-            (i, kind, f"application/x-{kind}", bytearray(payload), 64, 64, 1000)
-        )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

@@ -103,16 +103,3 @@ def scan_warnings(
             "excluded from content channels"
         )
     return warnings
-
-
-def write_files(df: DataFrame, location: str, table_format: str = "parquet",
-                partition_by: tuple[str, ...] = ("lang",)) -> None:
-    """Write the base relation partitioned by lang (substring-pass locality +
-    partition pruning for lang-filtered scans)."""
-    (
-        validate_files_schema(df)
-        .write.mode("overwrite")
-        .format(table_format)
-        .partitionBy(*partition_by)
-        .save(location)
-    )

@@ -96,15 +96,6 @@ _APPEND_KEYS = {
 }
 
 
-def stream_files(spark: SparkSession, location: str) -> DataFrame:
-    """readStream over the files location (new parquet files = new rows)."""
-    return (
-        spark.readStream.schema(FILES_SCHEMA)
-        .format("parquet")
-        .load(location)
-    )
-
-
 def incremental_dedup_update(
     spark: SparkSession, new_files: DataFrame, checkpoint_dir: str,
     cfg: DedupConfig | None = None, table_format: str = "parquet",
@@ -984,7 +975,6 @@ def incremental_dedup_stream(
     stream_checkpoint: str,
     cfg: DedupConfig | None = None,
     table_format: str = "parquet",
-    trigger_available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Full near-dup incremental dedup as a Structured Streaming query.
@@ -1003,9 +993,8 @@ def incremental_dedup_stream(
     tests/test_streaming.py::test_stream_replay_is_idempotent).
 
     ``max_files_per_trigger`` bounds micro-batch size (admission control for
-    a backlogged source); ``trigger_available_now`` drains the current
-    backlog then stops — the batch-friendly mode the tests and a nightly
-    ingest job use; continuous tail-ingest jobs pass False.
+    a backlogged source).  The availableNow trigger drains the current
+    backlog then stops, as a nightly ingest job runs.
     Returns the started StreamingQuery.
     """
     cfg = cfg or DedupConfig()
@@ -1020,44 +1009,10 @@ def incremental_dedup_stream(
     reader = spark.readStream.schema(FILES_SCHEMA).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (
+    return (
         reader.load(source_location)
         .writeStream.foreachBatch(fold)
         .option("checkpointLocation", stream_checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def incremental_exact_index(
-    spark: SparkSession,
-    source_location: str,
-    index_location: str,
-    checkpoint_location: str,
-    trigger_available_now: bool = True,
-):
-    """Maintain an append-only (content_sha256, file_id, repo, path) index.
-
-    Each micro-batch computes identity columns for the delta only and appends
-    to the index; exact-duplicate groups are then a groupBy over the index —
-    the same computation as operators/exact.py, arriving incrementally.
-    Returns the started StreamingQuery.
-    """
-
-    def upsert(batch: DataFrame, _batch_id: int) -> None:
-        (
-            with_identity(batch)
-            .select("content_sha256", "file_id", "repo", "path")
-            .write.mode("append")
-            .parquet(index_location)
-        )
-
-    writer = (
-        stream_files(spark, source_location)
-        .writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_location)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,18 +1,21 @@
 """List every defaulted parameter under ``cloud_dedup_spark/`` with the
-callers that set it.
+callers that set it, or every public function that no non-test code uses.
 
 For each function parameter with a default value (column-name parameters
 included), the script finds every call to a function of that name in the
 repository's Python files and records which calls pass the parameter, by
 keyword or by position.  A parameter that only tests set is a knob nobody
-uses: make it a module constant instead of adding another.
+uses: make it a module constant instead of adding another.  Likewise a
+public function or class that only tests use is surface nobody reaches:
+delete it, or move it into the tests that use it.
 
 Run from the repository root:
 
-    python scripts/option_audit.py            # parameters no non-test caller sets
-    python scripts/option_audit.py --all      # every parameter, with its callers
+    python scripts/option_audit.py              # parameters no non-test caller sets
+    python scripts/option_audit.py --all        # every parameter, with its callers
+    python scripts/option_audit.py --functions  # public names no non-test code uses
 
-Calls are matched by function name, so two functions of one name share their
+Calls and uses are matched by name, so two functions of one name share their
 callers; ``**kwargs`` forwarding is not followed.
 """
 
@@ -94,11 +97,47 @@ def _is_test(site: str) -> bool:
     return path.startswith("tests/") or Path(path).name.startswith("test_")
 
 
+def unreached_functions() -> list[tuple[str, str]]:
+    """(module, name) of every public top-level function or class under
+    ``cloud_dedup_spark/`` that no file outside tests names (its own
+    definition is not a use)."""
+    used: set[str] = set()
+    for path in _sources(ROOT):
+        if _is_test(str(path.relative_to(ROOT))):
+            continue
+        try:
+            tree = ast.parse(path.read_text())
+        except SyntaxError:
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+    out = []
+    for path in _sources(PACKAGE):
+        mod = str(path.relative_to(ROOT))
+        for node in ast.parse(path.read_text()).body:
+            if (isinstance(node, (ast.FunctionDef, ast.ClassDef))
+                    and not node.name.startswith("_")
+                    and node.name not in used):
+                out.append((mod, node.name))
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--all", action="store_true",
                     help="list every defaulted parameter, not only unset ones")
+    ap.add_argument("--functions", action="store_true",
+                    help="list public functions and classes no non-test code uses")
     args = ap.parse_args()
+    if args.functions:
+        unreached = unreached_functions()
+        for mod, name in unreached:
+            print(f"{mod}\t{name}")
+        print(f"{len(unreached)} public functions have no non-test caller")
+        return
     defs = definitions()
     found = setters(defs)
     rows = []

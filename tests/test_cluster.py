@@ -1,5 +1,5 @@
-"""Connected components (driver union-find and hash-to-min): explicit graphs
-with known components.
+"""Connected components (driver union-find and star contraction): explicit
+graphs with known components.
 
 Analog of the reference's group-building assertions
 (tests/test_cloud_duplicate_analyzer.py:171-243 assert exact group routing)."""
@@ -113,7 +113,7 @@ def _random_graph(seed):
 @pytest.mark.parametrize("shape", ["mixed", "empty"])
 def test_cc_branches_match_reference(spark, monkeypatch, branch, shape):
     """Both plans of connected_components give the reference's labels: the
-    driver union-find below the gate, hash-to-min above it (forced here by
+    driver union-find below the gate, star contraction above it (forced by
     a gate below any edge count; the other branch's kernel is made to fail
     so the test knows which one ran)."""
     import cloud_dedup_spark.operators.cluster as cl
@@ -122,7 +122,7 @@ def test_cc_branches_match_reference(spark, monkeypatch, branch, shape):
         raise AssertionError(f"{branch} branch ran the other kernel")
 
     if branch == "driver":
-        monkeypatch.setattr(cl, "_hash_to_min", must_not_run)
+        monkeypatch.setattr(cl, "_star_contraction", must_not_run)
     else:
         monkeypatch.setattr(cl, "DRIVER_CC_MAX_EDGES", -1)
         monkeypatch.setattr(cl, "_min_labels", must_not_run)
@@ -131,17 +131,33 @@ def test_cc_branches_match_reference(spark, monkeypatch, branch, shape):
 
 
 def test_distributed_cc_labels_a_long_random_path(spark, monkeypatch):
-    """A 150-node path with random ids through the distributed loop: about
-    50 rounds.  Each round's labels are counted into a cache before the
-    lineage cut, so the plan's size estimate does not compound (a
-    checkpoint of the unloaded plan ran out of driver heap on this path)."""
+    """A 1000-node path, a star and a clique, all with random ids, through
+    the distributed loop.  Its rounds grow with log n (a pure-Python model
+    of the loop needs 8 on this path, where a loop whose rounds follow the
+    path's length passes the round bound), and no round adds an edge."""
     import cloud_dedup_spark.operators.cluster as cl
 
     monkeypatch.setattr(cl, "DRIVER_CC_MAX_EDGES", -1)
-    edges = _random_path(random.Random(150), 150)
+    rng = random.Random(1000)
+    edges = _random_path(rng, 1000)
+    hub, *leaves = rng.sample(range(-(2**61), 2**61), 100)
+    edges += [(hub, leaf) for leaf in leaves]
+    clique = rng.sample(range(-(2**61), 2**61), 30)
+    edges += [(a, b) for i, a in enumerate(clique) for b in clique[i + 1:]]
+    counts = []
+    check = cl._star_check
+
+    def counting_check(star):
+        unsettled, n_edges = check(star)
+        counts.append(n_edges)
+        return unsettled, n_edges
+
+    monkeypatch.setattr(cl, "_star_check", counting_check)
     got = _labels(spark, edges)
     assert got == _reference_labels(edges)
-    assert len(set(got.values())) == 1
+    assert len(set(got.values())) == 3
+    assert len(counts) <= 10
+    assert all(b <= a for a, b in zip([len(edges)] + counts, counts))
 
 
 def test_distributed_cc_raises_at_round_bound(spark, monkeypatch):

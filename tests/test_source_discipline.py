@@ -86,3 +86,33 @@ def test_library_env_reads_are_deployment_settings():
         if len(re.findall(r"os\.environ\b|\bgetenv\(", src)) != len(keyed):
             bad.append(f"{path}: an environment read without a literal key")
     assert not bad, f"library environment reads outside the allowed set: {bad}"
+
+
+def test_public_functions_have_a_non_test_caller():
+    """Every public function or class of the library is reached by a query,
+    stage, fold phase, script or benchmark, except the named few that
+    reproduce the reference or check correctness, and the stream front end
+    that is the only path to test stream replay.  A test double belongs in
+    tests/, and a function that only its tests call is surface to delete
+    (``python scripts/option_audit.py --functions`` lists them)."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "option_audit", PKG.parent / "scripts" / "option_audit.py"
+    )
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    allowed = {
+        "html_report.py": {"render_html", "human_size"},  # reference S4, F2
+        "operators/exact.py": {"exact_duplicate_groups"},
+        "operators/metadata.py": {"pair_stats_pivot", "mixed_type_second_pass"},
+        "operators/rollup.py": {"folder_detail_rows"},
+        "plans/pipeline.py": {"invariant_violations"},
+        "streaming/incremental.py": {"incremental_dedup_stream"},
+    }
+    unreached = [
+        f"{mod}: {name}"
+        for mod, name in audit.unreached_functions()
+        if name not in allowed.get(mod.removeprefix("cloud_dedup_spark/"), ())
+    ]
+    assert not unreached, f"public functions only tests reach: {unreached}"

@@ -1,5 +1,4 @@
-"""Sources (schema gate + pushdown filters), streaming incremental ingest,
-and the JSON report."""
+"""Sources (schema gate + pushdown filters) and the JSON report."""
 
 from __future__ import annotations
 
@@ -9,15 +8,21 @@ import os
 import pytest
 
 from cloud_dedup_spark import run_pipeline
-from cloud_dedup_spark.corpus import corpus_df, generate_corpus
+from cloud_dedup_spark.corpus import corpus_df
 from cloud_dedup_spark.report import write_report
 from cloud_dedup_spark.sources.files_source import (
     SchemaMismatch,
     read_files,
     validate_files_schema,
-    write_files,
 )
-from cloud_dedup_spark.streaming.incremental import incremental_exact_index
+
+
+def write_files(df, location: str) -> None:
+    """Write a files relation partitioned by lang, the layout whose lang
+    filter ``read_files`` prunes to."""
+    validate_files_schema(df).write.mode("overwrite").partitionBy("lang").parquet(
+        location
+    )
 
 
 def test_schema_gate(spark):
@@ -41,33 +46,6 @@ def test_roundtrip_with_filters(spark, corpus, tmp_path_factory):
     loc2 = str(tmp_path_factory.mktemp("files_hidden"))
     write_files(hidden, loc2)
     assert read_files(spark, loc2).count() == 1
-
-
-def test_incremental_exact_index(spark, tmp_path_factory):
-    src = str(tmp_path_factory.mktemp("stream_src"))
-    idx = str(tmp_path_factory.mktemp("stream_idx"))
-    ckpt = str(tmp_path_factory.mktemp("stream_ckpt"))
-
-    rows, _ = generate_corpus(60, seed=7)
-    df = spark.createDataFrame(rows)
-    df.limit(30).select("repo", "path", "commit", "lang", "content").write.mode(
-        "append").parquet(src)
-
-    q = incremental_exact_index(spark, src, idx, ckpt)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(idx).count()
-    assert n1 == 30
-
-    # new files arrive → only the delta is processed (same checkpoint)
-    df.limit(60).exceptAll(df.limit(30)).select(
-        "repo", "path", "commit", "lang", "content").write.mode("append").parquet(src)
-    q2 = incremental_exact_index(spark, src, idx, ckpt)
-    q2.awaitTermination(120)
-    n2 = spark.read.parquet(idx).count()
-    assert n2 == 60
-    # index is usable by the exact channel: sha groups align with content
-    idx_df = spark.read.parquet(idx)
-    assert idx_df.select("content_sha256").distinct().count() <= 60
 
 
 def test_report_shape(spark, tmp_path_factory):

@@ -1,16 +1,14 @@
-"""Structured Streaming front-ends (streaming/incremental.py).
+"""The Structured Streaming front end (streaming/incremental.py).
 
 The north_rule's resumability lives in checkpointed stage tables; streaming
 is the *ingest* mode layered on the same batch operators.  These tests pin
-the two readStream entry points end-to-end with availableNow triggers:
+the readStream entry point end-to-end with an availableNow trigger:
 
   * ``incremental_dedup_stream`` — micro-batches fold into dedup state and
     the result equals a full batch recompute over the union;
   * replaying the same source through a fresh stream checkpoint appends
     nothing (the composite-id guard makes the fold idempotent under
-    foreachBatch's at-least-once delivery);
-  * ``incremental_exact_index`` — the append-only sha index reproduces the
-    batch exact-duplicate groups.
+    foreachBatch's at-least-once delivery).
 """
 
 from __future__ import annotations
@@ -19,10 +17,7 @@ import pytest
 
 from cloud_dedup_spark import run_pipeline
 from cloud_dedup_spark.corpus import _Gen, generate_corpus
-from cloud_dedup_spark.streaming.incremental import (
-    incremental_dedup_stream,
-    incremental_exact_index,
-)
+from cloud_dedup_spark.streaming.incremental import incremental_dedup_stream
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 BASE_N = 120
@@ -99,293 +94,3 @@ def test_stream_replay_is_idempotent(spark, streamed):
     assert spark.read.parquet(f"{ckpt}/identity").count() == before_ids
     assert _clusters(
         spark.read.parquet(f"{ckpt}/cluster_labels")) == before_clusters
-
-
-def test_exact_index_stream_matches_batch_groups(spark, tmp_path):
-    from cloud_dedup_spark.functions.normalize import with_identity
-    import pyspark.sql.functions as F
-
-    gen = _Gen(13)
-    dup = gen.body(40)
-    rows = [
-        ("r1", "a.py", "c1", "py", dup),
-        ("r2", "b.py", "c2", "py", dup),
-        ("r1", "c.py", "c3", "py", gen.body(30)),
-    ]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(rows, SCHEMA).write.parquet(src)
-
-    idx_loc = str(tmp_path / "sha_index")
-    q = incremental_exact_index(
-        spark, src, idx_loc, str(tmp_path / "ckpt"))
-    q.awaitTermination(timeout=600)
-
-    idx = spark.read.parquet(idx_loc)
-    assert idx.count() == 3
-    groups = (
-        idx.groupBy("content_sha256").count().filter(F.col("count") > 1)
-    )
-    assert groups.count() == 1
-    # the streamed shas are the batch identity shas (same operator)
-    batch = with_identity(spark.createDataFrame(rows, SCHEMA))
-    assert (
-        set(r["content_sha256"] for r in idx.collect())
-        == set(r["content_sha256"] for r in batch.collect())
-    )
-
-
-def test_stateful_duplicate_counts_cross_batch(spark, tmp_path):
-    """applyInPandasWithState holds per-hash state ACROSS micro-batches: a
-    batch-2 copy of a batch-1 document must report cumulative n_seen=2 with
-    the batch-1 first-seen attribution."""
-    from cloud_dedup_spark.streaming.stateful import streaming_duplicate_counts
-
-    gen = _Gen(55)
-    dup = gen.body(30)
-    src = str(tmp_path / "src")
-    batch1 = [
-        ("r1", "a.py", "c1", "py", dup),
-        ("r1", "b.py", "c2", "py", gen.body(25)),
-    ]
-    batch2 = [
-        ("r2", "copy.py", "c3", "py", dup),
-        ("r2", "fresh.py", "c4", "py", gen.body(28)),
-    ]
-    spark.createDataFrame(batch1, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(batch2, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-
-    counts = streaming_duplicate_counts(
-        spark.readStream.schema(
-            spark.read.parquet(src).schema
-        ).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("dup_counts")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout=600)
-    assert not q.isActive
-
-    rows = spark.sql(
-        "SELECT * FROM dup_counts"
-    ).collect()
-    # update mode appends one row per touched key per batch to the memory
-    # sink; the row with the highest n_seen per hash is the cumulative state
-    # (sink row order across batches is not a contract)
-    latest: dict = {}
-    for r in rows:
-        k = r["content_sha256"]
-        if k not in latest or r["n_seen"] > latest[k]["n_seen"]:
-            latest[k] = r
-    by_first = {
-        (r["first_repo"], r["first_path"]): r["n_seen"]
-        for r in latest.values()
-    }
-    # the duplicated content: seen twice, attributed to its batch-1 location
-    assert by_first[("r1", "a.py")] == 2
-    # singletons: seen once
-    assert by_first[("r1", "b.py")] == 1
-    assert by_first[("r2", "fresh.py")] == 1
-    # the dup hash must have emitted an update in BOTH batches (cross-batch
-    # state, not per-batch counting)
-    dup_rows = [r for r in rows if r["first_path"] == "a.py"]
-    assert sorted(r["n_seen"] for r in dup_rows) == [1, 2]
-
-
-def test_windowed_ingest_profile_watermark_and_late_data(spark, tmp_path):
-    """Watermark + event-time window semantics end-to-end in append mode:
-    a window is emitted exactly once after the watermark passes its end,
-    late-but-within-delay rows merge into their window, and rows later than
-    the watermark delay are dropped."""
-    from pyspark.sql import functions as F
-
-    from cloud_dedup_spark.streaming.windows import windowed_ingest_profile
-
-    gen = _Gen(91)
-    src = str(tmp_path / "src")
-    ts_schema = SCHEMA + ", ingest_ts timestamp"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, ts_schema).coalesce(1).write.mode(
-            "append").parquet(src)
-
-    import datetime
-
-    t0 = datetime.datetime(2026, 1, 1, 10, 0, 0)
-
-    def ts(minutes):
-        return t0 + datetime.timedelta(minutes=minutes)
-
-    def drain():
-        """One availableNow run over the same stream checkpoint: exactly the
-        new files form this run's micro-batch, so watermark progression
-        across write_batch calls is deterministic (a single multi-file run
-        may coalesce files into one batch and never advance the watermark
-        between them)."""
-        profile = windowed_ingest_profile(
-            spark.readStream.schema(
-                spark.read.parquet(src).schema
-            ).parquet(src),
-            ts_col="ingest_ts",
-            window_duration="10 minutes",
-            watermark_delay="1 minute",
-        )
-        q = (
-            profile.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", str(tmp_path / "sink"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout=600)
-        assert not q.isActive
-
-    # batch 1: two files in the 10:00-10:10 window → watermark 10:04
-    write_batch([
-        ("r1", "w/a.py", "c1", "py", gen.body(20), ts(1)),
-        ("r1", "w/b.py", "c2", "py", gen.body(22), ts(5)),
-    ])
-    drain()
-    # batch 2: a late row for that window — 10:07 > watermark 10:04, so it
-    # merges; the 10:31 row then pushes the watermark to 10:30, closing the
-    # 10:00-10:10 window
-    write_batch([
-        ("r2", "w/late_ok.py", "c3", "py", gen.body(24), ts(7)),
-        ("r2", "w/mover.py", "c4", "py", gen.body(26), ts(31)),
-    ])
-    drain()
-    # batch 3: a hopeless straggler at 10:02 (watermark 10:30 → dropped by
-    # contract) plus a far-future row that closes every remaining window
-    write_batch([
-        ("r3", "w/too_late.py", "c5", "py", gen.body(28), ts(2)),
-        ("r3", "w/future.py", "c6", "py", gen.body(30), ts(120)),
-    ])
-    drain()
-
-    rows = spark.read.parquet(str(tmp_path / "sink")).collect()
-    by_window = {
-        (r["window_start"].minute, r["lang"]): r for r in rows
-    }
-    # the 10:00-10:10 window closed with batch-1's rows AND the late-ok row,
-    # but WITHOUT the too-late straggler from batch 3
-    w0 = by_window[(0, "py")]
-    assert w0["n_files"] == 3
-    assert w0["approx_uniq_hashes"] >= 2  # 3 distinct bodies, HLL approx
-    # the mover's 10:30-10:40 window closed via the far-future row
-    assert by_window[(30, "py")]["n_files"] == 1
-    # the future row's own window never closed (watermark stops before it)
-    assert (0, "py") in by_window and len(by_window) == 2
-    # each emitted window appears exactly once (append mode contract)
-    assert len(rows) == len({(r["window_start"], r["lang"]) for r in rows})
-
-
-def test_streaming_sessions_merge_across_batches_and_emit_once(spark, tmp_path):
-    """session_window semantics end-to-end in append mode: a session EXTENDS
-    when a later micro-batch delivers an in-gap event (one emitted row, not
-    two fragments), and emits exactly once after the watermark passes its
-    end (= last event + gap)."""
-    import datetime
-
-    from cloud_dedup_spark.streaming.windows import streaming_sessions
-
-    src = str(tmp_path / "src")
-    ev_schema = ("event_id long, ts timestamp, user_id long, "
-                 "event_type string, value double, props string")
-    t0 = datetime.datetime(2026, 1, 1, 10, 0, 0)
-
-    def ts(minutes):
-        return t0 + datetime.timedelta(minutes=minutes)
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, ev_schema).coalesce(1).write.mode(
-            "append").parquet(src)
-
-    def drain():
-        sessions = streaming_sessions(
-            spark.readStream.schema(
-                spark.read.parquet(src).schema
-            ).parquet(src),
-            gap="5 minutes",
-            watermark_delay="0 seconds",
-        )
-        q = (
-            sessions.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", str(tmp_path / "sink"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout=600)
-        assert not q.isActive
-
-    # batch 1: user 1 opens a session (10:00, 10:02)
-    write_batch([
-        (0, ts(0), 1, "c", 1.0, "{}"),
-        (1, ts(2), 1, "c", 2.0, "{}"),
-    ])
-    drain()
-    # batch 2: an in-gap event for user 1 arrives in a LATER micro-batch
-    # (10:03 < 10:02 + gap) — must merge into the open session, not start a
-    # fragment; a watermark-pusher event opens user 9's session at 11:00
-    write_batch([
-        (2, ts(3), 1, "c", 4.0, "{}"),
-        (3, ts(60), 9, "c", 8.0, "{}"),
-    ])
-    drain()
-    # batch 3: watermark (11:00, from batch 2) now exceeds user 1's session
-    # end (10:03 + 5 min = 10:08) → that session emits this drain
-    write_batch([(4, ts(120), 9, "c", 16.0, "{}")])
-    drain()
-    # batch 4: push the watermark past user 9's sessions to flush them
-    write_batch([(5, ts(180), 9, "c", 32.0, "{}")])
-    drain()
-
-    rows = spark.read.parquet(str(tmp_path / "sink")).collect()
-    u1 = [r for r in rows if r["user_id"] == 1]
-    assert len(u1) == 1  # ONE merged session, emitted exactly once
-    assert u1[0]["n_events"] == 3 and u1[0]["sum_value"] == 7.0
-    assert u1[0]["session_start"] == ts(0)
-    assert u1[0]["session_end"] == ts(8)  # last event 10:03 + 5 min gap
-    # user 9's first two sessions closed; the 13:00 one is still open
-    u9 = sorted(
-        (r["session_start"].hour for r in rows if r["user_id"] == 9)
-    )
-    assert u9 == [11, 12]
-
-
-def test_streaming_sessions_agree_with_batch_sessionize(spark):
-    """Batch/stream parity: the session_window expression on a static frame
-    and the window-function sessionize() compute identical sessions
-    (boundaries, counts, value sums) over the sf0.001 events table."""
-    from pyspark.sql import functions as F
-
-    from cloud_dedup_spark.operators.events import sessionize
-    from cloud_dedup_spark.streaming.windows import streaming_sessions
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    epoch = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
-    sw = streaming_sessions(ev, gap="30 minutes").select(
-        "user_id",
-        F.expr(f"timestampdiff(MICROSECOND, {epoch}, session_start)").alias(
-            "start_us"
-        ),
-        # session_window end = last event + gap
-        (
-            F.expr(f"timestampdiff(MICROSECOND, {epoch}, session_end)")
-            - 1800 * 1_000_000
-        ).alias("end_us"),
-        "n_events",
-        "sum_value",
-    )
-    bt = sessionize(ev, gap_seconds=1800).select(
-        "user_id", "start_us", "end_us", "n_events", "sum_value"
-    )
-    assert sw.count() == bt.count()
-    assert sw.exceptAll(bt).count() == 0
-    assert bt.exceptAll(sw).count() == 0

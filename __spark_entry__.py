@@ -341,11 +341,8 @@ def q_media_near_pairs(spark, sf_dir):
     media = documents_as_media(_docs_with_planted(spark, sf_dir))
     feats = extract_features(media, PnmWavDecoder()).filter(
         F.col("feature").isNotNull()
-    )
-    return cosine_near_pairs_lsh(
-        feats, threshold=0.999, target_recall=0.99,
-        id_col="media_id", vec_col="feature",
-    )
+    ).select(F.col("media_id").alias("vec_id"), F.col("feature").alias("embedding"))
+    return cosine_near_pairs_lsh(feats, threshold=0.999, target_recall=0.99)
 
 
 def q_user_sessions(spark, sf_dir):
@@ -511,13 +508,12 @@ def q_emb_near_pairs_ivf(spark, sf_dir):
     the persisted coarse quantizer; n_cells derives from the corpus (√N
     rule), n_assign scales with it so the probed fraction of the space stays
     ~constant.  Measured (round-5, sf0.01, threshold 0.4): n_assign=4/22
-    recovers 55/59 exact pairs; the new MULTI-PROBE path (single-assignment
-    + probe map, ivf_near_pairs nprobe) measured 28-47/59 even at
-    nprobe=12/22 — at this LOW threshold (cos 0.4 ≈ 66°) pairs straddle cell
-    boundaries and only double-sided expansion (n_assign) covers them, so
-    multi-probe stays the HIGH-threshold / top-k lever (where ann_topk_ivf
-    uses it) and this query keeps the measured-better n_assign blocking.
-    Non-SQL (seeded k-means) → rows-only driver check."""
+    recovers 55/59 exact pairs, where a single-assignment multi-probe
+    variant (since removed) found 28-47/59 even at nprobe=12/22: at this LOW
+    threshold (cos 0.4 ≈ 66°) pairs straddle cell boundaries and only
+    double-sided assignment covers them.  Probing stays the top-k lever
+    (``ivf_topk``'s nprobe, used by ann_topk_ivf).  Non-SQL (seeded
+    k-means) → rows-only driver check."""
     from cloud_dedup_spark.operators.ivf import ivf_near_pairs
 
     emb = _t(spark, sf_dir, "embeddings")

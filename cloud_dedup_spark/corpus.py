@@ -38,7 +38,6 @@ _IDENT_STEMS = (
     "buffer", "cursor", "offset", "window", "bucket", "stride", "chunk",
     "token", "record", "column", "schema", "vector", "matrix", "graph",
 )
-_KEYWORDS = ("def", "return", "if", "else", "for", "while", "import", "class")
 
 LICENSE_HEADER = "\n".join(
     [

@@ -136,9 +136,9 @@ def doc_fingerprint(col: Column | str) -> Column:
     return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
 
 
-def text_profile(df, text_col: str = "text"):
-    """Attach all text-analysis columns at once."""
-    c = F.col(text_col)
+def text_profile(df):
+    """Attach all text-analysis columns of the ``text`` column at once."""
+    c = F.col("text")
     return (
         df.withColumn("n_tokens", token_count(c))
         .withColumn("n_subwords", subword_count(c))

@@ -43,11 +43,6 @@ from pyspark.sql import functions as F
 
 from cloud_dedup_spark.config import DedupConfig
 
-# consecutive-neighbour chain: size-1 edges keeping the group connected
-_CHAIN = (
-    "transform(slice(ids, 1, size(ids) - 1), (x, i) -> "
-    "struct(x AS src, ids[i + 1] AS dst))"
-)
 # star over the first-in-order representative + consecutive chain:
 # 2(size-1)-1 edges (the chain's first edge duplicates a star edge and is
 # skipped — the count the linearity test pins).
@@ -58,8 +53,8 @@ _CHAIN = (
 # adversarial orderings: the star bridges chain gaps (rep reaches past x) and
 # the chain bridges a bad rep (members still link consecutively).  Still
 # O(size) edges, every edge still exact-verified downstream.
-# (slice() is 1-based, the [] subscript is 0-based — same convention as
-# _CHAIN above; the chain part skips its first edge, which the star covers)
+# (slice() is 1-based, the [] subscript is 0-based; the chain part skips
+# its first edge, which the star covers)
 _STAR_AND_CHAIN = (
     "concat("
     "transform(slice(ids, 2, size(ids) - 1), y -> struct(ids[0] AS src, y AS dst)), "
@@ -107,21 +102,20 @@ def _pairs_from_buckets(buckets: DataFrame, expr: str) -> DataFrame:
 
 
 def lsh_candidate_pairs(
-    sigs: DataFrame, cfg: DedupConfig, bands: DataFrame | None = None
+    sigs: DataFrame, cfg: DedupConfig, bands: DataFrame
 ) -> DataFrame:
     """Candidate edges (src < dst), deduplicated across bands.
 
     Output: ``src, dst`` (file_id pairs).  Downstream verification joins the
     signature table to score them (operators/verify.py).
 
-    ``bands``: optional pre-materialized (file_id, band_key) frame.  This
+    ``bands``: the ``explode_bands(sigs)`` (file_id, band_key) frame.  This
     stage reads the band list twice (bucket-size pass + bucket-build pass);
     when the caller checkpoints the narrow exploded frame (pipeline.py), both
     passes scan 16 B/row instead of re-deserializing the wide signature rows
-    (shingle arrays dominate those) and re-running the explode.
+    (shingle arrays dominate those) and re-running the explode.  ``sigs``
+    supplies only the SimHash that orders hot buckets.
     """
-    if bands is None:
-        bands = explode_bands(sigs)
     cap = cfg.band_bucket_cap
 
     # hot-key list is tiny (heavy-hitter distribution) → broadcast it

@@ -225,8 +225,7 @@ def cluster_summary(assignments: DataFrame) -> DataFrame:
     review).  ``repos`` is a distinct-set column (bounded by repo count, not
     file count) so rollups never need the full member list.
     """
-    if "quarantined" in assignments.columns:
-        assignments = assignments.filter(~F.col("quarantined"))
+    assignments = assignments.filter(~F.col("quarantined"))
     w = Window.partitionBy("cluster_id").orderBy("repo", "path")
     capped = assignments.withColumn("_rn", F.row_number().over(w))
     return (

@@ -37,14 +37,15 @@ from cloud_dedup_spark.operators.substring import (
 )
 
 _BENCH_REPO = "\x00benchmark"  # NUL prefix: no real source name can collide
+# the probe set of ``benchmark_snippets``: every 29th doc, tokens 5..28
+SNIPPET_EVERY, SNIPPET_START, SNIPPET_TOKENS = 29, 5, 24
 
 
-def benchmark_snippets(
-    docs: DataFrame, every: int = 29, start: int = 5, n_tokens: int = 24
-) -> DataFrame:
-    """Deterministic probe set: a contiguous ``n_tokens``-token slice
-    (whitespace tokens of the lowercased text, from position ``start``) of
-    every ``every``-th document.  Output: (bench_id, snippet).
+def benchmark_snippets(docs: DataFrame) -> DataFrame:
+    """Deterministic probe set: a contiguous ``SNIPPET_TOKENS``-token slice
+    (whitespace tokens of the lowercased text, from position
+    ``SNIPPET_START``) of every ``SNIPPET_EVERY``-th document.  Output:
+    (bench_id, snippet).
 
     Pure Column arithmetic so the DuckDB oracle builds the IDENTICAL snippet
     set — the driver gate then checks the full detection pipeline, not the
@@ -54,12 +55,14 @@ def benchmark_snippets(
     toks = F.split(F.lower(F.trim("text")), r"\s+")
     return (
         docs.filter(F.col("text").isNotNull())
-        .filter(F.col("doc_id") % every == 0)
+        .filter(F.col("doc_id") % SNIPPET_EVERY == 0)
         .select("doc_id", toks.alias("toks"))
-        .filter(F.size("toks") >= start + n_tokens + 4)
+        .filter(F.size("toks") >= SNIPPET_START + SNIPPET_TOKENS + 4)
         .select(
             F.col("doc_id").alias("bench_id"),
-            F.array_join(F.slice("toks", start, n_tokens), " ").alias("snippet"),
+            F.array_join(
+                F.slice("toks", SNIPPET_START, SNIPPET_TOKENS), " "
+            ).alias("snippet"),
         )
     )
 

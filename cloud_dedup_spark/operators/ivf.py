@@ -1,9 +1,9 @@
 """IVF (inverted-file) approximate nearest neighbour: k-means coarse
 quantizer + nprobe cell search.
 
-The 100 TB ANN path past single-table hyperplane LSH (ROADMAP item 5): the
-corpus is partitioned by nearest coarse centroid, a query scores exact cosine
-against only the ``nprobe`` nearest cells instead of the whole table.  The
+The 100 TB ANN path past single-table hyperplane LSH: the corpus is
+partitioned by nearest coarse centroid, a query scores exact cosine against
+only the ``nprobe`` nearest cells instead of the whole table.  The
 reference engine has no ANN analog (it is a filesystem dedup tool); this
 operator exists for the training-data-pipeline surface the brief demands,
 next to ``similarity.brute_force_topk`` (the exactness oracle) and
@@ -43,9 +43,7 @@ KMEANS_SEED = 42
 KMEANS_MAX_ITER = 20
 
 
-def fit_centroids(
-    emb: DataFrame, n_cells: int, seed: int = KMEANS_SEED, vec_col: str = "embedding"
-) -> np.ndarray:
+def fit_centroids(emb: DataFrame, n_cells: int, seed: int = KMEANS_SEED) -> np.ndarray:
     """Fit the coarse quantizer; returns the (n_cells, dim) centroid matrix.
 
     Distributed Spark ML KMeans on unit-normalized vectors.  At 10^9+ rows
@@ -59,7 +57,7 @@ def fit_centroids(
     # sphere — the space assign-time cosine lives in — not raw euclidean
     # space, or the cosine-neighbourhood validity argument only holds for
     # corpora already near unit norm
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     norm = F.sqrt(
         F.aggregate(dbl, F.lit(0.0), lambda acc, x: acc + x * x)
     )
@@ -114,7 +112,6 @@ def fit_or_load_centroids(
     n_cells: int,
     path: str,
     seed: int = KMEANS_SEED,
-    vec_col: str = "embedding",
 ) -> np.ndarray:
     """Load the quantizer if the stage table exists, else fit + persist it.
 
@@ -138,7 +135,7 @@ def fit_or_load_centroids(
         loaded = load_centroids(spark, path)
         if loaded.shape[0] == n_cells:
             return loaded
-    centroids = fit_centroids(emb, n_cells, seed=seed, vec_col=vec_col)
+    centroids = fit_centroids(emb, n_cells, seed=seed)
     save_centroids(spark, centroids, path)
     return centroids
 
@@ -177,11 +174,9 @@ def ivf_near_pairs(
     n_cells: int = 16,
     n_assign: int = 2,
     centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-blocked near pairs: candidates share a coarse cell, then exact
-    cosine re-scoring (ROADMAP 8 — the near-pair analog of ``ivf_topk``).
+    cosine re-scoring (the near-pair analog of ``ivf_topk``).
 
     The third scale path next to the exact ``similarity.cosine_near_pairs``
     oracle and the hash-blocked ``cosine_near_pairs_lsh``: on CLUSTERED
@@ -194,14 +189,12 @@ def ivf_near_pairs(
     the cells overlap, and n_assign == n_cells degenerates to the exact
     all-pairs result (pinned in tests/test_similarity.py).
     """
-    _require_integral_ids(emb, id_col)
+    _require_integral_ids(emb)
     if centroids is None:
-        centroids = fit_centroids(emb, n_cells, vec_col=vec_col)
+        centroids = fit_centroids(emb, n_cells)
     assign = cell_assign_udf(centroids, n_assign=n_assign)
-    keyed = _keyed(emb, assign(F.col(vec_col)), "cell", id_col)
-    return _score_blocked(
-        emb, _key_sharing_pairs(keyed, "cell"), threshold, id_col, vec_col
-    )
+    keyed = _keyed(emb, assign(F.col("embedding")), "cell")
+    return _score_blocked(emb, _key_sharing_pairs(keyed, "cell"), threshold)
 
 
 def ivf_topk(
@@ -211,8 +204,6 @@ def ivf_topk(
     n_cells: int = 16,
     nprobe: int = 4,
     centroids: np.ndarray | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k: exact cosine, but only against the query's nprobe cells.
 
@@ -223,18 +214,18 @@ def ivf_topk(
     reusing a checkpointed quantizer across incremental runs).
     """
     if centroids is None:
-        centroids = fit_centroids(emb, n_cells, vec_col=vec_col)
+        centroids = fit_centroids(emb, n_cells)
     corpus_cell = cell_assign_udf(centroids, n_assign=1)
     query_cells = cell_assign_udf(centroids, n_assign=nprobe)
 
     c = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.element_at(corpus_cell(F.col(vec_col)), 1).alias("cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.element_at(corpus_cell(F.col("embedding")), 1).alias("cell"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(query_cells(F.col(vec_col))).alias("cell"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.explode(query_cells(F.col("embedding"))).alias("cell"),
     )
     return _rank_topk(q.join(c, "cell"), k)

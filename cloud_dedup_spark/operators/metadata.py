@@ -42,11 +42,7 @@ _VERSION_RANK = (
 )
 
 
-def classify_pair_columns(
-    cfg: MetaConfig | None = None,
-    a: str = "a",
-    b: str = "b",
-) -> tuple[Column, Column]:
+def classify_pair_columns(cfg: MetaConfig | None = None) -> tuple[Column, Column]:
     """(content_match, version_status) for a joined pair row.
 
     Expects struct columns ``a`` and ``b`` with fields: size, mtime,
@@ -56,7 +52,7 @@ def classify_pair_columns(
     → hash-failure → md5 compare.
     """
     cfg = cfg or MetaConfig()
-    A, B = F.col(a), F.col(b)
+    A, B = F.col("a"), F.col("b")
     within_fuzz = F.abs(A["mtime"] - B["mtime"]) <= F.lit(cfg.mtime_fuzz)
     by_mtime = F.when(within_fuzz, F.lit("same")).otherwise(F.lit("diverged"))
     md5_failed = (A["content_md5"] == "") | (B["content_md5"] == "")

@@ -25,13 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_folder_name(files: DataFrame, path_col: str = "path") -> DataFrame:
-    """Add ``folder`` (dirname, '' at root) and ``name`` (lowercased basename).
+def with_folder_name(files: DataFrame) -> DataFrame:
+    """Add ``folder`` (dirname of ``path``, '' at root) and ``name``
+    (lowercased basename).
 
     Reference: rel_path → folder/name derivation (:151, :163, :176-182) with
     the case-insensitive name normalization (:177).
     """
-    parts = F.split(F.col(path_col), "/")
+    parts = F.split(F.col("path"), "/")
     return files.withColumn(
         "folder", F.array_join(F.slice(parts, 1, F.size(parts) - 1), "/")
     ).withColumn("name", F.lower(F.element_at(parts, -1)))
@@ -273,7 +274,9 @@ def safe_dedup_roots(rollup: DataFrame) -> DataFrame:
 def pairwise_repo_counts(clusters: DataFrame) -> DataFrame:
     """Per repo pair: number of clusters containing both repos (A4, :525-530).
 
-    Input: cluster_summary output (cluster_id, members array of (repo, path)).
+    Input: cluster_summary output; its ``repos`` set (bounded by repo count)
+    is read, never the member list, which is capped and would under-count
+    mega-clusters.
     """
     repo_pairs = F.expr(
         """
@@ -282,18 +285,8 @@ def pairwise_repo_counts(clusters: DataFrame) -> DataFrame:
             struct(x AS repo_a, y AS repo_b))))
         """
     )
-    # cluster_summary's dedicated repos set (bounded by repo count) — never
-    # the member list, which is capped and would under-count mega-clusters
-    repos_col = (
-        F.col("repos")
-        if "repos" in clusters.columns
-        else F.sort_array(
-            F.array_distinct(F.transform(F.col("members"), lambda m: m["repo"]))
-        )
-    )
     return (
-        clusters.select("cluster_id", repos_col.alias("repos"))
-        .select("cluster_id", F.explode(repo_pairs).alias("p"))
+        clusters.select("cluster_id", F.explode(repo_pairs).alias("p"))
         .groupBy(F.col("p.repo_a").alias("repo_a"), F.col("p.repo_b").alias("repo_b"))
         .agg(F.count(F.lit(1)).alias("n_clusters"))
     )
@@ -308,20 +301,16 @@ def unique_file_counts(assignments: DataFrame) -> DataFrame:
     structurally disjoint from graph cluster ids, so a label match against a
     real cluster would wrongly demote the quarantined file from unique.
     """
-    clean = assignments
-    quarantined = None
-    if "quarantined" in assignments.columns:
-        clean = assignments.filter(~F.col("quarantined"))
-        quarantined = assignments.filter(F.col("quarantined"))
+    clean = assignments.filter(~F.col("quarantined"))
     multi = (
         clean.groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
         .select("cluster_id")
     )
-    uniques = clean.join(multi, "cluster_id", "left_anti").select("repo")
-    if quarantined is not None:
-        uniques = uniques.unionByName(quarantined.select("repo"))
+    uniques = clean.join(multi, "cluster_id", "left_anti").select("repo").unionByName(
+        assignments.filter(F.col("quarantined")).select("repo")
+    )
     return uniques.groupBy("repo").agg(F.count(F.lit(1)).alias("n_unique_files"))
 
 

@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding frames of one shape, ``(vec_id,
+embedding array<float>)``; a caller with other column names projects first.
 
 Brute-force cosine top-k as the exactness baseline, plus hyperplane-LSH and
 IVF (operators/ivf.py) blocked variants as the scale paths — the ANN analog
@@ -95,13 +96,7 @@ def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
-def brute_force_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact cosine top-k neighbours for each query vector.
 
     ``queries`` is expected to be small → broadcast; the corpus side streams.
@@ -109,30 +104,27 @@ def brute_force_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         )
     )
-    c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    c = emb.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
+    )
     return _rank_topk(q.crossJoin(c), k)
 
 
-def _require_integral_ids(emb: DataFrame, id_col: str) -> None:
+def _require_integral_ids(emb: DataFrame) -> None:
     """The near-pair scorer emits ``long`` ids; anything else would only
     fail inside a Python worker at action time.  Reads the schema — no job."""
-    if not isinstance(emb.schema[id_col].dataType, IntegralType):
+    id_type = emb.schema["vec_id"].dataType
+    if not isinstance(id_type, IntegralType):
         raise ValueError(
-            f"near-pair id column {id_col!r} must be an integer type, got "
-            f"{emb.schema[id_col].dataType.simpleString()}"
+            "near-pair id column 'vec_id' must be an integer type, got "
+            f"{id_type.simpleString()}"
         )
 
 
-def _score_blocked(
-    emb: DataFrame,
-    cand: DataFrame | None,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _score_blocked(emb: DataFrame, cand: DataFrame | None, threshold: float) -> DataFrame:
     """Exact 4dp cosine near pairs (id_a < id_b, score), blocked.
 
     Vectors are packed into ~``BLOCK_SIZE``-row hash blocks, so each vector
@@ -151,7 +143,7 @@ def _score_blocked(
     round(4dp)-then-filter stays JVM-side, so results equal the unblocked
     ``cosine_udf`` crossJoin exactly (pinned in tests/test_similarity.py).
     """
-    n = emb.select(id_col).count()
+    n = emb.select("vec_id").count()
     n_blocks = max(1, math.ceil(n / BLOCK_SIZE))
 
     def _gid(c):
@@ -159,9 +151,9 @@ def _score_blocked(
 
     packed = (
         emb.select(
-            _gid(id_col).alias("gid"),
+            _gid("vec_id").alias("gid"),
             F.struct(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+                F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
             ).alias("item"),
         )
         .groupBy("gid")
@@ -261,20 +253,15 @@ def _score_blocked(
     )
 
 
-def cosine_near_pairs(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_near_pairs(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
     """All pairs (a < b) with cosine ≥ threshold — embedding near-dup channel.
 
     The exact twin of the LSH/IVF scale paths: ``_score_blocked`` over every
     block pair.  Each vector crosses the Python boundary ~N/BLOCK_SIZE times
     instead of N times, with results identical to the pair-row crossJoin.
     """
-    _require_integral_ids(emb, id_col)
-    return _score_blocked(emb, None, threshold, id_col, vec_col)
+    _require_integral_ids(emb)
+    return _score_blocked(emb, None, threshold)
 
 
 def _planes(state: dict, dim: int, n: int) -> np.ndarray:
@@ -360,14 +347,14 @@ def hyperplane_band_keys_udf(n_bands: int, rows_per_band: int):
     return band_keys
 
 
-def _keyed(emb: DataFrame, keys: F.Column, key: str, id_col: str) -> DataFrame:
+def _keyed(emb: DataFrame, keys: F.Column, key: str) -> DataFrame:
     """(vid, key) rows, one per blocking key of each vector, materialized.
 
     The cut matters: the keyed frame feeds BOTH sides of the self-join, and
     uncut each subtree re-runs the full-corpus key UDF (2-3× the projection
     work per call — round-4 review).  Narrow rows: cheap to store."""
     return emb.select(
-        F.col(id_col).alias("vid"), F.explode(keys).alias(key)
+        F.col("vec_id").alias("vid"), F.explode(keys).alias(key)
     ).localCheckpoint()
 
 
@@ -386,8 +373,6 @@ def cosine_near_pairs_lsh(
     emb: DataFrame,
     threshold: float = 0.95,
     target_recall: float = 0.98,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """LSH-blocked near pairs: multi-band hyperplane buckets → exact cosine.
 
@@ -398,13 +383,11 @@ def cosine_near_pairs_lsh(
     and recall follows the banded-LSH model in ``lsh_band_params`` (pinned
     ≥ 0.95 vs the exact twin in tests/test_similarity.py).
     """
-    _require_integral_ids(emb, id_col)
+    _require_integral_ids(emb)
     rows_per_band, n_bands = lsh_band_params(threshold, target_recall)
     keys = hyperplane_band_keys_udf(n_bands, rows_per_band)
-    keyed = _keyed(emb, keys(F.col(vec_col)), "band_key", id_col)
-    return _score_blocked(
-        emb, _key_sharing_pairs(keyed, "band_key"), threshold, id_col, vec_col
-    )
+    keyed = _keyed(emb, keys(F.col("embedding")), "band_key")
+    return _score_blocked(emb, _key_sharing_pairs(keyed, "band_key"), threshold)
 
 
 def lsh_bucketed_topk(
@@ -412,8 +395,6 @@ def lsh_bucketed_topk(
     queries: DataFrame,
     k: int = 5,
     n_planes: int = 12,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: exact cosine but only within the query's LSH bucket.
 
@@ -422,13 +403,13 @@ def lsh_bucketed_topk(
     """
     sig = hyperplane_signature_udf(n_planes)
     emb_b = emb.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        sig(F.col(vec_col)).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        sig(F.col("embedding")).alias("bucket"),
     )
     q_b = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        sig(F.col(vec_col)).alias("bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        sig(F.col("embedding")).alias("bucket"),
     )
     return _rank_topk(q_b.join(emb_b, "bucket"), k)

@@ -150,21 +150,20 @@ def substring_edges(
     ``cand_anchors``: optional prebuilt :func:`candidate_anchors` frame (the
     persisted ``anchors`` stage table) replacing the needle-side explode.
     CONTRACT: only pass it together with a SMALL (delta-sized) haystack side.
-    ``df_index``: optional FULL-corpus inverted index used only for anchor
-    doc-frequencies.  Without it, frequencies come from ``inverted`` (the
-    probe target) — correct for the batch path where the two coincide, but
-    in the reverse incremental call ``inverted`` is the delta's index and
-    delta-local df defeats the template cap: a boilerplate shingle looks
-    rare in a 6-doc delta, every prior anchor carrying it survives, and the
-    rarest-anchor argmin becomes an O(corpus) groupBy.  With ``df_index``
-    the cap uses true corpus df (batch semantics) and prunes template
+    ``df_index``: the FULL-corpus inverted index, required with
+    ``cand_anchors`` and used only for anchor doc-frequencies.  There
+    ``inverted`` is the delta's index, and delta-local df would defeat the
+    template cap: a boilerplate shingle looks rare in a 6-doc delta, every
+    prior anchor carrying it survives, and the rarest-anchor argmin becomes
+    an O(corpus) groupBy.  Corpus df (batch semantics) prunes template
     anchors BEFORE the argmin, bounding it to |delta shingles| × cap rows.
     Output: src, dst, needle_len (tokens), where needle content appears
     verbatim inside haystack content.
     """
-    assert not (cand_anchors is not None and needle_ids is not None), (
-        "cand_anchors replaces the needle side; restrict needles by "
-        "pre-filtering the anchors frame instead"
+    assert cand_anchors is None or (needle_ids is None and df_index is not None), (
+        "cand_anchors replaces the needle side (restrict needles by "
+        "pre-filtering the anchors frame instead) and needs the full-corpus "
+        "df_index"
     )
     # delta mode: at least one side is delta-anchored, so every candidate
     # id-set below is small — semi-filter the corpus-sized frames through
@@ -207,10 +206,10 @@ def substring_edges(
             .agg(F.count(F.lit(1)).alias("df"))
         )
     else:
-        # prebuilt (persisted) anchors: frequencies must come from the FULL
-        # index (df_index) when one is supplied — ``inverted`` here is the
-        # delta's index and delta-local df defeats the template cap (see
-        # the df_index contract above).  Only shingle values present in the
+        # prebuilt (persisted) anchors: frequencies come from the FULL
+        # index (df_index) — ``inverted`` here is the delta's index and
+        # delta-local df defeats the template cap (see the df_index
+        # contract above).  Only shingle values present in the
         # delta index matter (anchors on other values can never probe it),
         # so the corpus index is scanned through a broadcast semi-filter on
         # that tiny value set and the count is map-side combinable — no
@@ -219,9 +218,8 @@ def substring_edges(
             F.col("needle_tokens") >= cfg.substring_min_tokens
         )
         probe_sh = inverted.select("sh").distinct()
-        freq_src = df_index if df_index is not None else inverted
         doc_freq = (
-            freq_src.join(F.broadcast(probe_sh), "sh", "left_semi")
+            df_index.join(F.broadcast(probe_sh), "sh", "left_semi")
             .groupBy("sh")
             .agg(F.count(F.lit(1)).alias("df"))
         )

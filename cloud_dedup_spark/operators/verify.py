@@ -74,17 +74,16 @@ def verify_pairs(
         # first).  Measure the true weight cheaply — sum(n_shingles) over
         # the paired ids, narrow columns only — and demote to the AQE
         # shuffled plan when the slice is heavy (round-4 review).
-        if "n_shingles" in sigs.columns:
-            weight = (
-                sigs.select("file_id", "n_shingles")
-                .join(paired_ids, "file_id", "left_semi")
-                .agg(F.sum("n_shingles"))
-                .first()[0]
-                or 0
-            )
-            # int32 shingles: 64M ≈ 256 MB serialized — comfortably inside
-            # the driver and executor copies at default headroom
-            small_pairs = weight <= 64_000_000
+        weight = (
+            sigs.select("file_id", "n_shingles")
+            .join(paired_ids, "file_id", "left_semi")
+            .agg(F.sum("n_shingles"))
+            .first()[0]
+            or 0
+        )
+        # int32 shingles: 64M ≈ 256 MB serialized — comfortably inside
+        # the driver and executor copies at default headroom
+        small_pairs = weight <= 64_000_000
     side = sigs.select("file_id", "shingles", "simhash").join(
         paired_ids, "file_id", "left_semi"
     )

@@ -244,14 +244,13 @@ def run_pipeline(
     # graph stages, so a birthday collision (E ≈ 27k pairs at 10^12 files)
     # can never silently merge two unrelated files into one cluster node.
     # Quarantined files re-enter the output as flagged singletons.
-    _, quarantined_split = quarantine_id_collisions(identity)
     # quarantine is PERSISTED state (round-4): the incremental fold's
     # collision check is delta-anchored — it inspects only identity rows
     # sharing a delta file_id — which is sound only if every collision among
     # prior rows is already on record.  This table is that record (tiny by
     # construction: E ≈ 27k colliding pairs at 10^12 files, so it broadcasts
     # everywhere it is used).
-    quarantined = stage("quarantine", lambda: quarantined_split)
+    quarantined = stage("quarantine", lambda: quarantine_id_collisions(identity))
     # clean identity derives from the MATERIALIZED quarantine table, not the
     # detection lineage: embedding quarantine_id_collisions' full-table
     # groupBy in clean_identity's plan re-ran the collision shuffle inside
@@ -411,10 +410,8 @@ def with_quarantine_labels(clean: DataFrame, quarantined: DataFrame) -> DataFram
     )
 
 
-def quarantine_id_collisions(
-    identity: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Split the identity frame into (clean, quarantined) on file_id collisions.
+def quarantine_id_collisions(identity: DataFrame) -> DataFrame:
+    """The identity rows to quarantine: those whose file_id collides.
 
     A collision = one ``file_id`` carried by more than one distinct natural
     key, detected via the second independent hash column ``file_id2``
@@ -422,7 +419,8 @@ def quarantine_id_collisions(
     collision needs both hashes to collide (P ≈ 2^-128 per pair; expected
     ~10^-14 events at 10^12 files).  The check is one narrow groupBy over two
     long columns.  Quarantining (not failing) keeps the run deterministic and
-    incremental-safe: the colliding files simply never enter the edge graph.
+    incremental-safe: the colliding files simply never enter the edge graph
+    (callers anti-join the persisted result to get the clean rows).
     """
     collided = (
         identity.groupBy("file_id")
@@ -430,9 +428,7 @@ def quarantine_id_collisions(
         .filter(F.col("_n2") > 1)
         .select("file_id")
     )
-    clean = identity.join(collided, "file_id", "left_anti")
-    quarantined = identity.join(collided, "file_id", "left_semi")
-    return clean, quarantined
+    return identity.join(collided, "file_id", "left_semi")
 
 
 def invariant_violations(identity: DataFrame, files: DataFrame) -> DataFrame:

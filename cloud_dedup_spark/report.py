@@ -121,9 +121,8 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
         "pairwise": pairwise_repo_counts(clusters),
         "uniques": unique_file_counts(assignments),
         "rel_hist": relationship_histogram(fc),
+        "quarantined": count_by(assignments, "quarantined"),
     }
-    if "quarantined" in assignments.columns:
-        sections["quarantined"] = count_by(assignments, "quarantined")
     tagged = reduce(DataFrame.unionByName, [
         df.select(
             F.lit(tag).alias("tag"),
@@ -143,7 +142,7 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
     per_repo = keyed("per_repo")
     cluster_hist = keyed("cluster_hist", int)
     pairwise = keyed("pairwise", lambda a, b: f"{a}+{b}")
-    n_quarantined = scalars.get("quarantined", {}).get(("true",), 0)
+    n_quarantined = scalars["quarantined"].get(("true",), 0)
     roots = [r["folder"] for r in
              safe_dedup_roots(subtree_rollup(fc)).orderBy("folder").collect()]
 
@@ -154,11 +153,7 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
     # quarantined singletons never join a drill-down group: their file_id2
     # labels are not structurally disjoint from graph cluster ids, so a
     # label collision would alias them into a real group's member list
-    drill = (
-        assignments.filter(~F.col("quarantined"))
-        if "quarantined" in assignments.columns
-        else assignments
-    )
+    drill = assignments.filter(~F.col("quarantined"))
     # per-group member arrays are capped like cluster_summary's: the LIMIT
     # bounds how many groups reach the driver, but an uncapped collect_list
     # still buffered a mega-cluster's millions of members in one aggregation

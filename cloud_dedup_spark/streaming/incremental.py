@@ -325,7 +325,7 @@ def _quarantine(prior: dict, delta_identity: DataFrame) -> _Quarantine:
     slice_union = prior_slice.select(*meta_cols).unionByName(
         delta_identity.select(*meta_cols)
     )
-    _, slice_q = quarantine_id_collisions(slice_union)
+    slice_q = quarantine_id_collisions(slice_union)
     prior_quarantine = prior["quarantine"]
     new_q_rows = slice_q.join(
         prior_quarantine.select("file_id", "file_id2"), ["file_id", "file_id2"],

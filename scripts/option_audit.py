@@ -16,7 +16,11 @@ Run from the repository root:
     python scripts/option_audit.py --functions  # public names no non-test code uses
 
 Calls and uses are matched by name, so two functions of one name share their
-callers; ``**kwargs`` forwarding is not followed.
+callers; ``**kwargs`` forwarding is not followed.  Besides direct calls, a
+call counts when it is deferred: ``pool.submit(fn, ...)``, or a tuple literal
+led by a function name, ``(fn, ...)``, as task lists unpacked into
+``submit(*t)`` are built.  A class call ``Cls(...)`` sets the parameters of
+``Cls.__init__``, listed under the class name.
 """
 
 from __future__ import annotations
@@ -49,20 +53,47 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None, str]]:
     return out
 
 
-def definitions() -> dict[str, list[tuple[str, str, int | None, str, bool]]]:
-    """function name → [(module, param, position, default, is_method)]."""
+def definitions() -> dict[str, list[tuple[str, str, int | None, str, str]]]:
+    """callable name → [(module, param, position, default, self_arg)].
+
+    ``self_arg`` says when a call skips the first positional parameter:
+    "bound" for a method (when called as ``obj.name(...)``), "always" for a
+    class's ``__init__`` (registered under the class name), "" otherwise."""
     defs: dict[str, list] = defaultdict(list)
     for path in _sources(PACKAGE):
         tree = ast.parse(path.read_text())
         mod = str(path.relative_to(ROOT))
         for node in tree.body:
-            fns = [(node, False)] if isinstance(node, ast.FunctionDef) else []
+            fns = [(node, node.name, "")] if isinstance(node, ast.FunctionDef) else []
             if isinstance(node, ast.ClassDef):
-                fns = [(n, True) for n in node.body if isinstance(n, ast.FunctionDef)]
-            for fn, is_method in fns:
+                fns = [
+                    (n, node.name, "always") if n.name == "__init__"
+                    else (n, n.name, "bound")
+                    for n in node.body if isinstance(n, ast.FunctionDef)
+                ]
+            for fn, key, self_arg in fns:
                 for name, idx, default in _defaulted(fn):
-                    defs[fn.name].append((mod, name, idx, default, is_method))
+                    defs[key].append((mod, name, idx, default, self_arg))
     return defs
+
+
+def _name(node: ast.expr) -> str | None:
+    return node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
+
+
+def _calls(tree: ast.AST, defs):
+    """(lineno, callee expr, positional args, keyword names) per call,
+    direct or deferred (a tuple counts only when led by a defined name)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            yield node.lineno, node.func, node.args, [k.arg for k in node.keywords]
+            if _name(node.func) == "submit" and node.args:
+                yield (node.lineno, node.args[0], node.args[1:],
+                       [k.arg for k in node.keywords])
+        elif (isinstance(node, ast.Tuple) and node.elts
+              and isinstance(node.elts[0], ast.Name)
+              and node.elts[0].id in defs):
+            yield node.lineno, node.elts[0], node.elts[1:], []
 
 
 def setters(defs) -> dict[tuple[str, str], set[str]]:
@@ -74,22 +105,34 @@ def setters(defs) -> dict[tuple[str, str], set[str]]:
         except SyntaxError:
             continue
         rel = str(path.relative_to(ROOT))
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call):
-                continue
-            f = node.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            for mod, param, idx, _, is_method in defs.get(name, ()):
-                # a bound-method call does not pass ``self`` positionally
-                shift = 1 if is_method and isinstance(f, ast.Attribute) else 0
+        for lineno, f, args, keywords in _calls(tree, defs):
+            name = _name(f)
+            for mod, param, idx, _, self_arg in defs.get(name, ()):
+                # neither a bound-method call nor a class call passes
+                # ``self`` positionally
+                skip = self_arg == "always" or (
+                    self_arg == "bound" and isinstance(f, ast.Attribute)
+                )
                 by_pos = (
                     idx is not None
-                    and not any(isinstance(a, ast.Starred) for a in node.args)
-                    and len(node.args) > idx - shift
+                    and not any(isinstance(a, ast.Starred) for a in args)
+                    and len(args) > idx - skip
                 )
-                if by_pos or any(k.arg == param for k in node.keywords):
-                    found[(name, param)].add(f"{rel}:{node.lineno}")
+                if by_pos or param in keywords:
+                    found[(name, param)].add(f"{rel}:{lineno}")
     return found
+
+
+def parameter_setters() -> list[tuple[str, str, str, str, list[str]]]:
+    """(module, callable, param, default, sorted call sites that set it) per
+    defaulted parameter."""
+    defs = definitions()
+    found = setters(defs)
+    return [
+        (mod, fn, param, default, sorted(found.get((fn, param), ())))
+        for fn, params in sorted(defs.items())
+        for mod, param, _, default, _ in params
+    ]
 
 
 def _is_test(site: str) -> bool:
@@ -138,17 +181,13 @@ def main() -> None:
             print(f"{mod}\t{name}")
         print(f"{len(unreached)} public functions have no non-test caller")
         return
-    defs = definitions()
-    found = setters(defs)
     rows = []
-    for fn, params in sorted(defs.items()):
-        for mod, param, _, default, _ in params:
-            sites = sorted(found.get((fn, param), ()))
-            prod = [s for s in sites if not _is_test(s)]
-            if args.all or not prod:
-                tests = len(sites) - len(prod)
-                rows.append((mod, f"{fn}({param}={default})",
-                             ", ".join(prod) or f"none ({tests} test calls)"))
+    for mod, fn, param, default, sites in parameter_setters():
+        prod = [s for s in sites if not _is_test(s)]
+        if args.all or not prod:
+            tests = len(sites) - len(prod)
+            rows.append((mod, f"{fn}({param}={default})",
+                         ", ".join(prod) or f"none ({tests} test calls)"))
     for mod, sig, callers in rows:
         print(f"{mod}\t{sig}\t{callers}")
     if not args.all:

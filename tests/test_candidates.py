@@ -9,7 +9,6 @@ import pytest
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.functions.normalize import with_identity
 from cloud_dedup_spark.operators.candidates import (
-    _CHAIN,
     _STAR_AND_CHAIN,
     _pairs_from_buckets,
     explode_bands,
@@ -19,6 +18,12 @@ from cloud_dedup_spark.operators.cluster import connected_components
 from cloud_dedup_spark.operators.signatures import compute_signatures
 
 CFG = DedupConfig()
+# consecutive-neighbour chain: size-1 edges keeping the group connected, the
+# chain-only shape that ``_STAR_AND_CHAIN`` replaced
+_CHAIN = (
+    "transform(slice(ids, 1, size(ids) - 1), (x, i) -> "
+    "struct(x AS src, ids[i + 1] AS dst))"
+)
 
 
 @pytest.fixture(scope="module")
@@ -37,7 +42,7 @@ def test_near_pairs_become_candidates(sigs_and_ids):
     sigs, idmap, truth = sigs_and_ids
     pairs = {
         (r["src"], r["dst"])
-        for r in lsh_candidate_pairs(sigs, CFG).collect()
+        for r in lsh_candidate_pairs(sigs, CFG, explode_bands(sigs)).collect()
     }
     for group in truth.near_groups:
         a, b = sorted(idmap[k] for k in group[:2])
@@ -46,7 +51,7 @@ def test_near_pairs_become_candidates(sigs_and_ids):
 
 def test_pairs_are_canonical_and_distinct(sigs_and_ids):
     sigs, _, _ = sigs_and_ids
-    pairs = lsh_candidate_pairs(sigs, CFG)
+    pairs = lsh_candidate_pairs(sigs, CFG, explode_bands(sigs))
     assert pairs.filter(F.col("src") >= F.col("dst")).count() == 0
     assert pairs.count() == pairs.distinct().count()
 
@@ -69,7 +74,7 @@ def test_hot_bucket_edges_stay_linear(spark):
         bands.groupBy("band_key").count().agg(F.max("count")).first()[0]
     )
     assert max_bucket > cfg.band_bucket_cap  # the plant really is hot
-    pairs = lsh_candidate_pairs(sigs, cfg).cache()
+    pairs = lsh_candidate_pairs(sigs, cfg, bands).cache()
     n_pairs = pairs.count()
     # all-pairs would be ~ n²/2 ≈ 80k; star+chain with per-band independent
     # salting stays ≤ bands × 2(size−1) ≈ linear in n × n_bands
@@ -175,7 +180,7 @@ def test_hot_bucket_ordering_puts_simhash_neighbours_adjacent(spark):
     cfg = DedupConfig(band_bucket_cap=16)
     pairs = {
         (r["src"], r["dst"])
-        for r in lsh_candidate_pairs(sigs, cfg).collect()
+        for r in lsh_candidate_pairs(sigs, cfg, explode_bands(sigs)).collect()
     }
     assert (pair_a, pair_b) in pairs, (
         "simhash-adjacent pair missed in the all-hot-bucket corpus"

@@ -63,7 +63,8 @@ def test_cluster_summary_fields(spark):
         "file_id long, repo string, path string",
     )
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    summ = cluster_summary(cluster_assignments(files, edges)).collect()
+    asg = cluster_assignments(files, edges).withColumn("quarantined", F.lit(False))
+    summ = cluster_summary(asg).collect()
     assert len(summ) == 1
     row = summ[0]
     assert row["n_files"] == 3 and row["n_repos"] == 2

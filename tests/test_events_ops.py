@@ -84,7 +84,7 @@ def test_json_prop_buckets_extracts_and_isolates_malformed(spark):
         ],
     )
     out = {
-        r["k_bucket"]: r for r in json_prop_buckets(ev, n_buckets=10).collect()
+        r["k_bucket"]: r for r in json_prop_buckets(ev).collect()
     }
     assert out[7]["n_events"] == 2 and out[7]["sum_value"] == 3.0
     assert out[3]["n_events"] == 1
@@ -119,7 +119,7 @@ def test_json_prop_buckets_is_abort_proof_and_folds_negatives(spark):
         ],
     )
     out = {
-        r["k_bucket"]: r for r in json_prop_buckets(ev, n_buckets=10).collect()
+        r["k_bucket"]: r for r in json_prop_buckets(ev).collect()
     }
     assert set(out) == {None, 3}
     assert out[None]["n_events"] == 3 and out[None]["sum_value"] == 11.0
@@ -146,13 +146,20 @@ def test_sessionize_null_ts_sorts_last_and_opens_own_session(spark):
     assert out[2]["start_us"] is None
 
 
-def test_sessionize_quoted_ts_col_on_ntz(spark):
-    """The NTZ branch interpolates ts_col into SQL text — it must be
-    backtick-quoted so caller-supplied names with spaces parse."""
+def test_sessionize_on_ntz(spark):
+    """A ``ts timestamp_ntz`` column (the lake's storage type) takes the
+    wall-clock microsecond branch: same sessions, NTZ-epoch start/end."""
     ev = spark.createDataFrame(
-        [(0, T0, 1, "c", 1.0), (1, T0 + datetime.timedelta(seconds=5), 1, "c", 2.0)],
-        "event_id long, `event ts` timestamp_ntz, user_id long, "
+        [
+            (0, T0, 1, "c", 1.0),
+            (1, T0 + datetime.timedelta(seconds=5), 1, "c", 2.0),
+            (2, T0 + datetime.timedelta(seconds=5 + 1801), 1, "c", 4.0),
+        ],
+        "event_id long, ts timestamp_ntz, user_id long, "
         "event_type string, value double",
     )
-    out = sessionize(ev, gap_seconds=1800, ts_col="event ts").collect()
-    assert len(out) == 1 and out[0]["n_events"] == 2
+    out = {r["session_seq"]: r for r in sessionize(ev, gap_seconds=1800).collect()}
+    t0_us = int((T0 - datetime.datetime(1970, 1, 1)).total_seconds()) * 1_000_000
+    assert out[1]["n_events"] == 2 and out[2]["n_events"] == 1
+    assert (out[1]["start_us"], out[1]["end_us"]) == (t0_us, t0_us + 5_000_000)
+    assert out[2]["start_us"] == t0_us + 1806 * 1_000_000

@@ -73,13 +73,13 @@ def test_quarantine_splits_planted_collision(spark):
         ],
         "file_id long, file_id2 long, repo string, path string, commit string",
     )
-    clean, quarantined = quarantine_id_collisions(identity)
+    quarantined = quarantine_id_collisions(identity)
+    clean = identity.join(quarantined, "file_id", "left_anti")
     assert {r["file_id"] for r in clean.collect()} == {200, 300}
     q = quarantined.collect()
     assert {r["repo"] for r in q} == {"ra", "rb"}
     # idempotent on a clean frame
-    clean2, q2 = quarantine_id_collisions(clean)
-    assert q2.count() == 0 and clean2.count() == 2
+    assert quarantine_id_collisions(clean).count() == 0
 
 
 def test_summary_keeps_quarantined_label_collision_separate(spark):

@@ -330,12 +330,11 @@ def test_media_near_dup_cosine_retrieval(spark):
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     feats = extract_features(media, PnmWavDecoder()).filter(
         "feature is not null"
-    )
+    ).selectExpr("media_id AS vec_id", "feature AS embedding")
     got = {
         (r["id_a"], r["id_b"]): r["score"]
         for r in cosine_near_pairs_lsh(
-            feats, threshold=0.995, target_recall=0.999,
-            id_col="media_id", vec_col="feature",
+            feats, threshold=0.995, target_recall=0.999
         ).collect()
     }
     # brightness- and volume-scaled copies are retrieved at cosine ≈ 1

@@ -11,7 +11,7 @@ import pytest
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.corpus import corpus_df
 from cloud_dedup_spark.functions.normalize import with_identity
-from cloud_dedup_spark.operators.candidates import lsh_candidate_pairs
+from cloud_dedup_spark.operators.candidates import explode_bands, lsh_candidate_pairs
 from cloud_dedup_spark.operators.signatures import compute_signatures
 from cloud_dedup_spark.operators.substring import substring_edges
 from cloud_dedup_spark.operators.verify import verify_pairs
@@ -50,7 +50,7 @@ def small_sigs(spark):
 
 def test_no_cartesian_products_in_pair_paths(spark, small_sigs):
     ident, sigs = small_sigs
-    pairs = lsh_candidate_pairs(sigs, CFG)
+    pairs = lsh_candidate_pairs(sigs, CFG, explode_bands(sigs))
     verified = verify_pairs(pairs, sigs, CFG)
     sub = substring_edges(ident, sigs, CFG)
     for df in (pairs, verified, sub):
@@ -61,7 +61,7 @@ def test_no_cartesian_products_in_pair_paths(spark, small_sigs):
 
 def test_verify_semi_filters_signature_table(spark, small_sigs):
     _, sigs = small_sigs
-    pairs = lsh_candidate_pairs(sigs, CFG)
+    pairs = lsh_candidate_pairs(sigs, CFG, explode_bands(sigs))
     plan = _plan(verify_pairs(pairs, sigs, CFG))
     # the wide signature table must be reduced via a broadcast semi-join
     # before the scoring equi-joins (operators/verify.py scale note)

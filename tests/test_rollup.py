@@ -138,12 +138,13 @@ def test_histogram(spark):
 def test_pairwise_and_unique_counts(spark):
     asg = spark.createDataFrame(
         [
-            (1, "ra", "p1", 100), (2, "rb", "p2", 100),  # cluster ra+rb
-            (3, "ra", "p3", 300), (4, "rc", "p4", 300),  # cluster ra+rc
-            (5, "ra", "p5", 5),                           # singleton
-            (6, "rb", "p6", 6),                           # singleton
+            (1, "ra", "p1", 100, False), (2, "rb", "p2", 100, False),  # ra+rb
+            (3, "ra", "p3", 300, False), (4, "rc", "p4", 300, False),  # ra+rc
+            (5, "ra", "p5", 5, False),                                 # singleton
+            (6, "rb", "p6", 6, False),                                 # singleton
         ],
-        "file_id long, repo string, path string, cluster_id long",
+        "file_id long, repo string, path string, cluster_id long, "
+        "quarantined boolean",
     )
     from cloud_dedup_spark.operators.cluster import cluster_summary
     clusters = cluster_summary(asg)

@@ -75,7 +75,7 @@ def test_blocked_scorer_drops_candidates_missing_from_emb(spark, emb):
     cand = spark.createDataFrame(
         [(0, 1), (0, 99), (98, 1), (4, 98)], "id_a long, id_b long"
     )
-    got = _score_blocked(emb, cand, 0.5, "vec_id", "embedding").collect()
+    got = _score_blocked(emb, cand, 0.5).collect()
     assert {(r["id_a"], r["id_b"]) for r in got} == {(0, 1)}
 
 

@@ -88,13 +88,7 @@ def test_library_env_reads_are_deployment_settings():
     assert not bad, f"library environment reads outside the allowed set: {bad}"
 
 
-def test_public_functions_have_a_non_test_caller():
-    """Every public function or class of the library is reached by a query,
-    stage, fold phase, script or benchmark, except the named few that
-    reproduce the reference or check correctness, and the stream front end
-    that is the only path to test stream replay.  A test double belongs in
-    tests/, and a function that only its tests call is surface to delete
-    (``python scripts/option_audit.py --functions`` lists them)."""
+def _option_audit():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -102,6 +96,17 @@ def test_public_functions_have_a_non_test_caller():
     )
     audit = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(audit)
+    return audit
+
+
+def test_public_functions_have_a_non_test_caller():
+    """Every public function or class of the library is reached by a query,
+    stage, fold phase, script or benchmark, except the named few that
+    reproduce the reference or check correctness, and the stream front end
+    that is the only path to test stream replay.  A test double belongs in
+    tests/, and a function that only its tests call is surface to delete
+    (``python scripts/option_audit.py --functions`` lists them)."""
+    audit = _option_audit()
     allowed = {
         "html_report.py": {"render_html", "human_size"},  # reference S4, F2
         "operators/exact.py": {"exact_duplicate_groups"},
@@ -116,3 +121,35 @@ def test_public_functions_have_a_non_test_caller():
         if name not in allowed.get(mod.removeprefix("cloud_dedup_spark/"), ())
     ]
     assert not unreached, f"public functions only tests reach: {unreached}"
+
+
+def test_defaulted_parameters_have_a_non_test_setter():
+    """Every defaulted parameter is set by some query, stage, fold phase,
+    script or benchmark, except the named few: the config objects and the
+    table format, the source filters and stream admission control, the
+    test-sized knobs and the reference-parity badge class.  A parameter that
+    only tests set is a knob nobody uses; make it a module constant
+    (``python scripts/option_audit.py`` lists them)."""
+    audit = _option_audit()
+    unset = {
+        f"{fn}({param})"
+        for _, fn, param, _, sites in audit.parameter_setters()
+        if all(audit._is_test(s) for s in sites)
+    }
+    assert unset == {
+        "badge(cls)",  # reference S4 markup
+        "bench_corpus_df(files_per_block)",
+        "compact_stage_tables(min_files)",
+        "compact_stage_tables(tables)",
+        "contaminated_docs(cfg)",
+        "incremental_dedup_stream(cfg)",
+        "incremental_dedup_stream(table_format)",
+        "incremental_dedup_stream(max_files_per_trigger)",
+        "mixed_type_second_pass(cfg)",
+        "pair_stats_pivot(cfg)",
+        "read_files(skip_hidden)",
+        "read_files(langs)",
+        "run_pipeline(cfg)",
+        "run_pipeline(table_format)",
+        "scan_warnings(expected_repos)",
+    }

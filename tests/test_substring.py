@@ -122,3 +122,12 @@ def test_prebuilt_inverted_index_equals_inline_explode(spark):
         ).collect()
     }
     assert inline == prebuilt and len(inline) >= 1
+
+
+def test_prebuilt_anchors_require_the_corpus_df_index(spark):
+    """Prebuilt anchors probe a delta-sized index; without the full-corpus
+    ``df_index`` their doc frequencies would be delta-local, which defeats
+    the template cap, so the call fails at plan time instead."""
+    frame = spark.createDataFrame([(1,)], "file_id long")
+    with pytest.raises(AssertionError, match="df_index"):
+        substring_edges(frame, frame, CFG, inverted=frame, cand_anchors=frame)

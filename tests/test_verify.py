@@ -11,7 +11,7 @@ import pytest
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.corpus import _Gen, _half_rewrite, _near_edit
 from cloud_dedup_spark.functions.normalize import with_identity
-from cloud_dedup_spark.operators.candidates import lsh_candidate_pairs
+from cloud_dedup_spark.operators.candidates import explode_bands, lsh_candidate_pairs
 from cloud_dedup_spark.operators.signatures import compute_signatures
 from cloud_dedup_spark.operators.verify import verify_pairs
 
@@ -29,7 +29,7 @@ def _verify_two(spark, content_a: str, content_b: str):
         "repo string, path string, commit string, lang string, content string",
     )
     sigs = compute_signatures(with_identity(df), CFG)
-    pairs = lsh_candidate_pairs(sigs, CFG)
+    pairs = lsh_candidate_pairs(sigs, CFG, explode_bands(sigs))
     rows = verify_pairs(pairs, sigs, CFG).collect()
     assert len(rows) <= 1
     return rows[0] if rows else None
@@ -90,7 +90,7 @@ def test_verify_semi_join_not_pinned_to_broadcast(spark, gen):
     # cut lineage so the plan under inspection is the verify stage alone
     # (candidates.py legitimately broadcast-hints its tiny hot-key list)
     sigs = compute_signatures(with_identity(df), CFG).localCheckpoint()
-    pairs = lsh_candidate_pairs(sigs, CFG).localCheckpoint()
+    pairs = lsh_candidate_pairs(sigs, CFG, explode_bands(sigs)).localCheckpoint()
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

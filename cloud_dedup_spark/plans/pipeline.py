@@ -190,10 +190,22 @@ def run_pipeline(
 
     Returns dict with keys: identity, exact, norm, signatures, bands,
     candidate_edges, substring_edges, edges, assignments, clusters,
-    metrics (RunMetrics).
+    metrics (RunMetrics).  A checkpoint that an incremental fold has
+    updated raises ``ValueError``: resuming it would skip every stage.
     """
     cfg = cfg or DedupConfig()
     store = CheckpointStore(spark, checkpoint_dir, table_format)
+    # only a fold writes shingle_index, and a fold leaves exact,
+    # candidate_edges, substring_edges and clusters at their pre-fold rows
+    if store.exists("shingle_index"):
+        raise ValueError(
+            f"checkpoint dir {checkpoint_dir} was updated by "
+            f"incremental_dedup_update; its exact, candidate_edges, "
+            f"substring_edges and clusters tables hold only the rows from "
+            f"before the fold, so resuming it would return them next to the "
+            f"folded identity, edges and assignments. Use the frames that "
+            f"incremental_dedup_update returns, or a fresh checkpoint_dir."
+        )
     store.guard_config(config_fingerprint(cfg))
     metrics = RunMetrics()
 
@@ -350,10 +362,10 @@ def run_pipeline(
         ),
     )
 
-    # a stage like any other: build_report consumes clusters three times
-    # (count, size histogram, pairwise repo counts) — unmaterialized, each
-    # collect re-ran the window + groupBy over all assignments (round-4
-    # review)
+    # a stage like any other: build_report reads clusters in two sections
+    # of its scalar union (size histogram, pairwise repo counts) —
+    # unmaterialized, each section re-ran the window + groupBy over all
+    # assignments (round-4 review)
     clusters = stage("clusters", lambda: cluster_summary(assignments))
 
     return {

@@ -6,16 +6,20 @@ checkpointed stage tables (pipeline.py); the report is the small collected
 summary — totals, per-repo stats, pairwise counts, cluster-size histogram,
 relationship histogram, stage lineage/skew metrics — built from aggregate
 DataFrames and collected only at the very end (everything driver-side here is
-a few hundred rows, never the raw data).
+a few hundred rows, never the raw data).  ``build_report`` runs its seven
+actions (two checkpoints, five collects) as concurrent driver threads,
+each collect waiting only on the checkpoint it reads.
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cloud_dedup_spark.metrics import RunMetrics
@@ -101,16 +105,66 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
     clusters: DataFrame = result["clusters"]
     edges: DataFrame = result["edges"]
     metrics: RunMetrics = result["metrics"]
+    spark = identity.sparkSession
 
     # multi-consumer frames materialized once: fc feeds the histogram, the
     # subtree rollup AND the fc_rows collect; cls feeds the tree rows and
     # the group-detail join — unmaterialized, each collect re-ran the double
-    # explode / classification joins (round-4 review)
-    fc = folder_comparisons(identity.select("repo", "path")).localCheckpoint()
+    # explode / classification joins (round-4 review).  The seven actions
+    # move few rows and most of their wall is driver-side planning, so they
+    # run as concurrent threads.  Each task gets its own copy of the caller's
+    # local properties (job group, description), taken at submit: pool
+    # threads inherit none, and one copy shared by all tasks would also be
+    # one shared spark.sql.execution.id slot for seven concurrent queries.
+    with ThreadPoolExecutor(max_workers=7) as pool:
+        def submit(fn: Callable) -> Future:
+            return pool.submit(inheritable_thread_target(spark)(fn))
 
-    # every scalar section in one collect over a tagged union of
-    # (tag, key, n) rows, in place of one action per section; each section
-    # frame is its key columns followed by its count
+        fc = submit(lambda: folder_comparisons(
+            identity.select("repo", "path")).localCheckpoint())
+        cls = submit(lambda: file_classifications(identity, edges).localCheckpoint())
+        scalars = submit(lambda: _scalar_sections(
+            identity, clusters, edges, assignments, fc.result()))
+        roots = submit(lambda: _safe_roots(fc.result()))
+        fc_rows = submit(lambda: _folder_rows(fc.result()))
+        group_details = submit(lambda: _group_details(assignments, cls.result()))
+        folder_files = submit(lambda: _folder_files(cls.result()))
+
+    sections = scalars.result()
+
+    def keyed(tag: str, decode: Callable = lambda k: k) -> dict:
+        return {decode(*key): n for key, n in sections[tag].items()}
+
+    per_repo = keyed("per_repo")
+    cluster_hist = keyed("cluster_hist", int)
+    return {
+        "total_files": sum(per_repo.values()),
+        "n_quarantined_id_collisions": sections["quarantined"].get(("true",), 0),
+        "per_repo_files": per_repo,
+        "n_clusters": sum(cluster_hist.values()),
+        "cluster_size_histogram": cluster_hist,
+        "edge_kinds": keyed("edge_kinds"),
+        "pairwise_duplicate_clusters": keyed("pairwise", lambda a, b: f"{a}+{b}"),
+        "unique_files_per_repo": keyed("uniques"),
+        "folder_relationship_histogram": keyed("rel_hist"),
+        "safe_dedup_roots": roots.result(),
+        "duplicate_group_details": group_details.result(),
+        "folder_comparisons": fc_rows.result(),
+        "folder_files": folder_files.result(),
+        "scan_warnings": list(scan_warnings or []),
+        "stages": metrics.to_dict(),
+    }
+
+
+def _scalar_sections(
+    identity: DataFrame, clusters: DataFrame, edges: DataFrame,
+    assignments: DataFrame, fc: DataFrame,
+) -> dict[str, dict]:
+    """Section tag → {key tuple: count}, for every scalar section.
+
+    One collect over a tagged union of (tag, key, n) rows, in place of one
+    action per section; each section frame is its key columns followed by
+    its count."""
     def count_by(df: DataFrame, *keys: str) -> DataFrame:
         return df.groupBy(*keys).agg(F.count(F.lit(1)))
 
@@ -132,24 +186,33 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
         )
         for tag, df in sections.items()
     ])
-    scalars: dict[str, dict] = {tag: {} for tag in sections}
+    out: dict[str, dict] = {tag: {} for tag in sections}
     for r in tagged.collect():
-        scalars[r["tag"]][tuple(r["key"])] = r["n"]
+        out[r["tag"]][tuple(r["key"])] = r["n"]
+    return out
 
-    def keyed(tag: str, decode: Callable = lambda k: k) -> dict:
-        return {decode(*key): n for key, n in scalars[tag].items()}
 
-    per_repo = keyed("per_repo")
-    cluster_hist = keyed("cluster_hist", int)
-    pairwise = keyed("pairwise", lambda a, b: f"{a}+{b}")
-    n_quarantined = scalars["quarantined"].get(("true",), 0)
-    roots = [r["folder"] for r in
-             safe_dedup_roots(subtree_rollup(fc)).orderBy("folder").collect()]
+def _safe_roots(fc: DataFrame) -> list[str]:
+    return [r["folder"] for r in
+            safe_dedup_roots(subtree_rollup(fc)).orderBy("folder").collect()]
 
-    # ---- drill-down detail (reference sections 4/5 per-group tables and the
-    # nested folder tree, :1041-1386) — paged from the stage tables with
-    # driver-safe caps, never the raw corpus
-    cls = file_classifications(identity, edges).localCheckpoint()
+
+def _folder_rows(fc: DataFrame) -> list[dict]:
+    return [
+        {
+            "folder": r["folder"],
+            "relationship": r["relationship"],
+            "n_repos": int(r["n_repos"]),
+        }
+        for r in fc.orderBy("folder").limit(MAX_TREE_FOLDERS).collect()
+    ]
+
+
+# ---- drill-down detail (reference sections 4/5 per-group tables and the
+# nested folder tree, :1041-1386) — paged from the stage tables with
+# driver-safe caps, never the raw corpus
+
+def _group_details(assignments: DataFrame, cls: DataFrame) -> list[dict]:
     # quarantined singletons never join a drill-down group: their file_id2
     # labels are not structurally disjoint from graph cluster ids, so a
     # label collision would alias them into a real group's member list
@@ -158,14 +221,10 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
     # bounds how many groups reach the driver, but an uncapped collect_list
     # still buffered a mega-cluster's millions of members in one aggregation
     # task before the limit applied (round-4 review)
-    from pyspark.sql import Window as _W
-
-    _rn = F.row_number().over(
-        _W.partitionBy("cluster_id").orderBy("repo", "path")
-    )
-    group_details_rows = (
+    rn = F.row_number().over(Window.partitionBy("cluster_id").orderBy("repo", "path"))
+    rows = (
         drill.join(cls.select("file_id", "kind"), "file_id", "left")
-        .withColumn("_rn", _rn)
+        .withColumn("_rn", rn)
         .groupBy("cluster_id")
         .agg(
             F.count(F.lit(1)).alias("n_files"),
@@ -184,7 +243,7 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
         .limit(MAX_GROUP_DETAILS)
         .collect()
     )
-    group_details = [
+    return [
         {
             "cluster_id": int(r["cluster_id"]),
             "n_files": int(r["n_files"]),
@@ -194,13 +253,15 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
                 for m in r["members"]
             ],
         }
-        for r in group_details_rows
+        for r in rows
     ]
 
+
+def _folder_files(cls: DataFrame) -> dict[str, list]:
     # per-(folder, name) presence + strongest classification for the tree
     # (same folder/name derivation as the rollup stage so tree nodes line up
     # with folder_comparisons rows)
-    tree_files_rows = (
+    rows = (
         with_folder_name(cls)
         .groupBy("folder", "name")
         .agg(
@@ -212,41 +273,15 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
         .collect()
     )
     folder_files: dict[str, list] = {}
-    rank_to_kind = _RANK_KIND
-    for r in tree_files_rows:
+    for r in rows:
         folder_files.setdefault(r["folder"], []).append(
             {
                 "name": r["name"],
                 "n_repos": int(r["n_repos"]),
-                "kind": rank_to_kind.get(r["rank"]),
+                "kind": _RANK_KIND.get(r["rank"]),
             }
         )
-    fc_rows = [
-        {
-            "folder": r["folder"],
-            "relationship": r["relationship"],
-            "n_repos": int(r["n_repos"]),
-        }
-        for r in fc.orderBy("folder").limit(MAX_TREE_FOLDERS).collect()
-    ]
-
-    return {
-        "total_files": sum(per_repo.values()),
-        "n_quarantined_id_collisions": n_quarantined,
-        "per_repo_files": per_repo,
-        "n_clusters": sum(cluster_hist.values()),
-        "cluster_size_histogram": cluster_hist,
-        "edge_kinds": keyed("edge_kinds"),
-        "pairwise_duplicate_clusters": pairwise,
-        "unique_files_per_repo": keyed("uniques"),
-        "folder_relationship_histogram": keyed("rel_hist"),
-        "safe_dedup_roots": roots,
-        "duplicate_group_details": group_details,
-        "folder_comparisons": fc_rows,
-        "folder_files": folder_files,
-        "scan_warnings": list(scan_warnings or []),
-        "stages": metrics.to_dict(),
-    }
+    return folder_files
 
 
 def write_report(

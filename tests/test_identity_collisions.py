@@ -142,18 +142,18 @@ def _planted_collision(spark, monkeypatch):
 
 
 def test_report_counts_quarantined_collisions(spark, monkeypatch):
-    """Every scalar section of the report agrees with its own aggregate on a
+    """Every section of the report agrees with its own serial query on a
     corpus whose quarantine is not empty."""
     from cloud_dedup_spark import run_pipeline
     from cloud_dedup_spark.report import build_report
-    from tests.conftest import assert_report_scalars
+    from tests.conftest import assert_report
 
     base, delta = _planted_collision(spark, monkeypatch)
     res = run_pipeline(spark, base.unionByName(delta))
     rep = build_report(res)
     assert rep["n_quarantined_id_collisions"] == 2
     assert rep["total_files"] == 4
-    assert_report_scalars(res, rep)
+    assert_report(res, rep)
 
 
 def test_incremental_quarantines_colliding_delta(spark, tmp_path, monkeypatch):

@@ -73,6 +73,15 @@ def test_incremental_equals_full_recompute(spark, state):
     assert inc_clusters == full_clusters
 
 
+def test_pipeline_refuses_folded_checkpoint(spark, state):
+    """A fold leaves exact, candidate_edges, substring_edges and clusters at
+    their pre-fold rows, so run_pipeline refuses to resume its checkpoint
+    instead of returning them next to the folded tables."""
+    base, _, ckpt, _ = state
+    with pytest.raises(ValueError, match="candidate_edges, substring_edges"):
+        run_pipeline(spark, base, checkpoint_dir=ckpt)
+
+
 def test_delta_channels_all_fired(spark, state):
     base, delta, ckpt, inc = state
     asg = spark.read.parquet(f"{ckpt}/cluster_labels")

@@ -9,12 +9,13 @@ content_sha256 invariant, checkpoint resumability.
 from __future__ import annotations
 
 import shutil
+import time
 
 import pytest
 
 from cloud_dedup_spark import run_pipeline
 from cloud_dedup_spark.plans.pipeline import invariant_violations
-from tests.conftest import assert_report_scalars, cluster_pairs
+from tests.conftest import assert_report, cluster_pairs
 
 
 @pytest.fixture(scope="module")
@@ -82,8 +83,9 @@ def test_no_quarantined_files_in_clean_corpus(result):
 
 def test_report_summary_fields(result, corpus):
     """build_report over a real pipeline result: totals line up, the
-    drill-down detail is populated on the planted corpus, and the quarantine
-    counter is zero on a collision-free corpus (ROADMAP observability item)."""
+    drill-down detail is populated on the planted corpus, the quarantine
+    counter is zero on a collision-free corpus (ROADMAP observability item),
+    and every section but ``stages`` equals its own serial query."""
     from cloud_dedup_spark.report import build_report
 
     files, _ = corpus
@@ -96,7 +98,57 @@ def test_report_summary_fields(result, corpus):
     first = rep["duplicate_group_details"][0]
     assert first["n_files"] >= 2 and len(first["members"]) == first["n_files"]
     assert rep["folder_comparisons"] and rep["folder_files"]
-    assert_report_scalars(res, rep)
+    assert_report(res, rep)
+
+
+def test_report_detail_keeps_order_and_caps(result, monkeypatch):
+    """With every drill-down cap below its section's size, the report still
+    equals the serial reference: each concurrent collect keeps its order
+    and its cap."""
+    from cloud_dedup_spark import report
+
+    for cap in ("MAX_GROUP_DETAILS", "MAX_TREE_FOLDERS", "MAX_TREE_FILES"):
+        monkeypatch.setattr(report, cap, 3)
+    monkeypatch.setattr(report, "MAX_MEMBERS_PER_GROUP", 2)
+    res, _ = result
+    rep = report.build_report(res)
+    groups = rep["duplicate_group_details"]
+    assert len(groups) == 3 and len(rep["folder_comparisons"]) == 3
+    assert sum(len(v) for v in rep["folder_files"].values()) == 3
+    assert groups[0]["n_files"] > 2 and len(groups[0]["members"]) == 2
+    assert_report(res, rep)
+
+
+def test_report_jobs_run_under_the_caller_group(spark, result):
+    """Every job of build_report, pool threads included, carries the job
+    group the caller set; none runs ungrouped."""
+    from cloud_dedup_spark.report import build_report
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def settled_ungrouped():
+        # the status store is fed by an asynchronous listener: read until
+        # two reads agree, so jobs that just ended are not missed
+        prev = set(tracker.getJobIdsForGroup(None))
+        for _ in range(40):
+            time.sleep(0.05)
+            cur = set(tracker.getJobIdsForGroup(None))
+            if cur == prev:
+                break
+            prev = cur
+        return cur
+
+    res, _ = result
+    before = settled_ungrouped()
+    sc.setJobGroup("report-group", "report description")
+    try:
+        build_report(res)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert settled_ungrouped() - before == set()
+    assert tracker.getJobIdsForGroup("report-group")
 
 
 def test_metrics_lineage_recorded(result):

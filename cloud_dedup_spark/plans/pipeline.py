@@ -36,7 +36,7 @@ from cloud_dedup_spark.fsutil import (
     hadoop_path_exists, hadoop_success_exists, read_text, write_text,
 )
 from cloud_dedup_spark.functions.normalize import normalize_content, with_identity
-from cloud_dedup_spark.metrics import RunMetrics
+from cloud_dedup_spark.metrics import RunMetrics, driver_threads
 from cloud_dedup_spark.operators.candidates import explode_bands, lsh_candidate_pairs
 from cloud_dedup_spark.operators.cluster import cluster_assignments, cluster_summary
 from cloud_dedup_spark.operators.exact import (
@@ -183,15 +183,16 @@ def run_pipeline(
     cfg: DedupConfig | None = None,
     checkpoint_dir: str | None = None,
     table_format: str = "parquet",
-    collect_partition_stats: bool = False,
     track_rows: bool = True,
 ) -> dict:
     """Run the full dedup pipeline; returns stage DataFrames + metrics.
 
     Returns dict with keys: identity, exact, norm, signatures, bands,
     candidate_edges, substring_edges, edges, assignments, clusters,
-    metrics (RunMetrics).  A checkpoint that an incremental fold has
-    updated raises ``ValueError``: resuming it would skip every stage.
+    metrics (RunMetrics; with ``track_rows`` each stage also records its
+    rows and partition skew, one action per stage).  A checkpoint that an
+    incremental fold has updated raises ``ValueError``: resuming it would
+    skip every stage.
     """
     cfg = cfg or DedupConfig()
     store = CheckpointStore(spark, checkpoint_dir, table_format)
@@ -215,19 +216,13 @@ def run_pipeline(
 
     def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
         # every job of the stage carries "stage:<name>" in the UI and the
-        # REST API.  Local properties are per thread (a pool thread does not
-        # inherit the caller's), so this runs on whichever thread runs the
-        # stage, and puts back that thread's own value when the stage ends.
+        # REST API, and puts back the thread's own value when the stage ends
         prev = sc.getLocalProperty(_JOB_DESCRIPTION)
         sc.setLocalProperty(_JOB_DESCRIPTION, f"stage:{name}")
         try:
             t0 = time.time()
             df = store.materialize(name, build)
-            # collect_partition_stats implies the per-stage stats job even
-            # when row counting is off: the two flags are independent
-            probe = df if (track_rows or collect_partition_stats) else None
-            metrics.record(name, time.time() - t0, probe,
-                           with_partitions=collect_partition_stats)
+            metrics.record(name, time.time() - t0, df if track_rows else None)
             return df
         finally:
             sc.setLocalProperty(_JOB_DESCRIPTION, prev)
@@ -318,8 +313,6 @@ def run_pipeline(
     # names stay distinct so CheckpointStore paths never collide; metrics
     # appends are GIL-atomic; each stage's recorded seconds now measure its
     # own wall INCLUDING contention (noted in OPTIMIZATION_r06.md).
-    from concurrent.futures import ThreadPoolExecutor
-
     from cloud_dedup_spark.operators.substring import candidate_anchors
 
     # anchors: each needle's K candidate substring anchors, persisted so the
@@ -327,18 +320,16 @@ def run_pipeline(
     # this narrow table instead of re-exploding the union's signature rows
     # per delta (round-4; operators/substring.candidate_anchors).  Written
     # unfiltered — the cfg-dependent cuts apply at read time.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_anchors = pool.submit(
-            stage, "anchors", lambda: candidate_anchors(sigs)
-        )
-        f_verified = pool.submit(
+    with driver_threads(spark, 3) as submit:
+        f_anchors = submit(stage, "anchors", lambda: candidate_anchors(sigs))
+        f_verified = submit(
             stage,
             "candidate_edges",
             lambda: verify_pairs(
                 lsh_candidate_pairs(sigs, cfg, bands=bands), sigs, cfg
             ),
         )
-        f_sub = pool.submit(
+        f_sub = submit(
             stage, "substring_edges", lambda: substring_edges(norm, sigs, cfg)
         )
         anchors = f_anchors.result()
@@ -367,6 +358,7 @@ def run_pipeline(
     # unmaterialized, each section re-ran the window + groupBy over all
     # assignments (round-4 review)
     clusters = stage("clusters", lambda: cluster_summary(assignments))
+    metrics.finished_at = time.time()
 
     return {
         "identity": identity,

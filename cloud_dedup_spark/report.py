@@ -15,14 +15,12 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable
-from concurrent.futures import Future, ThreadPoolExecutor
 from functools import reduce
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cloud_dedup_spark.metrics import RunMetrics
+from cloud_dedup_spark.metrics import RunMetrics, driver_threads
 from cloud_dedup_spark.operators.exact import MAX_MEMBERS_PER_GROUP
 from cloud_dedup_spark.operators.rollup import (
     folder_comparisons,
@@ -112,14 +110,9 @@ def build_report(result: dict, scan_warnings: list[str] | None = None) -> dict:
     # the group-detail join — unmaterialized, each collect re-ran the double
     # explode / classification joins (round-4 review).  The seven actions
     # move few rows and most of their wall is driver-side planning, so they
-    # run as concurrent threads.  Each task gets its own copy of the caller's
-    # local properties (job group, description), taken at submit: pool
-    # threads inherit none, and one copy shared by all tasks would also be
-    # one shared spark.sql.execution.id slot for seven concurrent queries.
-    with ThreadPoolExecutor(max_workers=7) as pool:
-        def submit(fn: Callable) -> Future:
-            return pool.submit(inheritable_thread_target(spark)(fn))
-
+    # run as concurrent threads, each collect waiting only on the checkpoint
+    # it reads.
+    with driver_threads(spark, 7) as submit:
         fc = submit(lambda: folder_comparisons(
             identity.select("repo", "path")).localCheckpoint())
         cls = submit(lambda: file_classifications(identity, edges).localCheckpoint())

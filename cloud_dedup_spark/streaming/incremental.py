@@ -47,7 +47,6 @@ a tmp-dir swap (plans/maintenance.swap_overwrite).  Pinned by
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -55,6 +54,7 @@ from pyspark.sql import functions as F
 
 from cloud_dedup_spark.config import DedupConfig
 from cloud_dedup_spark.functions.normalize import with_identity
+from cloud_dedup_spark.metrics import driver_threads
 from cloud_dedup_spark.operators.candidates import (
     explode_bands, hot_bucket_salt, hot_bucket_sizes,
 )
@@ -595,16 +595,16 @@ def _near_channels(
     # anchor-value distinct per fold (round-3 verdict item 1)
     union_anchors = prior["anchors"].unionByName(delta_anchors)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_near = pool.submit(_lsh_edges, cfg, prior["bands"], delta_bands, union_sigs)
-        f_fwd = pool.submit(
+    with driver_threads(store.spark, 3) as submit:
+        f_near = submit(_lsh_edges, cfg, prior["bands"], delta_bands, union_sigs)
+        f_fwd = submit(
             substring_edges, union_norm, union_sigs, cfg, needle_ids=delta_ids,
             inverted=union_index,
         )
         # the haystack side is the delta's inverted index, already
         # materialized above: the operator probes it directly instead of
         # re-exploding the delta's rows out of corpus-sized union_sigs
-        f_rev = pool.submit(
+        f_rev = submit(
             substring_edges, union_norm, union_sigs, cfg, inverted=delta_index,
             cand_anchors=union_anchors, df_index=union_index,
         )
@@ -888,8 +888,8 @@ def _persist(
         (_append_absent, store, t, out[t], keys, prior[t])
         for t, keys in _APPEND_KEYS.items()
     ]
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        for fut in [pool.submit(*t) for t in tasks]:
+    with driver_threads(spark, len(tasks)) as submit:
+        for fut in [submit(*t) for t in tasks]:
             fut.result()
     if q.has_new:
         _append_absent(

@@ -31,8 +31,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="run on N synthetic corpus files instead of --input")
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--report", default=None, help="write JSON summary here")
-    p.add_argument("--partition-stats", action="store_true",
-                   help="collect per-stage partition skew metrics (extra jobs)")
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
@@ -54,11 +52,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             p.error("one of --input / --synthetic is required")
 
-        result = run_pipeline(
-            spark, files,
-            checkpoint_dir=args.checkpoint_dir,
-            collect_partition_stats=args.partition_stats,
-        )
+        result = run_pipeline(spark, files, checkpoint_dir=args.checkpoint_dir)
         if args.report:
             report = write_report(result, args.report, scan_warnings=warnings)
         else:

@@ -7,6 +7,8 @@ cluster run, just narrower (session.py is the single source of truth).
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from cloud_dedup_spark.corpus import corpus_df
@@ -42,6 +44,36 @@ def cluster_pairs(clusters):
             for j in range(i + 1, len(ms)):
                 out.add(frozenset((ms[i], ms[j])))
     return out
+
+
+def run_in_job_group(spark, group: str, fn):
+    """Run ``fn()`` under the caller's job group ``group``; assert that the
+    group holds jobs and that no job started meanwhile ran ungrouped (a pool
+    thread that dropped the caller's local properties)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def settled_ungrouped():
+        # the status store is fed by an asynchronous listener: read until
+        # two reads agree, so jobs that just ended are not missed
+        prev = set(tracker.getJobIdsForGroup(None))
+        for _ in range(40):
+            time.sleep(0.05)
+            cur = set(tracker.getJobIdsForGroup(None))
+            if cur == prev:
+                break
+            prev = cur
+        return cur
+
+    before = settled_ungrouped()
+    sc.setJobGroup(group, f"{group} description")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert settled_ungrouped() - before == set()
+    assert tracker.getJobIdsForGroup(group)
 
 
 def direct_report(res: dict) -> dict:

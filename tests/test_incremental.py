@@ -9,6 +9,7 @@ import pytest
 from cloud_dedup_spark import run_pipeline
 from cloud_dedup_spark.corpus import _Gen, _near_edit, generate_corpus
 from cloud_dedup_spark.streaming.incremental import incremental_dedup_update
+from tests.conftest import run_in_job_group
 
 SCHEMA = "repo string, path string, commit string, lang string, content string"
 BASE_N = 250
@@ -455,6 +456,25 @@ def test_fold_rejects_checkpoint_missing_a_stage_table(spark, tmp_path):
         [("repo_n", "n/new.py", "n1", "py", _Gen(3).body(40))], SCHEMA)
     with pytest.raises(ValueError, match="table 'anchors'"):
         incremental_dedup_update(spark, delta, ckpt)
+
+
+def test_fold_jobs_run_under_the_caller_group(spark, tmp_path):
+    """Every job of a fold, the near-channel and persist-barrier threads
+    included, carries the job group the caller set; none runs ungrouped."""
+    rows, ckpt = _small_checkpoint(spark, tmp_path)
+    old = rows[0]["content"]
+    gen = _Gen(5)
+    delta = spark.createDataFrame(
+        [
+            ("repo_g", "g/exact_of_old.py", "g1", "py", old),
+            ("repo_g", "g/near_of_old.py", "g2", "py", _near_edit(old, gen.rng)),
+            ("repo_g", "g/fresh.py", "g3", "py", gen.body(50)),
+        ],
+        SCHEMA,
+    )
+    run_in_job_group(
+        spark, "fold-group", lambda: incremental_dedup_update(spark, delta, ckpt)
+    )
 
 
 def _group_jobs(spark, group, fn):

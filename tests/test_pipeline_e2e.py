@@ -15,7 +15,7 @@ import pytest
 
 from cloud_dedup_spark import run_pipeline
 from cloud_dedup_spark.plans.pipeline import invariant_violations
-from tests.conftest import assert_report, cluster_pairs
+from tests.conftest import assert_report, cluster_pairs, run_in_job_group
 
 
 @pytest.fixture(scope="module")
@@ -124,39 +124,47 @@ def test_report_jobs_run_under_the_caller_group(spark, result):
     group the caller set; none runs ungrouped."""
     from cloud_dedup_spark.report import build_report
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def settled_ungrouped():
-        # the status store is fed by an asynchronous listener: read until
-        # two reads agree, so jobs that just ended are not missed
-        prev = set(tracker.getJobIdsForGroup(None))
-        for _ in range(40):
-            time.sleep(0.05)
-            cur = set(tracker.getJobIdsForGroup(None))
-            if cur == prev:
-                break
-            prev = cur
-        return cur
-
     res, _ = result
-    before = settled_ungrouped()
-    sc.setJobGroup("report-group", "report description")
-    try:
-        build_report(res)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert settled_ungrouped() - before == set()
-    assert tracker.getJobIdsForGroup("report-group")
+    run_in_job_group(spark, "report-group", lambda: build_report(res))
 
 
-def test_metrics_lineage_recorded(result):
+def test_pipeline_jobs_run_under_the_caller_group(spark, tmp_path):
+    """Every job of a checkpointed run_pipeline, the overlapped stage threads
+    included, carries the job group the caller set; none runs ungrouped."""
+    from cloud_dedup_spark.corpus import corpus_df
+
+    files, _ = corpus_df(spark, 40, 7)
+    ckpt = str(tmp_path / "ckpt")
+    run_in_job_group(
+        spark, "pipeline-group", lambda: run_pipeline(spark, files, checkpoint_dir=ckpt)
+    )
+
+
+def test_metrics_lineage_recorded(spark, result):
+    """Each stage records its rows and partition skew, from one action on
+    its stage table, and the run's total seconds stop when run_pipeline
+    returns; with track_rows=False a stage records neither rows nor skew."""
     res, _ = result
-    stages = [s.name for s in res["metrics"].stages]
+    stages = {s.name: s for s in res["metrics"].stages}
     for expected in ("identity", "exact", "signatures", "candidate_edges",
                      "substring_edges", "cluster_labels"):
         assert expected in stages
+    for name, s in stages.items():
+        table = res["assignments" if name == "cluster_labels" else name]
+        assert s.rows == table.count(), name
+        assert s.partitions["total_rows"] == s.rows, name
+    # the run's wall ends when run_pipeline returns, not when it is read
+    total = res["metrics"].to_dict()["total_seconds"]
+    time.sleep(0.1)
+    assert res["metrics"].to_dict()["total_seconds"] == total
+
+    files = spark.createDataFrame(
+        [("repo_a", "src/only.py", "c1", "py", "def f(x):\n    return x\n")],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    bare = run_pipeline(spark, files, track_rows=False)["metrics"]
+    assert bare.stages
+    assert all(s.rows is None and s.partitions is None for s in bare.stages)
 
 
 def test_checkpoint_resumability(spark, corpus, tmp_path_factory):

@@ -88,6 +88,22 @@ def test_library_env_reads_are_deployment_settings():
     assert not bad, f"library environment reads outside the allowed set: {bad}"
 
 
+def test_driver_threads_come_from_one_helper():
+    """Only metrics.driver_threads starts driver threads: its tasks carry the
+    caller's job group and description, so a caller's cancelJobGroup reaches
+    every job.  A bare pool thread inherits none of them."""
+    bad = re.compile(
+        r"\bconcurrent\.futures\b|\bThreadPoolExecutor\b|\bthreading\.Thread\b"
+    )
+    hits = [
+        f"{path}: {m.group(0)}"
+        for path, src in _sources().items()
+        if pathlib.Path(path) != PKG / "metrics.py"
+        for m in bad.finditer(src)
+    ]
+    assert not hits, f"driver threads outside metrics.driver_threads: {hits}"
+
+
 def _option_audit():
     import importlib.util
 

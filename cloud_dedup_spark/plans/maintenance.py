@@ -1,7 +1,7 @@
 """Stage-table maintenance: compaction of append-grown checkpoint tables.
 
 Incremental ingest (streaming/incremental.py) appends one parquet slice per
-micro-batch to identity / signatures / norm / bands / shingle_index.  At
+micro-batch to identity / signatures / norm / bands / anchors.  At
 streaming cadence that is the classic small-file problem: a year of hourly
 deltas is ~10^4 files per table, every scan pays open/footer costs per file,
 and scan task counts stop tracking data size.  On Iceberg this is `rewrite
@@ -13,9 +13,9 @@ Atomicity on a filesystem without transactions: write the compacted copy to
 and drop the old directory.  Writer races are closed observationally: the
 compaction pins its read to an explicit snapshot listing, persists that
 listing as a manifest inside the new copy, and anything found in `.old`
-that the manifest does not cover — an append or deterministic partition
-replay that landed while the rewrite ran — is moved into the new table
-instead of deleted (crash-resumable via the same manifest in repair_swap).
+that the manifest does not cover — an append that landed while the rewrite
+ran — is moved into the new table instead of deleted (crash-resumable via
+the same manifest in repair_swap).
 A READER racing the swap can still observe a transient missing-file error
 between the two renames — acceptable for a maintenance operation,
 documented; Iceberg's snapshot-based rewrite is the fully concurrent-safe
@@ -34,16 +34,15 @@ from cloud_dedup_spark.fsutil import (
 )
 
 # driver-side snapshot manifest written into the compacted copy: the exact
-# top-level children (data files, or partition dirs for partitioned tables)
-# the compaction read.  Anything found in `.old` after the swap that is NOT
-# in the manifest was written concurrently during the compaction and is
-# restored instead of deleted — see _restore_unlisted.
+# top-level data files the compaction read.  Anything found in `.old` after
+# the swap that is NOT in the manifest was written concurrently during the
+# compaction and is restored instead of deleted — see _restore_unlisted.
 _MANIFEST = "_compact_manifest.json"
 
 
 def _list_children(spark: SparkSession, path: str) -> list[str]:
-    """Top-level data children of a table dir (files or partition dirs),
-    skipping markers (_SUCCESS, the manifest) and hidden entries."""
+    """Top-level data children of a table dir, skipping markers (_SUCCESS,
+    the manifest) and hidden entries."""
     fs, hpath = hadoop_path(spark, path)
     if not fs.exists(hpath):
         return []
@@ -61,10 +60,10 @@ def _restore_unlisted(spark: SparkSession, path: str, old: str) -> None:
     nor already present in the table back into the table, then drop `.old`.
 
     The manifest pins exactly what the compaction read, so a child missing
-    from it is a concurrent write (a fold's append or a replay's partition
-    overwrite) that raced the swap — restoring errs toward keeping data and
-    can never duplicate rows, because the compacted output was built from
-    the manifest listing only."""
+    from it is a concurrent write (a fold's append) that raced the swap —
+    restoring errs toward keeping data and can never duplicate rows,
+    because the compacted output was built from the manifest listing
+    only."""
     fs, _ = hadoop_path(spark, path)
     P = spark._jvm.org.apache.hadoop.fs.Path
     text = read_text(spark, f"{path}/{_MANIFEST}")
@@ -85,7 +84,6 @@ def _restore_unlisted(spark: SparkSession, path: str, old: str) -> None:
 # whole each update, so they never fragment)
 APPEND_TABLES = (
     "identity", "signatures", "norm", "bands", "anchors", "quarantine",
-    "shingle_index",
 )
 
 
@@ -162,7 +160,6 @@ def swap_overwrite(
     path: str,
     table_format: str = "parquet",
     suffix: str = ".swap",
-    partition_by: str | None = None,
     snapshot: list[str] | None = None,
 ) -> None:
     """Atomically replace a table with ``df`` — safe when ``df`` READS the
@@ -177,12 +174,11 @@ def swap_overwrite(
     same discipline as compaction below; Iceberg's snapshot commit is the
     cluster-native equivalent behind the same table_format switch).
 
-    ``snapshot``: the top-level children (data files / partition dirs) that
-    ``df`` was pinned to read.  When given, it is persisted as a manifest
-    inside the new copy and every ``.old`` child NOT in it — i.e. written
-    concurrently while the rewrite ran — is moved into the new table instead
-    of deleted, making the swap lose nothing under concurrent appends or
-    deterministic partition replays.  Callers that are the table's only
+    ``snapshot``: the top-level data files that ``df`` was pinned to read.
+    When given, it is persisted as a manifest inside the new copy and every
+    ``.old`` child NOT in it — i.e. written concurrently while the rewrite
+    ran — is moved into the new table instead of deleted, making the swap
+    lose nothing under concurrent appends.  Callers that are the table's only
     writer (the fold's edges/cluster_labels rewrites) omit it.
     """
     if table_format not in ("parquet", "orc"):
@@ -192,19 +188,13 @@ def swap_overwrite(
         # would break them (their metadata records absolute file paths, so a
         # directory rename orphans the table).  Plain overwrite IS the
         # atomic swap there.
-        w = df.write.mode("overwrite").format(table_format)
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.save(path)
+        df.write.mode("overwrite").format(table_format).save(path)
         return
     tmp, old = f"{path}{suffix}.tmp", f"{path}{suffix}.old"
     fs, hpath = hadoop_path(spark, path)
     P = spark._jvm.org.apache.hadoop.fs.Path
     fs.delete(P(tmp), True)
-    w = df.write.mode("overwrite").format(table_format)
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.save(tmp)
+    df.write.mode("overwrite").format(table_format).save(tmp)
     if snapshot is not None:
         # manifest travels inside the new copy so a crash after the second
         # rename still knows what the rewrite read (repair_swap finishes the
@@ -253,7 +243,6 @@ def compact_stage_tables(
     checkpoint_dir: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     min_files: int = 8,
-    tables: tuple[str, ...] = APPEND_TABLES,
 ) -> dict:
     """Rewrite fragmented stage tables to ~target-sized parquet files.
 
@@ -263,11 +252,9 @@ def compact_stage_tables(
     Returns {table: {"files_before": n, "files_after": m, "bytes": b}} for
     the tables that were rewritten.
     """
-    from pyspark.sql import functions as F
-
     loc = checkpoint_dir.rstrip("/")
     report: dict = {}
-    for name in tables:
+    for name in APPEND_TABLES:
         path = f"{loc}/{name}"
         # crash repair BEFORE the skip checks: a kill between the two swap
         # renames leaves the data parked in <table>.compact.old with the
@@ -289,20 +276,16 @@ def compact_stage_tables(
         lock = _lock_path(path, ".compact")
         write_text(spark, lock, "compact")
         try:
-            report[name] = _compact_one(spark, loc, path, n_files, total, want)
+            report[name] = _compact_one(spark, path, n_files, total, want)
         finally:
             fs, lp = hadoop_path(spark, lock)
             fs.delete(lp, False)
     return report
 
 
-def _compact_one(
-    spark, loc: str, path: str, n_files: int, total: int, want: int
-) -> dict:
+def _compact_one(spark, path: str, n_files: int, total: int, want: int) -> dict:
     """Snapshot-pinned rewrite + manifest swap of one table (lock held by
     the caller)."""
-    from pyspark.sql import functions as F
-
     # pin the read to an explicit snapshot listing: Spark lists the
     # directory lazily at write time, so an unpinned self-read would
     # absorb files appended DURING the compaction into the rewrite while
@@ -310,75 +293,12 @@ def _compact_one(
     # concurrent append is provably not in the output and the manifest
     # restore (swap_overwrite) moves it into the new table afterwards
     snapshot = _list_children(spark, path)
-    part_dirs = [c for c in snapshot if c.startswith("ingest_batch=")]
-    if part_dirs:
-        from urllib.parse import unquote
-
-        vals = [unquote(c.split("=", 1)[1]) for c in part_dirs]
-        df = spark.read.parquet(path).filter(
-            F.col("ingest_batch").isin(vals)
-        )
-    else:
-        df = spark.read.parquet(*[f"{path}/{c}" for c in snapshot])
+    df = spark.read.parquet(*[f"{path}/{c}" for c in snapshot])
     # coalesce, not repartition: compaction must not shuffle the data it
-    # rewrites — each output task concatenates whole input files.
-    # Batch-partitioned tables (shingle_index writes one partition per
-    # ingest batch) are folded into a single `compacted` partition so
-    # the layout stays partitioned and future per-batch dynamic
-    # overwrites keep working; their rows are also DE-DUPLICATED here
-    # (index rows are unique by construction — (dst, sh) per doc — so a
-    # full-row distinct only removes crash artifacts).  That dedup is
-    # the one shuffle compaction performs, and it makes the index
-    # self-healing: duplicate rows from a violated write discipline are
-    # removed by the next compaction instead of accumulating.
-    if "ingest_batch" in df.columns:
-        # live-ingest guard (round-4): a batch partition whose fold has
-        # NOT reached its identity commit yet is still subject to a
-        # replay's per-partition dynamic overwrite — folding it into
-        # `compacted` would strand a stale copy the replay cannot
-        # replace (duplicated rows until the next self-healing dedup).
-        # In-flight detection is observational, not a lock: a partition
-        # is in-flight iff it carries a key (dst = file_id) absent from
-        # the committed identity table; those partitions are carried
-        # through compaction byte-identical, under their own names.
-        inflight: list[str] = []
-        if "dst" in df.columns and hadoop_path_exists(spark, f"{loc}/identity"):
-            ids = (
-                spark.read.parquet(f"{loc}/identity")
-                .select(F.col("file_id").alias("dst"))
-                .distinct()
-            )
-            inflight = [
-                r["ingest_batch"]
-                for r in df.join(ids, "dst", "left_anti")
-                .select("ingest_batch")
-                .distinct()
-                .collect()
-            ]
-        committed = (
-            df.filter(~F.col("ingest_batch").isin(inflight))
-            if inflight
-            else df
-        )
-        out = (
-            committed.drop("ingest_batch")
-            .dropDuplicates()
-            .withColumn("ingest_batch", F.lit("compacted"))
-            .coalesce(want)
-        )
-        if inflight:
-            out = out.unionByName(
-                df.filter(F.col("ingest_batch").isin(inflight))
-            )
-        swap_overwrite(
-            spark, out, path, suffix=".compact",
-            partition_by="ingest_batch", snapshot=snapshot,
-        )
-    else:
-        swap_overwrite(
-            spark, df.coalesce(want), path, suffix=".compact",
-            snapshot=snapshot,
-        )
+    # rewrites — each output task concatenates whole input files
+    swap_overwrite(
+        spark, df.coalesce(want), path, suffix=".compact", snapshot=snapshot
+    )
     after, _ = _dir_stats(spark, path)
     return {
         "files_before": n_files,

@@ -51,6 +51,9 @@ from cloud_dedup_spark.operators.substring import substring_edge_list, substring
 from cloud_dedup_spark.operators.verify import accepted_edges, verify_pairs
 
 _JOB_DESCRIPTION = "spark.job.description"
+# written into a checkpoint dir by incremental_dedup_update before its first
+# table write; run_pipeline refuses to resume a dir that carries it
+FOLD_MARKER = "_folded"
 
 
 def config_fingerprint(cfg: DedupConfig) -> str:
@@ -133,6 +136,18 @@ class CheckpointStore:
             return hadoop_path_exists(self.spark, f"{self._path(name)}/metadata")
         return hadoop_success_exists(self.spark, self._path(name))
 
+    def folded(self) -> bool:
+        """True iff an incremental fold has written to this checkpoint: it
+        carries the fold's marker, or the ``shingle_index`` table that folds
+        of an older layout wrote (nothing else reads or compacts that
+        directory).  Starts no Spark job."""
+        if self.location is None:
+            return False
+        return any(
+            hadoop_path_exists(self.spark, self._path(name))
+            for name in (FOLD_MARKER, "shingle_index")
+        )
+
     def guard_config(self, fingerprint: str) -> None:
         """Refuse to resume stage tables written under a DIFFERENT config.
 
@@ -196,9 +211,9 @@ def run_pipeline(
     """
     cfg = cfg or DedupConfig()
     store = CheckpointStore(spark, checkpoint_dir, table_format)
-    # only a fold writes shingle_index, and a fold leaves exact,
-    # candidate_edges, substring_edges and clusters at their pre-fold rows
-    if store.exists("shingle_index"):
+    # a fold leaves exact, candidate_edges, substring_edges and clusters at
+    # their pre-fold rows
+    if store.folded():
         raise ValueError(
             f"checkpoint dir {checkpoint_dir} was updated by "
             f"incremental_dedup_update; its exact, candidate_edges, "

@@ -13,10 +13,11 @@ parquet here; Iceberg MERGE INTO on a cluster).
 signature cost; prior stage tables are *scanned*, never recomputed.  New
 candidate pairs come from three delta-anchored channels — exact (delta sha ⋈
 union sha groups), LSH (delta bands ⋈ union bands), substring (delta needles
-⋈ union index AND union needles ⋈ delta index — a new haystack can contain an
-old needle) — and connected components runs only over the components the new
-edges (or new quarantines) touch; untouched components keep their labels
-verbatim.  The result equals a full recompute over the union (pinned by
+⋈ union haystacks AND union needles ⋈ delta haystacks — a new haystack can
+contain an old needle) — and connected components runs only over the
+components the new edges (or new quarantines) touch; untouched components
+keep their labels verbatim.  The result equals a full recompute over the
+union (pinned by
 tests/test_incremental.py::test_incremental_equals_full_recompute).  The fold
 runs as named phases, in this order, each taking its inputs as arguments and
 returning what later phases read, all through one ``CheckpointStore``.  The
@@ -31,10 +32,11 @@ families (operators/exact.py), the hot-bucket sizing and salt
 4. ``_exact_channel``: star edges within the sha groups the fold touches;
 5. ``_delta_signatures``: signatures of brand-new content only (plus
    ``_inherit_reps`` when a collision is new);
-6. ``_near_channels``: LSH and both substring directions, concurrently;
+6. ``_near_channels``: the corpus doc frequencies of the delta's shingles,
+   counted once, then LSH and both substring directions, concurrently;
 7. ``_components``: connected components over the touched components only;
-8. ``_persist``: the concurrent write barrier, then quarantine, then identity
-   (the commit point) last.
+8. ``_persist``: the concurrent write barrier over six tables, then
+   quarantine, then identity (the commit point) last.
 
 Every per-fold SHUFFLE is O(delta + touched): corpus-sized state is only
 SCANNED, column-pruned, through broadcast semi-joins keyed on delta-bounded
@@ -49,10 +51,11 @@ from __future__ import annotations
 
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cloud_dedup_spark.config import DedupConfig
+from cloud_dedup_spark.fsutil import write_text
 from cloud_dedup_spark.functions.normalize import with_identity
 from cloud_dedup_spark.metrics import driver_threads
 from cloud_dedup_spark.operators.candidates import (
@@ -64,20 +67,21 @@ from cloud_dedup_spark.operators.exact import (
 )
 from cloud_dedup_spark.operators.signatures import SIG_TABLE_COLUMNS, compute_signatures
 from cloud_dedup_spark.operators.substring import (
-    candidate_anchors, shingle_inverted_index, substring_edge_list, substring_edges,
+    candidate_anchors, shingle_doc_freq, shingle_inverted_index, substring_edge_list,
+    substring_edges,
 )
 from cloud_dedup_spark.operators.verify import accepted_edges, verify_pairs
 from cloud_dedup_spark.plans.maintenance import (
     APPEND_TABLES, repair_swap, swap_overwrite,
 )
 from cloud_dedup_spark.plans.pipeline import (
-    CheckpointStore, config_fingerprint, quarantine_id_collisions,
+    FOLD_MARKER, CheckpointStore, config_fingerprint, quarantine_id_collisions,
     widen_narrow_input, with_quarantine_labels,
 )
 from cloud_dedup_spark.sources.files_source import FILES_SCHEMA
 
 # the stage tables a fold reads; run_pipeline(checkpoint_dir=...) writes all
-# of them (shingle_index is not among them: the first fold builds it)
+# of them
 _STAGE_TABLES = (
     "identity", "quarantine", "signatures", "norm", "bands", "anchors",
     "edges", "cluster_labels",
@@ -106,7 +110,7 @@ def incremental_dedup_update(
     fold: every fold join is already delta-anchored through explicit
     broadcast semi-filters, so an injected bloom buys nothing — but BUILDING
     one costs a full aggregation pass over the corpus-sized side (measured:
-    a 1 MB-per-partition bitmap built over the whole shingle index, 3.3 MiB
+    a 1 MB-per-partition bitmap built over the corpus's shingle rows, 3.3 MiB
     exchanged, per fold — the single largest fold shuffle, and the one term
     that grew with corpus size).  Restored on exit; the batch pipeline keeps
     the session default.
@@ -146,14 +150,14 @@ def _incremental_dedup_update(
         return {
             "assignments": prior["cluster_labels"], "edges": prior["edges"],
             "delta_signatures": prior["signatures"].limit(0),
-            "cc_stats": {"n_edges": 0, "n_vertices": 0, "n_touched_clusters": 0},
+            "cc_stats": {"n_edges": 0, "n_vertices": 0},
             "n_delta": 0, "n_lsh_pairs": 0,
         }
     q = _quarantine(prior, guard.delta_identity)
     exact_new, prior_touched, touched = _exact_channel(prior, q)
     delta_sigs, delta_norm = _delta_signatures(prior, q, prior_touched, touched, cfg)
     near_new, sub_new, n_lsh_pairs, delta_rows = _near_channels(
-        store, cfg, prior, guard.batch_key, delta_sigs, delta_norm
+        store, cfg, prior, delta_sigs, delta_norm
     )
     assignments, edges_out, cc_stats = _components(
         prior, q, exact_new, near_new, sub_new
@@ -177,8 +181,7 @@ def _incremental_dedup_update(
 
 def _open_prior(store: CheckpointStore) -> dict:
     """Table name → DataFrame for every stage table, each opened once after
-    the entry repairs and the layout check (shingle_index: None until the
-    first fold builds it)."""
+    the entry repairs and the layout check."""
     # entry repair for every swap-rewritten table — a previous fold or a
     # compaction run may have died between its two renames; must run BEFORE
     # any read below (without the .compact repairs, a compaction crash on
@@ -190,27 +193,18 @@ def _open_prior(store: CheckpointStore) -> dict:
     for t in APPEND_TABLES:
         repair_swap(spark, f"{loc}/{t}", suffix=".compact")
     missing = [f"table {t!r}" for t in _STAGE_TABLES if not store.exists(t)]
-    index = None
-    if store.exists("shingle_index"):
-        index = store.read("shingle_index")
-        if "ingest_batch" not in index.columns:
-            missing.append("column 'ingest_batch' of table 'shingle_index'")
     if missing:
         raise ValueError(
             f"checkpoint dir {loc} lacks {', '.join(missing)}: an older "
             f"run_pipeline wrote it, or it is damaged. Re-run run_pipeline("
             f"..., checkpoint_dir=...) into a fresh dir and fold deltas into that"
         )
-    prior = {t: store.read(t) for t in _STAGE_TABLES}
-    prior["shingle_index"] = index
-    return prior
+    return {t: store.read(t) for t in _STAGE_TABLES}
 
 
 class _Guard(NamedTuple):
     delta_identity: DataFrame  # delta rows not ingested yet
     n_delta: int
-    batch_key: str  # the raw batch's shingle_index partition
-    recovery_key: str | None  # set only on the recovery path (_write_index)
 
 
 def _guard(
@@ -245,46 +239,24 @@ def _guard(
     delta_joined = delta_identity_raw.join(
         F.broadcast(idem_slice), ["file_id", "file_id2"], "left"
     ).localCheckpoint(eager=False)
-    # ONE multi-agg job computes the batch fingerprint (over the RAW batch,
-    # BEFORE the guard: a replayed micro-batch recomputes the identical key
-    # no matter how much a crashed attempt committed — a post-guard key
-    # would drift after a partial identity append, splitting one batch's
-    # index rows across two partitions), the surviving-delta count, and the
-    # surviving-delta fingerprint (the recovery partition key) — previously
-    # three separate driver actions (round-4 verdict item 3).  bit_xor:
-    # order-independent and overflow-free (ANSI long sums throw).
-    stats = delta_joined.agg(
-        F.count(F.lit(1)).alias("n_raw"),
-        F.expr("bit_xor(xxhash64(file_id, file_id2))").alias("h_raw"),
-        F.count(F.when(F.col("_seen").isNull(), 1)).alias("n_delta"),
-        F.expr(
-            "bit_xor(CASE WHEN _seen IS NULL THEN xxhash64(file_id, file_id2) END)"
-        ).alias("h_delta"),
-    ).first()
-    n_raw, n_delta = stats["n_raw"], stats["n_delta"]
+    fresh = delta_joined.filter(F.col("_seen").isNull()).drop("_seen")
+    # the surviving-delta count; it also runs delta_joined's checkpoint
+    n_delta = fresh.count()
     if n_delta == 0:
         # Fully-replayed (or fully previously-ingested) delivery: identity
         # is the commit point and it is written LAST, so zero surviving rows
         # means every write for these files already committed.  Nothing to
-        # fold — in particular the index write is SKIPPED entirely, so
-        # overlapping batch-mode deliveries never pay a recovery-path scan
-        # (round-3 ADVICE).
+        # fold.
         return None
     # same resume guard as the batch pipeline: folding a delta with a
     # DIFFERENT config into existing stage tables would mix signature
     # families silently (pre-guard checkpoints have no marker and adopt the
     # current config's)
     store.guard_config(config_fingerprint(cfg))
-    batch_key = f"b_{n_raw}_{(stats['h_raw'] or 0) & 0xFFFFFFFFFFFFFFFF:x}"
-    # n_delta < n_raw only when a crashed attempt committed part of this
-    # batch's identity append — the recovery-only path for the index write;
-    # the surviving-delta fingerprint names its partition at no extra job
-    recovery_key = None
-    if n_delta < n_raw:
-        h_delta = (stats["h_delta"] or 0) & 0xFFFFFFFFFFFFFFFF
-        recovery_key = f"{batch_key}_p{n_delta}_{h_delta:x}"
-    delta_identity = delta_joined.filter(F.col("_seen").isNull()).drop("_seen")
-    return _Guard(delta_identity, n_delta, batch_key, recovery_key)
+    # before the fold's first table write: run_pipeline refuses to resume a
+    # checkpoint that carries this marker (plans/pipeline.py)
+    write_text(store.spark, f"{store.location}/{FOLD_MARKER}", "")
+    return _Guard(fresh, n_delta)
 
 
 class _Quarantine(NamedTuple):
@@ -426,7 +398,7 @@ def _inherit_reps(
     # state (never checkpointed), but no recompute is needed: same sha ⇒
     # byte-identical content, so the group's new min-id clean rep inherits
     # RELABELED copies of a donor's rows, then flows through every delta
-    # channel (LSH bands, substring needles+index, persisted appends)
+    # channel (LSH bands, substring needles and haystacks, persisted appends)
     # exactly like brand-new content.
     #
     # Donor validity: a sig row's file_id can be AMBIGUOUS — both members of
@@ -505,20 +477,11 @@ def _inherit_reps(
     return inherited_sigs, inherited_norm
 
 
-def _own_partition(batch_key: str) -> Column:
-    """shingle_index partitions of this batch's earlier attempts: the exact
-    key or `<key>_p…` recovery partitions only — a bare startswith could
-    (astronomically rarely) match a DIFFERENT batch whose key string extends
-    this one, wrongly hiding its index rows from this fold."""
-    own = F.col("ingest_batch")
-    return (own == batch_key) | own.startswith(f"{batch_key}_p")
-
-
 def _near_channels(
-    store: CheckpointStore, cfg: DedupConfig, prior: dict, batch_key: str,
+    store: CheckpointStore, cfg: DedupConfig, prior: dict,
     delta_sigs: DataFrame, delta_norm: DataFrame,
 ) -> tuple[DataFrame, DataFrame, int, dict]:
-    """(near_new, sub_new, n_lsh_pairs, the delta's rows per index table):
+    """(near_new, sub_new, n_lsh_pairs, the delta's rows per append table):
     LSH and both substring directions as three concurrent driver threads."""
     union_sigs = prior["signatures"].unionByName(delta_sigs)
     union_norm = prior["norm"].unionByName(delta_norm)
@@ -537,84 +500,49 @@ def _near_channels(
     # round-5 decomposition).  The three channels therefore run as
     # concurrent driver threads (guide §2.6); each thread's jobs back-fill
     # executors the others leave idle.  All shared inputs (delta_sigs,
-    # delta_bands, union frames, the persisted index) are created before
-    # the threads start; delta_index is EAGER so the two substring threads
-    # never race to materialize the same lazy checkpoint.
+    # delta_bands, union frames, the delta index, the doc frequencies) are
+    # created before the threads start; delta_index and doc_freq are EAGER
+    # so the two substring threads never race to materialize the same lazy
+    # checkpoint.
 
     # substring: both delta-anchored directions (new needle in old haystack,
-    # old needle in new haystack; delta↔delta covered by the first).
-    # The haystack inverted index is PERSISTED state, grown one
-    # batch-partition per delta: built once from the prior signatures if
-    # absent, extended with only the delta's exploded rows each update, and
-    # scanned by the delta-needles call — so no update ever re-explodes the
-    # union's signature rows (ROADMAP 5; the delta-haystacks call explodes
-    # just the delta, which is already delta-sized).
-    index = prior["shingle_index"]
-    if index is None:
-        # first incremental run: base partition from the prior signatures
-        # (partitionBy keeps ingest_batch last, where withColumn puts it in
-        # the recorded schema)
-        base = shingle_inverted_index(prior["signatures"]).withColumn(
-            "ingest_batch", F.lit("base")
-        )
-        store.record_schema("shingle_index", base.schema)
-        base.write.mode("overwrite").partitionBy("ingest_batch").format(
-            store.table_format
-        ).save(f"{store.location}/shingle_index")
-        index = store.read("shingle_index")
-    # The index is the LARGEST stage table (one row per corpus token), so
-    # its append idempotency must not cost a per-delta scan of the table
-    # (an insert-if-absent distinct over `dst` is O(corpus tokens) per
-    # micro-batch).  Instead each delta writes its exploded rows into its
-    # OWN partition, keyed by `batch_key` (derived from the RAW batch, so
-    # replays recompute it identically): a replayed micro-batch
-    # dynamic-overwrites exactly that partition — idempotent at O(delta).
-    # The recovery path for a batch whose identity append was PARTIAL is
-    # in _write_index.
-    # eager (round-6): BOTH substring threads below consume this frame; a
-    # lazy checkpoint would let them race to materialize the same blocks
+    # old needle in new haystack; delta↔delta covered by the first).  The
+    # forward call explodes its haystacks out of union_sigs inline, as the
+    # batch does; the reverse call probes the delta's own index.
     delta_index = shingle_inverted_index(delta_sigs).localCheckpoint()
-    # union for THIS fold's reads: stored partitions except any written by
-    # THIS batch's earlier attempts — the raw batch_key partition and any
-    # `<batch_key>_p*` recovery partitions (crash window: index written,
-    # identity not — in that window the crashed attempt already committed
-    # this batch's edges, which the fold reads via the prior edges, so
-    # excluding its index partitions here loses nothing), plus the
-    # in-memory delta rows
-    union_index = (
-        index.filter(~_own_partition(batch_key))
-        .select("dst", "hay_tokens", "sh")
-        .unionByName(delta_index)
-    )
-
     delta_ids = delta_sigs.select("file_id")
+    # corpus doc frequencies of the delta's shingle values, counted once for
+    # both directions: the forward anchors are some of the delta's shingles,
+    # and the reverse anchors can only probe the delta's index.  Prior rows
+    # of this fold's delta ids are left out — after a crash replay the
+    # crashed attempt's appended signature rows must not count twice
+    prior_index = shingle_inverted_index(
+        prior["signatures"].join(F.broadcast(delta_ids), "file_id", "left_anti")
+    )
+    doc_freq = shingle_doc_freq(
+        prior_index.unionByName(delta_index), delta_index
+    ).localCheckpoint()
     delta_anchors = candidate_anchors(delta_sigs).localCheckpoint(eager=False)
     # reverse channel (old needle in NEW haystack): the persisted anchors
-    # table joins against the delta's doc frequencies — scan-only; the old
-    # path re-exploded every union signature row and ran a corpus-wide
-    # anchor-value distinct per fold (round-3 verdict item 1)
+    # table joins against the delta's doc frequencies — scan-only; no fold
+    # re-derives every corpus needle's anchors (round-3 verdict item 1)
     union_anchors = prior["anchors"].unionByName(delta_anchors)
 
     with driver_threads(store.spark, 3) as submit:
         f_near = submit(_lsh_edges, cfg, prior["bands"], delta_bands, union_sigs)
         f_fwd = submit(
             substring_edges, union_norm, union_sigs, cfg, needle_ids=delta_ids,
-            inverted=union_index,
+            doc_freq=doc_freq,
         )
-        # the haystack side is the delta's inverted index, already
-        # materialized above: the operator probes it directly instead of
-        # re-exploding the delta's rows out of corpus-sized union_sigs
         f_rev = submit(
             substring_edges, union_norm, union_sigs, cfg, inverted=delta_index,
-            cand_anchors=union_anchors, df_index=union_index,
+            cand_anchors=union_anchors, doc_freq=doc_freq,
         )
         near_new, n_lsh_pairs = f_near.result()
         sub_new = substring_edge_list(
             f_fwd.result().unionByName(f_rev.result()).distinct()
         )
-    delta_rows = {
-        "bands": delta_bands, "shingle_index": delta_index, "anchors": delta_anchors
-    }
+    delta_rows = {"bands": delta_bands, "anchors": delta_anchors}
     return near_new, sub_new, n_lsh_pairs, delta_rows
 
 
@@ -801,15 +729,10 @@ def _components(
     # the edge count is both a stat and CC's plan choice: a touched graph
     # of a few hundred edges is labelled on the driver in one collect
     # (operators/cluster.py).  No vertices: the left join below gives each
-    # member that is no edge's endpoint its own id.  touched_cluster_ids'
-    # count gates nothing; its frame was already run by the member-split
-    # broadcasts above
+    # member that is no edge's endpoint its own id
     n_cc_edges = cc_edges.count()
     sub_labels = connected_components(cc_edges, n_edges=n_cc_edges)
-    cc_stats = {
-        "n_edges": n_cc_edges, "n_vertices": n_cc_members,
-        "n_touched_clusters": touched_cluster_ids.count(),
-    }
+    cc_stats = {"n_edges": n_cc_edges, "n_vertices": n_cc_members}
     label_cols = ["file_id", "repo", "path", "cluster_id"]
     recomputed = (
         touched_prior_members.unionByName(
@@ -837,7 +760,7 @@ def _components(
 def _persist(
     store: CheckpointStore, out: dict, prior: dict, guard: _Guard, q: _Quarantine,
 ) -> None:
-    """Write the fold: the concurrent barrier over the seven tables in ``out``
+    """Write the fold: the concurrent barrier over the six tables in ``out``
     (table name → the frame that lands there), then quarantine, then identity.
 
     Barrier invariant: no frame a concurrent task reads — its ``out`` frame or
@@ -848,13 +771,13 @@ def _persist(
     tests/test_incremental.py::test_persist_tasks_read_no_sibling_target).
     """
     # crash-safe under foreachBatch replay at ANY point:
-    #   1. the derived-table swaps (edges, cluster_labels), the index
-    #      partition write, and the four append tables are mutually
-    #      independent writes to SEVEN distinct paths, so they run as
-    #      concurrent driver threads (round-6; guide §2.6 — the fold's
-    #      persist phase was a serial chain of small writes, each leaving
-    #      most cores idle).  Their relative commit order does not matter
-    #      for replay: a replay re-derives every frame and re-swaps
+    #   1. the derived-table swaps (edges, cluster_labels) and the four
+    #      append tables are mutually independent writes to SIX distinct
+    #      paths, so they run as concurrent driver threads (round-6; guide
+    #      §2.6 — the fold's persist phase was a serial chain of small
+    #      writes, each leaving most cores idle).  Their relative commit
+    #      order does not matter for replay: a replay re-derives every
+    #      frame and re-swaps
     #      deterministically, the appends are insert-if-absent, and every
     #      polluted-prior state a reordering can leave (e.g. sig rows
     #      appended, swaps not) is a state the pre-round-6 order could
@@ -883,7 +806,6 @@ def _persist(
     tasks = [
         (swap_overwrite, spark, out["edges"], f"{loc}/edges", fmt),
         (swap_overwrite, spark, out["cluster_labels"], f"{loc}/cluster_labels", fmt),
-        (_write_index, store, out["shingle_index"], prior["shingle_index"], guard),
     ] + [
         (_append_absent, store, t, out[t], keys, prior[t])
         for t, keys in _APPEND_KEYS.items()
@@ -903,50 +825,6 @@ def _persist(
     guard.delta_identity.select(*prior["identity"].columns).write.mode(
         "append"
     ).format(fmt).save(f"{loc}/identity")
-
-
-def _write_index(
-    store: CheckpointStore, delta_index: DataFrame, prior_index: DataFrame | None,
-    guard: _Guard,
-) -> None:
-    """The delta's shingle_index rows, into this batch's own partition."""
-    # dynamic overwrite touches only partitions present in the data, so a
-    # crashed half-write is replaced wholesale on the next replay.  The
-    # plain partition path is only valid when this fold's delta covers the
-    # WHOLE raw batch; otherwise (partial delta: guard.recovery_key is set)
-    # two cases differ:
-    #   * an earlier attempt of THIS batch left a partition (crash mid-way
-    #     through the identity append): overwriting with the shrunken delta
-    #     would drop the committed rows' index entries, and appending
-    #     unguarded would duplicate the uncommitted ones — so guard against
-    #     the dsts of THIS batch's own partitions only (partition-pruned
-    #     scan, O(batch), not the old O(index) whole-table distinct) and
-    #     write the remainder to a deterministic recovery partition;
-    #   * no earlier attempt wrote anything (a legitimately overlapping
-    #     batch-mode delivery): the surviving rows are genuinely new, so
-    #     they get their own deterministic partition — same O(delta)
-    #     overwrite idempotency as the clean path (round-3 ADVICE: this
-    #     caller class used to pay the recovery scan on every call).
-    index_path = f"{store.location}/shingle_index"
-    to_write, key = delta_index, guard.batch_key
-    if guard.recovery_key is not None:
-        key = guard.recovery_key
-        # own partitions predate this fold (a fold that builds the index
-        # starts from an empty directory), so the snapshot _open_prior took
-        # lists their files — no job, no second listing
-        own = f"/ingest_batch={guard.batch_key}"
-        if prior_index is not None and any(
-            f"{own}/" in f or f"{own}_p" in f for f in prior_index.inputFiles()
-        ):
-            own_dst = (
-                prior_index.filter(_own_partition(guard.batch_key))
-                .select("dst")
-                .distinct()
-            )
-            to_write = delta_index.join(F.broadcast(own_dst), "dst", "left_anti")
-    to_write.withColumn("ingest_batch", F.lit(key)).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("ingest_batch").format(store.table_format).save(index_path)
 
 
 def _append_absent(

@@ -121,72 +121,6 @@ def test_repair_swap_finishes_interrupted_restore(spark, tmp_path):
     ) == after
 
 
-def _write_index_slice(spark, path: str, batch: str, dsts: list[int]) -> None:
-    rows = [(d, 10, f"sh_{d}_{i}") for d in dsts for i in range(3)]
-    (
-        spark.createDataFrame(rows, "dst long, hay_tokens int, sh string")
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(f"{path}/ingest_batch={batch}")
-    )
-
-
-def test_compaction_mid_stream_preserves_inflight_batch(spark, tmp_path):
-    """VERDICT round-3 item 6: compacting WHILE ingest is live must not
-    strand a batch partition whose fold has not committed identity yet —
-    a replay of that fold dynamic-overwrites its own partition, and a copy
-    folded into `compacted` would be unreachable to that overwrite
-    (duplicate rows).  The guard keeps in-flight partitions under their own
-    names; committed partitions fold into `compacted` (deduplicated)."""
-    loc = str(tmp_path / "state")
-    idx = f"{loc}/shingle_index"
-    # committed corpus: identity knows dst 1..6
-    spark.createDataFrame(
-        [(d,) for d in range(1, 7)], "file_id long"
-    ).write.mode("overwrite").parquet(f"{loc}/identity")
-    # fragmented committed partitions — incl. a planted duplicate slice in
-    # `base` (crash artifact) that the self-healing dedup must remove
-    _write_index_slice(spark, idx, "base", [1, 2])
-    _write_index_slice(spark, idx, "base", [1, 2])
-    _write_index_slice(spark, idx, "base", [3])
-    _write_index_slice(spark, idx, "b_1", [4])
-    _write_index_slice(spark, idx, "b_1", [5, 6])
-    # in-flight fold: index written, identity commit NOT yet — dst 99 is
-    # absent from the identity table
-    _write_index_slice(spark, idx, "b_2x", [99])
-    report = compact_stage_tables(
-        spark, loc, min_files=2, tables=("shingle_index",)
-    )
-    assert "shingle_index" in report
-    # in-flight partition survived under its own name
-    assert os.path.exists(f"{idx}/ingest_batch=b_2x")
-    after = spark.read.parquet(idx)
-    parts = {
-        r["ingest_batch"]
-        for r in after.select("ingest_batch").distinct().collect()
-    }
-    assert parts == {"compacted", "b_2x"}
-    # committed rows deduplicated into `compacted`; in-flight rows intact
-    assert after.filter(F.col("ingest_batch") == "compacted").count() == 18
-    assert after.filter(F.col("dst") == 99).count() == 3
-    # the replayed fold dynamic-overwrites ITS OWN partition — must replace
-    # the carried-through copy wholesale (no duplicates), exactly as the
-    # incremental path writes it
-    replay = spark.createDataFrame(
-        [(99, 10, f"sh_99_{i}", "b_2x") for i in range(3)],
-        "dst long, hay_tokens int, sh string, ingest_batch string",
-    )
-    (
-        replay.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(idx)
-    )
-    final = spark.read.parquet(idx)
-    assert final.count() == 18 + 3
-    assert final.filter(F.col("dst") == 99).count() == 3
-
-
 def test_repair_skips_under_fresh_lock_and_clears_stale(spark, tmp_path):
     """The advisory compaction lock: a fold's entry repair must NOT race a
     live compaction's swap (fresh lock → no-op), but a crash-leftover lock

@@ -156,7 +156,6 @@ def test_defaulted_parameters_have_a_non_test_setter():
         "badge(cls)",  # reference S4 markup
         "bench_corpus_df(files_per_block)",
         "compact_stage_tables(min_files)",
-        "compact_stage_tables(tables)",
         "contaminated_docs(cfg)",
         "incremental_dedup_stream(cfg)",
         "incremental_dedup_stream(table_format)",

@@ -89,9 +89,9 @@ def test_corpus_planted_containments_found(spark, corpus):
 
 
 def test_prebuilt_inverted_index_equals_inline_explode(spark):
-    """substring_edges fed the persisted shingle_inverted_index frame must
-    return exactly the edges of the default inline-explode path (the
-    incremental path scans the index table instead of re-exploding)."""
+    """substring_edges fed a prebuilt shingle_inverted_index frame must
+    return exactly the edges of the default inline-explode path (the fold's
+    reverse call probes the delta's prebuilt index)."""
     from cloud_dedup_spark.config import DedupConfig
     from cloud_dedup_spark.functions.normalize import with_identity
     from cloud_dedup_spark.operators.signatures import compute_signatures
@@ -124,10 +124,56 @@ def test_prebuilt_inverted_index_equals_inline_explode(spark):
     assert inline == prebuilt and len(inline) >= 1
 
 
-def test_prebuilt_anchors_require_the_corpus_df_index(spark):
-    """Prebuilt anchors probe a delta-sized index; without the full-corpus
-    ``df_index`` their doc frequencies would be delta-local, which defeats
+def test_prebuilt_anchors_require_the_corpus_doc_freq(spark):
+    """Prebuilt anchors probe a delta-sized index; without the corpus
+    ``doc_freq`` their doc frequencies would be delta-local, which defeats
     the template cap, so the call fails at plan time instead."""
     frame = spark.createDataFrame([(1,)], "file_id long")
-    with pytest.raises(AssertionError, match="df_index"):
+    with pytest.raises(AssertionError, match="doc_freq"):
         substring_edges(frame, frame, CFG, inverted=frame, cand_anchors=frame)
+
+
+def test_precomputed_doc_freq_equals_own_df_pass(spark):
+    """A ``needle_ids`` call given the corpus ``doc_freq`` (counted as the
+    fold counts it: the corpus index, semi-joined to the needles' shingle
+    values) returns the edges of the same call that counts its own.  The
+    template needle's every shingle sits in more docs than
+    ``substring_max_anchor_df``, so the cap drops it on both sides."""
+    from cloud_dedup_spark.operators.substring import (
+        shingle_doc_freq,
+        shingle_inverted_index,
+    )
+
+    template = _body("tmpl", 20)
+    needle = _body("inner", 20)
+    rows = [
+        ("a", "template.py", "c1", "py", template),
+        ("a", "needle.py", "c2", "py", needle),
+        ("b", "hay.py", "c3", "py",
+         _body("x", 50) + "\n" + needle + "\n" + _body("y", 50)),
+    ] + [
+        ("c", f"t{i}.py", f"t{i}", "py",
+         _body(f"pre{i}", 40) + "\n" + template + "\n" + _body(f"post{i}", 40))
+        for i in range(3)
+    ]
+    ident = with_identity(spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"))
+    ids = {r["path"]: r["file_id"] for r in ident.select("path", "file_id").collect()}
+    needle_ids = ident.filter("path in ('template.py', 'needle.py')").select("file_id")
+
+    def edges(cfg, **kw):
+        sigs = compute_signatures(ident, cfg)
+        out = substring_edges(ident, sigs, cfg, needle_ids=needle_ids, **kw)
+        return {(r["src"], r["dst"], r["needle"]) for r in out.collect()}
+
+    capped = DedupConfig(substring_max_anchor_df=2)
+    sigs = compute_signatures(ident, capped)
+    doc_freq = shingle_doc_freq(
+        shingle_inverted_index(sigs),
+        shingle_inverted_index(sigs.join(needle_ids, "file_id", "left_semi")),
+    )
+    own = edges(capped)
+    assert edges(capped, doc_freq=doc_freq) == own
+    assert {n for _, _, n in own} == {ids["needle.py"]}
+    # without the cap the template needle finds its three haystacks
+    assert ids["template.py"] in {n for _, _, n in edges(CFG)}
